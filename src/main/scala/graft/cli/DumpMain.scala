@@ -204,11 +204,12 @@ object Cli {
       .sorted
     require(tables.nonEmpty, s"no <table>.parquet entries under $source")
 
-    val fks = parseFks(opts)
+    // one catalog: the schemas resolved for the default PKs stay pinned in
+    // it (withPrimaryKeys keeps its reader), so the dump resolves no table
+    // a second time
     val declaredPks = parsePks(opts)
-    val base = new Catalog(spark, source, tables, fks, Map.empty)
-    val pks = tables.map(t =>
-      t -> declaredPks.getOrElse(t, Seq(base.table(t).schema.fieldNames.head))).toMap
-    new Catalog(spark, source, tables, fks, pks)
+    val catalog = new Catalog(spark, source, tables, parseFks(opts), declaredPks)
+    catalog.withPrimaryKeys(tables.filterNot(declaredPks.contains).map(t =>
+      t -> Seq(catalog.table(t).schema.fieldNames.head)): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Foreign-key edge: `table.column` references `foreignTable.foreignColumn`.
   *
@@ -69,13 +70,25 @@ final class Catalog(
     val columnSqlTypes: Map[String, Map[String, String]] = Map.empty)
     extends Serializable with AutoCloseable {
 
+  // The reader in use: `reader`, else the parquet reader over `dir`.
+  // Passed on by withForeignKeys/withPrimaryKeys, so a derived catalog
+  // shares the schemas this one already resolved. Option(...).flatten: a
+  // deserialized catalog has reader == null.
+  @transient private lazy val read: String => DataFrame =
+    Option(reader).flatten.getOrElse(Catalog.parquetReader(spark, dir))
+
+  /** Table `name` as a lazy plan. A parquet-backed catalog resolves each
+    * table's schema once, at the first call (one footer-inference job),
+    * and pins it on every later read, so repeated `table(t)` calls and
+    * the catalogs derived by `withForeignKeys`/`withPrimaryKeys` run no
+    * further Spark job. Rewriting a table with a different schema during
+    * one catalog's life is outside this contract: later reads keep the
+    * first schema. JDBC readers look the schema up over the driver
+    * connection, which is no Spark job, and are not pinned.
+    */
   def table(name: String): DataFrame = {
     require(tables.contains(name), s"unknown table: $name")
-    // Option(...).flatten: a deserialized catalog has reader == null
-    Option(reader).flatten match {
-      case Some(read) => read(name)
-      case None       => spark.read.parquet(s"$dir/$name.parquet")
-    }
+    read(name)
   }
 
   /** Exact row count WITHOUT a Spark job for parquet-backed tables: the
@@ -130,11 +143,11 @@ final class Catalog(
     primaryKeys.getOrElse(name, sys.error(s"no primary key registered for $name"))
 
   def withForeignKeys(extra: ForeignKey*): Catalog =
-    new Catalog(spark, dir, tables, foreignKeys ++ extra, primaryKeys, reader,
+    new Catalog(spark, dir, tables, foreignKeys ++ extra, primaryKeys, Some(read),
       resource, indexes, columnDefaults, views, checks, columnSqlTypes)
 
   def withPrimaryKeys(extra: (String, Seq[String])*): Catalog =
-    new Catalog(spark, dir, tables, foreignKeys, primaryKeys ++ extra, reader,
+    new Catalog(spark, dir, tables, foreignKeys, primaryKeys ++ extra, Some(read),
       resource, indexes, columnDefaults, views, checks, columnSqlTypes)
 
   /** Releases any resource pinning this catalog's consistency (the exported-
@@ -146,6 +159,28 @@ final class Catalog(
 }
 
 object Catalog {
+
+  /** Reader of `<dir>/<table>.parquet` that infers each table's schema at
+    * its first read and pins it on every later one (`spark.read.schema`),
+    * then applies `normalize`. Schema inference is a one-task Spark job
+    * per call; pinning makes it one per table for the reader's life.
+    */
+  private def parquetReader(
+      spark: SparkSession, dir: String,
+      normalize: (String, DataFrame) => DataFrame = (_, df) => df): String => DataFrame = {
+    val schemas = collection.concurrent.TrieMap.empty[String, StructType]
+    name => {
+      val path = s"$dir/$name.parquet"
+      val df = schemas.get(name) match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None =>
+          val inferred = spark.read.parquet(path)
+          schemas.putIfAbsent(name, inferred.schema)
+          inferred
+      }
+      normalize(name, df)
+    }
+  }
 
   /** Catalog over a live JDBC database — the reference's headline use case
     * (xdump/postgresql.py:66: point at a server, get a consistent partial
@@ -224,14 +259,13 @@ object Catalog {
     // assumption here rather than trusting every caller to have set it —
     // the normalization must be deterministic at the catalog boundary.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val read: String => DataFrame = { name =>
+    val read = parquetReader(spark, dir, { (name, df) =>
       import org.apache.spark.sql.functions.{col, lit, unix_micros}
-      val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events" &&
           df.schema("ts").dataType != org.apache.spark.sql.types.LongType)
         df.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
       else df
-    }
+    })
     new Catalog(
     spark,
     dir,

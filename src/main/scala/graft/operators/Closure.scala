@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 import graft.core.{Catalog, ForeignKey, TableGraph}
@@ -154,7 +154,11 @@ object Closure {
     * set stays a lazy union of the checkpointed deltas, so total
     * materialized bytes are O(|closure|), not O(depth × |closure|).
     * Iteration count is the hierarchy depth (log n for trees), not the row
-    * count.
+    * count. Each step is one checkpoint and nothing else: the delta's row
+    * count rides the checkpoint via `observe()` (no separate emptiness
+    * job), and the frontier keys feed the semi-join undeduplicated (its
+    * build side ignores duplicate keys, so a `distinct()` would only add a
+    * shuffle).
     */
   def recursiveClosure(
       table: DataFrame,
@@ -175,26 +179,18 @@ object Closure {
     var converged = false
     while (!converged && depth < maxDepth) {
       // Parents of the frontier (whole key tuple for composite self-FKs,
-      // same MATCH SIMPLE null rule as `pull`)...
-      val pairs = fk.columnPairs
-      val frontierKeys = frontier
-        .select(pairs.zipWithIndex.map { case ((c, _), i) =>
-          col(c).alias(s"__graft_key_$i") }: _*)
-        .where(pairs.indices.map(i => col(s"__graft_key_$i").isNotNull).reduce(_ && _))
-        .distinct()
-      val parents = table.join(frontierKeys,
-        pairs.zipWithIndex.map { case ((_, f), i) =>
-          table(f) === col(s"__graft_key_$i")
-        }.reduce(_ && _),
-        "left_semi")
+      // the MATCH SIMPLE null rule of `pull`)...
+      val parents = pull(table, frontier, fk)
       // ...minus rows already accumulated (semi-naive delta). Aliased key
       // columns avoid self-join ambiguity (both sides share lineage).
+      val size = Observation()
       val delta = parents
         .join(accKeys,
           primaryKey.map(k => parents(k) <=> col(s"__graft_acc_$k")).reduce(_ && _),
           "left_anti")
+        .observe(size, count(lit(1)).as("n"))
         .localCheckpoint()
-      if (delta.isEmpty) converged = true
+      if (size.get("n").asInstanceOf[Long] == 0L) converged = true
       else {
         deltas ::= delta
         accKeys = accKeys.unionByName(keysOf(delta))

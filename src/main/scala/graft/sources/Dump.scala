@@ -1,13 +1,13 @@
 package graft.sources
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.{Catalog, TableGraph}
+import graft.core.{Catalog, EpochStore, TableGraph}
 import graft.operators.Closure
 
 /** What to dump — mirrors the reference's `dump()` signature
@@ -45,8 +45,21 @@ final case class DumpSpec(
   * the moment the closure finalizes them (Closure.relatedData onFinal), and
   * downstream FK pulls read the *written* files back (with semi-join
   * pushdown into the fresh parquet) instead of recomputing the selection.
-  * Row counts and sequence state ride on the write job via `observe()` —
-  * the manifest costs zero extra Spark jobs.
+  *
+  * Job budget — only jobs that move data run:
+  *  - write: one job per dumped table (its spool), plus the closure's own
+  *    jobs (one localCheckpoint per recursion level of a self-FK, see
+  *    [[graft.operators.Closure.recursiveClosure]]). Row counts and
+  *    sequence state ride each spool via `observe()`, the spooled files
+  *    are read back with the schema already in hand, and the DDL takes its
+  *    schemas from the DataFrames being written, so the manifest, the
+  *    schema files and the read-backs cost no job. A parquet catalog pays
+  *    one footer job per table only the first time it resolves that
+  *    table (see [[graft.core.Catalog.table]]).
+  *  - restore: `readManifest` and `sequencesOf` parse on the driver (no
+  *    job); `load` reads each table with the schema its dumped DDL
+  *    records (no inference job); `loadInto` runs one job per table (its
+  *    copy, count verification riding it).
   */
 object Dump {
 
@@ -58,8 +71,12 @@ object Dump {
     // -v total-time surface (reference base.py:98 wraps the whole dump)
     QueryLog.time("Total execution time: %s") {
     val metrics = collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    // each table's schema as the DataFrame that is dumped carries it —
+    // the DDL source, so writing the schema resolves no table again
+    val schemas = collection.concurrent.TrieMap.empty[String, StructType]
 
-    def spool(t: String, df: DataFrame): DataFrame =
+    def spool(t: String, df: DataFrame): DataFrame = {
+      schemas(t) = df.schema
       if (!spec.dumpData) df
       else {
         val pk = catalog.primaryKey(t).head
@@ -79,6 +96,7 @@ object Dump {
           Option(m("mx")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L))
         readData(catalog.spark, path, t, spec.format, df.schema)
       }
+    }
 
     val closed = Closure.relatedData(
       catalog, spec.fullTables, spec.partialTables, onFinal = spool)
@@ -87,13 +105,14 @@ object Dump {
     // jobs. The scheduler interleaves their stages across the cluster, so
     // a dump with many whole-copied tables isn't serialized on its largest
     // one. Partial tables keep the closure's finalization order (each
-    // write feeds the downstream pulls that read it back).
-    val writes: Seq[Future[DataFrame]] =
-      spec.fullTables.map(t => Future(spool(t, catalog.table(t)))(ExecutionContext.global))
-    writes.foreach(w => Await.result(w, Duration.Inf))
+    // write feeds the downstream pulls that read it back). inParallel
+    // settles every write before it rethrows a failure, so no sibling is
+    // still writing into the dump when the error reaches the caller.
+    EpochStore.inParallel(
+      spec.fullTables.map(t => () => { spool(t, catalog.table(t)); () }): _*)
 
     val tables = (spec.fullTables ++ closed.keys).distinct
-    if (spec.dumpSchema) writeSchema(catalog, tables.sorted, path)
+    if (spec.dumpSchema) writeSchema(catalog, schemas, tables.sorted, path)
     writeManifest(catalog, tables, spec, metrics.toMap, path)
   }
 
@@ -112,10 +131,12 @@ object Dump {
     * (`schema/_views.sql`). FK edges whose parent is outside the dumped
     * table set are omitted — they could never validate against this dump.
     */
-  private def writeSchema(catalog: Catalog, tables: Seq[String], path: String): Unit = {
+  private def writeSchema(
+      catalog: Catalog, schemas: collection.Map[String, StructType],
+      tables: Seq[String], path: String): Unit = {
     val inSet = tables.toSet
     tables.foreach { t =>
-      val create = s"CREATE TABLE $t (${catalog.table(t).schema.toDDL});"
+      val create = s"CREATE TABLE $t (${schemas(t).toDDL});"
       val pk = catalog.primaryKeys.get(t).filter(_.nonEmpty).map(cols =>
         s"ALTER TABLE $t ADD CONSTRAINT ${t}_pk PRIMARY KEY (${cols.mkString(", ")});")
       val fks = catalog.foreignKeys
@@ -268,24 +289,58 @@ object Dump {
         t -> ms.map(m => m.group(2) -> m.group(3)).toMap }
   }
 
-  /** Reads and parses `manifest.json` with Spark's JSON reader (robust to
-    * whitespace/ordering, unlike string scraping).
+  /** Reads and parses `manifest.json` on the driver (Jackson, from Spark's
+    * own classpath): no Spark job. A missing or unreadable file, malformed
+    * JSON, or a missing or mistyped field fails with an error naming the
+    * manifest's path and the field.
     */
   def readManifest(spark: SparkSession, path: String): Manifest = {
-    import spark.implicits._
-    val raw = readText(spark, s"$path/manifest.json")
-    val df = spark.read.option("multiLine", "true").json(Seq(raw).toDS)
-    val row = df.head()
-    val format = row.getAs[String]("format")
-    val order = row.getAs[collection.Seq[String]]("load_order").toSeq
-    val tables = df
-      .select(explode(col("tables")).as("t"))
-      .select(col("t.table"), col("t.rows"), col("t.sequence"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val file = s"$path/manifest.json"
+    def bad(what: String, cause: Throwable = null): Nothing =
+      throw new IllegalStateException(s"dump manifest $file: $what", cause)
+    // field `name` of `node` (reported as `at + name`): present, non-null,
+    // and of the kind `ok` accepts
+    def field(node: JsonNode, at: String, name: String, kind: String)(
+        ok: JsonNode => Boolean): JsonNode =
+      Option(node.get(name)).filterNot(_.isNull) match {
+        case None => bad(s"missing field '$at$name'")
+        case Some(v) if !ok(v) => bad(s"field '$at$name' is not $kind: $v")
+        case Some(v) => v
+      }
+    def text(node: JsonNode, at: String, name: String): String =
+      field(node, at, name, "a string")(_.isTextual).asText
+    def long(node: JsonNode, at: String, name: String): Long =
+      field(node, at, name, "an integer")(v => v.isIntegralNumber && v.canConvertToLong).asLong
+    def array(node: JsonNode, name: String, kind: String)(ok: JsonNode => Boolean) =
+      field(node, "", name, kind)(a => a.isArray && a.elements.asScala.forall(ok))
+        .elements.asScala.toSeq
+    val root = parseJson(spark, file, bad(_, _))
+    val format = text(root, "", "format")
+    val order = array(root, "load_order", "an array of strings")(_.isTextual).map(_.asText)
+    val tables = array(root, "tables", "an array of objects")(_.isObject).zipWithIndex.map {
+      case (t, i) =>
+        val at = s"tables[$i]."
+        (text(t, at, "table"), long(t, at, "rows"), long(t, at, "sequence"))
+    }
     Manifest(format, order,
       tables.map(t => t._1 -> t._2).toMap,
       tables.map(t => t._1 -> t._3).toMap)
+  }
+
+  /** Parses the JSON file at `file` on the driver; `bad` reports an
+    * unreadable file or malformed JSON.
+    */
+  private def parseJson(
+      spark: SparkSession, file: String,
+      bad: (String, Throwable) => Nothing): JsonNode = {
+    val raw =
+      try readText(spark, file)
+      catch { case e: java.io.IOException => bad(s"cannot be read ($e)", e) }
+    try new ObjectMapper().readTree(raw)
+    catch {
+      case e: com.fasterxml.jackson.core.JacksonException =>
+        bad(s"malformed JSON: ${e.getOriginalMessage}", e)
+    }
   }
 
   private def readData(
@@ -299,16 +354,20 @@ object Dump {
         // line means a truncated/partial shard, and the load must fail
         // loudly like the csv/parquet paths do, not restore fewer rows
         Jsonl.readStrict(spark, s"$path/data/$t", schema)
-      case "orc" => spark.read.orc(s"$path/data/$t")
-      case _ => spark.read.parquet(s"$path/data/$t")
+      case "orc" => spark.read.schema(schema).orc(s"$path/data/$t")
+      case _ => spark.read.schema(schema).parquet(s"$path/data/$t")
     }
 
   /** Reads a dump back: tables as DataFrames keyed by name, in manifest load
-    * order (≙ xdump/base.py:220 `load`). CSV reads use the dumped DDL for
-    * exact types — header-only inference would widen everything to string.
+    * order (≙ xdump/base.py:220 `load`). Every format reads with the schema
+    * the dumped DDL records: exact types (header-only CSV inference would
+    * widen everything to string) and no schema-inference job per table.
     */
-  def load(spark: SparkSession, path: String): Seq[(String, DataFrame)] = {
-    val manifest = readManifest(spark, path)
+  def load(spark: SparkSession, path: String): Seq[(String, DataFrame)] =
+    load(spark, path, readManifest(spark, path))
+
+  private def load(
+      spark: SparkSession, path: String, manifest: Manifest): Seq[(String, DataFrame)] =
     manifest.loadOrder.map { t =>
       // first statement is the CREATE TABLE; constraint ALTERs may follow
       val schema = StructType.fromDDL(
@@ -316,7 +375,6 @@ object Dump {
           .stripPrefix(s"CREATE TABLE $t (").stripSuffix(")"))
       t -> readData(spark, path, t, manifest.format, schema)
     }
-  }
 
   /** Loads a dump into a target directory of parquet tables — the offline
     * analog of loading into a database. Loading follows manifest order so a
@@ -325,28 +383,32 @@ object Dump {
     * analog of the reference replaying `dump/sequences.sql` on load
     * (xdump/postgresql.py:136-146, base.py:227).
     */
-  def loadInto(spark: SparkSession, dumpPath: String, targetDir: String): Unit = {
-    val recorded = readManifest(spark, dumpPath).rows
+  def loadInto(spark: SparkSession, dumpPath: String, targetDir: String): Unit =
+    loadInto(spark, dumpPath, targetDir, readManifest(spark, dumpPath))
+
+  /** [[loadInto]] with the dump's manifest already parsed. */
+  def loadInto(
+      spark: SparkSession, dumpPath: String, targetDir: String,
+      manifest: Manifest): Unit = {
     // Parquet targets enforce no constraints, so unlike the JDBC load the
     // per-table copies have no ordering requirement — run them as
     // concurrent jobs (guide §2.6; the Dump.write full-table discipline):
     // a roundtrip restore isn't serialized on its largest table, and each
     // copy keeps its own observe()-riding count verification.
-    graft.core.EpochStore.inParallel(
-      load(spark, dumpPath).map { case (t, df) => () => {
+    EpochStore.inParallel(
+      load(spark, dumpPath, manifest).map { case (t, df) => () => {
         // same observe()-riding count verification as loadIntoJdbc: a
         // vanished dump shard must abort, not restore fewer rows
         val obs = Observation(s"graft_loadinto_$t")
         df.observe(obs, count(lit(1)).as("rows"))
           .write.mode(SaveMode.Overwrite).parquet(s"$targetDir/$t.parquet")
-        recorded.get(t).foreach { expect =>
+        manifest.rows.get(t).foreach { expect =>
           val written = obs.get("rows").asInstanceOf[Long]
           if (written != expect) sys.error(
             s"load of $t wrote $written rows but the manifest recorded $expect — " +
               s"dump at $dumpPath is truncated or partially written")
         }
       }}: _*)
-    val manifest = readManifest(spark, dumpPath)
     val seqs = manifest.loadOrder.map { t =>
       s"""  {"table": "$t", "value": ${manifest.sequences.getOrElse(t, 0L)}}"""
     }
@@ -389,9 +451,22 @@ object Dump {
       restoreConstraints: Boolean = true,
       restoreSequences: Boolean = true,
       verifyCounts: Boolean = true): Unit =
+    loadIntoJdbc(spark, dumpPath, cfg, cleanup, restoreConstraints,
+      restoreSequences, verifyCounts, readManifest(spark, dumpPath))
+
+  /** [[loadIntoJdbc]] with the dump's manifest already parsed. */
+  def loadIntoJdbc(
+      spark: SparkSession,
+      dumpPath: String,
+      cfg: JdbcConfig,
+      cleanup: Option[String],
+      restoreConstraints: Boolean,
+      restoreSequences: Boolean,
+      verifyCounts: Boolean,
+      manifest: Manifest): Unit =
     // -v total-time surface (reference base.py:222 wraps the whole load)
     QueryLog.time("Total execution time: %s") {
-    val tables = load(spark, dumpPath) // manifest load order
+    val tables = load(spark, dumpPath, manifest) // manifest load order
     cleanup.foreach { method =>
       val childrenFirst = tables.map(_._1).reverse
       method match {
@@ -407,7 +482,7 @@ object Dump {
           sys.error(s"unknown cleanup method (use truncate|recreate): $other")
       }
     }
-    val recorded = readManifest(spark, dumpPath).rows
+    val recorded = manifest.rows
     // recreate re-creates tables through the JDBC writer — restore the
     // dumped native bounded-character types so VARCHAR(32) doesn't come
     // back as CLOB/TEXT; absent sidecar (older dumps) = writer defaults
@@ -442,7 +517,7 @@ object Dump {
     // recreate path, base.py:227).
     if (cleanup.contains("recreate") && restoreConstraints)
       replayConstraints(spark, dumpPath, cfg, tables.map(_._1))
-    if (restoreSequences) replaySequences(spark, dumpPath, cfg)
+    if (restoreSequences) replaySequences(spark, dumpPath, cfg, manifest)
   }
 
   /** Identifier fragment for the shape patterns: a double-quoted name
@@ -560,8 +635,12 @@ object Dump {
     */
   def replaySequences(
       spark: SparkSession, dumpPath: String,
-      cfg: JdbcConfig): Map[String, Option[String]] = {
-    val manifest = readManifest(spark, dumpPath)
+      cfg: JdbcConfig): Map[String, Option[String]] =
+    replaySequences(spark, dumpPath, cfg, readManifest(spark, dumpPath))
+
+  private def replaySequences(
+      spark: SparkSession, dumpPath: String, cfg: JdbcConfig,
+      manifest: Manifest): Map[String, Option[String]] =
     manifest.loadOrder.map { t =>
       val pkCol = schemaStatements(spark, dumpPath, t).collectFirst {
         case PkStmt(_, cols) => splitColumnList(cols).head
@@ -574,16 +653,25 @@ object Dump {
           catch { case e: java.sql.SQLException => Some(String.valueOf(e.getMessage)) }
       })
     }.toMap
-  }
 
   /** Sequence state of a load target — what the next id per table should
-    * start after. Reads `_sequences.json` written by `loadInto`.
+    * start after. Parses `_sequences.json` written by `loadInto` on the
+    * driver into a local DataFrame (`table_name`, `seq_value`): no job.
     */
   def sequencesOf(spark: SparkSession, targetDir: String): DataFrame = {
-    import spark.implicits._
-    val raw = readText(spark, s"$targetDir/_sequences.json")
-    spark.read.json(Seq(raw).toDS)
-      .select(col("table").as("table_name"), col("value").cast("long").as("seq_value"))
+    val file = s"$targetDir/_sequences.json"
+    def bad(what: String, cause: Throwable = null): Nothing =
+      throw new IllegalStateException(s"sequence state $file: $what", cause)
+    val root = parseJson(spark, file, bad(_, _))
+    if (!root.isArray) bad(s"not an array: $root")
+    val rows = root.elements.asScala.map { e =>
+      val (t, v) = (e.get("table"), e.get("value"))
+      if (t == null || !t.isTextual || v == null || !v.isIntegralNumber)
+        bad(s"entry is not {\"table\": <string>, \"value\": <integer>}: $e")
+      Row(t.asText, v.asLong)
+    }.toSeq
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("table_name", StringType), StructField("seq_value", LongType))))
   }
 
   /** Packs a dump directory into ONE zip file — the reference's wire format

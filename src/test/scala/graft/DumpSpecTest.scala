@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
@@ -11,6 +17,22 @@ class DumpSpecTest extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_test").toString
 
+  /** Spark jobs started while `body` runs. The bus is drained before the
+    * listener joins and before it is read, so no job of an earlier call
+    * is counted and none of this one is missed.
+    */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
   test("parquet dump is FK-closed and roundtrips") {
     val dir = tmp()
     val seed = cat.table("orders").where(col("o_totalprice") > 400000)
@@ -21,6 +43,8 @@ class DumpSpecTest extends SparkSpec {
     val loaded = Dump.load(spark, dir).toMap
     // closure pulled orders → customer → nation
     assert(loaded.keySet === Set("region", "orders", "customer", "nation"))
+    // the DDL-pinned read restores each table's schema exactly
+    loaded.foreach { case (t, df) => assert(df.schema === cat.table(t).schema, t) }
     assert(loaded("region").count() === 5)
     assert(loaded("orders").count() === seed.count())
     // referential consistency: every o_custkey resolves
@@ -135,6 +159,87 @@ class DumpSpecTest extends SparkSpec {
       Dump.loadIntoJdbc(spark, s"$dir/d", cfg)
     }
     assert(e2.getMessage.contains("manifest recorded"), e2.getMessage)
+  }
+
+  test("job budget: the dump round trip runs only data-moving Spark jobs") {
+    val dir = tmp()
+    val fresh = Catalog.tpch(spark, sfDir)
+    // a catalog resolves a table's schema once; later reads pin it
+    assert(jobsOf(fresh.table("nation").schema) === 1)
+    assert(jobsOf(fresh.table("nation").schema) === 0)
+    assert(jobsOf(fresh.withPrimaryKeys().table("nation").schema) === 0)
+    // FK-closed among themselves (supplier → nation → region; part has no
+    // FK), so the closure pulls nothing: one spool job per table
+    val full = Seq("region", "nation", "supplier", "part")
+    full.foreach(fresh.table(_).schema)
+    assert(jobsOf(Dump.write(fresh, DumpSpec(fullTables = full), s"$dir/d")) === full.size)
+    assert(jobsOf(Dump.readManifest(spark, s"$dir/d")) === 0)
+    // one copy job per table: no manifest parse or schema inference job
+    assert(jobsOf(Dump.loadInto(spark, s"$dir/d", s"$dir/t")) === full.size)
+    assert(jobsOf(Dump.sequencesOf(spark, s"$dir/t")) === 0)
+    assert(Dump.sequencesOf(spark, s"$dir/t").schema.map(f => f.name -> f.dataType.sql) ===
+      Seq("table_name" -> "STRING", "seq_value" -> "BIGINT"))
+  }
+
+  test("a failed full-table spool leaves no sibling write running") {
+    val dir = tmp()
+    val boom = udf { (x: Long) => if (x >= 0) throw new IllegalStateException("boom"); x }
+    val slow = udf { (x: Long) => Thread.sleep(2000); x }
+    // the failing table comes first and fails at once; its siblings are
+    // still writing when it does, so an early rethrow would leave them
+    // running into the dump directory
+    val read: String => DataFrame = {
+      case "bad" => spark.range(0, 1, 1, 1).select(boom(col("id")).as("id"))
+      case _     => spark.range(0, 2, 1, 2).select(slow(col("id")).as("id"))
+    }
+    val tables = Seq("bad", "slow1", "slow2")
+    val catalog = new Catalog(spark, dir, tables, Nil, tables.map(_ -> Seq("id")).toMap,
+      reader = Some(read))
+    val e = intercept[Exception] {
+      Dump.write(catalog, DumpSpec(fullTables = tables), s"$dir/d")
+    }
+    ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+  }
+
+  test("manifest errors name the manifest path: missing file") {
+    val dir = tmp()
+    val e = intercept[IllegalStateException](Dump.readManifest(spark, dir))
+    assert(e.getMessage.contains(s"$dir/manifest.json"), e.getMessage)
+    assert(e.getMessage.contains("cannot be read"), e.getMessage)
+  }
+
+  test("manifest errors name the manifest path: malformed JSON") {
+    val dir = tmp()
+    Files.writeString(Paths.get(dir, "manifest.json"), """{"format": "parquet", """)
+    val e = intercept[IllegalStateException](Dump.readManifest(spark, dir))
+    assert(e.getMessage.contains(s"$dir/manifest.json"), e.getMessage)
+    assert(e.getMessage.contains("malformed JSON"), e.getMessage)
+  }
+
+  test("manifest errors name the manifest path and the missing field") {
+    val dir = tmp()
+    Dump.write(cat, DumpSpec(fullTables = Seq("region")), dir)
+    val file = Paths.get(dir, "manifest.json")
+    val good = Files.readString(file)
+    // the edits below bypass Hadoop's local checksum file
+    Files.delete(Paths.get(dir, ".manifest.json.crc"))
+    Seq(
+      "'format'" -> "\"format\": \"parquet\",",
+      "'load_order'" -> "\"load_order\": \\[[^]]*\\],",
+      "'tables'" -> ",\\s*\"tables\": \\[[^]]*\\]",
+      "'tables[0].rows'" -> "\"rows\": \\d+, ",
+      "'tables[0].sequence'" -> "\"sequence\": \\d+, "
+    ).foreach { case (field, text) =>
+      val broken = good.replaceFirst(text, "")
+      assert(broken !== good, s"$text not in $good")
+      Files.writeString(file, broken)
+      val e = intercept[IllegalStateException](Dump.readManifest(spark, dir))
+      assert(e.getMessage.contains(file.toString), e.getMessage)
+      assert(e.getMessage.contains(s"missing field $field"), e.getMessage)
+    }
   }
 
   test("splitSqlStatements: semicolons inside quoted regions do not split") {

@@ -2,7 +2,9 @@ package graft
 
 import java.sql.DriverManager
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Catalog, ForeignKey}
 import graft.sources.{Dump, DumpSpec, Jdbc, JdbcConfig}
@@ -115,12 +117,30 @@ class JdbcCatalogSpec extends SparkSpec {
     val db = s"$tmp/src"
     createSchema(db)
     insertData(db)
+    // a fixed-width CHAR column: its blank-padded values must survive the
+    // DDL-pinned restore read, and the recreated target must get CHAR(4)
+    val conn0 = DriverManager.getConnection(s"jdbc:derby:$db", "app", "app")
+    try {
+      val st = conn0.createStatement()
+      st.execute("ALTER TABLE REGION ADD COLUMN R_CODE CHAR(4)")
+      st.execute("UPDATE REGION SET R_CODE = CASE WHEN R_ID = 1 THEN 'eu' ELSE 'ap' END")
+      st.close()
+    } finally conn0.close()
     val dump = s"$tmp/dump"
     Dump.write(Catalog.jdbc(spark, cfgFor(db)), DumpSpec(
       fullTables = Seq("REGION"),
       partialTables = Map("ORDERS" ->
         Catalog.jdbc(spark, cfgFor(db)).table("ORDERS").where(col("O_TOTAL") > 100))),
       dump)
+    // the DDL-pinned restore read returns the source's columns, types and
+    // nullability, and the CHAR values as stored: blank-padded to width
+    def shape(s: StructType) = s.map(f => (f.name, f.dataType, f.nullable))
+    def codes(df: DataFrame) =
+      df.orderBy("R_ID").select("R_CODE").collect().map(_.getString(0)).toSeq
+    val region = Dump.load(spark, dump).toMap.apply("REGION")
+    assert(shape(region.schema) ===
+      shape(Catalog.jdbc(spark, cfgFor(db)).table("REGION").schema))
+    assert(codes(region) === Seq("eu  ", "ap  "))
 
     // the target database exists but has NO tables — the reference's
     // recreate_database + initial_setup replay case (base.py:202, :227)
@@ -132,6 +152,7 @@ class JdbcCatalogSpec extends SparkSpec {
     // data arrived…
     assert(Jdbc.readTable(spark, cfgFor(db2), "ORDERS").count() === 3)
     assert(Jdbc.readTable(spark, cfgFor(db2), "REGION").count() === 2)
+    assert(codes(Jdbc.readTable(spark, cfgFor(db2), "REGION")) === Seq("eu  ", "ap  "))
     // …and the PK/FK edges came back: introspecting the target yields the
     // same relational metadata the source had.
     val meta = Jdbc.introspect(cfgFor(db2), schema = Some("APP"))
@@ -141,6 +162,7 @@ class JdbcCatalogSpec extends SparkSpec {
       ForeignKey("NATION", "N_RID", "REGION", "R_ID"),
       ForeignKey("CUST", "C_NID", "NATION", "N_ID"),
       ForeignKey("ORDERS", "O_CID", "CUST", "C_ID")))
+    assert(meta.columnSqlTypes("REGION")("R_CODE") === "CHAR(4)")
     // the restored constraints ENFORCE: an orphan order must be refused
     val conn = DriverManager.getConnection(s"jdbc:derby:$db2", "app", "app")
     try {
