@@ -3,8 +3,9 @@
 
 Usage: oracle_try.py <sfdir> <sqlfile>
 Registers every <table>.parquet under sfdir as a DuckDB view, runs the SQL,
-prints row count + first rows. Iteration aid for authoring SparkEntry.oracleSql
-entries (driver-side python; not part of the Scala library).
+prints row count + first rows. Iteration aid for authoring the `Sql(text)`
+oracle of a `SparkEntry.entries` entry (driver-side python; not part of the
+Scala library).
 """
 import sys, glob, os
 import duckdb

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness.json
 
 /** Benchmark main. Prints ONE JSON line with per-query medians.
   *
@@ -16,24 +17,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 5 reps: the host VM stalls sporadically (a query oscillates 2.5 s ↔
     // 60 s with no code change) — with 5, the median survives two stalled
     // reps; with 3, one stall owned 54% of round 3's headline number.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // Stall handling: the host VM stalls sporadically (the same query
     // oscillates 2.5 s ↔ 60 s with no code change — confirmed by isolated
@@ -47,28 +34,25 @@ object Bench {
     val maxExtra = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "3").toInt
 
     // Iteration aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val selected =
+      Harness.select(SparkEntry.entries, only, "SPARK_GRAFT_BENCH_ONLY")(_.name)
+    val spark = GraftSession.local(GraftSession.cpus)
     var errors = Map.empty[String, String]
-    val results = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+    val results = selected.flatMap { e =>
+      def once() = Harness.noop(e.build(spark, sfDir))
       try {
-        once(fn) // warmup, untimed
+        once() // warmup, untimed
         var all = Vector.empty[Double]
         def kept = { val mn = all.min; all.filter(_ <= stallX * mn) }
         while (all.isEmpty || (kept.size < reps && all.size < reps + maxExtra))
-          all :+= once(fn)
-        val ks = kept.sorted
-        // true median: even kept counts (possible after stall discards)
-        // average the two middle elements instead of biasing upper-middle
-        val median =
-          if (ks.size % 2 == 1) ks(ks.size / 2)
-          else (ks(ks.size / 2 - 1) + ks(ks.size / 2)) / 2.0
-        val mn = ks.head
-        Some(name -> (median, mn, all.size - ks.size, median / mn > 2.0))
+          all :+= once()
+        val ks = kept
+        val median = Harness.median(ks)
+        Some(e.name -> (median, ks.min, all.size - ks.size, median / ks.min > 2.0))
       } catch {
-        case e: Throwable =>
-          errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+        case t: Throwable =>
+          errors += e.name -> s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(200)}"
           None
       }
     }
@@ -80,7 +64,7 @@ object Bench {
     // rules: noop-sink materialization, one warmup, `reps` medians.
     val splitDefs: Map[String, (
         (SparkSession, String) => String,
-        (SparkSession, String, String) => org.apache.spark.sql.DataFrame)] =
+        (SparkSession, String, String) => DataFrame)] =
       Map(
         "chunk_index_search" ->
           ((SparkEntry.chunkIndexBuild _, SparkEntry.chunkIndexServe _)),
@@ -99,30 +83,21 @@ object Bench {
       rm(new java.io.File(d))
     }: Unit
     val splits = splitDefs
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected.exists(_.name == name) }
       .filter { case (name, _) => !errors.contains(name) }
       .flatMap { case (name, (build, serve)) =>
         try {
           val store = build(spark, sfDir) // warmup build (footer cache, JIT)
-          serve(spark, sfDir, store)
-            .write.format("noop").mode("overwrite").save()
+          Harness.noop(serve(spark, sfDir, store))
           rmStore(store)
           val timed = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val st = build(spark, sfDir)
-            val t1 = System.nanoTime()
-            serve(spark, sfDir, st)
-              .write.format("noop").mode("overwrite").save()
-            val t2 = System.nanoTime()
+            val (st, buildS) = Harness.seconds(build(spark, sfDir))
+            val serveS = Harness.noop(serve(spark, sfDir, st))
             rmStore(st)
-            ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+            (buildS, serveS)
           }
-          def med(xs: Seq[Double]) = {
-            val s = xs.sorted
-            if (s.size % 2 == 1) s(s.size / 2)
-            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-          }
-          Some(name -> (med(timed.map(_._1)), med(timed.map(_._2))))
+          Some(name -> (Harness.median(timed.map(_._1)),
+            Harness.median(timed.map(_._2))))
         } catch {
           case e: Throwable =>
             errors += s"split:$name" ->
@@ -140,29 +115,24 @@ object Bench {
     // row); they stay in the bench as labelled contrast shapes, like the
     // quadratic ScaleCheck baselines.
     val contrast = Seq("ngram_jaccard", "ngram_containment")
-      .filter(results.contains)
+      .filter(n => results.exists(_._1 == n))
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => s"${jstr(k)}:${v._1}" }.mkString("{", ",", "}")
-    val qmin = results.map { case (k, v) => s"${jstr(k)}:${v._2}" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"${json(k)}:${v._1}" }.mkString("{", ",", "}")
+    val qmin = results.map { case (k, v) => s"${json(k)}:${v._2}" }.mkString("{", ",", "}")
     // discarded: stalled reps dropped per query; stalled: queries whose kept
     // median STILL exceeds 2× min after discards (retry budget exhausted) —
     // numbers to distrust, by the artifact's own admission.
-    val disc = results.collect { case (k, v) if v._3 > 0 => s"${jstr(k)}:${v._3}" }
+    val disc = results.collect { case (k, v) if v._3 > 0 => s"${json(k)}:${v._3}" }
       .mkString("{", ",", "}")
-    val stalled = results.collect { case (k, v) if v._4 => jstr(k) }
+    val stalled = results.collect { case (k, v) if v._4 => json(k) }
       .mkString("[", ",", "]")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val es = errors.map { case (k, v) => s"${json(k)}:${json(v)}" }.mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
     val sp = splits.map { case (k, (b, v)) =>
-      s"${jstr(k)}:{\"build_s\":$b,\"serve_s\":$v}" }.mkString("{", ",", "}")
-    val ce = contrast.map(jstr).mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmin,"splits":$sp,"contrast":$ce,"discarded":$disc,"stalled":$stalled,"errors":$es,"reps":$reps,"sf":"${sfDir}"}"""
-    println(json)
+      s"${json(k)}:{\"build_s\":$b,\"serve_s\":$v}" }.mkString("{", ",", "}")
+    val ce = contrast.map(json).mkString("[", ",", "]")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmin,"splits":$sp,"contrast":$ce,"discarded":$disc,"stalled":$stalled,"errors":$es,"reps":$reps,"sf":"${sfDir}"}"""
+    println(full)
     // Also write the artifact to a file: round 8's committed BENCH json was a
     // truncated stdout tail that permanently lost 7 queries' medians. The
     // file is the durable record; stdout stays for the driver's capture.
@@ -178,7 +148,7 @@ object Bench {
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut))
     java.nio.file.Files.write(outPath,
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // A SECOND, short, FINAL summary line (r21 verdict "What's wrong" #1):
     // the full per-query line above is ~7 KB and the driver artifact keeps
     // only a ~2 KB stdout tail, so the full line arrives front-truncated

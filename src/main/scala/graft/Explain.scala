@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of selected
-  * `SparkEntry.queries` entries — the artifact behind SURVEY §6's plan
+  * `SparkEntry.entries` — the artifact behind SURVEY §6's plan
   * audits (pushdown reaching scans, broadcasts where intended, no stray
   * BroadcastNestedLoopJoin / corpus-wide Window).
   *
@@ -18,24 +16,18 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val names = if (args.length > 1) args(1).split(",").toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val selected = Harness.select(SparkEntry.entries, args.lift(1),
+      "the query list argument")(_.name)
     val showFinal = args.length > 2 && args(2) == "final"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    for (name <- names; fn <- SparkEntry.queries.get(name)) {
-      println(s"\n========== $name ==========")
-      val df = fn(spark, sfDir)
+    for (e <- selected) {
+      println(s"\n========== ${e.name} ==========")
+      val df = e.build(spark, sfDir)
       df.explain("formatted")
       if (showFinal) {
         df.collect(): Unit // execute THIS plan so AQE finalizes it
-        println(s"---------- $name: executed (AQE-final) plan ----------")
+        println(s"---------- ${e.name}: executed (AQE-final) plan ----------")
         println(df.queryExecution.executedPlan.toString)
       }
     }

@@ -12,7 +12,7 @@ import graft.functions.{AdcDistance, DotProduct, PqDistances, SimHash48}
   * Two routes:
   *   - at session build time (the standard Spark extension mechanism):
   *     `--conf spark.sql.extensions=graft.GraftExtensions`, or
-  *     `SparkSession.builder().withExtensions(new GraftExtensions)`;
+  *     `.withExtensions(new GraftExtensions)` on the session builder;
   *   - on a live session the host application already built:
   *     `GraftExtensions.register(spark)`.
   *

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Dedup, Dsir, QualityLr, Similarity, Temporal, TextAnalysis}
@@ -70,15 +70,8 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val dirs = args.headOption.getOrElse("/root/testdata/sf0.1").split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // scale_corpus.py decorrelates copies by PERMUTING each doc's token
     // stream — which kills every cross-copy n-gram but preserves the
@@ -312,7 +305,6 @@ object ScaleCheck {
           .orderBy(col("epoch")).collect()
         val p95Ratio = hist.last.getAs[Double]("p95_cdist") /
           math.max(hist.head.getAs[Double]("p95_cdist"), 1e-9)
-        val t0 = System.nanoTime()
         // nlist grown to cover founding + shifted clusters; the sample
         // scales with the corpus so every fixed-size shifted cluster
         // keeps trainer representation
@@ -320,10 +312,10 @@ object ScaleCheck {
         // trainer representation) but caps at 50k — the driver-side Lloyd
         // is O(sampleN × nlist × dim × iters) and 50k × 256 cells already
         // gives every cluster ~100 sampled members at the largest dir
-        val fired = graft.operators.VectorIndexStore.refoundIfStale(spark, s,
-          nlist = 64 + nShiftClusters,
-          sampleN = math.min(50000, math.max(10000, nEmb.toInt)))
-        val genuineSec = (System.nanoTime() - t0) / 1e9
+        val (fired, genuineSec) = Harness.seconds(
+          graft.operators.VectorIndexStore.refoundIfStale(spark, s,
+            nlist = 64 + nShiftClusters,
+            sampleN = math.min(50000, math.max(10000, nEmb.toInt))))
         val after = recall10()
         (s, Seq(
           "vec_drift_p95_ratio" -> p95Ratio,
@@ -873,18 +865,11 @@ object ScaleCheck {
         })
 
       // SPARK_GRAFT_SCALE_ONLY=a,b,c runs a subset (merge results by hand)
-      val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-      val selected = only.fold(ops)(names => ops.filter(o => names(o._1)))
-
-      def once(fn: () => DataFrame): Double = {
-        val t0 = System.nanoTime()
-        fn().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val selected = Harness.select(ops, sys.env.get("SPARK_GRAFT_SCALE_ONLY"),
+        "SPARK_GRAFT_SCALE_ONLY")(_._1)
 
       val mins = selected.map { case (name, fn) =>
-        once(fn) // warmup
-        name -> (0 until reps).map(_ => once(fn)).min
+        name -> Harness.warmRuns(reps)(fn()).min
       }
       val qs = mins.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       // aux: non-timing measurements a selected row's prep recorded

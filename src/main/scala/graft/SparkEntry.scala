@@ -7,7 +7,8 @@ import graft.core.{Catalog, ForeignKey, TableGraph}
 import graft.operators.{Bpe, Chunk, Closure, Dedup, Dsir, FingerprintStore, IngestGate, MinHashStore, Multimodal, QualityLr, SimHashStore, Similarity, Temporal, TextAnalysis, VectorIndexStore}
 import graft.sources.{Dump, DumpSpec}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The flagship [[entry]] (SURVEY.md §7) and the query registry: [[entries]]
+  * holds one [[Entry]] per operator, its oracle beside its Spark build. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -482,45 +483,80 @@ object SparkEntry {
        FROM u GROUP BY doc_id ORDER BY doc_id"""
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ── xdump core: full / partial / related-data closure ────────────────
-    "full_table" -> ((s, dir) => cat(s, dir).table("region").orderBy("r_regionkey")),
+  /** How a registry query is checked by `scripts/check.py`. */
+  sealed trait Oracle
+  /** DuckDB SQL over the same parquet tables that must reproduce the
+    * query's rows exactly. */
+  final case class Sql(text: String) extends Oracle
+  /** No SQL replay exists; `scripts/check.py` makes a rows-only check and
+    * `reason` says why. */
+  final case class Exempt(reason: String) extends Oracle
 
-    "partial_table" -> { (s, dir) =>
+  /** One registry query: its name, its Spark build over an sf dir and its
+    * oracle. */
+  final case class Entry(
+      name: String, build: (SparkSession, String) => DataFrame, oracle: Oracle)
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  val entries: Seq[Entry] = Seq(
+    // ── xdump core: full / partial / related-data closure ────────────────
+    Entry("full_table", (s, dir) => cat(s, dir).table("region").orderBy("r_regionkey"),
+      Sql("SELECT * FROM region ORDER BY r_regionkey")),
+
+    Entry("partial_table", { (s, dir) =>
       cat(s, dir).table("orders")
         .where(col("o_totalprice") > 450000)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), to_date(col("o_orderdate")).as("o_orderdate"),
           col("o_orderpriority"))
         .orderBy("o_orderkey")
-    },
+    }, Sql(
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+         CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
+         FROM orders WHERE o_totalprice > 450000 ORDER BY o_orderkey""")),
 
-    "related_1hop" -> { (s, dir) =>
+    Entry("related_1hop", { (s, dir) =>
       val c = cat(s, dir)
       val partialOrders = c.table("orders").where(col("o_totalprice") > 450000)
       Closure.pull(c.table("customer"), partialOrders,
           ForeignKey("orders", "o_custkey", "customer", "c_custkey"))
         .orderBy("c_custkey")
-    },
+    }, Sql(
+      """SELECT * FROM customer
+         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000)
+         ORDER BY c_custkey""")),
 
-    "related_closure" -> { (s, dir) =>
+    Entry("related_closure", { (s, dir) =>
       val c = cat(s, dir)
       val seed = c.table("lineitem")
         .where(col("l_quantity") === 50 && col("l_orderkey") % 97 === 0)
       Closure.relatedData(c, partial = Map("lineitem" -> seed))("nation")
         .orderBy("n_nationkey")
-    },
+    }, Sql(
+      """WITH seed AS (SELECT * FROM lineitem WHERE l_quantity = 50 AND l_orderkey % 97 = 0)
+         SELECT * FROM nation WHERE n_nationkey IN (
+           SELECT c_nationkey FROM customer WHERE c_custkey IN (
+             SELECT o_custkey FROM orders WHERE o_orderkey IN (SELECT l_orderkey FROM seed)))
+         UNION
+         SELECT * FROM nation WHERE n_nationkey IN (
+           SELECT s_nationkey FROM supplier WHERE s_suppkey IN (SELECT l_suppkey FROM seed))
+         ORDER BY n_nationkey""")),
 
-    "related_union" -> { (s, dir) =>
+    Entry("related_union", { (s, dir) =>
       val c = cat(s, dir)
       val seeds = Map(
         "orders" -> c.table("orders").where(col("o_totalprice") > 490000),
         "events" -> c.table("events").where(col("value") > 480))
       Closure.relatedData(c, partial = seeds)("customer").orderBy("c_custkey")
-    },
+    }, Sql(
+      """SELECT * FROM customer
+         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 490000)
+         UNION
+         SELECT * FROM customer
+         WHERE c_custkey IN (SELECT user_id FROM events WHERE value > 480)
+         ORDER BY c_custkey""")),
 
-    "recursive_closure" -> { (s, dir) =>
+    Entry("recursive_closure", { (s, dir) =>
       val c = cat(s, dir)
       // Synthetic manager hierarchy: manager(c) = floor(c_custkey / 2) — a
       // binary tree, the offline stand-in for an employees.manager_id self-FK.
@@ -531,32 +567,67 @@ object SparkEntry {
           ForeignKey("customer", "c_mgrkey", "customer", "c_custkey"),
           primaryKey = Seq("c_custkey"))
         .orderBy("c_custkey")
-    },
+    }, Sql(
+      """WITH RECURSIVE base AS (
+           SELECT *, CAST(FLOOR(c_custkey / 2) AS BIGINT) AS c_mgrkey FROM customer
+         ), cte AS (
+           SELECT * FROM base WHERE c_acctbal > 9900
+           UNION
+           SELECT B.* FROM base B JOIN cte ON B.c_custkey = cte.c_mgrkey
+         )
+         SELECT * FROM cte ORDER BY c_custkey""")),
 
     // ── xdump metadata surface: load order / sequences / schema ──────────
-    "topo_order" -> { (s, dir) =>
+    Entry("topo_order", { (s, dir) =>
       val c = cat(s, dir)
       val levels = TableGraph.loadLevels(c.tables, c.foreignKeys).toSeq
       s.createDataFrame(levels).toDF("table_name", "lvl").orderBy("table_name")
-    },
+    }, Sql(
+      """SELECT * FROM (VALUES
+           ('customer', 2), ('documents', 0), ('embeddings', 0), ('events', 3),
+           ('lineitem', 4), ('nation', 1), ('orders', 3), ('part', 0),
+           ('region', 0), ('supplier', 2)) AS t(table_name, lvl)
+         ORDER BY table_name""")),
 
-    "sequences" -> { (s, dir) =>
+    Entry("sequences", { (s, dir) =>
       val c = cat(s, dir)
       c.tables.map { t =>
         c.table(t).agg(
           lit(t).as("table_name"),
           max(col(c.primaryKey(t).head)).cast("long").as("seq_value"))
       }.reduce(_ unionByName _).orderBy("table_name")
-    },
+    }, Sql(
+      """SELECT 'customer' AS table_name, CAST(max(c_custkey) AS BIGINT) AS seq_value FROM customer
+         UNION ALL SELECT 'documents', CAST(max(doc_id) AS BIGINT) FROM documents
+         UNION ALL SELECT 'embeddings', CAST(max(vec_id) AS BIGINT) FROM embeddings
+         UNION ALL SELECT 'events', CAST(max(event_id) AS BIGINT) FROM events
+         UNION ALL SELECT 'lineitem', CAST(max(l_orderkey) AS BIGINT) FROM lineitem
+         UNION ALL SELECT 'nation', CAST(max(n_nationkey) AS BIGINT) FROM nation
+         UNION ALL SELECT 'orders', CAST(max(o_orderkey) AS BIGINT) FROM orders
+         UNION ALL SELECT 'part', CAST(max(p_partkey) AS BIGINT) FROM part
+         UNION ALL SELECT 'region', CAST(max(r_regionkey) AS BIGINT) FROM region
+         UNION ALL SELECT 'supplier', CAST(max(s_suppkey) AS BIGINT) FROM supplier
+         ORDER BY table_name""")),
 
-    "schema_dump" -> { (s, dir) =>
+    Entry("schema_dump", { (s, dir) =>
       val c = cat(s, dir)
       val rows = c.tables.flatMap(t => c.table(t).schema.fieldNames.map(f => (t, f)))
       s.createDataFrame(rows).toDF("table_name", "column_name")
         .orderBy("table_name", "column_name")
-    },
+    }, Sql(
+      """SELECT 'customer' AS table_name, column_name FROM (DESCRIBE customer)
+         UNION ALL SELECT 'documents', column_name FROM (DESCRIBE documents)
+         UNION ALL SELECT 'embeddings', column_name FROM (DESCRIBE embeddings)
+         UNION ALL SELECT 'events', column_name FROM (DESCRIBE events)
+         UNION ALL SELECT 'lineitem', column_name FROM (DESCRIBE lineitem)
+         UNION ALL SELECT 'nation', column_name FROM (DESCRIBE nation)
+         UNION ALL SELECT 'orders', column_name FROM (DESCRIBE orders)
+         UNION ALL SELECT 'part', column_name FROM (DESCRIBE part)
+         UNION ALL SELECT 'region', column_name FROM (DESCRIBE region)
+         UNION ALL SELECT 'supplier', column_name FROM (DESCRIBE supplier)
+         ORDER BY table_name, column_name""")),
 
-    "dump_load_roundtrip" -> { (s, dir) =>
+    Entry("dump_load_roundtrip", { (s, dir) =>
       val c = cat(s, dir)
       val tmp = tempStore("graft_dump")
       Dump.write(c, DumpSpec(
@@ -565,9 +636,12 @@ object SparkEntry {
         s"$tmp/dump")
       Dump.loadInto(s, s"$tmp/dump", s"$tmp/loaded")
       s.read.parquet(s"$tmp/loaded/customer.parquet").orderBy("c_custkey")
-    },
+    }, Sql(
+      """SELECT * FROM customer
+         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000)
+         ORDER BY c_custkey""")),
 
-    "sequences_after_load" -> { (s, dir) =>
+    Entry("sequences_after_load", { (s, dir) =>
       // Dump → load → the restored sequence state (reference: sequences.sql
       // replayed on load, postgresql.py:136-146 + base.py:227).
       val c = cat(s, dir)
@@ -578,10 +652,19 @@ object SparkEntry {
         s"$tmp/dump")
       Dump.loadInto(s, s"$tmp/dump", s"$tmp/loaded")
       Dump.sequencesOf(s, s"$tmp/loaded").orderBy("table_name")
-    },
+    }, Sql(
+      """SELECT 'customer' AS table_name, CAST(max(c_custkey) AS BIGINT) AS seq_value FROM customer
+           WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000)
+         UNION ALL SELECT 'nation', CAST(max(n_nationkey) AS BIGINT) FROM nation
+           WHERE n_nationkey IN (SELECT c_nationkey FROM customer
+             WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000))
+         UNION ALL SELECT 'orders', CAST(max(o_orderkey) AS BIGINT) FROM orders
+           WHERE o_totalprice > 480000
+         UNION ALL SELECT 'region', CAST(max(r_regionkey) AS BIGINT) FROM region
+         ORDER BY table_name""")),
 
     // ── analytics / bench ────────────────────────────────────────────────
-    "q1_pricing" -> { (s, dir) =>
+    Entry("q1_pricing", { (s, dir) =>
       // Decimal-routed sums: deterministic under any partitioning (double
       // addition is order-sensitive; decimal addition is exact). Rounding
       // happens in decimal space — rounding a *double* can land on an exact
@@ -602,9 +685,22 @@ object SparkEntry {
           (dsum(col("l_discount")).cast("double") / n).as("avg_disc"),
           n.as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
-    },
+    }, Sql(
+      """SELECT l_returnflag, l_linestatus,
+           CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_qty,
+           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_base_price,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_disc_price,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_charge,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_price,
+           CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
+           COUNT(*) AS count_order
+         FROM lineitem
+         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+         GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus""")),
 
-    "q3_toporders" -> { (s, dir) =>
+    Entry("q3_toporders", { (s, dir) =>
       val c = cat(s, dir)
       c.table("customer").where(col("c_mktsegment") === "BUILDING")
         .join(c.table("orders"), col("c_custkey") === col("o_custkey"))
@@ -616,9 +712,20 @@ object SparkEntry {
           .cast("decimal(28,6)")), 2).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    },
+    }, Sql(
+      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS revenue
+         FROM customer
+         JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON o_orderkey = l_orderkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+           AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
+         GROUP BY l_orderkey, CAST(o_orderdate AS DATE)
+         ORDER BY revenue DESC, l_orderkey
+         LIMIT 10""")),
 
-    "q5_regional" -> { (s, dir) =>
+    Entry("q5_regional", { (s, dir) =>
       val c = cat(s, dir)
       c.table("customer")
         .join(c.table("orders"), col("c_custkey") === col("o_custkey"))
@@ -634,14 +741,27 @@ object SparkEntry {
         .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(28,6)")), 2).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
-    },
+    }, Sql(
+      """SELECT n_name,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS revenue
+         FROM customer
+         JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON o_orderkey = l_orderkey
+         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+         JOIN nation ON s_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         WHERE r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+           AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
+         GROUP BY n_name
+         ORDER BY revenue DESC, n_name""")),
 
     // TPC-H Q4 shape (EXISTS → left-semi with a cross-table condition):
     // orders with a late-shipping lineitem, counted by priority. The semi
     // join shuffles only orderkeys; the count is bounded by #priorities.
     // (l_commitdate/l_receiptdate don't exist in this schema — "late" is
     // shipdate > orderdate + 60d, same plan shape as the reference query.)
-    "q4_priority" -> { (s, dir) =>
+    Entry("q4_priority", { (s, dir) =>
       val c = cat(s, dir)
       c.table("orders")
         .where(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
@@ -653,12 +773,20 @@ object SparkEntry {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
-    },
+    }, Sql(
+      """SELECT o_orderpriority, count(*) AS order_count
+         FROM orders o
+         WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
+           AND o.o_orderdate < TIMESTAMP '1997-01-01'
+           AND EXISTS (SELECT 1 FROM lineitem l
+             WHERE l.l_orderkey = o.o_orderkey
+               AND l.l_shipdate > CAST(o.o_orderdate AS DATE) + INTERVAL 60 DAY)
+         GROUP BY 1 ORDER BY 1""")),
 
     // monthly revenue trend per priority with a 3-month trailing moving
     // average — window partitions bounded by #months per priority, sums
     // exact-decimal
-    "orders_monthly" -> { (s, dir) =>
+    Entry("orders_monthly", { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val monthly = cat(s, dir).table("orders")
         .groupBy(col("o_orderpriority"),
@@ -680,11 +808,23 @@ object SparkEntry {
         .select(col("o_orderpriority"), col("month"), col("n_orders"),
           col("revenue"), col("revenue_ma3"))
         .orderBy("o_orderpriority", "month")
-    },
+    }, Sql(
+      """WITH m AS (SELECT o_orderpriority,
+           CAST(date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS DATE) AS month,
+           count(*) AS n_orders,
+           round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS revenue_d
+         FROM orders GROUP BY 1, 2)
+         SELECT o_orderpriority, month, n_orders,
+           CAST(revenue_d AS DOUBLE) AS revenue,
+           round(CAST(sum(revenue_d) OVER (PARTITION BY o_orderpriority ORDER BY month
+               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
+             / count(*) OVER (PARTITION BY o_orderpriority ORDER BY month
+               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS revenue_ma3
+         FROM m ORDER BY o_orderpriority, month""")),
 
     // sliding 2h windows advancing hourly — the batch twin of a streaming
     // sliding-window agg; each event lands in exactly two windows
-    "events_sliding" -> ((s, dir) =>
+    Entry("events_sliding", (s, dir) =>
       cat(s, dir).table("events")
         .withColumn("w", window(expr("timestamp_seconds(ts div 1000000000)"),
           "2 hours", "1 hour"))
@@ -693,22 +833,39 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(18,6)")), 2).cast("double")
             .as("sum_value"))
-        .orderBy("event_type", "window_start")),
+        .orderBy("event_type", "window_start"),
+      Sql(
+      """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS t, value
+           FROM events),
+         x AS (SELECT event_type, value, (t // 3600) * 3600 - off.o AS window_start
+           FROM e CROSS JOIN (SELECT unnest([0, 3600]) AS o) off)
+         SELECT event_type, window_start, count(*) AS n_events,
+           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value
+         FROM x GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // per-type z-score outliers: bounded stats agg (≤ #types rows)
     // broadcast back map-side — exact decimal sums make mean/var (and so
     // every z) partition-order independent; the flag path never shuffles
     // event rows
-    "events_anomaly" -> { (s, dir) =>
+    Entry("events_anomaly", { (s, dir) =>
       val ev = cat(s, dir).table("events")
       ev.join(broadcast(Temporal.anomalyStats(ev)), col("event_type") === col("t"))
         .withColumn("z", round(Temporal.zScore(col("value")), 4))
         .where(abs(col("z")) >= 2.5)
         .select(col("event_id"), col("event_type"), col("value"), col("z"))
         .orderBy("event_id")
-    },
+    }, Sql(
+      """WITH st AS (SELECT event_type AS t, count(*) AS n,
+           sum(CAST(value AS DECIMAL(18,6))) AS sv,
+           sum(CAST(value * value AS DECIMAL(28,10))) AS svv
+         FROM events GROUP BY 1),
+         z AS (SELECT event_id, event_type, value,
+           round((value - CAST(sv AS DOUBLE)/n) /
+             sqrt(nullif(greatest(CAST(svv AS DOUBLE)/n - (CAST(sv AS DOUBLE)/n)*(CAST(sv AS DOUBLE)/n), 0.0), 0.0)), 4) AS z
+         FROM events JOIN st ON event_type = t)
+         SELECT * FROM z WHERE abs(z) >= 2.5 ORDER BY event_id""")),
 
-    "window_topn" -> { (s, dir) =>
+    Entry("window_topn", { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id"))
@@ -717,7 +874,13 @@ object SparkEntry {
         .where(col("rn") <= 3)
         .select(col("user_id"), col("event_id"), col("event_type"), col("value"), col("rn"))
         .orderBy("user_id", "rn")
-    },
+    }, Sql(
+      """SELECT user_id, event_id, event_type, value, rn FROM (
+           SELECT user_id, event_id, event_type, value,
+             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
+           FROM events) t
+         WHERE rn <= 3
+         ORDER BY user_id, rn""")),
 
     // Point-in-time lookup: each event joined to the customer's latest
     // order on or before the event — the as-of join. Timestamps normalize
@@ -725,7 +888,7 @@ object SparkEntry {
     // side is pre-aggregated to one row per (customer, date) so "latest"
     // is well-defined; the oracle replays it with DuckDB's native ASOF
     // JOIN.
-    "asof_join" -> { (s, dir) =>
+    Entry("asof_join", { (s, dir) =>
       val c = cat(s, dir)
       val ev = c.table("events")
         .select(col("event_id"), expr("ts div 1000000000").as("ts"), col("user_id"))
@@ -737,11 +900,21 @@ object SparkEntry {
           payloadCols = Seq("o_orderkey"))
         .select(col("event_id"), col("user_id"), col("o_orderkey"))
         .orderBy("event_id")
-    },
+    }, Sql(
+      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
+           FROM events),
+         o AS (SELECT o_custkey AS user_id,
+           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
+           max(o_orderkey) AS o_orderkey
+         FROM orders GROUP BY 1, 2)
+         SELECT ev.event_id, ev.user_id, o.o_orderkey
+         FROM ev ASOF LEFT JOIN o
+           ON ev.user_id = o.user_id AND ev.ts >= o.ots
+         ORDER BY ev.event_id""")),
 
     // the as-of join under a 30-day staleness budget (feature-store TTL /
     // pandas merge_asof tolerance): stale matches null out, plan unchanged
-    "asof_join_tol" -> { (s, dir) =>
+    Entry("asof_join_tol", { (s, dir) =>
       val c = cat(s, dir)
       val ev = c.table("events")
         .select(col("event_id"), expr("ts div 1000000000").as("ts"), col("user_id"))
@@ -753,12 +926,23 @@ object SparkEntry {
           payloadCols = Seq("o_orderkey"), tolerance = Some(30L * 86400))
         .select(col("event_id"), col("user_id"), col("o_orderkey"))
         .orderBy("event_id")
-    },
+    }, Sql(
+      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
+           FROM events),
+         o AS (SELECT o_custkey AS user_id,
+           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
+           max(o_orderkey) AS o_orderkey
+         FROM orders GROUP BY 1, 2)
+         SELECT ev.event_id, ev.user_id,
+           CASE WHEN ev.ts - o.ots <= 2592000 THEN o.o_orderkey END AS o_orderkey
+         FROM ev ASOF LEFT JOIN o
+           ON ev.user_id = o.user_id AND ev.ts >= o.ots
+         ORDER BY ev.event_id""")),
 
     // forward as-of: each event matched to the user's NEXT order
     // at-or-after it (the next-fill shape), same one-shuffle plan with
     // the frame side flipped
-    "asof_join_fwd" -> { (s, dir) =>
+    Entry("asof_join_fwd", { (s, dir) =>
       val c = cat(s, dir)
       val ev = c.table("events")
         .select(col("event_id"), expr("ts div 1000000000").as("ts"), col("user_id"))
@@ -770,13 +954,23 @@ object SparkEntry {
           payloadCols = Seq("o_orderkey"), direction = "forward")
         .select(col("event_id"), col("user_id"), col("o_orderkey"))
         .orderBy("event_id")
-    },
+    }, Sql(
+      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
+           FROM events),
+         o AS (SELECT o_custkey AS user_id,
+           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
+           max(o_orderkey) AS o_orderkey
+         FROM orders GROUP BY 1, 2)
+         SELECT ev.event_id, ev.user_id, o.o_orderkey
+         FROM ev ASOF LEFT JOIN o
+           ON ev.user_id = o.user_id AND ev.ts <= o.ots
+         ORDER BY ev.event_id""")),
 
     // Last-touch attribution, composed: the stream-stream join's rollup
     // (latest in-window view per purchase) — equals backward asofJoin
     // with a one-day tolerance, spec-asserted; the oracle replays it
     // with DuckDB's native ASOF JOIN
-    "attribution_rollup" -> { (s, dir) =>
+    Entry("attribution_rollup", { (s, dir) =>
       val ev = cat(s, dir).table("events")
         .select(col("event_id"), expr("ts div 1000000000").as("ts"),
           col("user_id"), col("event_type"))
@@ -787,24 +981,70 @@ object SparkEntry {
             .select(col("ts"), col("user_id"), col("event_id").as("conv_id")),
           windowSeconds = 86400)
         .orderBy("conv_id")
-    },
+    }, Sql(
+      """WITH imp AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS its,
+           max(event_id) AS imp_id
+         FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+         conv AS (SELECT user_id, event_id AS conv_id,
+           epoch_ns(ts) // 1000000000 AS cts
+         FROM events WHERE event_type = 'purchase')
+         SELECT conv.user_id, conv.conv_id, conv.cts AS conv_ts,
+           imp.imp_id, imp.its AS imp_ts, conv.cts - imp.its AS lag_s
+         FROM conv ASOF JOIN imp
+           ON conv.user_id = imp.user_id AND conv.cts >= imp.its
+         WHERE conv.cts - imp.its <= 86400
+         ORDER BY conv_id""")),
 
-    "sessionize" -> ((s, dir) =>
+    Entry("sessionize", (s, dir) =>
       Temporal.sessionize(
           cat(s, dir).table("events").withColumn("ts", expr("ts div 1000000000")),
           gapSeconds = 1800)
-        .orderBy("user_id", "session_seq")),
+        .orderBy("user_id", "session_seq"),
+      Sql(
+      """WITH e AS (SELECT user_id, event_id,
+           epoch_ns(ts) // 1000000000 AS se FROM events),
+         l AS (SELECT *, lag(se) OVER (PARTITION BY user_id ORDER BY se, event_id) AS prev
+         FROM e),
+         f AS (SELECT *, CASE WHEN prev IS NULL OR se - prev > 1800 THEN 1 ELSE 0 END AS nw
+         FROM l),
+         s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY se, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+         FROM f)
+         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+           min(se) AS session_start_s, max(se) AS session_end_s,
+           count(*) AS n_events, max(se) - min(se) AS duration_s
+         FROM s GROUP BY user_id, session_seq
+         ORDER BY user_id, session_seq""")),
 
     // conversion funnel signup → view → click → purchase: per-user ordered
     // step-completion times, one key-shuffle window chain
-    "event_funnel" -> ((s, dir) =>
+    Entry("event_funnel", (s, dir) =>
       Temporal.eventFunnel(
           cat(s, dir).table("events").withColumn("ts", expr("ts div 1000000000")),
           steps = Seq("signup", "view", "click", "purchase"))
-        .orderBy("user_id")),
+        .orderBy("user_id"),
+      Sql(
+      """WITH e AS (SELECT user_id, event_type,
+           epoch_ns(ts) // 1000000000 AS se FROM events),
+         s1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN se END)
+           OVER (PARTITION BY user_id) AS t1_s FROM e),
+         s2 AS (SELECT *, min(CASE WHEN event_type = 'view' AND se >= t1_s THEN se END)
+           OVER (PARTITION BY user_id) AS t2_s FROM s1),
+         s3 AS (SELECT *, min(CASE WHEN event_type = 'click' AND se >= t2_s THEN se END)
+           OVER (PARTITION BY user_id) AS t3_s FROM s2),
+         s4 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND se >= t3_s THEN se END)
+           OVER (PARTITION BY user_id) AS t4_s FROM s3),
+         g AS (SELECT user_id, min(t1_s) AS t1_s, min(t2_s) AS t2_s,
+           min(t3_s) AS t3_s, min(t4_s) AS t4_s FROM s4 GROUP BY user_id)
+         SELECT user_id, t1_s, t2_s, t3_s, t4_s,
+           CAST(CASE WHEN t1_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t2_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t3_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t4_s IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS steps_completed
+         FROM g ORDER BY user_id""")),
 
     // the funnel rollup a dashboard reads: users reaching each step
-    "funnel_counts" -> { (s, dir) =>
+    Entry("funnel_counts", { (s, dir) =>
       val f = Temporal.eventFunnel(
         cat(s, dir).table("events").withColumn("ts", expr("ts div 1000000000")),
         steps = Seq("signup", "view", "click", "purchase"))
@@ -813,30 +1053,80 @@ object SparkEntry {
         .agg(sum(when(col("steps_completed") >= col("step"), 1L).otherwise(0L))
           .as("n_users"))
         .orderBy("step")
-    },
+    }, Sql(
+      """WITH e AS (SELECT user_id, event_type,
+           epoch_ns(ts) // 1000000000 AS se FROM events),
+         s1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN se END)
+           OVER (PARTITION BY user_id) AS t1_s FROM e),
+         s2 AS (SELECT *, min(CASE WHEN event_type = 'view' AND se >= t1_s THEN se END)
+           OVER (PARTITION BY user_id) AS t2_s FROM s1),
+         s3 AS (SELECT *, min(CASE WHEN event_type = 'click' AND se >= t2_s THEN se END)
+           OVER (PARTITION BY user_id) AS t3_s FROM s2),
+         s4 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND se >= t3_s THEN se END)
+           OVER (PARTITION BY user_id) AS t4_s FROM s3),
+         g AS (SELECT user_id, min(t1_s) AS t1_s, min(t2_s) AS t2_s,
+           min(t3_s) AS t3_s, min(t4_s) AS t4_s FROM s4 GROUP BY user_id),
+         sc AS (SELECT CASE WHEN t1_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t2_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t3_s IS NOT NULL THEN 1 ELSE 0 END
+              + CASE WHEN t4_s IS NOT NULL THEN 1 ELSE 0 END AS steps_completed FROM g)
+         SELECT step, CAST(sum(CASE WHEN steps_completed >= step THEN 1 ELSE 0 END) AS BIGINT) AS n_users
+         FROM sc CROSS JOIN (SELECT unnest(range(1, 5)) AS step)
+         GROUP BY step ORDER BY step""")),
 
     // cohort retention triangle over first-active day
-    "retention_cohorts" -> ((s, dir) =>
+    Entry("retention_cohorts", (s, dir) =>
       Temporal.retentionCohorts(
           cat(s, dir).table("events")
             .withColumn("day", expr("ts div 86400000000000")),
           maxDays = 30)
-        .orderBy("cohort_day", "day_offset")),
+        .orderBy("cohort_day", "day_offset"),
+      Sql(
+      """WITH a AS (SELECT DISTINCT user_id,
+           epoch_ns(ts) // 86400000000000 AS day FROM events),
+         c AS (SELECT user_id, min(day) AS cohort_day FROM a GROUP BY user_id)
+         SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_users
+         FROM a JOIN c USING (user_id) WHERE day - cohort_day <= 30
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // DAU + trailing-7-day WAU per active day: exact rolling distinct via
     // bounded window-end expansion over the (day, user) activity frame
-    "events_dau" -> ((s, dir) =>
+    Entry("events_dau", (s, dir) =>
       Temporal.activeUsers(
           cat(s, dir).table("events")
             .withColumn("day", expr("ts div 86400000000000")),
           windowDays = 7)
-        .orderBy("day")),
+        .orderBy("day"),
+      Sql(
+      """WITH du AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 AS day, user_id
+           FROM events),
+         dau AS (SELECT day, count(*) AS dau FROM du GROUP BY 1),
+         wau AS (SELECT w.day, count(*) AS wau FROM (
+           SELECT DISTINCT u.day + off.o AS day, u.user_id
+           FROM du u CROSS JOIN (SELECT unnest(range(0, 7)) AS o) off) w
+         GROUP BY 1)
+         SELECT dau.day, dau.dau, wau.wau
+         FROM dau JOIN wau ON dau.day = wau.day
+         ORDER BY dau.day""")),
 
     // exact per-type value percentiles by integer rank over the value
     // histogram — bounded window partitions, engine-portable thresholds
-    "events_percentiles" -> ((s, dir) =>
+    Entry("events_percentiles", (s, dir) =>
       Temporal.valuePercentiles(cat(s, dir).table("events"))
-        .orderBy("event_type")),
+        .orderBy("event_type"),
+      Sql(
+      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
+           FROM events GROUP BY 1, 2),
+         cum AS (SELECT event_type, v, c,
+           sum(c) OVER (PARTITION BY event_type ORDER BY v
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+           sum(c) OVER (PARTITION BY event_type) AS n
+         FROM h)
+         SELECT event_type, CAST(max(n) AS BIGINT) AS n,
+           min(CASE WHEN cum * 1000 >= n * 500 THEN v END) AS p500,
+           min(CASE WHEN cum * 1000 >= n * 950 THEN v END) AS p950,
+           min(CASE WHEN cum * 1000 >= n * 990 THEN v END) AS p990
+         FROM cum GROUP BY 1 ORDER BY 1""")),
 
     // classic RFM segmentation over orders: per-customer aggregation (one
     // shuffle), quintile thresholds via the exact integer-rank percentile
@@ -844,7 +1134,7 @@ object SparkEntry {
     // bucketed to 1k units for thresholding so its histogram never grows
     // with customer count), thresholds as 1-row broadcasts, scoring
     // map-side
-    "customer_rfm" -> { (s, dir) =>
+    Entry("customer_rfm", { (s, dir) =>
       val orders = cat(s, dir).table("orders")
       val per = orders.groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate").cast("timestamp").cast("long")).as("last_s"),
@@ -881,11 +1171,54 @@ object SparkEntry {
           col("monetary"), col("r_score"), col("f_score"), col("m_score"),
           col("segment"))
         .orderBy("o_custkey")
-    },
+    }, Sql(
+      """WITH per AS (SELECT o_custkey,
+           max(epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000) AS last_s,
+           count(*) AS frequency,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2)))) AS BIGINT) AS monetary
+         FROM orders GROUP BY 1),
+         ao AS (SELECT max(last_s) AS as_of FROM per),
+         r AS (SELECT per.*, (as_of - last_s) // 86400 AS recency_days,
+           monetary // 1000 AS monetary_k FROM per CROSS JOIN ao),
+         rch AS (SELECT CAST(recency_days AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
+         rcc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM rch),
+         rct AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
+           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
+           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
+           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM rcc),
+         fh AS (SELECT CAST(frequency AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
+         fc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM fh),
+         ft AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
+           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
+           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
+           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM fc),
+         mh AS (SELECT CAST(monetary_k AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
+         mc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM mh),
+         mt AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
+           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
+           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
+           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM mc),
+         sc AS (SELECT o_custkey, recency_days, frequency, monetary,
+           CAST(5 - ((recency_days > rct.p200)::INT + (recency_days > rct.p400)::INT
+             + (recency_days > rct.p600)::INT + (recency_days > rct.p800)::INT) AS INT) AS r_score,
+           CAST(1 + ((frequency > ft.p200)::INT + (frequency > ft.p400)::INT
+             + (frequency > ft.p600)::INT + (frequency > ft.p800)::INT) AS INT) AS f_score,
+           CAST(1 + ((monetary_k > mt.p200)::INT + (monetary_k > mt.p400)::INT
+             + (monetary_k > mt.p600)::INT + (monetary_k > mt.p800)::INT) AS INT) AS m_score
+         FROM r CROSS JOIN rct CROSS JOIN ft CROSS JOIN mt)
+         SELECT *, CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
+           WHEN r_score >= 4 THEN 'recent'
+           WHEN f_score >= 4 AND r_score <= 2 THEN 'at_risk'
+           WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
+           ELSE 'regular' END AS segment
+         FROM sc ORDER BY o_custkey""")),
 
     // typed JSON props extraction + per-type rollup (decimal sums: exact,
     // partition-order independent) — the semi-structured column path
-    "events_props" -> ((s, dir) =>
+    Entry("events_props", (s, dir) =>
       cat(s, dir).table("events")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy("event_type")
@@ -894,1160 +1227,18 @@ object SparkEntry {
           sum(col("k")).as("sum_k"),
           round(sum(col("value").cast("decimal(18,6)")), 4).cast("double")
             .as("sum_value"))
-        .orderBy("event_type")),
+        .orderBy("event_type"),
+      Sql(
+      """SELECT event_type, count(*) AS n_events,
+           count(json_extract_string(props, '$.k')) AS n_with_k,
+           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1 ORDER BY 1""")),
 
     // ── LLM-data-pipeline: text analysis ─────────────────────────────────
-    "token_count" -> ((s, dir) =>
-      TextAnalysis.tokenCount(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // BM25 lexical retrieval — the keyword half of the RAG serving stack
-    // (chunk_knn / chunk_index_search is the vector half): literal query
-    // terms, map-side tf, one broadcast stats row, TakeOrderedAndProject
-    // top-k. 'dup' is the corpus's one rare term (df ≈ 0.5%), so idf
-    // ordering is actually exercised against the ~19%-df commons.
-    "bm25_topk" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(cat(s, dir).table("documents"),
-          Seq("dup", "row", "vector"), k = 20)
-        .orderBy("rank")),
-
-    // BATCH BM25 — the serving contract: an external query batch
-    // (bounded, collected once, terms → plan literals) answered from ONE
-    // corpus pass; zero-scoring (query, doc) pairs drop inside the
-    // map-side array filter before the explode, and the per-query top-k
-    // is a single WindowGroupLimit-capped window. Query 4's term misses
-    // the whole corpus — it must vanish from the output, not emit rows.
-    "bm25_batch" -> { (s, dir) =>
-      import s.implicits._
-      val q = Bm25BatchQueries.toDF("query_id", "terms")
-      TextAnalysis.bm25TopKBatch(cat(s, dir).table("documents"), q, k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // the PERSISTED-index form of bm25_batch (the VectorIndexStore shape
-    // for the lexical half): found the postings store, then answer the
-    // same batch from postings only — the corpus is never read at query
-    // time, and the answers bit-match the corpus-pass operator (one
-    // shared contribution chain, derivation-identical statistics)
-    "bm25_index_search" -> { (s, dir) =>
-      import s.implicits._
-      val store = tempStore("graft-bm25store")
-      graft.operators.Bm25IndexStore.save(
-        cat(s, dir).table("documents").select(col("doc_id"), col("text")), store)
-      graft.operators.Bm25IndexStore.search(s, store,
-          Bm25BatchQueries.toDF("query_id", "terms"), k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // the store-MAINTENANCE loop through the same oracle: found on half
-    // the corpus, fold the rest in as an append (segment triple #2),
-    // COMPACT the aged store (one merged term-sorted segment per family,
-    // bmstats re-aggregated to one exact row), vacuum the fragments, and
-    // the served answers must still replay the corpus-pass DuckDB oracle
-    // bit-for-bit — compaction is a layout change, never a data change
-    "bm25_index_compact" -> { (s, dir) =>
-      import s.implicits._
-      val store = tempStore("graft-bm25cpt")
-      val docs = cat(s, dir).table("documents").select(col("doc_id"), col("text"))
-      graft.operators.Bm25IndexStore.save(docs.where(col("doc_id") % 2 === 0), store)
-      graft.operators.Bm25IndexStore.append(docs.where(col("doc_id") % 2 === 1), store)
-      graft.operators.Bm25IndexStore.compact(s, store)
-      graft.operators.Bm25IndexStore.vacuum(s, store)
-      graft.operators.Bm25IndexStore.search(s, store,
-          Bm25BatchQueries.toDF("query_id", "terms"), k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // the WHOLE batch serving loop: batch BM25 (query terms) fused with
-    // batch exact-cosine retrieval (each query_id's own embedding as the
-    // vector channel) by per-query RRF — query 4's lexical term misses
-    // the corpus, so its fusion is vector-only (n_systems = 1
-    // throughout that query's rows)
-    "hybrid_batch_search" -> { (s, dir) =>
-      import s.implicits._
-      val docs = cat(s, dir).table("documents")
-      val q = Bm25BatchQueries.toDF("query_id", "terms")
-      val lex = TextAnalysis.bm25TopKBatch(docs, q, k = 50)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val vec = Similarity.annTopK(Similarity.docEmbed(docs, dim = 16),
-          col("vec_id").isin(Bm25BatchQueries.map(_._1): _*), k = 50)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      Similarity.rrfFuseBatch(Seq(lex, vec), k = 10)
-        .orderBy("query_id", "rank")
-    },
-
-    // HYBRID retrieval: BM25 lexical ranks fused with docEmbed cosine
-    // ranks (query = doc 42's own embedding) by reciprocal-rank fusion —
-    // the two serving halves combined the calibration-free way. Both
-    // inputs are top-50 lists, so the fusion itself never sees the
-    // corpus.
-    "hybrid_topk" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val lex = TextAnalysis.bm25TopK(docs, Seq("dup", "row", "vector"), k = 50)
-        .select(col("doc_id"), col("rank"))
-      val vec = Similarity.annTopK(Similarity.docEmbed(docs, dim = 16),
-          col("vec_id") === 42, k = 50)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      Similarity.rrfFuse(Seq(lex, vec), k = 20).orderBy("rank")
-    },
-
-    // HYBRID retrieval at CHUNK granularity against the PERSISTED index —
-    // the full RAG serving stack in one plan: lexical = BM25 over the
-    // chunked corpus (packed (doc_id, chunk_id) identity, the
-    // chunk_index_search id discipline), vector = IVFPQ search of the
-    // saved VectorIndexStore (codebooks + postings only at query time),
-    // fused by RRF with provenance unpacked by exact div/mod. Both
-    // inputs are top-50 lists, so the fusion never sees the corpus.
-    "hybrid_chunk_search" -> { (s, dir) =>
-      hybridChunkServe(s, dir, hybridChunkBuild(s, dir))
-    },
-
-    "quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // Per-language routed gate vs the English-only gate, side by side —
-    // the multilingual pipeline's filter (each doc judged by its own
-    // lang tag's battery; zh has no pack and falls back to en).
-    "quality_by_lang" -> ((s, dir) =>
-      cat(s, dir).table("documents")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.passesQualityFor(col("text"), col("lang")).as("passes_routed"),
-          TextAnalysis.passesQuality(col("text")).as("passes_en"))
-        .orderBy("doc_id")),
-
-    "lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    "dedup_exact" -> ((s, dir) =>
-      TextAnalysis.dedupExact(cat(s, dir).table("documents")).orderBy("keep_id")),
-
-    // Incremental ingest dedup: the synthetic corpus has no exact dups, so
-    // (pii_scrub-style) the demo constructs a batch that exercises every
-    // path — texts already in the corpus (dropped), novel texts (kept),
-    // and a within-batch duplicate pair (collapsed, n_copies = 2).
-    "incremental_dedup" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val fromCorpus = docs.where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      val novelA = docs.where(col("doc_id") % 7 === 1)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(col("text"), lit(" fresh")).as("text"))
-      val novelB = docs.where(col("doc_id") % 7 === 1)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat(col("text"), lit(" fresh")).as("text"))
-      Dedup.incrementalDedup(fromCorpus.unionByName(novelA).unionByName(novelB), docs)
-        .orderBy("doc_id")
-    },
-
-    // Sketch form of incremental_dedup: same constructed batch, corpus
-    // compressed to one Bloom filter, batch filtered map-side. Rows-only
-    // gate (a Bloom filter's false-positive set is implementation-defined
-    // — no SQL engine replays Spark's sketch bit-for-bit); exactness
-    // properties are spec-asserted against incrementalDedup instead.
-    "bloom_ingest_dedup" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val fromCorpus = docs.where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      val novelA = docs.where(col("doc_id") % 7 === 1)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(col("text"), lit(" fresh")).as("text"))
-      val novelB = docs.where(col("doc_id") % 7 === 1)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat(col("text"), lit(" fresh")).as("text"))
-      Dedup.bloomIngestDedup(
-          fromCorpus.unionByName(novelA).unionByName(novelB), docs)
-        .orderBy("doc_id")
-    },
-
-    // The production ingest LOOP against a persisted fingerprint artifact
-    // (FingerprintStore): found the store from one half of the corpus,
-    // dedup epoch-1 batch against the LOADED digests, fold the survivors
-    // back in (append), then dedup epoch-2 against the updated store —
-    // the accepted corpus's text is reduced exactly once, every later
-    // epoch touches only 16-byte keys.
-    "fingerprint_ingest" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-fpstore")
-      FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
-      val b1 = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val s1 = Dedup.incrementalDedupFp(
-        b1, FingerprintStore.loadFingerprints(s, store))
-      FingerprintStore.appendFingerprints(s1.select(col("text_md5")), store)
-      val b2 = docs.where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      Dedup.incrementalDedupFp(
-          b2, FingerprintStore.loadFingerprints(s, store))
-        .orderBy("doc_id")
-    },
-
-    // Sketch arm of the same loop: epoch-2 batch filtered MAP-SIDE by the
-    // store's persisted Bloom sketch — zero jobs against the corpus.
-    // Rows-only gate (a Bloom FP set is implementation-defined, the
-    // bloom_ingest_dedup precedent); no-false-negative and ⊆-anti-join
-    // properties are spec-asserted in FingerprintStoreSpec.
-    "fingerprint_bloom" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-fpbloom")
-      FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
-      val b2 = docs.where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      Dedup.bloomSketchDedup(
-          b2, FingerprintStore.loadBloom(s, store)._1)
-        .orderBy("doc_id")
-    },
-
-    "doc_fingerprint" -> ((s, dir) =>
-      TextAnalysis.docFingerprint(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // ── LLM-data-pipeline: near-duplicate detection ──────────────────────
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashPairs(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b")),
-
-    // prices dedup_minhash's verify join before paying it: per-band exact
-    // candidate volume from bucket widths alone — no pair materialized
-    "lsh_pair_volume" -> ((s, dir) =>
-      Dedup.lshPairVolume(cat(s, dir).table("documents")).orderBy("b")),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b")),
-
-    "ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccard(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b")),
-
-    "ngram_containment" -> ((s, dir) =>
-      Dedup.ngramContainment(cat(s, dir).table("documents"), minContainment = 0.5)
-        .orderBy("doc_a", "doc_b")),
-
-    "ngram_scores" -> ((s, dir) =>
-      Dedup.ngramScores(cat(s, dir).table("documents"), minContainment = 0.5)
-        .orderBy("doc_a", "doc_b")),
-
-    "dedup_groups" -> ((s, dir) =>
-      Dedup.dedupGroups(Dedup.minhashPairs(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    "strip_dup_spans" -> ((s, dir) =>
-      Dedup.stripDupSpans(cat(s, dir).table("documents"), w = 15, stride = 5)
-        .orderBy("doc_id")),
-
-    "dup_spans" -> ((s, dir) =>
-      Dedup.dupSpans(cat(s, dir).table("documents"), w = 15, stride = 5)
-        .orderBy("doc_id", "span_start", "span_hash")),
-
-    // ingest-shape FUZZY dedup: the last-quintile ids as the new batch,
-    // scored against the accepted corpus's persisted inverted index
-    // (same split as incremental_dedup — that one catches exact copies,
-    // this one near-copies)
-    "ngram_index_dedup" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      Dedup.ngramIndexDedup(
-          docs.where(col("doc_id") % 10 >= 8),
-          Dedup.ngramIndex(docs.where(col("doc_id") % 10 < 8)),
-          minContainment = 0.5)
-        .orderBy("batch_id", "corpus_id")
-    },
-
-    // The fuzzy-ingest LOOP against a persisted SIGNATURE artifact
-    // (MinHashStore) — fingerprint_ingest's near-dup sibling: found the
-    // store from half the corpus, gate epoch-1's batch by estimated
-    // Jaccard against the LOADED signatures, fold the surviving docs back
-    // in (append), then gate epoch-2 against the updated store — the
-    // accepted corpus's text is signature-reduced exactly once.
-    "minhash_ingest_dedup" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-mhstore")
-      MinHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
-      val b1 = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val f1 = Dedup.minhashIngestDedup(b1, MinHashStore.load(s, store))
-      MinHashStore.append(
-        b1.join(f1.select(col("batch_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti"),
-        store)
-      val b2 = docs.where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      Dedup.minhashIngestDedup(b2, MinHashStore.load(s, store))
-        .orderBy("batch_id", "corpus_id")
-    },
-
-    // The Hamming-bounded fuzzy-ingest LOOP (SimHashStore) — the
-    // minhash_ingest_dedup sibling that completes the fuzzy store
-    // family: same two-epoch save/gate/append/gate shape, but the gate
-    // is EXACT over the carried 48-bit signatures (4-chunk pigeonhole,
-    // hamming <= 3) instead of Jaccard-estimated.
-    "simhash_ingest_dedup" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-shstore")
-      SimHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
-      val b1 = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val f1 = Dedup.simhashIngestDedup(b1, SimHashStore.load(s, store))
-      SimHashStore.append(
-        b1.join(f1.select(col("batch_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti"),
-        store)
-      val b2 = docs.where(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      Dedup.simhashIngestDedup(b2, SimHashStore.load(s, store))
-        .orderBy("batch_id", "corpus_id")
-    },
-
-    // The STACKED ingest gate — the composition a production crawl
-    // pipeline actually runs per batch, in cost order: (1) cheap
-    // map-side quality heuristics drop junk before anything touches an
-    // artifact, (2) exact dedup against the persisted FingerprintStore
-    // (16-byte keys, batch-internal copies canonicalize to min doc_id
-    // in the same pass), (3) banded MinHash fuzzy dedup against the
-    // persisted MinHashStore — the expensive gate sees only what the
-    // cheap gates passed. Survivors are what [[append]] would fold in.
-    "ingest_gate" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val corpus = docs.where(col("doc_id") % 2 === 0)
-      val batch = docs.where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"))
-      val fp = tempStore("graft-ig-fp")
-      val mh = tempStore("graft-ig-mh")
-      // the two foundings read the same corpus but write disjoint stores —
-      // independent actions, overlapped (guide §2.6) exactly as a
-      // production ingest bootstrap would run them
-      graft.core.EpochStore.inParallel(
-        () => FingerprintStore.save(corpus, fp),
-        () => MinHashStore.save(corpus, mh))
-      // the stack body lives in IngestGate — ONE body under this oracle
-      // query, the streaming twin (StreamingIngestGate), and the ingest
-      // CLI, so the three forms can never drift
-      IngestGate.gate(batch,
-          FingerprintStore.loadFingerprints(s, fp),
-          MinHashStore.load(s, mh))
-        .select(col("doc_id"), col("n_tokens"))
-        .orderBy("doc_id")
-    },
-
-    // line-granularity exact dedup (CCNet §4.1) over the synthesized
-    // line-structured batch (c4Batch — its boilerplate lines recur across
-    // docs by construction: "too short." everywhere, javascript/lorem on
-    // doc_id strides)
-    "dup_lines" -> ((s, dir) =>
-      Dedup.dupLines(c4Batch(cat(s, dir).table("documents")))
-        .orderBy("doc_id", "line_no", "line_hash")),
-
-    "strip_dup_lines" -> ((s, dir) =>
-      Dedup.stripDupLines(c4Batch(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    // WITHIN-doc repeated-line removal (zero-shuffle map pass) over the
-    // header/footer-chromed demo batch
-    "strip_repeat_lines" -> ((s, dir) =>
-      TextAnalysis.stripRepeatedLines(repBatch(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    "stratified_sample" -> ((s, dir) =>
-      TextAnalysis.hashSample(cat(s, dir).table("documents"))
-        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id")),
-
-    // sub-percent holdout (2.5 permille-resolution) — inexpressible at
-    // integer-percent resolution
-    "sample_permille" -> ((s, dir) =>
-      TextAnalysis.hashSamplePermille(cat(s, dir).table("documents"), permille = 25)
-        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id")),
-
-    // deterministic 90/5/5 train/val/test assignment (audit view: every
-    // doc with its per-mille bucket and split)
-    "corpus_split" -> ((s, dir) =>
-      TextAnalysis.corpusSplit(cat(s, dir).table("documents"))
-        .select(col("doc_id"), col("bucket_permille"), col("split"))
-        .orderBy("doc_id")),
-
-    // Target mix: upweight English, keep some German/French, drop the rest
-    // — the domain-reweighting pass of a training-mix builder.
-    "mix_sample" -> ((s, dir) =>
-      TextAnalysis.mixSample(cat(s, dir).table("documents"),
-          weights = Map("en" -> 80, "de" -> 40, "fr" -> 20), byCol = "lang")
-        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id")),
-
-    // the mixture SOLVER: per-stratum keep rates from a 20k-token budget
-    // at 500/250/150/100 permille shares (zh unlisted → drops); at sf0.01
-    // the de stratum is oversubscribed, exercising the clamp path
-    "mix_plan" -> ((s, dir) =>
-      TextAnalysis.mixPlan(cat(s, dir).table("documents"),
-          sharePermille = Map("en" -> 500, "de" -> 250, "fr" -> 150, "es" -> 100),
-          tokenBudget = 20000L)
-        .orderBy("lang")),
-
-    // the solved mixture materialized map-side via the deterministic
-    // id-hash — plan broadcast, zero shuffle on the corpus side
-    "mix_materialize" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val plan = TextAnalysis.mixPlan(docs,
-        sharePermille = Map("en" -> 500, "de" -> 250, "fr" -> 150, "es" -> 100),
-        tokenBudget = 20000L)
-      TextAnalysis.mixApply(docs, plan)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")
-    },
-
-    "text_normalize" -> ((s, dir) =>
-      TextAnalysis.textNormalize(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    "corpus_profile" -> ((s, dir) =>
-      TextAnalysis.corpusProfile(cat(s, dir).table("documents"))
-        .orderBy("lang", "source")),
-
-    // WIMBD-style corpus n-gram census: top-100 word-3grams by occurrence
-    // (one map-side-combined shuffle + TakeOrderedAndProject)
-    "top_ngrams" -> ((s, dir) =>
-      TextAnalysis.topNgrams(cat(s, dir).table("documents"), n = 3, k = 100)),
-
-    // HLL++ sketch distinct counts (rows-only: DuckDB's HLL is a
-    // different sketch — accuracy vs exact is spec-asserted instead)
-    "profile_approx" -> ((s, dir) =>
-      TextAnalysis.corpusProfileApprox(cat(s, dir).table("documents"))
-        .orderBy("lang", "source")),
-
-    // ingest drift gate: PSI of the en slice (the "new crawl") against
-    // the full corpus's top-300 vocabulary — per-term contributions
-    "corpus_drift" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      TextAnalysis.corpusDrift(docs, docs.where(col("lang") === "en"), topK = 300)
-        .orderBy("tok")
-    },
-
-    "length_band" -> ((s, dir) =>
-      TextAnalysis.lengthBand(cat(s, dir).table("documents"),
-          pLoPermille = 50, pHiPermille = 950)
-        .orderBy("doc_id")),
-
-    // The round-7 curation capstone: strip duplicated passages, drop
-    // mostly-boilerplate docs (removal > half), keep the adaptive length
-    // band of the CLEANED text, exact-dedup on the cleaned text, per-mille
-    // sample — detect→act operators composed into ONE declarative plan.
-    "corpus_curate" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      // The strip subtree (dupSpans' two shuffles) feeds BOTH lengthBand's
-      // plan-time histogram job and the final plan — persist it so the
-      // subtree runs once, not per consumer (the Dedup signature-cache
-      // discipline). The histogram collect populates the cache; the final
-      // sampled frame (narrow: two longs) is materialized eagerly so the
-      // cache can be released here instead of leaking into the session.
-      val surviving = Dedup.stripDupSpans(docs)
-        .where(col("n_tokens_removed") * 2 <= col("n_tokens"))
-        .select(col("doc_id"), col("text_clean").as("text"))
-        .persist()
-      try {
-        val banded = TextAnalysis.lengthBand(surviving)
-        val withText = banded.join(surviving, "doc_id")
-        val keep = TextAnalysis.dedupExact(withText)
-          .select(col("keep_id").as("doc_id"))
-        TextAnalysis.hashSamplePermille(
-            withText.join(keep, Seq("doc_id"), "left_semi"),
-            permille = 500, salt = "curate")
-          .select(col("doc_id"), col("n_tokens"))
-          .orderBy("doc_id")
-          .localCheckpoint()
-      } finally surviving.unpersist()
-    },
-
-    // spec-only (no DuckDB deflate): driver records the rows-only check
-    "compress_ratio" -> ((s, dir) =>
-      TextAnalysis.compressionRatio(cat(s, dir).table("documents"))
-        .orderBy("doc_id")),
-
-    "repetition_score" -> ((s, dir) =>
-      TextAnalysis.repetitionScore(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    "gopher_quality" -> ((s, dir) =>
-      TextAnalysis.gopherQuality(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // C4 §2.2 line-level boilerplate filter over the structured page batch
-    // (c4Batch) — per-rule telemetry + verdict + cleaned text per page.
-    "c4_filter" -> ((s, dir) =>
-      TextAnalysis.c4Filter(c4Batch(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    // FineWeb's three custom line-shape heuristics over the same
-    // structured page batch — verdicts in exact integer permille algebra
-    "fineweb_filter" -> ((s, dir) =>
-      TextAnalysis.finewebFilter(c4Batch(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    // the four-battery agreement gate in ONE map-side pass — every
-    // verdict the same shared expression its standalone operator emits
-    "quality_ensemble" -> ((s, dir) =>
-      TextAnalysis.qualityEnsemble(c4Batch(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    // corpus_curate variant with the C4 pass in front: boilerplate-strip →
-    // page gate → quality gate on the CLEANED text → exact-dedup keep →
-    // deterministic sample, one declarative plan (every stage narrow or a
-    // 16-byte-digest shuffle).
-    "c4_curate" -> { (s, dir) =>
-      val f = TextAnalysis.c4Filter(c4Batch(cat(s, dir).table("documents")))
-      val clean = f.where(col("passes_c4"))
-        .select(col("doc_id"), col("clean_text").as("text"))
-      val keep = TextAnalysis.dedupExact(clean).select(col("keep_id").as("doc_id"))
-      TextAnalysis.hashSamplePermille(
-          clean.where(TextAnalysis.passesQuality(col("text")))
-            .join(keep, Seq("doc_id"), "left_semi"),
-          permille = 500, salt = "c4")
-        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id")
-    },
-
-    // FineWeb-style curation composed into one declarative plan: page
-    // gate (the fineweb battery) → cross-doc line strip over the
-    // SURVIVORS → exact dedup on the stripped text → per-mille sample.
-    // Stage costs: gate map-side; strip = dup_lines' two 8-byte-key
-    // shuffles; dedup a 16-byte-digest shuffle; sample map-side.
-    "fineweb_curate" -> { (s, dir) =>
-      val pages = c4Batch(cat(s, dir).table("documents"))
-      val gate = TextAnalysis.finewebFilter(pages).where(col("passes_fineweb"))
-        .select("doc_id")
-      val stripped = Dedup.stripDupLines(pages.join(gate, Seq("doc_id"), "left_semi"))
-        .select(col("doc_id"), col("text_clean").as("text"))
-      val keep = TextAnalysis.dedupExact(stripped).select(col("keep_id").as("doc_id"))
-      TextAnalysis.hashSamplePermille(stripped.join(keep, Seq("doc_id"), "left_semi"),
-          permille = 500, salt = "fineweb")
-        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id")
-    },
-
-    "unigram_lm" -> ((s, dir) =>
-      TextAnalysis.unigramLm(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // k = 20 < the synthetic corpus's 31-token vocabulary, so the OOV floor
-    // path is actually exercised by the oracle
-    "unigram_lm_capped" -> ((s, dir) =>
-      TextAnalysis.unigramLm(cat(s, dir).table("documents"), vocabTopK = Some(20))
-        .orderBy("doc_id")),
-
-    // CCNet's per-language perplexity tercile split (head/middle/tail) —
-    // exact integer-rank cuts over the bounded score histogram.
-    "perplexity_buckets" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(cat(s, dir).table("documents"))
-        .orderBy("doc_id")),
-
-    // the CCNet curation act: drop the worst (tail) perplexity third of
-    // each language — the standard web-corpus LM-quality gate
-    "ccnet_keep" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(cat(s, dir).table("documents"))
-        .where(col("ppl_band") =!= "tail")
-        .orderBy("doc_id")),
-
-    "tfidf_topk" -> ((s, dir) =>
-      TextAnalysis.tfidfTopK(cat(s, dir).table("documents"), k = 5)
-        .orderBy("doc_id", "rank")),
-
-    // vocabulary-budget coverage curve: token-occurrence mass under the
-    // k most frequent types, k ∈ {100, 1000, 10000}
-    "vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(cat(s, dir).table("documents"),
-          ks = Seq(100, 1000, 10000))
-        .orderBy("k")),
-
-    // BPE merge-table training (rows-only: the iterative argmax is not
-    // one SQL query; semantics pinned by BpeSpec's hand-derived merges)
-    // the driver-loop trainer (one corpus pass + in-memory merges) —
-    // bit-identical to the Spark-iterated Bpe.bpeTrain (parity-specced),
-    // and the form that reaches 30k-merge production vocabularies
-    "bpe_train" -> ((s, dir) =>
-      Bpe.bpeTrainFast(cat(s, dir).table("documents"), numMerges = 20)
-        .orderBy("merge_rank")),
-
-    // tokenization under a FIXED (pretrained-style) merge table — the
-    // deterministic replay the oracle mirrors with nested replace()
-    "bpe_tokenize" -> ((s, dir) =>
-      Bpe.bpeApply(cat(s, dir).table("documents"), BpeDemoMerges)
-        .select(col("doc_id"), array_join(col("bpe_tokens"), " ").as("bpe_text"),
-          col("n_bpe_tokens"))
-        .orderBy("doc_id")),
-
-    "bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramLm(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // minCount = 25 prunes ~1/6 of the synthetic corpus's bigram types at
-    // sf0.001, so the smoothed unseen path and pruned_ratio are live
-    "bigram_lm_pruned" -> ((s, dir) =>
-      TextAnalysis.bigramLm(cat(s, dir).table("documents"), minCount = 25)
-        .orderBy("doc_id")),
-
-    // Learned quality filter: logistic regression distilling the heuristic
-    // gate, trained as part of the plan (3 unrolled GD steps, each a 4-value
-    // decimal aggregate riding a 1-row broadcast).
-    "quality_lr" -> ((s, dir) =>
-      QualityLr.qualityLr(cat(s, dir).table("documents")).orderBy("doc_id")),
-
-    // Train-once/gate-many (the DCLM classifier deployment shape):
-    // weights trained on the even half, PERSISTED, loaded, and applied
-    // map-side to the odd-half ingest batch — zero jobs against the
-    // training corpus at apply time; loaded ≡ in-memory spec-asserted.
-    "quality_lr_apply" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-qlr") + "/weights"
-      QualityLr.trainAndSaveWeights(docs.where(col("doc_id") % 2 === 0), store)
-      QualityLr.qualityLrApply(
-          docs.where(col("doc_id") % 2 === 1), QualityLr.loadWeights(s, store))
-        .orderBy("doc_id")
-    },
-
-    // DSIR importance weights of the full corpus against the en-language
-    // slice as the target domain (Xie et al. '23). buckets = 1024 keeps
-    // the broadcast log-ratio table tiny while the ~500-token synthetic
-    // vocabulary still exercises hash collisions.
-    // Tagged-subset form: the target is a predicate over the corpus, so
-    // the log-ratio table fits in ONE feature pass (two histograms from
-    // the same aggregate). Identical output to the two-frame form.
-    // Persisted deployment shape: the feature stream is cached and reused
-    // by fit + score instead of recomputed (measured 2.2× — see
-    // Dsir.dsirWeightsPersisted).
-    "dsir_weights" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      Dsir.dsirWeightsPersisted(docs, col("lang") === "en", buckets = 1024)
-        .orderBy("doc_id")
-    },
-
-    // Gumbel-top-k resample of the 100 most target-like docs under the
-    // fixed salt — deterministic, engine-replayable sampling ∝ exp(logw).
-    "dsir_sample" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      Dsir.dsirSamplePersisted(docs, col("lang") === "en",
-          k = 100, buckets = 1024, salt = "dsir")
-        .orderBy("doc_id")
-    },
-
-    // The synthetic corpus carries no real PII, so the demo query injects
-    // a deterministic email / IPv4 / phone per row before scrubbing —
-    // exercising match counting AND replacement against the oracle.
-    "pii_scrub" -> ((s, dir) =>
-      TextAnalysis.piiScrub(
-        cat(s, dir).table("documents").select(col("doc_id"),
-          concat(col("text"),
-            lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com from 10.0."), (col("doc_id") % 250).cast("string"),
-            lit(".7 call 555-867-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text")))
-        .orderBy("doc_id")),
-
-    // ── LLM-data-pipeline: training-sequence prep ────────────────────────
-    "doc_chunk" -> ((s, dir) =>
-      Chunk.docChunk(cat(s, dir).table("documents"), window = 120, overlap = 20)
-        .orderBy("doc_id", "chunk_id")),
-
-    "pack_sequences" -> ((s, dir) =>
-      Chunk.packSequences(cat(s, dir).table("documents"), budget = 256, buckets = 8)
-        .orderBy("doc_id")),
-
-    // packing budgeted in REAL tokenizer units: bpeApply's subword counts
-    // feed the cut points instead of the whitespace proxy
-    "bpe_pack" -> ((s, dir) =>
-      Chunk.packSequences(
-          Bpe.bpeApply(cat(s, dir).table("documents"), BpeDemoMerges),
-          budget = 256, buckets = 8, tokenCol = Some("n_bpe_tokens"))
-        .orderBy("doc_id")),
-
-    "train_shuffle" -> ((s, dir) =>
-      Chunk.trainShuffle(cat(s, dir).table("documents"), shards = 8)
-        .orderBy("doc_id")),
-
-    // Benchmark set ≙ every 50th doc (the ANN query-set convention);
-    // training side = everything else.
-    "contamination" -> ((s, dir) =>
-      Dedup.contamination(cat(s, dir).table("documents"), col("doc_id") % 50 === 0)
-        .orderBy("doc_id")),
-
-    // The composed corpus-cleaning pipeline — quality gate → exact-dedup
-    // canonical keep → deterministic sample, the three stages every
-    // training-data run chains, as ONE declarative plan (each stage a
-    // left-semi join, so Catalyst fuses scans and pushes the projections).
-    "corpus_clean" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
-      val cleaned = docs
-        .where(TextAnalysis.passesQuality(col("text")))
-        .join(keep, Seq("doc_id"), "left_semi")
-      TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    },
-
-    // ── LLM-data-pipeline: multimodal plumbing (binary column + metadata) ─
-    // End-to-end: cleaned corpus straight into packed training sequences —
-    // quality gate → exact-dedup keep → deterministic sample → concat-and-
-    // cut packing, ONE declarative plan (the full raw-text-to-model-input
-    // path; every stage is the same operator the standalone queries run).
-    "corpus_to_sequences" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
-      val cleaned = docs
-        .where(TextAnalysis.passesQuality(col("text")))
-        .join(keep, Seq("doc_id"), "left_semi")
-      Chunk.packSequences(
-          TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean"),
-          budget = 256, buckets = 8)
-        .orderBy("doc_id")
-    },
-
-    // Curated corpus straight into the shard writer's frame: quality gate
-    // → exact-dedup keep → deterministic sample → trainOrder, emitted in
-    // the exact (shard, pos) order writeTrainShards lays files out in —
-    // the payload (n_chars here standing in for the text) rides the one
-    // shard exchange instead of being re-joined.
-    "corpus_to_shards" -> { (s, dir) =>
-      val docs = cat(s, dir).table("documents")
-      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
-      val cleaned = docs
-        .where(TextAnalysis.passesQuality(col("text")))
-        .join(keep, Seq("doc_id"), "left_semi")
-      Chunk.trainOrder(TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean"),
-          shards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"),
-          length(col("text")).cast("long").as("n_chars"))
-        .orderBy("shard", "pos")
-    },
-
-    "multimodal_meta" -> ((s, dir) =>
-      Multimodal.mediaMeta(
-        Multimodal.mediaFromDocuments(cat(s, dir).table("documents")))
-        .orderBy("doc_id")),
-
-    "frame_sample" -> ((s, dir) =>
-      Multimodal.frameSample(
-          Multimodal.mediaFromDocuments(cat(s, dir).table("documents")), everyN = 10)
-        .select(col("doc_id"), col("media_type"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          length(col("content")).cast("long").as("n_bytes"))
-        .orderBy("doc_id", "frame_idx")),
-
-    // ── LLM-data-pipeline: embedding similarity / ANN ────────────────────
-    // Exact all-pairs baseline (verification-scale only; the default
-    // bucketed plan below is the corpus-scale operator).
-    "embed_cosine_dup" -> ((s, dir) =>
-      Similarity.embedCosineDup(cat(s, dir).table("embeddings"), threshold = 0.4,
-          exact = true)
-        .orderBy("id_a", "id_b")),
-
-    "embed_cosine_dup_bucketed" -> ((s, dir) =>
-      Similarity.embedCosineDup(cat(s, dir).table("embeddings"), threshold = 0.4)
-        .orderBy("id_a", "id_b")),
-
-    "ann_topk" -> ((s, dir) =>
-      Similarity.annTopK(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0, k = 10)
-        .orderBy("query_id", "rank")),
-
-    // all-pairs kNN edge list — every vector both query and candidate;
-    // the LSH-banded self-join is the corpus-scale plan. corpusHint
-    // derives planes (the doc_knn deployment-shape discipline); the
-    // oracle derives the same count in SQL
-    "knn_graph" -> { (s, dir) =>
-      val c = cat(s, dir)
-      Similarity.knnGraph(c.table("embeddings"), k = 5, bands = 2,
-          corpusHint = Some(c.rowCount("embeddings")))
-        .orderBy("query_id", "rank")
-    },
-
-    // the skew telemetry a deployment reads BEFORE paying the graph: per-
-    // band bucket widths with the hot flag that points at center/bucketCap
-    "knn_bucket_stats" -> { (s, dir) =>
-      val c = cat(s, dir)
-      Similarity.bucketHistogram(c.table("embeddings"), bands = 2,
-          corpusHint = Some(c.rowCount("embeddings")))
-        .orderBy("band")
-    },
-
-    // n²-pair broadcast baseline for the graph (verification scale only)
-    "knn_graph_exact" -> ((s, dir) =>
-      Similarity.knnGraph(cat(s, dir).table("embeddings"), k = 5, exact = true)
-        .orderBy("query_id", "rank")),
-
-    // per-vector kNN-neighborhood density (Sorscher '22 pruning signal):
-    // dense core = redundant, sparse tail = outlier — one bounded groupBy
-    // over the knn_graph edge list, deployment-shaped via corpusHint
-    "embed_density" -> { (s, dir) =>
-      val c = cat(s, dir)
-      Similarity.embedDensity(c.table("embeddings"), k = 5, bands = 2,
-          corpusHint = Some(c.rowCount("embeddings")))
-        .orderBy("vec_id")
-    },
-
-    // the pruning act on the density score: exact integer-rank permille
-    // cuts drop the sparsest 5 % (outliers) and densest 10 % (redundant
-    // core); every scored vector emitted with its keep flag
-    "density_prune" -> { (s, dir) =>
-      val c = cat(s, dir)
-      Similarity.densityPrune(c.table("embeddings"), dropSparsestPermille = 50,
-          dropDensestPermille = 100, k = 5, bands = 2,
-          corpusHint = Some(c.rowCount("embeddings")))
-        .orderBy("vec_id")
-    },
-
-    // model-free text embedding (feature hashing) — flattened to
-    // (vec_id, dim_i, v) rows so the oracle compares scalars, not arrays
-    "doc_embed" -> ((s, dir) =>
-      Similarity.docEmbed(cat(s, dir).table("documents"), dim = 16)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim_i", "v")))
-        .orderBy("vec_id", "dim_i")),
-
-    // raw text straight to a semantic kNN graph: docEmbed ∘ knnGraph —
-    // no external model anywhere in the plan. Banded-LSH form with
-    // mean-centered bucketing: the exact form costs docs² pair rows
-    // (41 s at sf0.1, measured); uncentered LSH re-skews to near-n²
-    // because bag-of-words vectors share a dominant direction (3000 of
-    // 5000 docs in one bucket, measured) — centering re-balances the
-    // signs
-    // `corpusHint` derives the plane count (planesFor: log₂(n/64),
-    // floored at 4) so the benched plan IS the deployment plan — a
-    // pinned plane count turns the within-bucket verify quadratic as
-    // the corpus grows. The oracle derives the same count in SQL.
-    "doc_knn" -> { (s, dir) =>
-      val c = cat(s, dir)
-      Similarity.knnGraph(
-          Similarity.docEmbed(c.table("documents"), dim = 16),
-          k = 3, bands = 2, center = true, corpusHint = Some(c.rowCount("documents")))
-        .orderBy("query_id", "rank")
-    },
-
-    // the RAG-indexing capstone: docChunk ∘ docEmbed ∘ knnGraph over
-    // CHUNKS — passage-level neighbor edges with (doc_id, chunk_id)
-    // provenance recovered by exact integer div/mod on the packed chunk
-    // id; chunking adds no shuffle, planes derive from the
-    // embedded-chunk count exactly as the oracle's
-    "chunk_knn" -> ((s, dir) =>
-      Similarity.chunkKnn(cat(s, dir).table("documents"), k = 3)
-        .orderBy("doc_id", "chunk_id", "rank")),
-
-    // the text-side capstone: high-cosine kNN edges over the hashed
-    // embeddings feed connected components → semantic cluster ids over
-    // raw text, zero external model (docEmbed ∘ knnGraph ∘ dedupGroups)
-    "semantic_groups" -> { (s, dir) =>
-      val c = cat(s, dir)
-      val edges = Similarity.knnGraph(
-          Similarity.docEmbed(c.table("documents"), dim = 16),
-          k = 3, bands = 2, center = true, corpusHint = Some(c.rowCount("documents")))
-        .where(col("cosine") >= 0.95)
-        .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b"))
-      Dedup.dedupGroups(edges).orderBy("doc_id")
-    },
-
-    "ann_lsh" -> ((s, dir) =>
-      Similarity.annLsh(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          k = 10, planes = 4)
-        .orderBy("query_id", "rank")),
-
-    "ann_lsh_probe2" -> ((s, dir) =>
-      Similarity.annLsh(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          k = 10, planes = 4, nprobe = 2)
-        .orderBy("query_id", "rank")),
-
-    "ann_ivf" -> ((s, dir) =>
-      Similarity.annIvf(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          k = 10, centEvery = 40)
-        .orderBy("query_id", "rank")),
-
-    "ann_ivf_probe2" -> ((s, dir) =>
-      Similarity.annIvf(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          k = 10, centEvery = 40, nprobe = 2)
-        .orderBy("query_id", "rank")),
-
-    // the recall dial priced as a first-class query: IVF nprobe=2 against
-    // the brute-force exact baseline, per-query recall@10 — both inputs
-    // are the two oracle-checked entries above, so the eval never touches
-    // corpus volume beyond what they already pay
-    "ann_recall" -> { (s, dir) =>
-      val emb = cat(s, dir).table("embeddings")
-      val qf = col("vec_id") % 50 === 0
-      Similarity.recallAtK(
-          Similarity.annIvf(emb, qf, k = 10, centEvery = 40, nprobe = 2),
-          Similarity.annTopK(emb, qf, k = 10))
-        .orderBy("query_id")
-    },
-
-    "semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(cat(s, dir).table("embeddings"),
-          threshold = 0.4, centEvery = 40)
-        .orderBy("vec_id")),
-
-    "cluster_sample" -> ((s, dir) =>
-      Similarity.clusterSample(cat(s, dir).table("embeddings"), perCell = 8,
-          centEvery = 40)
-        .orderBy("vec_id")),
-
-    "embed_pq" -> ((s, dir) =>
-      Similarity.pqEncode(cat(s, dir).table("embeddings"), m = 8, k = 16)
-        .orderBy("vec_id")),
-
-    // encode-then-DECODE: each vector's quantizer reproduction value in
-    // exact integer milli-units — the re-found path's corpus decode
-    // (VectorIndexStore.reconstruct) as a first-class quantization audit
-    "pq_reconstruct" -> ((s, dir) =>
-      Similarity.pqReconstruct(cat(s, dir).table("embeddings"), m = 8, k = 16)
-        .orderBy("vec_id")),
-
-    "pq_search" -> ((s, dir) =>
-      Similarity.pqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          kNN = 10, m = 8, k = 16)
-        .orderBy("query_id", "rank")),
-
-    // int8 scalar quantization (4× compression): codes + reconstruction
-    // error under the driver-fetched per-dim bounds. The codes array is
-    // serialized to a ':'-joined string for the gate (array columns are
-    // unsortable in the driver's pandas comparator — the pq_code precedent)
-    "embed_sq" -> ((s, dir) =>
-      Similarity.embedSq(cat(s, dir).table("embeddings"))
-        .select(col("vec_id"), concat_ws(":", col("codes")).as("sq_code"),
-          col("recon_err2"))
-        .orderBy("vec_id")),
-
-    // asymmetric search over the SQ index: exact queries vs reconstructed
-    // corpus, one codegen'd dot probe per pair, map-capped window top-k
-    "sq_search" -> ((s, dir) =>
-      Similarity.sqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          kNN = 10)
-        .orderBy("query_id", "rank")),
-
-    "ivfpq_search" -> ((s, dir) =>
-      Similarity.ivfPqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          kNN = 10, m = 8, k = 16, centEvery = 40, nprobe = 2)
-        .orderBy("query_id", "rank")),
-
-    // full IVFADC: codes quantize the own-cell RESIDUAL, queries build one
-    // ADC LUT per probed cell from their residual against that cell
-    "ivfpq_residual" -> ((s, dir) =>
-      Similarity.ivfPqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
-          kNN = 10, m = 8, k = 16, centEvery = 40, nprobe = 2, residual = true)
-        .orderBy("query_id", "rank")),
-
-    // The ANN serving LOOP against a persisted IVFPQ index
-    // (VectorIndexStore — the vector sibling of fingerprint_ingest /
-    // minhash_ingest_dedup): found the index on two-thirds of the
-    // corpus, fold the rest in under the FROZEN founding codebooks
-    // (append), then ADC-search an external query batch against
-    // codebooks + postings alone — the corpus is encoded exactly once
-    // and never rescanned at query time. External queries carry no
-    // self-pair exclusion: a query that is also a corpus row scores its
-    // own posting like any candidate (the serving contract).
-    "ivfpq_ingest_search" -> { (s, dir) =>
-      val emb = cat(s, dir).table("embeddings")
-      val store = tempStore("graft-vixstore")
-      VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
-        m = 8, k = 16, centEvery = 40)
-      VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)
-      VectorIndexStore.search(
-          emb.where(col("vec_id") % 50 === 0)
-            .select(col("vec_id"), col("embedding")),
-          store, kNN = 10, nprobe = 2)
-        .orderBy("query_id", "rank")
-    },
-
-    // The serving loop in the BETTER-RECALL form: codes quantize the
-    // own-cell residual (the founding `residual = true` knob, persisted
-    // in pqmeta and routed automatically by search — one ADC LUT per
-    // probed cell from the query's residual against that cell). Same
-    // save/append/external-search shape as ivfpq_ingest_search.
-    "ivfpq_ingest_residual" -> { (s, dir) =>
-      val emb = cat(s, dir).table("embeddings")
-      val store = tempStore("graft-vixresid")
-      VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
-        m = 8, k = 16, centEvery = 40, residual = true)
-      VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)
-      VectorIndexStore.search(
-          emb.where(col("vec_id") % 50 === 0)
-            .select(col("vec_id"), col("embedding")),
-          store, kNN = 10, nprobe = 2)
-        .orderBy("query_id", "rank")
-    },
-
-    // The RAG SERVING path end-to-end: chunk the corpus, embed the
-    // chunks (packed (doc_id, chunk_id) identity), persist the IVFPQ
-    // index ONCE (VectorIndexStore), then serve an external query
-    // batch's chunks against codebooks + postings alone — retrieval
-    // with passage provenance on both sides, zero corpus jobs at query
-    // time. centEvery = 163 (prime): 10^6 ≡ 158 (mod 163), so packed
-    // chunk ids scatter across the sampling rule instead of aliasing
-    // chunk_id as a 10^6-divisor would.
-    "chunk_index_search" -> { (s, dir) =>
-      chunkIndexServe(s, dir, chunkIndexBuild(s, dir))
-    },
-
-    "events_hourly" -> { (s, dir) =>
-      // ts is epoch-nanos (nanosAsLong read); bucket to hour starts.
-      // Sums go through exact decimals: double addition is not associative,
-      // so a float sum depends on partition merge order — nondeterministic
-      // across partitionings (and across engines). Decimal sums are exact.
-      cat(s, dir).table("events")
-        .withColumn("hour_start", expr("ts DIV 3600000000000") * 3600)
-        .groupBy(col("event_type"), col("hour_start"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast("decimal(18,6)")), 2).cast("double").as("sum_value"),
-          (sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1)))
-            .as("avg_value"))
-        .orderBy("event_type", "hour_start")
-    }
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "full_table" -> "SELECT * FROM region ORDER BY r_regionkey",
-
-    "partial_table" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-         FROM orders WHERE o_totalprice > 450000 ORDER BY o_orderkey""",
-
-    "related_1hop" ->
-      """SELECT * FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000)
-         ORDER BY c_custkey""",
-
-    "related_closure" ->
-      """WITH seed AS (SELECT * FROM lineitem WHERE l_quantity = 50 AND l_orderkey % 97 = 0)
-         SELECT * FROM nation WHERE n_nationkey IN (
-           SELECT c_nationkey FROM customer WHERE c_custkey IN (
-             SELECT o_custkey FROM orders WHERE o_orderkey IN (SELECT l_orderkey FROM seed)))
-         UNION
-         SELECT * FROM nation WHERE n_nationkey IN (
-           SELECT s_nationkey FROM supplier WHERE s_suppkey IN (SELECT l_suppkey FROM seed))
-         ORDER BY n_nationkey""",
-
-    "related_union" ->
-      """SELECT * FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 490000)
-         UNION
-         SELECT * FROM customer
-         WHERE c_custkey IN (SELECT user_id FROM events WHERE value > 480)
-         ORDER BY c_custkey""",
-
-    "recursive_closure" ->
-      """WITH RECURSIVE base AS (
-           SELECT *, CAST(FLOOR(c_custkey / 2) AS BIGINT) AS c_mgrkey FROM customer
-         ), cte AS (
-           SELECT * FROM base WHERE c_acctbal > 9900
-           UNION
-           SELECT B.* FROM base B JOIN cte ON B.c_custkey = cte.c_mgrkey
-         )
-         SELECT * FROM cte ORDER BY c_custkey""",
-
-    "topo_order" ->
-      """SELECT * FROM (VALUES
-           ('customer', 2), ('documents', 0), ('embeddings', 0), ('events', 3),
-           ('lineitem', 4), ('nation', 1), ('orders', 3), ('part', 0),
-           ('region', 0), ('supplier', 2)) AS t(table_name, lvl)
-         ORDER BY table_name""",
-
-    "sequences" ->
-      """SELECT 'customer' AS table_name, CAST(max(c_custkey) AS BIGINT) AS seq_value FROM customer
-         UNION ALL SELECT 'documents', CAST(max(doc_id) AS BIGINT) FROM documents
-         UNION ALL SELECT 'embeddings', CAST(max(vec_id) AS BIGINT) FROM embeddings
-         UNION ALL SELECT 'events', CAST(max(event_id) AS BIGINT) FROM events
-         UNION ALL SELECT 'lineitem', CAST(max(l_orderkey) AS BIGINT) FROM lineitem
-         UNION ALL SELECT 'nation', CAST(max(n_nationkey) AS BIGINT) FROM nation
-         UNION ALL SELECT 'orders', CAST(max(o_orderkey) AS BIGINT) FROM orders
-         UNION ALL SELECT 'part', CAST(max(p_partkey) AS BIGINT) FROM part
-         UNION ALL SELECT 'region', CAST(max(r_regionkey) AS BIGINT) FROM region
-         UNION ALL SELECT 'supplier', CAST(max(s_suppkey) AS BIGINT) FROM supplier
-         ORDER BY table_name""",
-
-    "schema_dump" ->
-      """SELECT 'customer' AS table_name, column_name FROM (DESCRIBE customer)
-         UNION ALL SELECT 'documents', column_name FROM (DESCRIBE documents)
-         UNION ALL SELECT 'embeddings', column_name FROM (DESCRIBE embeddings)
-         UNION ALL SELECT 'events', column_name FROM (DESCRIBE events)
-         UNION ALL SELECT 'lineitem', column_name FROM (DESCRIBE lineitem)
-         UNION ALL SELECT 'nation', column_name FROM (DESCRIBE nation)
-         UNION ALL SELECT 'orders', column_name FROM (DESCRIBE orders)
-         UNION ALL SELECT 'part', column_name FROM (DESCRIBE part)
-         UNION ALL SELECT 'region', column_name FROM (DESCRIBE region)
-         UNION ALL SELECT 'supplier', column_name FROM (DESCRIBE supplier)
-         ORDER BY table_name, column_name""",
-
-    "sequences_after_load" ->
-      """SELECT 'customer' AS table_name, CAST(max(c_custkey) AS BIGINT) AS seq_value FROM customer
-           WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000)
-         UNION ALL SELECT 'nation', CAST(max(n_nationkey) AS BIGINT) FROM nation
-           WHERE n_nationkey IN (SELECT c_nationkey FROM customer
-             WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000))
-         UNION ALL SELECT 'orders', CAST(max(o_orderkey) AS BIGINT) FROM orders
-           WHERE o_totalprice > 480000
-         UNION ALL SELECT 'region', CAST(max(r_regionkey) AS BIGINT) FROM region
-         ORDER BY table_name""",
-
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-           CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_qty,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_base_price,
-           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_disc_price,
-           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_charge,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_price,
-           CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
-           COUNT(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "dump_load_roundtrip" ->
-      """SELECT * FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 480000)
-         ORDER BY c_custkey""",
-
-    "q3_toporders" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate,
-           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS revenue
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-           AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY l_orderkey, CAST(o_orderdate AS DATE)
-         ORDER BY revenue DESC, l_orderkey
-         LIMIT 10""",
-
-    "q5_regional" ->
-      """SELECT n_name,
-           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 2) AS DOUBLE) AS revenue
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-         GROUP BY n_name
-         ORDER BY revenue DESC, n_name""",
-
-    "q4_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-         FROM orders o
-         WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
-           AND o.o_orderdate < TIMESTAMP '1997-01-01'
-           AND EXISTS (SELECT 1 FROM lineitem l
-             WHERE l.l_orderkey = o.o_orderkey
-               AND l.l_shipdate > CAST(o.o_orderdate AS DATE) + INTERVAL 60 DAY)
-         GROUP BY 1 ORDER BY 1""",
-
-    "events_anomaly" ->
-      """WITH st AS (SELECT event_type AS t, count(*) AS n,
-           sum(CAST(value AS DECIMAL(18,6))) AS sv,
-           sum(CAST(value * value AS DECIMAL(28,10))) AS svv
-         FROM events GROUP BY 1),
-         z AS (SELECT event_id, event_type, value,
-           round((value - CAST(sv AS DOUBLE)/n) /
-             sqrt(nullif(greatest(CAST(svv AS DOUBLE)/n - (CAST(sv AS DOUBLE)/n)*(CAST(sv AS DOUBLE)/n), 0.0), 0.0)), 4) AS z
-         FROM events JOIN st ON event_type = t)
-         SELECT * FROM z WHERE abs(z) >= 2.5 ORDER BY event_id""",
-
-    "window_topn" ->
-      """SELECT user_id, event_id, event_type, value, rn FROM (
-           SELECT user_id, event_id, event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-           FROM events) t
-         WHERE rn <= 3
-         ORDER BY user_id, rn""",
-
-    "token_count" ->
+    Entry("token_count", (s, dir) =>
+      TextAnalysis.tokenCount(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents)
@@ -2055,9 +1246,18 @@ object SparkEntry {
            CAST(len(toks) AS BIGINT) AS ws_tokens,
            CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT) AS bpe_tokens,
            len(text) / greatest(len(toks), 1) AS chars_per_token
-         FROM t ORDER BY doc_id""",
+         FROM t ORDER BY doc_id""")),
 
-    "bm25_topk" ->
+    // BM25 lexical retrieval — the keyword half of the RAG serving stack
+    // (chunk_knn / chunk_index_search is the vector half): literal query
+    // terms, map-side tf, one broadcast stats row, TakeOrderedAndProject
+    // top-k. 'dup' is the corpus's one rare term (df ≈ 0.5%), so idf
+    // ordering is actually exercised against the ~19%-df commons.
+    Entry("bm25_topk", (s, dir) =>
+      TextAnalysis.bm25TopK(cat(s, dir).table("documents"),
+          Seq("dup", "row", "vector"), k = 20)
+        .orderBy("rank"),
+      Sql(
       """WITH tk AS (SELECT doc_id,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2088,32 +1288,89 @@ object SparkEntry {
              CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
              score
            FROM sc WHERE score > 0) t
-         WHERE rank <= 20 ORDER BY rank""",
+         WHERE rank <= 20 ORDER BY rank""")),
 
-    "bm25_batch" ->
+    // BATCH BM25 — the serving contract: an external query batch
+    // (bounded, collected once, terms → plan literals) answered from ONE
+    // corpus pass; zero-scoring (query, doc) pairs drop inside the
+    // map-side array filter before the explode, and the per-query top-k
+    // is a single WindowGroupLimit-capped window. Query 4's term misses
+    // the whole corpus — it must vanish from the output, not emit rows.
+    Entry("bm25_batch", { (s, dir) =>
+      import s.implicits._
+      val q = Bm25BatchQueries.toDF("query_id", "terms")
+      TextAnalysis.bm25TopKBatch(cat(s, dir).table("documents"), q, k = 10)
+        .orderBy("query_id", "rank")
+    }, Sql(
       s"""WITH ${bm25BatchSql("documents", Bm25BatchQueries, 10)}
          SELECT query_id, doc_id, rank, score FROM bqt
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank""")),
 
+    // the PERSISTED-index form of bm25_batch (the VectorIndexStore shape
+    // for the lexical half): found the postings store, then answer the
+    // same batch from postings only — the corpus is never read at query
+    // time, and the answers bit-match the corpus-pass operator (one
+    // shared contribution chain, derivation-identical statistics)
     // the index-served path must replay to the SAME answers as the
     // corpus pass (statistics and scoring are derivation-identical), so
     // its oracle IS the bm25_batch replay
-    "bm25_index_search" ->
+    Entry("bm25_index_search", { (s, dir) =>
+      import s.implicits._
+      val store = tempStore("graft-bm25store")
+      graft.operators.Bm25IndexStore.save(
+        cat(s, dir).table("documents").select(col("doc_id"), col("text")), store)
+      graft.operators.Bm25IndexStore.search(s, store,
+          Bm25BatchQueries.toDF("query_id", "terms"), k = 10)
+        .orderBy("query_id", "rank")
+    }, Sql(
       s"""WITH ${bm25BatchSql("documents", Bm25BatchQueries, 10)}
          SELECT query_id, doc_id, rank, score FROM bqt
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank""")),
 
+    // the store-MAINTENANCE loop through the same oracle: found on half
+    // the corpus, fold the rest in as an append (segment triple #2),
+    // COMPACT the aged store (one merged term-sorted segment per family,
+    // bmstats re-aggregated to one exact row), vacuum the fragments, and
+    // the served answers must still replay the corpus-pass DuckDB oracle
+    // bit-for-bit — compaction is a layout change, never a data change
     // found-half + appended-half + compact + vacuum must still serve the
     // corpus-pass answers exactly — one more replay of the same oracle
-    "bm25_index_compact" ->
+    Entry("bm25_index_compact", { (s, dir) =>
+      import s.implicits._
+      val store = tempStore("graft-bm25cpt")
+      val docs = cat(s, dir).table("documents").select(col("doc_id"), col("text"))
+      graft.operators.Bm25IndexStore.save(docs.where(col("doc_id") % 2 === 0), store)
+      graft.operators.Bm25IndexStore.append(docs.where(col("doc_id") % 2 === 1), store)
+      graft.operators.Bm25IndexStore.compact(s, store)
+      graft.operators.Bm25IndexStore.vacuum(s, store)
+      graft.operators.Bm25IndexStore.search(s, store,
+          Bm25BatchQueries.toDF("query_id", "terms"), k = 10)
+        .orderBy("query_id", "rank")
+    }, Sql(
       s"""WITH ${bm25BatchSql("documents", Bm25BatchQueries, 10)}
          SELECT query_id, doc_id, rank, score FROM bqt
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank""")),
 
+    // the WHOLE batch serving loop: batch BM25 (query terms) fused with
+    // batch exact-cosine retrieval (each query_id's own embedding as the
+    // vector channel) by per-query RRF — query 4's lexical term misses
+    // the corpus, so its fusion is vector-only (n_systems = 1
+    // throughout that query's rows)
     // Batch hybrid: bqt = the generated batch-BM25 replay (top-50), vtop
     // = per-query exact cosine over docEmbed (each query_id's own
     // vector), fused per query by the RRF replay.
-    "hybrid_batch_search" ->
+    Entry("hybrid_batch_search", { (s, dir) =>
+      import s.implicits._
+      val docs = cat(s, dir).table("documents")
+      val q = Bm25BatchQueries.toDF("query_id", "terms")
+      val lex = TextAnalysis.bm25TopKBatch(docs, q, k = 50)
+        .select(col("query_id"), col("doc_id"), col("rank"))
+      val vec = Similarity.annTopK(Similarity.docEmbed(docs, dim = 16),
+          col("vec_id").isin(Bm25BatchQueries.map(_._1): _*), k = 50)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+      Similarity.rrfFuseBatch(Seq(lex, vec), k = 10)
+        .orderBy("query_id", "rank")
+    }, Sql(
       s"""WITH ${bm25BatchSql("documents", Bm25BatchQueries, 50)},
          $DocEmbedSql,
          e AS (SELECT vec_id, list(CAST(v AS DOUBLE) ORDER BY bucket) AS v
@@ -2149,9 +1406,22 @@ object SparkEntry {
              rrf_score, n_systems
            FROM fused)
          SELECT query_id, doc_id, frank AS "rank", rrf_score, n_systems
-         FROM fr WHERE frank <= 10 ORDER BY query_id, frank""",
+         FROM fr WHERE frank <= 10 ORDER BY query_id, frank""")),
 
-    "hybrid_topk" ->
+    // HYBRID retrieval: BM25 lexical ranks fused with docEmbed cosine
+    // ranks (query = doc 42's own embedding) by reciprocal-rank fusion —
+    // the two serving halves combined the calibration-free way. Both
+    // inputs are top-50 lists, so the fusion itself never sees the
+    // corpus.
+    Entry("hybrid_topk", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val lex = TextAnalysis.bm25TopK(docs, Seq("dup", "row", "vector"), k = 50)
+        .select(col("doc_id"), col("rank"))
+      val vec = Similarity.annTopK(Similarity.docEmbed(docs, dim = 16),
+          col("vec_id") === 42, k = 50)
+        .select(col("neighbor_id").as("doc_id"), col("rank"))
+      Similarity.rrfFuse(Seq(lex, vec), k = 20).orderBy("rank")
+    }, Sql(
       s"""WITH $DocEmbedSql,
          e AS (SELECT vec_id, list(CAST(v AS DOUBLE) ORDER BY bucket) AS v
            FROM de GROUP BY vec_id),
@@ -2213,13 +1483,22 @@ object SparkEntry {
              CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS rank,
              rrf_score, n_systems
            FROM fused) t
-         WHERE rank <= 20 ORDER BY rank""",
+         WHERE rank <= 20 ORDER BY rank""")),
 
+    // HYBRID retrieval at CHUNK granularity against the PERSISTED index —
+    // the full RAG serving stack in one plan: lexical = BM25 over the
+    // chunked corpus (packed (doc_id, chunk_id) identity, the
+    // chunk_index_search id discipline), vector = IVFPQ search of the
+    // saved VectorIndexStore (codebooks + postings only at query time),
+    // fused by RRF with provenance unpacked by exact div/mod. Both
+    // inputs are top-50 lists, so the fusion never sees the corpus.
     // Chunk-granularity hybrid: the chunk_index_search IVFPQ modeling
     // (one query chunk, nprobe 2, top-50) fused with generated chunk-
     // level BM25 (bm25BatchSql over the chunks CTE, top-50) by the
     // hybrid_topk RRF replay; provenance unpacked by exact div/mod.
-    "hybrid_chunk_search" ->
+    Entry("hybrid_chunk_search", { (s, dir) =>
+      hybridChunkServe(s, dir, hybridChunkBuild(s, dir))
+    }, Sql(
       s"""WITH chunks AS (
            SELECT doc_id * 1000000 + (cs - 1) // 160 AS doc_id,
              substr(text, CAST(cs AS INT), 200) AS text
@@ -2284,9 +1563,11 @@ object SparkEntry {
          SELECT CAST(doc_id // 1000000 AS BIGINT) AS doc_id,
            doc_id % 1000000 AS chunk_id,
            frank AS "rank", rrf_score, n_systems
-         FROM fr WHERE frank <= 20 ORDER BY frank""",
+         FROM fr WHERE frank <= 20 ORDER BY frank""")),
 
-    "quality_score" ->
+    Entry("quality_score", (s, dir) =>
+      TextAnalysis.qualityScore(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2301,9 +1582,18 @@ object SparkEntry {
            CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT) AS punct_count,
            round(CAST(n_stop AS DOUBLE) / n_tok, 4) AS stopword_ratio,
            (len(toks) >= 5 AND len(text) >= 40 AND n_stop > 0) AS passes_quality
-         FROM t2 ORDER BY doc_id""",
+         FROM t2 ORDER BY doc_id""")),
 
-    "quality_by_lang" ->
+    // Per-language routed gate vs the English-only gate, side by side —
+    // the multilingual pipeline's filter (each doc judged by its own
+    // lang tag's battery; zh has no pack and falls back to en).
+    Entry("quality_by_lang", (s, dir) =>
+      cat(s, dir).table("documents")
+        .select(col("doc_id"), col("lang"),
+          TextAnalysis.passesQualityFor(col("text"), col("lang")).as("passes_routed"),
+          TextAnalysis.passesQuality(col("text")).as("passes_en"))
+        .orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id, lang, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2320,9 +1610,11 @@ object SparkEntry {
          SELECT doc_id, lang,
            (len(toks) >= 5 AND len(text) >= 40 AND n_stop_routed > 0) AS passes_routed,
            (len(toks) >= 5 AND len(text) >= 40 AND n_stop_en > 0) AS passes_en
-         FROM t2 ORDER BY doc_id""",
+         FROM t2 ORDER BY doc_id""")),
 
-    "lang_id" ->
+    Entry("lang_id", (s, dir) =>
+      TextAnalysis.langId(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2350,14 +1642,32 @@ object SparkEntry {
               AND greatest(score_de, score_en, score_es, score_fr, score_ru, score_zh) > 0 THEN 'zh'
              ELSE 'und' END AS lang_pred,
            score_de, score_en, score_es, score_fr, score_ru, score_zh
-         FROM s ORDER BY doc_id""",
+         FROM s ORDER BY doc_id""")),
 
-    "dedup_exact" ->
+    Entry("dedup_exact", (s, dir) =>
+      TextAnalysis.dedupExact(cat(s, dir).table("documents")).orderBy("keep_id"),
+      Sql(
       """SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS keep_id,
            count(*) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY keep_id""",
+         FROM documents GROUP BY 1 ORDER BY keep_id""")),
 
-    "incremental_dedup" ->
+    // Incremental ingest dedup: the synthetic corpus has no exact dups, so
+    // (pii_scrub-style) the demo constructs a batch that exercises every
+    // path — texts already in the corpus (dropped), novel texts (kept),
+    // and a within-batch duplicate pair (collapsed, n_copies = 2).
+    Entry("incremental_dedup", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val fromCorpus = docs.where(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
+      val novelA = docs.where(col("doc_id") % 7 === 1)
+        .select((col("doc_id") + 100000).as("doc_id"),
+          concat(col("text"), lit(" fresh")).as("text"))
+      val novelB = docs.where(col("doc_id") % 7 === 1)
+        .select((col("doc_id") + 200000).as("doc_id"),
+          concat(col("text"), lit(" fresh")).as("text"))
+      Dedup.incrementalDedup(fromCorpus.unionByName(novelA).unionByName(novelB), docs)
+        .orderBy("doc_id")
+    }, Sql(
       """WITH batch AS (
            SELECT doc_id + 100000 AS doc_id, text
            FROM documents WHERE doc_id % 7 = 0
@@ -2376,9 +1686,48 @@ object SparkEntry {
          SELECT doc_id, text_md5, n_copies FROM canon
          WHERE NOT EXISTS (
            SELECT 1 FROM documents e WHERE md5(e.text) = canon.text_md5)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""")),
 
-    "fingerprint_ingest" ->
+    // Sketch form of incremental_dedup: same constructed batch, corpus
+    // compressed to one Bloom filter, batch filtered map-side.
+    Entry("bloom_ingest_dedup", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val fromCorpus = docs.where(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 100000).as("doc_id"), col("text"))
+      val novelA = docs.where(col("doc_id") % 7 === 1)
+        .select((col("doc_id") + 100000).as("doc_id"),
+          concat(col("text"), lit(" fresh")).as("text"))
+      val novelB = docs.where(col("doc_id") % 7 === 1)
+        .select((col("doc_id") + 200000).as("doc_id"),
+          concat(col("text"), lit(" fresh")).as("text"))
+      Dedup.bloomIngestDedup(
+          fromCorpus.unionByName(novelA).unionByName(novelB), docs)
+        .orderBy("doc_id")
+    }, Exempt("a Bloom filter's false-positive set is implementation-" +
+      "defined: no SQL engine replays Spark's sketch bit for bit; DedupSpec " +
+      "asserts its exactness properties against incrementalDedup")),
+
+    // The production ingest LOOP against a persisted fingerprint artifact
+    // (FingerprintStore): found the store from one half of the corpus,
+    // dedup epoch-1 batch against the LOADED digests, fold the survivors
+    // back in (append), then dedup epoch-2 against the updated store —
+    // the accepted corpus's text is reduced exactly once, every later
+    // epoch touches only 16-byte keys.
+    Entry("fingerprint_ingest", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val store = tempStore("graft-fpstore")
+      FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
+      val b1 = docs.where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), col("text"))
+      val s1 = Dedup.incrementalDedupFp(
+        b1, FingerprintStore.loadFingerprints(s, store))
+      FingerprintStore.appendFingerprints(s1.select(col("text_md5")), store)
+      val b2 = docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+      Dedup.incrementalDedupFp(
+          b2, FingerprintStore.loadFingerprints(s, store))
+        .orderBy("doc_id")
+    }, Sql(
       """WITH canon AS (
            SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS doc_id,
              count(*) AS n_copies
@@ -2389,9 +1738,26 @@ object SparkEntry {
            SELECT 1 FROM documents e
            WHERE (e.doc_id % 2 = 0 OR e.doc_id % 3 = 0)
              AND md5(e.text) = canon.text_md5)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""")),
 
-    "doc_fingerprint" ->
+    // Sketch arm of the same loop: epoch-2 batch filtered MAP-SIDE by the
+    // store's persisted Bloom sketch — zero jobs against the corpus.
+    Entry("fingerprint_bloom", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val store = tempStore("graft-fpbloom")
+      FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
+      val b2 = docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+      Dedup.bloomSketchDedup(
+          b2, FingerprintStore.loadBloom(s, store)._1)
+        .orderBy("doc_id")
+    }, Exempt("a Bloom filter's false-positive set is implementation-" +
+      "defined (the bloom_ingest_dedup case); FingerprintStoreSpec asserts " +
+      "no false negatives and a subset of the exact anti-join")),
+
+    Entry("doc_fingerprint", (s, dir) =>
+      TextAnalysis.docFingerprint(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2410,9 +1776,770 @@ object SparkEntry {
            list_max(hs) AS fp_max,
            list_reduce(hs, (a, b) -> xor(a, b)) AS fp_xor,
            CAST(ns AS BIGINT) AS n_shingles
-         FROM h ORDER BY doc_id""",
+         FROM h ORDER BY doc_id""")),
 
-    "repetition_score" ->
+    // ── LLM-data-pipeline: near-duplicate detection ──────────────────────
+    Entry("dedup_minhash", (s, dir) =>
+      Dedup.minhashPairs(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         sg AS (SELECT doc_id, s,
+           list_transform(range(0, 16), i -> list_min(list_transform(s,
+             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
+               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
+               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
+         FROM sh WHERE len(s) > 0),
+         bands AS (SELECT doc_id,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM sg CROSS JOIN range(0, 8) r(b)),
+         cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         FROM bands x JOIN bands y ON x.bkey = y.bkey AND x.doc_id < y.doc_id),
+         v AS (SELECT doc_a, doc_b,
+           len(list_intersect(xa.s, yb.s)) AS inter, len(xa.s) AS la, len(yb.s) AS lb,
+           len(list_filter(range(1, 17), i -> xa.sig[i] = yb.sig[i])) AS m
+         FROM cand JOIN sg xa ON xa.doc_id = doc_a JOIN sg yb ON yb.doc_id = doc_b)
+         SELECT doc_a, doc_b, inter / (la + lb - inter) AS jaccard, m / 16 AS est_jaccard
+         FROM v WHERE inter / (la + lb - inter) >= 0.5 ORDER BY doc_a, doc_b""")),
+
+    // prices dedup_minhash's verify join before paying it: per-band exact
+    // candidate volume from bucket widths alone — no pair materialized
+    Entry("lsh_pair_volume", (s, dir) =>
+      Dedup.lshPairVolume(cat(s, dir).table("documents")).orderBy("b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         sg AS (SELECT doc_id, s,
+           list_transform(range(0, 16), i -> list_min(list_transform(s,
+             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
+               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
+               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
+         FROM sh WHERE len(s) > 0),
+         bands AS (SELECT doc_id, r.b,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM sg CROSS JOIN range(0, 8) r(b)),
+         w AS (SELECT b, bkey, count(*) AS w FROM bands GROUP BY 1, 2)
+         SELECT CAST(b AS INT) AS b, CAST(count(*) AS BIGINT) AS buckets,
+           CAST(sum(w) AS BIGINT) AS docs, CAST(max(w) AS BIGINT) AS max_width,
+           CAST(sum(w * (w - 1) // 2) AS BIGINT) AS cand_pairs
+         FROM w GROUP BY b ORDER BY b""")),
+
+    Entry("dedup_simhash", (s, dir) =>
+      Dedup.simhashPairs(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         th AS (SELECT doc_id,
+           list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS th
+         FROM t WHERE len(toks) > 0),
+         bits AS (SELECT doc_id, list_transform(range(0, 48), b ->
+           CAST(list_sum(list_transform(th, h ->
+             CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) AS BIGINT)) AS bits
+         FROM th),
+         s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 48), b ->
+           CASE WHEN bits[b + 1] > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END))
+           AS BIGINT) AS sim
+         FROM bits)
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.sim, b.sim)) AS BIGINT) AS hamming
+         FROM s a JOIN s b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.sim, b.sim)) <= 3 ORDER BY doc_a, doc_b""")),
+
+    Entry("ngram_jaccard", (s, dir) =>
+      Dedup.ngramJaccard(cat(s, dir).table("documents")).orderBy("doc_a", "doc_b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         ex AS (SELECT doc_id, unnest(list_transform(s,
+             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
+           FROM sh WHERE len(s) > 0),
+         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
+         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
+         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
+         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
+         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
+         SELECT doc_a, doc_b, inter, CAST(a.n_sh + b.n_sh - inter AS BIGINT) AS uni,
+           inter / (a.n_sh + b.n_sh - inter) AS jaccard
+         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
+         WHERE inter / (a.n_sh + b.n_sh - inter) >= 0.3 ORDER BY doc_a, doc_b""")),
+
+    Entry("ngram_containment", (s, dir) =>
+      Dedup.ngramContainment(cat(s, dir).table("documents"), minContainment = 0.5)
+        .orderBy("doc_a", "doc_b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         ex AS (SELECT doc_id, unnest(list_transform(s,
+             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
+           FROM sh WHERE len(s) > 0),
+         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
+         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
+         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
+         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
+         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
+         SELECT doc_a, doc_b, inter, a.n_sh AS na, b.n_sh AS nb,
+           inter / least(a.n_sh, b.n_sh) AS containment
+         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
+         WHERE inter / least(a.n_sh, b.n_sh) >= 0.5 ORDER BY doc_a, doc_b""")),
+
+    Entry("ngram_scores", (s, dir) =>
+      Dedup.ngramScores(cat(s, dir).table("documents"), minContainment = 0.5)
+        .orderBy("doc_a", "doc_b"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         ex AS (SELECT doc_id, unnest(list_transform(s,
+             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
+           FROM sh WHERE len(s) > 0),
+         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
+         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
+         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
+         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
+         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
+         SELECT doc_a, doc_b, inter, a.n_sh AS na, b.n_sh AS nb,
+           inter / (a.n_sh + b.n_sh - inter) AS jaccard,
+           inter / least(a.n_sh, b.n_sh) AS containment
+         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
+         WHERE inter / (a.n_sh + b.n_sh - inter) >= 0.3
+            OR inter / least(a.n_sh, b.n_sh) >= 0.5 ORDER BY doc_a, doc_b""")),
+
+    Entry("dedup_groups", (s, dir) =>
+      Dedup.dedupGroups(Dedup.minhashPairs(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
+      """WITH RECURSIVE t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         sg AS (SELECT doc_id, s,
+           list_transform(range(0, 16), i -> list_min(list_transform(s,
+             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
+               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
+               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
+         FROM sh WHERE len(s) > 0),
+         bands AS (SELECT doc_id,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM sg CROSS JOIN range(0, 8) r(b)),
+         cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         FROM bands x JOIN bands y ON x.bkey = y.bkey AND x.doc_id < y.doc_id),
+         v AS (SELECT doc_a, doc_b,
+           len(list_intersect(xa.s, yb.s)) AS inter, len(xa.s) AS la, len(yb.s) AS lb
+         FROM cand JOIN sg xa ON xa.doc_id = doc_a JOIN sg yb ON yb.doc_id = doc_b),
+         mp AS (SELECT doc_a, doc_b FROM v WHERE inter / (la + lb - inter) >= 0.5),
+         e AS (SELECT doc_a AS s, doc_b AS d FROM mp UNION SELECT doc_b, doc_a FROM mp),
+         reach(id, r) AS (
+           SELECT s, s FROM e GROUP BY s
+           UNION
+           SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d
+         )
+         SELECT id AS doc_id, min(r) AS group_id FROM reach GROUP BY id ORDER BY doc_id""")),
+
+    Entry("strip_dup_spans", (s, dir) =>
+      Dedup.stripDupSpans(cat(s, dir).table("documents"), w = 15, stride = 5)
+        .orderBy("doc_id"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
+             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
+               struct_pack(span_start := p,
+                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
+             ELSE [] END) AS s
+         FROM t),
+         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
+         FROM sp),
+         hot AS (SELECT span_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
+         drops AS (SELECT e.doc_id, list_sort(list_distinct(list(e.span_start))) AS starts
+         FROM e JOIN hot USING (span_hash) GROUP BY e.doc_id)
+         SELECT t.doc_id,
+           -- COALESCE: DuckDB's array_to_string([]) is NULL, Spark's
+           -- array_join([]) is '' — a fully-stripped doc must agree
+           COALESCE(array_to_string(list_filter(t.toks, (x, i) ->
+             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0), ' '), '') AS text_clean,
+           len(t.toks) AS n_tokens,
+           len(t.toks) - len(list_filter(t.toks, (x, i) ->
+             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0)) AS n_tokens_removed
+         FROM t LEFT JOIN drops USING (doc_id) ORDER BY doc_id""")),
+
+    Entry("dup_spans", (s, dir) =>
+      Dedup.dupSpans(cat(s, dir).table("documents"), w = 15, stride = 5)
+        .orderBy("doc_id", "span_start", "span_hash"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
+             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
+               struct_pack(span_start := p,
+                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
+             ELSE [] END) AS s
+         FROM t),
+         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
+         FROM sp),
+         hot AS (SELECT span_hash, count(DISTINCT doc_id) AS n_docs
+         FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
+         SELECT e.doc_id, e.span_start, e.span_hash, hot.n_docs
+         FROM e JOIN hot USING (span_hash) ORDER BY doc_id, span_start, span_hash""")),
+
+    // ingest-shape FUZZY dedup: the last-quintile ids as the new batch,
+    // scored against the accepted corpus's persisted inverted index
+    // (same split as incremental_dedup — that one catches exact copies,
+    // this one near-copies)
+    Entry("ngram_index_dedup", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      Dedup.ngramIndexDedup(
+          docs.where(col("doc_id") % 10 >= 8),
+          Dedup.ngramIndex(docs.where(col("doc_id") % 10 < 8)),
+          minContainment = 0.5)
+        .orderBy("batch_id", "corpus_id")
+    }, Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         ex AS (SELECT doc_id, unnest(list_transform(s,
+             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
+           FROM sh WHERE len(s) > 0),
+         bex AS (SELECT doc_id AS batch_id, sg FROM ex WHERE doc_id % 10 >= 8),
+         idx AS (SELECT doc_id, sg FROM ex WHERE doc_id % 10 < 8),
+         rare AS (SELECT sg FROM idx GROUP BY sg HAVING count(*) <= 100),
+         kept AS (SELECT idx.doc_id, idx.sg FROM idx JOIN rare USING (sg)),
+         bsz AS (SELECT batch_id, count(*) AS nb FROM bex GROUP BY 1),
+         pr AS (SELECT b.batch_id, k.doc_id AS corpus_id, count(*) AS inter
+         FROM kept k JOIN bex b ON k.sg = b.sg GROUP BY 1, 2)
+         SELECT pr.batch_id, pr.corpus_id, pr.inter, bsz.nb,
+           pr.inter / bsz.nb AS containment
+         FROM pr JOIN bsz USING (batch_id)
+         WHERE pr.inter / bsz.nb >= 0.5
+         ORDER BY batch_id, corpus_id""")),
+
+    // The fuzzy-ingest LOOP against a persisted SIGNATURE artifact
+    // (MinHashStore) — fingerprint_ingest's near-dup sibling: found the
+    // store from half the corpus, gate epoch-1's batch by estimated
+    // Jaccard against the LOADED signatures, fold the surviving docs back
+    // in (append), then gate epoch-2 against the updated store — the
+    // accepted corpus's text is signature-reduced exactly once.
+    // replays the two-epoch signature-store loop: epoch-1 flags (batch
+    // %3 vs corpus %2) decide the survivors appended to the store;
+    // epoch-2 gates batch %5 against corpus ∪ survivors — sig arithmetic
+    // identical to dedup_minhash's
+    Entry("minhash_ingest_dedup", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val store = tempStore("graft-mhstore")
+      MinHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
+      val b1 = docs.where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), col("text"))
+      val f1 = Dedup.minhashIngestDedup(b1, MinHashStore.load(s, store))
+      MinHashStore.append(
+        b1.join(f1.select(col("batch_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti"),
+        store)
+      val b2 = docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+      Dedup.minhashIngestDedup(b2, MinHashStore.load(s, store))
+        .orderBy("batch_id", "corpus_id")
+    }, Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         sg AS (SELECT doc_id,
+           list_transform(range(0, 16), i -> list_min(list_transform(s,
+             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
+               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
+               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
+         FROM sh WHERE len(s) > 0),
+         bd AS (SELECT doc_id, sig,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM sg CROSS JOIN range(0, 8) r(b)),
+         f1 AS (SELECT DISTINCT x.doc_id AS batch_id
+         FROM bd x JOIN bd y ON x.bkey = y.bkey
+         WHERE x.doc_id % 3 = 0 AND y.doc_id % 2 = 0
+           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5),
+         corpus2 AS (
+           SELECT doc_id, sig FROM sg WHERE doc_id % 2 = 0
+           UNION ALL
+           SELECT doc_id, sig FROM sg WHERE doc_id % 3 = 0
+             AND doc_id NOT IN (SELECT batch_id FROM f1)),
+         bd2 AS (SELECT doc_id, sig,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM corpus2 CROSS JOIN range(0, 8) r(b)),
+         p2 AS (SELECT DISTINCT x.doc_id AS batch_id, y.doc_id AS corpus_id,
+           len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) AS m
+         FROM bd x JOIN bd2 y ON x.bkey = y.bkey
+         WHERE x.doc_id % 5 = 0
+           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5)
+         SELECT batch_id, corpus_id, m / 16 AS est_jaccard
+         FROM p2 ORDER BY batch_id, corpus_id""")),
+
+    // The Hamming-bounded fuzzy-ingest LOOP (SimHashStore) — the
+    // minhash_ingest_dedup sibling that completes the fuzzy store
+    // family: same two-epoch save/gate/append/gate shape, but the gate
+    // is EXACT over the carried 48-bit signatures (4-chunk pigeonhole,
+    // hamming <= 3) instead of Jaccard-estimated.
+    // Two-epoch simhash ingest loop: the chunk-banded gate is EXACT for
+    // hamming <= 3 (pigeonhole), so the oracle models it as the brute
+    // Hamming join; epoch 2's corpus = founding evens + epoch-1
+    // survivors, the minhash_ingest_dedup corpus2 shape.
+    Entry("simhash_ingest_dedup", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val store = tempStore("graft-shstore")
+      SimHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
+      val b1 = docs.where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), col("text"))
+      val f1 = Dedup.simhashIngestDedup(b1, SimHashStore.load(s, store))
+      SimHashStore.append(
+        b1.join(f1.select(col("batch_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti"),
+        store)
+      val b2 = docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+      Dedup.simhashIngestDedup(b2, SimHashStore.load(s, store))
+        .orderBy("batch_id", "corpus_id")
+    }, Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         th AS (SELECT doc_id,
+           list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS th
+         FROM t WHERE len(toks) > 0),
+         bits AS (SELECT doc_id, list_transform(range(0, 48), b ->
+           CAST(list_sum(list_transform(th, h ->
+             CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) AS BIGINT)) AS bits
+         FROM th),
+         s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 48), b ->
+           CASE WHEN bits[b + 1] > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END))
+           AS BIGINT) AS sim
+         FROM bits),
+         f1 AS (SELECT DISTINCT x.doc_id AS batch_id
+         FROM s x JOIN s y ON bit_count(xor(x.sim, y.sim)) <= 3
+         WHERE x.doc_id % 3 = 0 AND y.doc_id % 2 = 0),
+         corpus2 AS (
+           SELECT doc_id, sim FROM s WHERE doc_id % 2 = 0
+           UNION ALL
+           SELECT doc_id, sim FROM s WHERE doc_id % 3 = 0
+             AND doc_id NOT IN (SELECT batch_id FROM f1))
+         SELECT DISTINCT x.doc_id AS batch_id, y.doc_id AS corpus_id,
+           CAST(bit_count(xor(x.sim, y.sim)) AS BIGINT) AS hamming
+         FROM s x JOIN corpus2 y ON bit_count(xor(x.sim, y.sim)) <= 3
+         WHERE x.doc_id % 5 = 0
+         ORDER BY batch_id, corpus_id""")),
+
+    // The STACKED ingest gate — the composition a production crawl
+    // pipeline actually runs per batch, in cost order: (1) cheap
+    // map-side quality heuristics drop junk before anything touches an
+    // artifact, (2) exact dedup against the persisted FingerprintStore
+    // (16-byte keys, batch-internal copies canonicalize to min doc_id
+    // in the same pass), (3) banded MinHash fuzzy dedup against the
+    // persisted MinHashStore — the expensive gate sees only what the
+    // cheap gates passed. Survivors are what [[append]] would fold in.
+    // Stacked ingest gate: quality heuristics → exact-digest anti-join
+    // (batch canonicalized to min doc_id per digest) → banded-MinHash
+    // fuzzy flag, each stage consuming the previous stage's survivors.
+    Entry("ingest_gate", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val corpus = docs.where(col("doc_id") % 2 === 0)
+      val batch = docs.where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), col("text"))
+      val fp = tempStore("graft-ig-fp")
+      val mh = tempStore("graft-ig-mh")
+      // the two foundings read the same corpus but write disjoint stores —
+      // independent actions, overlapped (guide §2.6) exactly as a
+      // production ingest bootstrap would run them
+      graft.core.EpochStore.inParallel(
+        () => FingerprintStore.save(corpus, fp),
+        () => MinHashStore.save(corpus, mh))
+      // the stack body lives in IngestGate — ONE body under this oracle
+      // query, the streaming twin (StreamingIngestGate), and the ingest
+      // CLI, so the three forms can never drift
+      IngestGate.gate(batch,
+          FingerprintStore.loadFingerprints(s, fp),
+          MinHashStore.load(s, mh))
+        .select(col("doc_id"), col("n_tokens"))
+        .orderBy("doc_id")
+    }, Sql(
+      """WITH t AS (SELECT doc_id, text,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         q AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
+         FROM (SELECT *, len(list_filter(toks, x -> list_contains(
+             ['the','a','an','and','of','to','in','is','it','that'], x))) AS n_stop
+           FROM t WHERE doc_id % 3 = 0)
+         WHERE len(toks) >= 5 AND len(text) >= 40 AND n_stop > 0),
+         ex AS (SELECT md5(d.text) AS h, min(d.doc_id) AS doc_id
+         FROM documents d JOIN q ON d.doc_id = q.doc_id GROUP BY md5(d.text)),
+         corp AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 2 = 0),
+         ex2 AS (SELECT doc_id FROM ex WHERE h NOT IN (SELECT h FROM corp)),
+         sh AS (SELECT doc_id,
+           list_distinct(CASE WHEN len(toks) >= 3
+             THEN list_transform(range(1, len(toks) - 1),
+                    i -> array_to_string(toks[i:i+2], ' '))
+             ELSE [] END) AS s
+         FROM t),
+         sg AS (SELECT doc_id,
+           list_transform(range(0, 16), i -> list_min(list_transform(s,
+             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
+               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
+               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
+         FROM sh WHERE len(s) > 0),
+         bd AS (SELECT doc_id, sig,
+           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
+         FROM sg CROSS JOIN range(0, 8) r(b)),
+         f AS (SELECT DISTINCT x.doc_id
+         FROM bd x JOIN bd y ON x.bkey = y.bkey
+         WHERE x.doc_id IN (SELECT doc_id FROM ex2) AND y.doc_id % 2 = 0
+           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5)
+         SELECT q.doc_id AS doc_id, q.n_tokens FROM q
+         JOIN ex2 ON q.doc_id = ex2.doc_id
+         WHERE q.doc_id NOT IN (SELECT doc_id FROM f)
+         ORDER BY q.doc_id""")),
+
+    // line-granularity exact dedup (CCNet §4.1) over the synthesized
+    // line-structured batch (c4Batch — its boilerplate lines recur across
+    // docs by construction: "too short." everywhere, javascript/lorem on
+    // doc_id strides)
+    Entry("dup_lines", (s, dir) =>
+      Dedup.dupLines(c4Batch(cat(s, dir).table("documents")))
+        .orderBy("doc_id", "line_no", "line_hash"),
+      Sql(
+      s"""WITH b AS ($C4BatchSql),
+         t AS (SELECT doc_id, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
+         x AS (SELECT doc_id, unnest(list_filter(list_transform(range(1, len(lns) + 1), i ->
+             struct_pack(line_no := i, line := lns[i])), s -> len(s.line) > 0)) AS s
+         FROM t),
+         e AS (SELECT doc_id, CAST(s.line_no AS BIGINT) AS line_no,
+           CAST('0x' || substr(md5(s.line), 1, 15) AS BIGINT) AS line_hash FROM x),
+         hot AS (SELECT line_hash, count(DISTINCT doc_id) AS n_docs
+         FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
+         SELECT e.doc_id, e.line_no, e.line_hash, hot.n_docs
+         FROM e JOIN hot USING (line_hash) ORDER BY doc_id, line_no, line_hash""")),
+
+    Entry("strip_dup_lines", (s, dir) =>
+      Dedup.stripDupLines(c4Batch(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
+      s"""WITH b AS ($C4BatchSql),
+         t AS (SELECT doc_id, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
+         x AS (SELECT doc_id, unnest(list_filter(lns, l -> len(l) > 0)) AS line FROM t),
+         e AS (SELECT doc_id, CAST('0x' || substr(md5(line), 1, 15) AS BIGINT) AS line_hash FROM x),
+         hot AS (SELECT line_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
+         hd AS (SELECT e.doc_id, list(DISTINCT e.line_hash) AS hh
+         FROM e JOIN hot USING (line_hash) GROUP BY 1),
+         c AS (SELECT t.doc_id, t.lns,
+           list_filter(t.lns, l -> len(l) = 0 OR NOT list_contains(COALESCE(hd.hh, []),
+             CAST('0x' || substr(md5(l), 1, 15) AS BIGINT))) AS kept
+         FROM t LEFT JOIN hd USING (doc_id))
+         SELECT doc_id, COALESCE(array_to_string(kept, chr(10)), '') AS text_clean,
+           CAST(len(list_filter(lns, l -> len(l) > 0)) AS BIGINT) AS n_lines,
+           CAST(len(lns) - len(kept) AS BIGINT) AS n_lines_removed
+         FROM c ORDER BY doc_id""")),
+
+    // WITHIN-doc repeated-line removal (zero-shuffle map pass) over the
+    // header/footer-chromed demo batch
+    Entry("strip_repeat_lines", (s, dir) =>
+      TextAnalysis.stripRepeatedLines(repBatch(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
+      s"""WITH b AS ($RepBatchSql),
+         l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM b),
+         k AS (SELECT doc_id, ls,
+           list_filter(range(1, len(ls) + 1), i ->
+             trim(ls[i]) = '' OR list_position(ls, ls[i]) = i) AS keep
+         FROM l)
+         SELECT doc_id,
+           array_to_string(list_transform(keep, i -> ls[i]), chr(10)) AS clean_text,
+           CAST(len(ls) AS BIGINT) AS n_lines,
+           CAST(len(ls) - len(keep) AS BIGINT) AS n_removed
+         FROM k ORDER BY doc_id""")),
+
+    Entry("stratified_sample", (s, dir) =>
+      TextAnalysis.hashSample(cat(s, dir).table("documents"))
+        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id"),
+      Sql(
+      """SELECT doc_id, lang, source FROM documents
+         WHERE CAST('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 < 10
+         ORDER BY doc_id""")),
+
+    // sub-percent holdout (2.5 permille-resolution) — inexpressible at
+    // integer-percent resolution
+    Entry("sample_permille", (s, dir) =>
+      TextAnalysis.hashSamplePermille(cat(s, dir).table("documents"), permille = 25)
+        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id"),
+      Sql(
+      """SELECT doc_id, lang, source FROM documents
+         WHERE CAST('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 25
+         ORDER BY doc_id""")),
+
+    // deterministic 90/5/5 train/val/test assignment (audit view: every
+    // doc with its per-mille bucket and split)
+    Entry("corpus_split", (s, dir) =>
+      TextAnalysis.corpusSplit(cat(s, dir).table("documents"))
+        .select(col("doc_id"), col("bucket_permille"), col("split"))
+        .orderBy("doc_id"),
+      Sql(
+      """WITH h AS (SELECT doc_id,
+           CAST('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000
+             AS bucket_permille
+         FROM documents)
+         SELECT doc_id, bucket_permille,
+           CASE WHEN bucket_permille < 900 THEN 'train'
+                WHEN bucket_permille < 950 THEN 'val'
+                ELSE 'test' END AS split
+         FROM h ORDER BY doc_id""")),
+
+    // Target mix: upweight English, keep some German/French, drop the rest
+    // — the domain-reweighting pass of a training-mix builder.
+    Entry("mix_sample", (s, dir) =>
+      TextAnalysis.mixSample(cat(s, dir).table("documents"),
+          weights = Map("en" -> 80, "de" -> 40, "fr" -> 20), byCol = "lang")
+        .select(col("doc_id"), col("lang"), col("source")).orderBy("doc_id"),
+      Sql(
+      """SELECT doc_id, lang, source FROM documents
+         WHERE CAST('0x' || substr(md5('mix|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 <
+           CASE WHEN lang = 'en' THEN 80 WHEN lang = 'de' THEN 40
+                WHEN lang = 'fr' THEN 20 ELSE 0 END
+         ORDER BY doc_id""")),
+
+    // the mixture SOLVER: per-stratum keep rates from a 20k-token budget
+    // at 500/250/150/100 permille shares (zh unlisted → drops); at sf0.01
+    // the de stratum is oversubscribed, exercising the clamp path
+    Entry("mix_plan", (s, dir) =>
+      TextAnalysis.mixPlan(cat(s, dir).table("documents"),
+          sharePermille = Map("en" -> 500, "de" -> 250, "fr" -> 150, "es" -> 100),
+          tokenBudget = 20000L)
+        .orderBy("lang"),
+      Sql(
+      s"""WITH $MixPlanSql
+         SELECT * FROM plan ORDER BY lang""")),
+
+    // the solved mixture materialized map-side via the deterministic
+    // id-hash — plan broadcast, zero shuffle on the corpus side
+    Entry("mix_materialize", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val plan = TextAnalysis.mixPlan(docs,
+        sharePermille = Map("en" -> 500, "de" -> 250, "fr" -> 150, "es" -> 100),
+        tokenBudget = 20000L)
+      TextAnalysis.mixApply(docs, plan)
+        .select(col("doc_id"), col("lang")).orderBy("doc_id")
+    }, Sql(
+      s"""WITH $MixPlanSql
+         SELECT d.doc_id, d.lang FROM documents d JOIN plan USING (lang)
+         WHERE CAST('0x' || substr(md5('mixplan|' || d.doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000
+           < plan.keep_permille
+         ORDER BY d.doc_id""")),
+
+    Entry("text_normalize", (s, dir) =>
+      TextAnalysis.textNormalize(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS n FROM documents)
+         SELECT doc_id, n AS norm_text, md5(n) AS norm_md5,
+           CAST(len(n) AS BIGINT) AS n_chars_norm
+         FROM t ORDER BY doc_id""")),
+
+    Entry("corpus_profile", (s, dir) =>
+      TextAnalysis.corpusProfile(cat(s, dir).table("documents"))
+        .orderBy("lang", "source"),
+      Sql(
+      """WITH t AS (SELECT lang, source,
+           CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_toks,
+           md5(text) AS d
+         FROM documents)
+         SELECT lang, source, count(*) AS n_docs,
+           CAST(sum(n_toks) AS BIGINT) AS n_tokens,
+           min(n_toks) AS min_tokens, max(n_toks) AS max_tokens,
+           CAST(sum(CASE WHEN n_toks < 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
+           count(DISTINCT d) AS n_distinct_texts
+         FROM t GROUP BY 1, 2 ORDER BY lang, source""")),
+
+    // WIMBD-style corpus n-gram census: top-100 word-3grams by occurrence
+    // (one map-side-combined shuffle + TakeOrderedAndProject)
+    Entry("top_ngrams", (s, dir) =>
+      TextAnalysis.topNgrams(cat(s, dir).table("documents"), n = 3, k = 100),
+      Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
+             i -> array_to_string(toks[i:i+2], ' '))) AS ngram
+           FROM t WHERE len(toks) >= 3)
+         SELECT ngram, count(*) AS n_occurrences, count(DISTINCT doc_id) AS n_docs
+         FROM g GROUP BY ngram
+         ORDER BY n_occurrences DESC, ngram LIMIT 100""")),
+
+    // HLL++ sketch distinct counts
+    Entry("profile_approx", (s, dir) =>
+      TextAnalysis.corpusProfileApprox(cat(s, dir).table("documents"))
+        .orderBy("lang", "source"),
+      Exempt("DuckDB's HLL is a different sketch; TextAnalysisSpec " +
+        "asserts the accuracy against exact counts")),
+
+    // ingest drift gate: PSI of the en slice (the "new crawl") against
+    // the full corpus's top-300 vocabulary — per-term contributions
+    Entry("corpus_drift", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      TextAnalysis.corpusDrift(docs, docs.where(col("lang") === "en"), topK = 300)
+        .orderBy("tok")
+    }, Sql(
+      """WITH ctk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
+             x -> len(x) > 0)) AS tok FROM documents),
+         cc AS (SELECT tok, count(*) AS c_cnt FROM ctk GROUP BY 1),
+         vocab AS (SELECT * FROM cc ORDER BY c_cnt DESC, tok LIMIT 300),
+         btk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
+             x -> len(x) > 0)) AS tok FROM documents WHERE lang = 'en'),
+         bc AS (SELECT tok, count(*) AS b_cnt FROM btk GROUP BY 1),
+         j AS (SELECT vocab.tok, c_cnt, COALESCE(b_cnt, 0) AS b_cnt
+           FROM vocab LEFT JOIN bc USING (tok)),
+         tt AS (SELECT sum(c_cnt) AS ctot, sum(b_cnt) AS btot, count(*) AS n FROM j)
+         SELECT tok, c_cnt, b_cnt,
+           round((c_cnt + 1)::DOUBLE / (ctot + n), 6) AS p,
+           round((b_cnt + 1)::DOUBLE / (btot + n), 6) AS q,
+           round(((c_cnt + 1)::DOUBLE / (ctot + n) - (b_cnt + 1)::DOUBLE / (btot + n))
+             * ln(((c_cnt + 1)::DOUBLE / (ctot + n)) / ((b_cnt + 1)::DOUBLE / (btot + n))), 6)
+             AS psi_contrib
+         FROM j CROSS JOIN tt ORDER BY tok""")),
+
+    Entry("length_band", (s, dir) =>
+      TextAnalysis.lengthBand(cat(s, dir).table("documents"),
+          pLoPermille = 50, pHiPermille = 950)
+        .orderBy("doc_id"),
+      Sql(
+      """WITH tc AS (SELECT doc_id,
+           CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens
+         FROM documents),
+         cum AS (SELECT n_tokens, count(*) OVER (ORDER BY n_tokens) AS c,
+                        count(*) OVER () AS n_all FROM tc),
+         lo AS (SELECT min(n_tokens) AS v FROM cum
+                WHERE c >= GREATEST((n_all * 50 + 999) // 1000, 1)),
+         hi AS (SELECT min(n_tokens) AS v FROM cum
+                WHERE c >= GREATEST((n_all * 950 + 999) // 1000, 1))
+         SELECT tc.doc_id, tc.n_tokens FROM tc, lo, hi
+         WHERE tc.n_tokens BETWEEN lo.v AND hi.v ORDER BY doc_id""")),
+
+    // The round-7 curation capstone: strip duplicated passages, drop
+    // mostly-boilerplate docs (removal > half), keep the adaptive length
+    // band of the CLEANED text, exact-dedup on the cleaned text, per-mille
+    // sample — detect→act operators composed into ONE declarative plan.
+    Entry("corpus_curate", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      // The strip subtree (dupSpans' two shuffles) feeds BOTH lengthBand's
+      // plan-time histogram job and the final plan — persist it so the
+      // subtree runs once, not per consumer (the Dedup signature-cache
+      // discipline). The histogram collect populates the cache; the final
+      // sampled frame (narrow: two longs) is materialized eagerly so the
+      // cache can be released here instead of leaking into the session.
+      val surviving = Dedup.stripDupSpans(docs)
+        .where(col("n_tokens_removed") * 2 <= col("n_tokens"))
+        .select(col("doc_id"), col("text_clean").as("text"))
+        .persist()
+      try {
+        val banded = TextAnalysis.lengthBand(surviving)
+        val withText = banded.join(surviving, "doc_id")
+        val keep = TextAnalysis.dedupExact(withText)
+          .select(col("keep_id").as("doc_id"))
+        TextAnalysis.hashSamplePermille(
+            withText.join(keep, Seq("doc_id"), "left_semi"),
+            permille = 500, salt = "curate")
+          .select(col("doc_id"), col("n_tokens"))
+          .orderBy("doc_id")
+          .localCheckpoint()
+      } finally surviving.unpersist()
+    }, Sql(
+      """WITH t AS (SELECT doc_id,
+           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
+         FROM documents),
+         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
+             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
+               struct_pack(span_start := p,
+                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
+             ELSE [] END) AS s
+         FROM t),
+         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
+         FROM sp),
+         hot AS (SELECT span_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
+         drops AS (SELECT e.doc_id, list_sort(list_distinct(list(e.span_start))) AS starts
+         FROM e JOIN hot USING (span_hash) GROUP BY e.doc_id),
+         clean AS (SELECT t.doc_id,
+           COALESCE(array_to_string(list_filter(t.toks, (x, i) ->
+             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0), ' '), '') AS text_clean,
+           len(t.toks) AS n0,
+           len(t.toks) - len(list_filter(t.toks, (x, i) ->
+             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0)) AS removed
+         FROM t LEFT JOIN drops USING (doc_id)),
+         surv AS (SELECT doc_id, text_clean,
+           CAST(len(list_filter(string_split_regex(lower(text_clean), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens
+         FROM clean WHERE removed * 2 <= n0),
+         cum AS (SELECT doc_id, n_tokens, count(*) OVER (ORDER BY n_tokens) AS c,
+                        count(*) OVER () AS n_all FROM surv),
+         lo AS (SELECT min(n_tokens) AS v FROM cum WHERE c >= GREATEST((n_all * 50 + 999) // 1000, 1)),
+         hi AS (SELECT min(n_tokens) AS v FROM cum WHERE c >= GREATEST((n_all * 950 + 999) // 1000, 1)),
+         band AS (SELECT surv.doc_id, surv.text_clean, surv.n_tokens FROM surv, lo, hi
+                  WHERE surv.n_tokens BETWEEN lo.v AND hi.v),
+         k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM band GROUP BY md5(text_clean))
+         SELECT band.doc_id, band.n_tokens FROM band JOIN k USING (doc_id)
+         WHERE CAST('0x' || substr(md5('curate|' || band.doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 500
+         ORDER BY doc_id""")),
+
+    Entry("compress_ratio", (s, dir) =>
+      TextAnalysis.compressionRatio(cat(s, dir).table("documents"))
+        .orderBy("doc_id"),
+      Exempt("DuckDB has no deflate; TextAnalysisSpec pins the ratios")),
+
+    Entry("repetition_score", (s, dir) =>
+      TextAnalysis.repetitionScore(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -2424,9 +2551,11 @@ object SparkEntry {
            round(CAST(len(list_distinct(toks)) AS DOUBLE) / greatest(len(toks), 1), 4) AS distinct_token_ratio,
            round(CASE WHEN len(gs) > 0 THEN 1.0 - CAST(len(list_distinct(gs)) AS DOUBLE) / len(gs) ELSE 0.0 END, 4) AS dup_3gram_ratio,
            round(CASE WHEN len(toks) > 0 THEN CAST(list_max(list_transform(list_distinct(toks), t -> len(list_filter(toks, x -> x = t)))) AS DOUBLE) / len(toks) ELSE 0.0 END, 4) AS top_token_ratio
-         FROM g ORDER BY doc_id""",
+         FROM g ORDER BY doc_id""")),
 
-    "gopher_quality" ->
+    Entry("gopher_quality", (s, dir) =>
+      TextAnalysis.gopherQuality(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks,
            string_split(text, chr(10)) AS lns
@@ -2451,9 +2580,14 @@ object SparkEntry {
            AND mean_word_len >= 3 AND mean_word_len <= 10
            AND frac_alpha_words >= 0.8 AND n_stop_distinct >= 2
            AND frac_bullet_lines <= 0.9 AND frac_ellipsis_lines <= 0.3) AS passes_gopher
-         FROM m ORDER BY doc_id""",
+         FROM m ORDER BY doc_id""")),
 
-    "c4_filter" ->
+    // C4 §2.2 line-level boilerplate filter over the structured page batch
+    // (c4Batch) — per-rule telemetry + verdict + cleaned text per page.
+    Entry("c4_filter", (s, dir) =>
+      TextAnalysis.c4Filter(c4Batch(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
       s"""WITH b AS ($C4BatchSql),
          t AS (SELECT doc_id, text, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
          f AS (SELECT doc_id, text, lns,
@@ -2470,36 +2604,14 @@ object SparkEntry {
            COALESCE(array_to_string(kept, chr(10)), '') AS clean_text
          FROM f)
          SELECT *, (NOT has_brace AND NOT has_lorem AND n_sentences >= 3) AS passes_c4
-         FROM m ORDER BY doc_id""",
+         FROM m ORDER BY doc_id""")),
 
-    "c4_curate" ->
-      s"""WITH b AS ($C4BatchSql),
-         t AS (SELECT doc_id, text, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
-         f AS (SELECT doc_id, text, lns,
-           list_filter(lns, l -> regexp_matches(l, '[.!?"]$$')
-             AND len(regexp_extract_all(l, '\\S+')) >= 5
-             AND NOT contains(lower(l), 'javascript')) AS kept FROM t),
-         m AS (SELECT doc_id,
-           CAST(len(regexp_extract_all(COALESCE(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
-           contains(text, '{') AS has_brace,
-           contains(lower(text), 'lorem ipsum') AS has_lorem,
-           COALESCE(array_to_string(kept, chr(10)), '') AS clean_text
-         FROM f),
-         c AS (SELECT doc_id, clean_text AS text FROM m
-           WHERE NOT has_brace AND NOT has_lorem AND n_sentences >= 3),
-         k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM c GROUP BY md5(text)),
-         q AS (SELECT doc_id FROM (SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS toks FROM c)
-           WHERE len(toks) >= 5 AND len(text) >= 40
-             AND len(list_filter(toks, x -> list_contains(
-               ['the','a','an','and','of','to','in','is','it','that'], x))) > 0),
-         s AS (SELECT doc_id FROM c
-           WHERE CAST('0x' || substr(md5('c4|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 500)
-         SELECT c.doc_id, CAST(len(c.text) AS BIGINT) AS n_chars FROM c
-         JOIN q USING (doc_id) JOIN k USING (doc_id) JOIN s USING (doc_id)
-         ORDER BY doc_id""",
-
-    "fineweb_filter" ->
+    // FineWeb's three custom line-shape heuristics over the same
+    // structured page batch — verdicts in exact integer permille algebra
+    Entry("fineweb_filter", (s, dir) =>
+      TextAnalysis.finewebFilter(c4Batch(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
       s"""WITH b AS ($C4BatchSql),
          t AS (SELECT doc_id, list_filter(list_transform(string_split(text, chr(10)),
              l -> trim(l)), l -> len(l) > 0) AS ne FROM b),
@@ -2517,9 +2629,14 @@ object SparkEntry {
            round(CAST(dupchars AS DOUBLE) / GREATEST(tot_chars, 1), 4) AS dup_line_char_frac,
            (punct * 1000 > n_lines * 120 AND nshort * 1000 < n_lines * 670
              AND dupchars * 1000 < tot_chars * 100) AS passes_fineweb
-         FROM m ORDER BY doc_id""",
+         FROM m ORDER BY doc_id""")),
 
-    "quality_ensemble" ->
+    // the four-battery agreement gate in ONE map-side pass — every
+    // verdict the same shared expression its standalone operator emits
+    Entry("quality_ensemble", (s, dir) =>
+      TextAnalysis.qualityEnsemble(c4Batch(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
       s"""WITH b AS ($C4BatchSql),
          t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS toks,
@@ -2581,9 +2698,67 @@ object SparkEntry {
               + CASE WHEN passes_fineweb THEN 1 ELSE 0 END AS BIGINT) AS n_pass
          FROM h JOIN g USING (doc_id) JOIN c USING (doc_id) JOIN f USING (doc_id))
          SELECT *, n_pass = 4 AS passes_all, n_pass >= 3 AS passes_majority
-         FROM e ORDER BY doc_id""",
+         FROM e ORDER BY doc_id""")),
 
-    "fineweb_curate" ->
+    // corpus_curate variant with the C4 pass in front: boilerplate-strip →
+    // page gate → quality gate on the CLEANED text → exact-dedup keep →
+    // deterministic sample, one declarative plan (every stage narrow or a
+    // 16-byte-digest shuffle).
+    Entry("c4_curate", { (s, dir) =>
+      val f = TextAnalysis.c4Filter(c4Batch(cat(s, dir).table("documents")))
+      val clean = f.where(col("passes_c4"))
+        .select(col("doc_id"), col("clean_text").as("text"))
+      val keep = TextAnalysis.dedupExact(clean).select(col("keep_id").as("doc_id"))
+      TextAnalysis.hashSamplePermille(
+          clean.where(TextAnalysis.passesQuality(col("text")))
+            .join(keep, Seq("doc_id"), "left_semi"),
+          permille = 500, salt = "c4")
+        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
+        .orderBy("doc_id")
+    }, Sql(
+      s"""WITH b AS ($C4BatchSql),
+         t AS (SELECT doc_id, text, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
+         f AS (SELECT doc_id, text, lns,
+           list_filter(lns, l -> regexp_matches(l, '[.!?"]$$')
+             AND len(regexp_extract_all(l, '\\S+')) >= 5
+             AND NOT contains(lower(l), 'javascript')) AS kept FROM t),
+         m AS (SELECT doc_id,
+           CAST(len(regexp_extract_all(COALESCE(array_to_string(kept, chr(10)), ''), '[.!?]')) AS BIGINT) AS n_sentences,
+           contains(text, '{') AS has_brace,
+           contains(lower(text), 'lorem ipsum') AS has_lorem,
+           COALESCE(array_to_string(kept, chr(10)), '') AS clean_text
+         FROM f),
+         c AS (SELECT doc_id, clean_text AS text FROM m
+           WHERE NOT has_brace AND NOT has_lorem AND n_sentences >= 3),
+         k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM c GROUP BY md5(text)),
+         q AS (SELECT doc_id FROM (SELECT doc_id, text,
+             list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS toks FROM c)
+           WHERE len(toks) >= 5 AND len(text) >= 40
+             AND len(list_filter(toks, x -> list_contains(
+               ['the','a','an','and','of','to','in','is','it','that'], x))) > 0),
+         s AS (SELECT doc_id FROM c
+           WHERE CAST('0x' || substr(md5('c4|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 500)
+         SELECT c.doc_id, CAST(len(c.text) AS BIGINT) AS n_chars FROM c
+         JOIN q USING (doc_id) JOIN k USING (doc_id) JOIN s USING (doc_id)
+         ORDER BY doc_id""")),
+
+    // FineWeb-style curation composed into one declarative plan: page
+    // gate (the fineweb battery) → cross-doc line strip over the
+    // SURVIVORS → exact dedup on the stripped text → per-mille sample.
+    // Stage costs: gate map-side; strip = dup_lines' two 8-byte-key
+    // shuffles; dedup a 16-byte-digest shuffle; sample map-side.
+    Entry("fineweb_curate", { (s, dir) =>
+      val pages = c4Batch(cat(s, dir).table("documents"))
+      val gate = TextAnalysis.finewebFilter(pages).where(col("passes_fineweb"))
+        .select("doc_id")
+      val stripped = Dedup.stripDupLines(pages.join(gate, Seq("doc_id"), "left_semi"))
+        .select(col("doc_id"), col("text_clean").as("text"))
+      val keep = TextAnalysis.dedupExact(stripped).select(col("keep_id").as("doc_id"))
+      TextAnalysis.hashSamplePermille(stripped.join(keep, Seq("doc_id"), "left_semi"),
+          permille = 500, salt = "fineweb")
+        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
+        .orderBy("doc_id")
+    }, Sql(
       s"""WITH b AS ($C4BatchSql),
          fw AS (SELECT doc_id, list_filter(list_transform(string_split(text, chr(10)),
              l -> trim(l)), l -> len(l) > 0) AS ne FROM b),
@@ -2614,9 +2789,88 @@ object SparkEntry {
          smp AS (SELECT doc_id FROM c
            WHERE CAST('0x' || substr(md5('fineweb|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 500)
          SELECT c.doc_id, CAST(len(c.text) AS BIGINT) AS n_chars FROM c
-         JOIN k USING (doc_id) JOIN smp USING (doc_id) ORDER BY doc_id""",
+         JOIN k USING (doc_id) JOIN smp USING (doc_id) ORDER BY doc_id""")),
 
-    "vocab_coverage" ->
+    Entry("unigram_lm", (s, dir) =>
+      TextAnalysis.unigramLm(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
+      """WITH tk AS (SELECT doc_id,
+           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS tok
+         FROM documents),
+         f AS (SELECT tok, count(*) AS tf FROM tk GROUP BY tok),
+         tot AS (SELECT count(*) AS total FROM tk),
+         s AS (SELECT tk.doc_id, f.tf,
+           CAST(round(ln(CAST(f.tf AS DOUBLE) / tot.total), 6) AS DECIMAL(18,6)) AS lp
+         FROM tk JOIN f USING (tok) CROSS JOIN tot)
+         SELECT doc_id, count(*) AS n_tokens,
+           round(-CAST(sum(lp) AS DOUBLE) / count(*), 4) AS avg_neg_logprob,
+           round(CAST(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS hapax_ratio
+         FROM s GROUP BY doc_id ORDER BY doc_id""")),
+
+    // k = 20 < the synthetic corpus's 31-token vocabulary, so the OOV floor
+    // path is actually exercised by the oracle
+    Entry("unigram_lm_capped", (s, dir) =>
+      TextAnalysis.unigramLm(cat(s, dir).table("documents"), vocabTopK = Some(20))
+        .orderBy("doc_id"),
+      Sql(
+      """WITH tk AS (SELECT doc_id,
+           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS tok
+         FROM documents),
+         f AS (SELECT tok, count(*) AS tf FROM tk GROUP BY tok),
+         tot AS (SELECT count(*) AS total FROM tk),
+         top AS (SELECT tok, tf FROM f ORDER BY tf DESC, tok LIMIT 20),
+         s AS (SELECT tk.doc_id, top.tf,
+           CAST(round(ln(COALESCE(CAST(top.tf AS DOUBLE), 1.0) / tot.total), 6) AS DECIMAL(18,6)) AS lp
+         FROM tk LEFT JOIN top USING (tok) CROSS JOIN tot)
+         SELECT doc_id, count(*) AS n_tokens,
+           round(-CAST(sum(lp) AS DOUBLE) / count(*), 4) AS avg_neg_logprob,
+           round(CAST(sum(CASE WHEN tf IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS oov_ratio
+         FROM s GROUP BY doc_id ORDER BY doc_id""")),
+
+    // CCNet's per-language perplexity tercile split (head/middle/tail) —
+    // exact integer-rank cuts over the bounded score histogram.
+    Entry("perplexity_buckets", (s, dir) =>
+      TextAnalysis.perplexityBuckets(cat(s, dir).table("documents"))
+        .orderBy("doc_id"),
+      Sql(
+      s"""WITH $PerplexityBucketsSql
+         SELECT * FROM pb ORDER BY doc_id""")),
+
+    // the CCNet curation act: drop the worst (tail) perplexity third of
+    // each language — the standard web-corpus LM-quality gate
+    Entry("ccnet_keep", (s, dir) =>
+      TextAnalysis.perplexityBuckets(cat(s, dir).table("documents"))
+        .where(col("ppl_band") =!= "tail")
+        .orderBy("doc_id"),
+      Sql(
+      s"""WITH $PerplexityBucketsSql
+         SELECT * FROM pb WHERE ppl_band != 'tail' ORDER BY doc_id""")),
+
+    Entry("tfidf_topk", (s, dir) =>
+      TextAnalysis.tfidfTopK(cat(s, dir).table("documents"), k = 5)
+        .orderBy("doc_id", "rank"),
+      Sql(
+      """WITH tk AS (SELECT doc_id,
+           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS term
+         FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
+         df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
+         s AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
+           round(tf.tf * ln(CAST(n_docs AS DOUBLE) / df.df), 4) AS tfidf
+         FROM tf JOIN df USING (term) CROSS JOIN nd),
+         r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rnk
+         FROM s)
+         SELECT doc_id, term, tf, df, tfidf, CAST(rnk AS BIGINT) AS "rank"
+         FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""")),
+
+    // vocabulary-budget coverage curve: token-occurrence mass under the
+    // k most frequent types, k ∈ {100, 1000, 10000}
+    Entry("vocab_coverage", (s, dir) =>
+      TextAnalysis.vocabCoverage(cat(s, dir).table("documents"),
+          ks = Seq(100, 1000, 10000))
+        .orderBy("k"),
+      Sql(
       """WITH tk AS (SELECT
            unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS tok
          FROM documents),
@@ -2631,88 +2885,95 @@ object SparkEntry {
            CAST(any_value(tot.n_types) AS BIGINT) AS n_types,
            round(CAST(sum(r.cnt) AS DOUBLE) / any_value(tot.total_tokens), 6) AS coverage
          FROM ks JOIN r ON r.rnk <= ks.k CROSS JOIN tot
-         GROUP BY ks.k ORDER BY k""",
+         GROUP BY ks.k ORDER BY k""")),
 
-    "bpe_tokenize" ->
+    // BPE merge-table training: the driver-loop trainer (one corpus pass + in-memory merges) —
+    // bit-identical to the Spark-iterated Bpe.bpeTrain (parity-specced),
+    // and the form that reaches 30k-merge production vocabularies
+    Entry("bpe_train", (s, dir) =>
+      Bpe.bpeTrainFast(cat(s, dir).table("documents"), numMerges = 20)
+        .orderBy("merge_rank"),
+      Exempt("the iterative merge argmax is not one SQL query; BpeSpec " +
+        "pins the semantics with hand-derived merges")),
+
+    // tokenization under a FIXED (pretrained-style) merge table — the
+    // deterministic replay the oracle mirrors with nested replace()
+    Entry("bpe_tokenize", (s, dir) =>
+      Bpe.bpeApply(cat(s, dir).table("documents"), BpeDemoMerges)
+        .select(col("doc_id"), array_join(col("bpe_tokens"), " ").as("bpe_text"),
+          col("n_bpe_tokens"))
+        .orderBy("doc_id"),
+      Sql(
       s"""WITH $BpeApplySql
          SELECT doc_id,
            regexp_replace(trim(repr), '  +', ' ', 'g') AS bpe_text,
            CAST(CASE WHEN len(trim(repr)) = 0 THEN 0
              ELSE len(string_split_regex(trim(repr), '  +')) END AS BIGINT) AS n_bpe_tokens
-         FROM bm ORDER BY doc_id""",
+         FROM bm ORDER BY doc_id""")),
 
-    "bpe_pack" ->
-      s"""WITH $BpeApplySql,
-         t AS (SELECT doc_id,
-           CAST(CASE WHEN len(trim(repr)) = 0 THEN 0
-             ELSE len(string_split_regex(trim(repr), '  +')) END AS BIGINT) AS n_tokens,
-           CAST(CAST('0x' || substr(md5('pack|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 8 AS INT) AS bucket
-         FROM bm),
-         c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         FROM t WHERE n_tokens > 0)
-         SELECT doc_id, bucket, n_tokens,
-           CAST((cum - n_tokens) // 256 AS BIGINT) AS seq_first,
-           CAST((cum - 1) // 256 AS BIGINT) AS seq_last,
-           CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
-         FROM c ORDER BY doc_id""",
+    Entry("bigram_lm", (s, dir) =>
+      TextAnalysis.bigramLm(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(BigramLmSql(0))),
 
-    "unigram_lm" ->
-      """WITH tk AS (SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS tok
-         FROM documents),
-         f AS (SELECT tok, count(*) AS tf FROM tk GROUP BY tok),
-         tot AS (SELECT count(*) AS total FROM tk),
-         s AS (SELECT tk.doc_id, f.tf,
-           CAST(round(ln(CAST(f.tf AS DOUBLE) / tot.total), 6) AS DECIMAL(18,6)) AS lp
-         FROM tk JOIN f USING (tok) CROSS JOIN tot)
-         SELECT doc_id, count(*) AS n_tokens,
-           round(-CAST(sum(lp) AS DOUBLE) / count(*), 4) AS avg_neg_logprob,
-           round(CAST(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS hapax_ratio
-         FROM s GROUP BY doc_id ORDER BY doc_id""",
+    // minCount = 25 prunes ~1/6 of the synthetic corpus's bigram types at
+    // sf0.001, so the smoothed unseen path and pruned_ratio are live
+    Entry("bigram_lm_pruned", (s, dir) =>
+      TextAnalysis.bigramLm(cat(s, dir).table("documents"), minCount = 25)
+        .orderBy("doc_id"),
+      Sql(BigramLmSql(25))),
 
-    "unigram_lm_capped" ->
-      """WITH tk AS (SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS tok
-         FROM documents),
-         f AS (SELECT tok, count(*) AS tf FROM tk GROUP BY tok),
-         tot AS (SELECT count(*) AS total FROM tk),
-         top AS (SELECT tok, tf FROM f ORDER BY tf DESC, tok LIMIT 20),
-         s AS (SELECT tk.doc_id, top.tf,
-           CAST(round(ln(COALESCE(CAST(top.tf AS DOUBLE), 1.0) / tot.total), 6) AS DECIMAL(18,6)) AS lp
-         FROM tk LEFT JOIN top USING (tok) CROSS JOIN tot)
-         SELECT doc_id, count(*) AS n_tokens,
-           round(-CAST(sum(lp) AS DOUBLE) / count(*), 4) AS avg_neg_logprob,
-           round(CAST(sum(CASE WHEN tf IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS oov_ratio
-         FROM s GROUP BY doc_id ORDER BY doc_id""",
-
-    "perplexity_buckets" ->
-      s"""WITH $PerplexityBucketsSql
-         SELECT * FROM pb ORDER BY doc_id""",
-
-    "ccnet_keep" ->
-      s"""WITH $PerplexityBucketsSql
-         SELECT * FROM pb WHERE ppl_band != 'tail' ORDER BY doc_id""",
-
-    "bigram_lm" -> BigramLmSql(0),
-
-    "bigram_lm_pruned" -> BigramLmSql(25),
-
-    "quality_lr" ->
+    // Learned quality filter: logistic regression distilling the heuristic
+    // gate, trained as part of the plan (3 unrolled GD steps, each a 4-value
+    // decimal aggregate riding a 1-row broadcast).
+    Entry("quality_lr", (s, dir) =>
+      QualityLr.qualityLr(cat(s, dir).table("documents")).orderBy("doc_id"),
+      Sql(
       s"""WITH $QualityLrSql
          SELECT doc_id, label, x1, x2, x3, lr_score, lr_score >= 0.5 AS keep
-         FROM s ORDER BY doc_id""",
+         FROM s ORDER BY doc_id""")),
 
-    "quality_lr_apply" ->
+    // Train-once/gate-many (the DCLM classifier deployment shape):
+    // weights trained on the even half, PERSISTED, loaded, and applied
+    // map-side to the odd-half ingest batch — zero jobs against the
+    // training corpus at apply time; loaded ≡ in-memory spec-asserted.
+    Entry("quality_lr_apply", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val store = tempStore("graft-qlr") + "/weights"
+      QualityLr.trainAndSaveWeights(docs.where(col("doc_id") % 2 === 0), store)
+      QualityLr.qualityLrApply(
+          docs.where(col("doc_id") % 2 === 1), QualityLr.loadWeights(s, store))
+        .orderBy("doc_id")
+    }, Sql(
       s"""WITH ${qualityLrSqlOn("doc_id % 2 = 0", "doc_id % 2 = 1")}
          SELECT doc_id, label, x1, x2, x3, lr_score, lr_score >= 0.5 AS keep
-         FROM s ORDER BY doc_id""",
+         FROM s ORDER BY doc_id""")),
 
-    "dsir_weights" ->
+    // DSIR importance weights of the full corpus against the en-language
+    // slice as the target domain (Xie et al. '23). buckets = 1024 keeps
+    // the broadcast log-ratio table tiny while the ~500-token synthetic
+    // vocabulary still exercises hash collisions.
+    // Tagged-subset form: the target is a predicate over the corpus, so
+    // the log-ratio table fits in ONE feature pass (two histograms from
+    // the same aggregate). Identical output to the two-frame form.
+    // Persisted deployment shape: the feature stream is cached and reused
+    // by fit + score instead of recomputed (measured 2.2× — see
+    // Dsir.dsirWeightsPersisted).
+    Entry("dsir_weights", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      Dsir.dsirWeightsPersisted(docs, col("lang") === "en", buckets = 1024)
+        .orderBy("doc_id")
+    }, Sql(
       s"""WITH $DsirWeightsSql
-         SELECT doc_id, n_features, dsir_logw FROM w ORDER BY doc_id""",
+         SELECT doc_id, n_features, dsir_logw FROM w ORDER BY doc_id""")),
 
-    "dsir_sample" ->
+    // Gumbel-top-k resample of the 100 most target-like docs under the
+    // fixed salt — deterministic, engine-replayable sampling ∝ exp(logw).
+    Entry("dsir_sample", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      Dsir.dsirSamplePersisted(docs, col("lang") === "en",
+          k = 100, buckets = 1024, salt = "dsir")
+        .orderBy("doc_id")
+    }, Sql(
       s"""WITH $DsirWeightsSql,
          g AS (SELECT *,
            CAST(CAST(round(-ln(-ln(
@@ -2723,241 +2984,21 @@ object SparkEntry {
            CAST(round(CAST(dsir_logw AS DECIMAL(18,4))
              + CAST(gumbel AS DECIMAL(18,6)), 4) AS DOUBLE) AS score
          FROM g ORDER BY score DESC, doc_id LIMIT 100)
-         SELECT * FROM s ORDER BY doc_id""",
+         SELECT * FROM s ORDER BY doc_id""")),
 
-    "asof_join" ->
-      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
-           FROM events),
-         o AS (SELECT o_custkey AS user_id,
-           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
-           max(o_orderkey) AS o_orderkey
-         FROM orders GROUP BY 1, 2)
-         SELECT ev.event_id, ev.user_id, o.o_orderkey
-         FROM ev ASOF LEFT JOIN o
-           ON ev.user_id = o.user_id AND ev.ts >= o.ots
-         ORDER BY ev.event_id""",
-
-    "asof_join_tol" ->
-      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
-           FROM events),
-         o AS (SELECT o_custkey AS user_id,
-           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
-           max(o_orderkey) AS o_orderkey
-         FROM orders GROUP BY 1, 2)
-         SELECT ev.event_id, ev.user_id,
-           CASE WHEN ev.ts - o.ots <= 2592000 THEN o.o_orderkey END AS o_orderkey
-         FROM ev ASOF LEFT JOIN o
-           ON ev.user_id = o.user_id AND ev.ts >= o.ots
-         ORDER BY ev.event_id""",
-
-    "asof_join_fwd" ->
-      """WITH ev AS (SELECT event_id, epoch_ns(ts) // 1000000000 AS ts, user_id
-           FROM events),
-         o AS (SELECT o_custkey AS user_id,
-           epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000 AS ots,
-           max(o_orderkey) AS o_orderkey
-         FROM orders GROUP BY 1, 2)
-         SELECT ev.event_id, ev.user_id, o.o_orderkey
-         FROM ev ASOF LEFT JOIN o
-           ON ev.user_id = o.user_id AND ev.ts <= o.ots
-         ORDER BY ev.event_id""",
-
-    "attribution_rollup" ->
-      """WITH imp AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS its,
-           max(event_id) AS imp_id
-         FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-         conv AS (SELECT user_id, event_id AS conv_id,
-           epoch_ns(ts) // 1000000000 AS cts
-         FROM events WHERE event_type = 'purchase')
-         SELECT conv.user_id, conv.conv_id, conv.cts AS conv_ts,
-           imp.imp_id, imp.its AS imp_ts, conv.cts - imp.its AS lag_s
-         FROM conv ASOF JOIN imp
-           ON conv.user_id = imp.user_id AND conv.cts >= imp.its
-         WHERE conv.cts - imp.its <= 86400
-         ORDER BY conv_id""",
-
-    "sessionize" ->
-      """WITH e AS (SELECT user_id, event_id,
-           epoch_ns(ts) // 1000000000 AS se FROM events),
-         l AS (SELECT *, lag(se) OVER (PARTITION BY user_id ORDER BY se, event_id) AS prev
-         FROM e),
-         f AS (SELECT *, CASE WHEN prev IS NULL OR se - prev > 1800 THEN 1 ELSE 0 END AS nw
-         FROM l),
-         s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY se, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-         FROM f)
-         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-           min(se) AS session_start_s, max(se) AS session_end_s,
-           count(*) AS n_events, max(se) - min(se) AS duration_s
-         FROM s GROUP BY user_id, session_seq
-         ORDER BY user_id, session_seq""",
-
-    "event_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-           epoch_ns(ts) // 1000000000 AS se FROM events),
-         s1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN se END)
-           OVER (PARTITION BY user_id) AS t1_s FROM e),
-         s2 AS (SELECT *, min(CASE WHEN event_type = 'view' AND se >= t1_s THEN se END)
-           OVER (PARTITION BY user_id) AS t2_s FROM s1),
-         s3 AS (SELECT *, min(CASE WHEN event_type = 'click' AND se >= t2_s THEN se END)
-           OVER (PARTITION BY user_id) AS t3_s FROM s2),
-         s4 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND se >= t3_s THEN se END)
-           OVER (PARTITION BY user_id) AS t4_s FROM s3),
-         g AS (SELECT user_id, min(t1_s) AS t1_s, min(t2_s) AS t2_s,
-           min(t3_s) AS t3_s, min(t4_s) AS t4_s FROM s4 GROUP BY user_id)
-         SELECT user_id, t1_s, t2_s, t3_s, t4_s,
-           CAST(CASE WHEN t1_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t2_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t3_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t4_s IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS steps_completed
-         FROM g ORDER BY user_id""",
-
-    "funnel_counts" ->
-      """WITH e AS (SELECT user_id, event_type,
-           epoch_ns(ts) // 1000000000 AS se FROM events),
-         s1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN se END)
-           OVER (PARTITION BY user_id) AS t1_s FROM e),
-         s2 AS (SELECT *, min(CASE WHEN event_type = 'view' AND se >= t1_s THEN se END)
-           OVER (PARTITION BY user_id) AS t2_s FROM s1),
-         s3 AS (SELECT *, min(CASE WHEN event_type = 'click' AND se >= t2_s THEN se END)
-           OVER (PARTITION BY user_id) AS t3_s FROM s2),
-         s4 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND se >= t3_s THEN se END)
-           OVER (PARTITION BY user_id) AS t4_s FROM s3),
-         g AS (SELECT user_id, min(t1_s) AS t1_s, min(t2_s) AS t2_s,
-           min(t3_s) AS t3_s, min(t4_s) AS t4_s FROM s4 GROUP BY user_id),
-         sc AS (SELECT CASE WHEN t1_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t2_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t3_s IS NOT NULL THEN 1 ELSE 0 END
-              + CASE WHEN t4_s IS NOT NULL THEN 1 ELSE 0 END AS steps_completed FROM g)
-         SELECT step, CAST(sum(CASE WHEN steps_completed >= step THEN 1 ELSE 0 END) AS BIGINT) AS n_users
-         FROM sc CROSS JOIN (SELECT unnest(range(1, 5)) AS step)
-         GROUP BY step ORDER BY step""",
-
-    "retention_cohorts" ->
-      """WITH a AS (SELECT DISTINCT user_id,
-           epoch_ns(ts) // 86400000000000 AS day FROM events),
-         c AS (SELECT user_id, min(day) AS cohort_day FROM a GROUP BY user_id)
-         SELECT cohort_day, day - cohort_day AS day_offset, count(*) AS n_users
-         FROM a JOIN c USING (user_id) WHERE day - cohort_day <= 30
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "events_dau" ->
-      """WITH du AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 AS day, user_id
-           FROM events),
-         dau AS (SELECT day, count(*) AS dau FROM du GROUP BY 1),
-         wau AS (SELECT w.day, count(*) AS wau FROM (
-           SELECT DISTINCT u.day + off.o AS day, u.user_id
-           FROM du u CROSS JOIN (SELECT unnest(range(0, 7)) AS o) off) w
-         GROUP BY 1)
-         SELECT dau.day, dau.dau, wau.wau
-         FROM dau JOIN wau ON dau.day = wau.day
-         ORDER BY dau.day""",
-
-    "events_percentiles" ->
-      """WITH h AS (SELECT event_type, value AS v, count(*) AS c
-           FROM events GROUP BY 1, 2),
-         cum AS (SELECT event_type, v, c,
-           sum(c) OVER (PARTITION BY event_type ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           sum(c) OVER (PARTITION BY event_type) AS n
-         FROM h)
-         SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-           min(CASE WHEN cum * 1000 >= n * 500 THEN v END) AS p500,
-           min(CASE WHEN cum * 1000 >= n * 950 THEN v END) AS p950,
-           min(CASE WHEN cum * 1000 >= n * 990 THEN v END) AS p990
-         FROM cum GROUP BY 1 ORDER BY 1""",
-
-    "orders_monthly" ->
-      """WITH m AS (SELECT o_orderpriority,
-           CAST(date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS DATE) AS month,
-           count(*) AS n_orders,
-           round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS revenue_d
-         FROM orders GROUP BY 1, 2)
-         SELECT o_orderpriority, month, n_orders,
-           CAST(revenue_d AS DOUBLE) AS revenue,
-           round(CAST(sum(revenue_d) OVER (PARTITION BY o_orderpriority ORDER BY month
-               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-             / count(*) OVER (PARTITION BY o_orderpriority ORDER BY month
-               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS revenue_ma3
-         FROM m ORDER BY o_orderpriority, month""",
-
-    "events_sliding" ->
-      """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS t, value
-           FROM events),
-         x AS (SELECT event_type, value, (t // 3600) * 3600 - off.o AS window_start
-           FROM e CROSS JOIN (SELECT unnest([0, 3600]) AS o) off)
-         SELECT event_type, window_start, count(*) AS n_events,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value
-         FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "customer_rfm" ->
-      """WITH per AS (SELECT o_custkey,
-           max(epoch_ns(CAST(o_orderdate AS TIMESTAMP)) // 1000000000) AS last_s,
-           count(*) AS frequency,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2)))) AS BIGINT) AS monetary
-         FROM orders GROUP BY 1),
-         ao AS (SELECT max(last_s) AS as_of FROM per),
-         r AS (SELECT per.*, (as_of - last_s) // 86400 AS recency_days,
-           monetary // 1000 AS monetary_k FROM per CROSS JOIN ao),
-         rch AS (SELECT CAST(recency_days AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
-         rcc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM rch),
-         rct AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
-           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
-           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
-           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM rcc),
-         fh AS (SELECT CAST(frequency AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
-         fc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM fh),
-         ft AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
-           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
-           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
-           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM fc),
-         mh AS (SELECT CAST(monetary_k AS DOUBLE) AS v, count(*) AS c FROM r GROUP BY 1),
-         mc AS (SELECT v, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-             AND CURRENT ROW) AS cum, sum(c) OVER () AS n FROM mh),
-         mt AS (SELECT min(CASE WHEN cum*1000 >= n*200 THEN v END) AS p200,
-           min(CASE WHEN cum*1000 >= n*400 THEN v END) AS p400,
-           min(CASE WHEN cum*1000 >= n*600 THEN v END) AS p600,
-           min(CASE WHEN cum*1000 >= n*800 THEN v END) AS p800 FROM mc),
-         sc AS (SELECT o_custkey, recency_days, frequency, monetary,
-           CAST(5 - ((recency_days > rct.p200)::INT + (recency_days > rct.p400)::INT
-             + (recency_days > rct.p600)::INT + (recency_days > rct.p800)::INT) AS INT) AS r_score,
-           CAST(1 + ((frequency > ft.p200)::INT + (frequency > ft.p400)::INT
-             + (frequency > ft.p600)::INT + (frequency > ft.p800)::INT) AS INT) AS f_score,
-           CAST(1 + ((monetary_k > mt.p200)::INT + (monetary_k > mt.p400)::INT
-             + (monetary_k > mt.p600)::INT + (monetary_k > mt.p800)::INT) AS INT) AS m_score
-         FROM r CROSS JOIN rct CROSS JOIN ft CROSS JOIN mt)
-         SELECT *, CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
-           WHEN r_score >= 4 THEN 'recent'
-           WHEN f_score >= 4 AND r_score <= 2 THEN 'at_risk'
-           WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-           ELSE 'regular' END AS segment
-         FROM sc ORDER BY o_custkey""",
-
-    "events_props" ->
-      """SELECT event_type, count(*) AS n_events,
-           count(json_extract_string(props, '$.k')) AS n_with_k,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "tfidf_topk" ->
-      """WITH tk AS (SELECT doc_id,
-           unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS term
-         FROM documents),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-         df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
-         s AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-           round(tf.tf * ln(CAST(n_docs AS DOUBLE) / df.df), 4) AS tfidf
-         FROM tf JOIN df USING (term) CROSS JOIN nd),
-         r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rnk
-         FROM s)
-         SELECT doc_id, term, tf, df, tfidf, CAST(rnk AS BIGINT) AS "rank"
-         FROM r WHERE rnk <= 5 ORDER BY doc_id, rnk""",
-
-    "pii_scrub" ->
+    // The synthetic corpus carries no real PII, so the demo query injects
+    // a deterministic email / IPv4 / phone per row before scrubbing —
+    // exercising match counting AND replacement against the oracle.
+    Entry("pii_scrub", (s, dir) =>
+      TextAnalysis.piiScrub(
+        cat(s, dir).table("documents").select(col("doc_id"),
+          concat(col("text"),
+            lit(" contact user"), col("doc_id").cast("string"),
+            lit("@example.com from 10.0."), (col("doc_id") % 250).cast("string"),
+            lit(".7 call 555-867-"),
+            lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text")))
+        .orderBy("doc_id"),
+      Sql(
       """WITH d AS (SELECT doc_id,
            text || ' contact user' || doc_id::VARCHAR || '@example.com from 10.0.'
                 || (doc_id % 250)::VARCHAR || '.7 call 555-867-'
@@ -2971,9 +3012,13 @@ object SparkEntry {
              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
              '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
              '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '[PHONE]', 'g') AS clean_text
-         FROM d ORDER BY doc_id""",
+         FROM d ORDER BY doc_id""")),
 
-    "doc_chunk" ->
+    // ── LLM-data-pipeline: training-sequence prep ────────────────────────
+    Entry("doc_chunk", (s, dir) =>
+      Chunk.docChunk(cat(s, dir).table("documents"), window = 120, overlap = 20)
+        .orderBy("doc_id", "chunk_id"),
+      Sql(
       """WITH s AS (SELECT doc_id, text,
            unnest(range(1, greatest(len(text) - 20, 1) + 1, 100)) AS chunk_start
          FROM documents)
@@ -2982,9 +3027,12 @@ object SparkEntry {
            CAST(chunk_start AS BIGINT) AS chunk_start,
            substring(text, CAST(chunk_start AS INT), 120) AS chunk_text,
            CAST(len(substring(text, CAST(chunk_start AS INT), 120)) AS BIGINT) AS n_chars_chunk
-         FROM s ORDER BY doc_id, chunk_id""",
+         FROM s ORDER BY doc_id, chunk_id""")),
 
-    "pack_sequences" ->
+    Entry("pack_sequences", (s, dir) =>
+      Chunk.packSequences(cat(s, dir).table("documents"), budget = 256, buckets = 8)
+        .orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id,
            CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens,
            CAST(CAST('0x' || substr(md5('pack|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 8 AS INT) AS bucket
@@ -2996,17 +3044,48 @@ object SparkEntry {
            CAST((cum - n_tokens) // 256 AS BIGINT) AS seq_first,
            CAST((cum - 1) // 256 AS BIGINT) AS seq_last,
            CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
-         FROM c ORDER BY doc_id""",
+         FROM c ORDER BY doc_id""")),
 
-    "train_shuffle" ->
+    // packing budgeted in REAL tokenizer units: bpeApply's subword counts
+    // feed the cut points instead of the whitespace proxy
+    Entry("bpe_pack", (s, dir) =>
+      Chunk.packSequences(
+          Bpe.bpeApply(cat(s, dir).table("documents"), BpeDemoMerges),
+          budget = 256, buckets = 8, tokenCol = Some("n_bpe_tokens"))
+        .orderBy("doc_id"),
+      Sql(
+      s"""WITH $BpeApplySql,
+         t AS (SELECT doc_id,
+           CAST(CASE WHEN len(trim(repr)) = 0 THEN 0
+             ELSE len(string_split_regex(trim(repr), '  +')) END AS BIGINT) AS n_tokens,
+           CAST(CAST('0x' || substr(md5('pack|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 8 AS INT) AS bucket
+         FROM bm),
+         c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         FROM t WHERE n_tokens > 0)
+         SELECT doc_id, bucket, n_tokens,
+           CAST((cum - n_tokens) // 256 AS BIGINT) AS seq_first,
+           CAST((cum - 1) // 256 AS BIGINT) AS seq_last,
+           CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
+         FROM c ORDER BY doc_id""")),
+
+    Entry("train_shuffle", (s, dir) =>
+      Chunk.trainShuffle(cat(s, dir).table("documents"), shards = 8)
+        .orderBy("doc_id"),
+      Sql(
       """WITH h AS (SELECT doc_id,
            CAST('0x' || substr(md5('shuffle' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
          FROM documents)
          SELECT doc_id, CAST(h % 8 AS INT) AS shard,
            CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS BIGINT) AS pos
-         FROM h ORDER BY doc_id""",
+         FROM h ORDER BY doc_id""")),
 
-    "contamination" ->
+    // Benchmark set ≙ every 50th doc (the ANN query-set convention);
+    // training side = everything else.
+    Entry("contamination", (s, dir) =>
+      Dedup.contamination(cat(s, dir).table("documents"), col("doc_id") % 50 === 0)
+        .orderBy("doc_id"),
+      Sql(
       """WITH t AS (SELECT doc_id,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -3021,562 +3100,22 @@ object SparkEntry {
            CAST(count(DISTINCT train.sg) AS BIGINT) AS n_shared_ngrams,
            CAST(count(DISTINCT bench_id) AS BIGINT) AS n_bench_docs
          FROM train JOIN bench USING (sg)
-         GROUP BY 1 ORDER BY doc_id""",
+         GROUP BY 1 ORDER BY doc_id""")),
 
-    "multimodal_meta" ->
-      """SELECT doc_id, 'image/fake' AS media_type,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           md5(text) AS content_md5
-         FROM documents ORDER BY doc_id""",
-
-    "frame_sample" ->
-      """SELECT doc_id, 'image/fake' AS media_type, CAST(u.f AS BIGINT) AS frame_idx,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-         FROM documents, unnest(range(0, (n_chars % 640) + 1, 10)) AS u(f)
-         ORDER BY doc_id, frame_idx""",
-
-    "dedup_minhash" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         sg AS (SELECT doc_id, s,
-           list_transform(range(0, 16), i -> list_min(list_transform(s,
-             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
-               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
-               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
-         FROM sh WHERE len(s) > 0),
-         bands AS (SELECT doc_id,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM sg CROSS JOIN range(0, 8) r(b)),
-         cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y ON x.bkey = y.bkey AND x.doc_id < y.doc_id),
-         v AS (SELECT doc_a, doc_b,
-           len(list_intersect(xa.s, yb.s)) AS inter, len(xa.s) AS la, len(yb.s) AS lb,
-           len(list_filter(range(1, 17), i -> xa.sig[i] = yb.sig[i])) AS m
-         FROM cand JOIN sg xa ON xa.doc_id = doc_a JOIN sg yb ON yb.doc_id = doc_b)
-         SELECT doc_a, doc_b, inter / (la + lb - inter) AS jaccard, m / 16 AS est_jaccard
-         FROM v WHERE inter / (la + lb - inter) >= 0.5 ORDER BY doc_a, doc_b""",
-
-    "lsh_pair_volume" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         sg AS (SELECT doc_id, s,
-           list_transform(range(0, 16), i -> list_min(list_transform(s,
-             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
-               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
-               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
-         FROM sh WHERE len(s) > 0),
-         bands AS (SELECT doc_id, r.b,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM sg CROSS JOIN range(0, 8) r(b)),
-         w AS (SELECT b, bkey, count(*) AS w FROM bands GROUP BY 1, 2)
-         SELECT CAST(b AS INT) AS b, CAST(count(*) AS BIGINT) AS buckets,
-           CAST(sum(w) AS BIGINT) AS docs, CAST(max(w) AS BIGINT) AS max_width,
-           CAST(sum(w * (w - 1) // 2) AS BIGINT) AS cand_pairs
-         FROM w GROUP BY b ORDER BY b""",
-
-    // replays the two-epoch signature-store loop: epoch-1 flags (batch
-    // %3 vs corpus %2) decide the survivors appended to the store;
-    // epoch-2 gates batch %5 against corpus ∪ survivors — sig arithmetic
-    // identical to dedup_minhash's
-    "minhash_ingest_dedup" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         sg AS (SELECT doc_id,
-           list_transform(range(0, 16), i -> list_min(list_transform(s,
-             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
-               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
-               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
-         FROM sh WHERE len(s) > 0),
-         bd AS (SELECT doc_id, sig,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM sg CROSS JOIN range(0, 8) r(b)),
-         f1 AS (SELECT DISTINCT x.doc_id AS batch_id
-         FROM bd x JOIN bd y ON x.bkey = y.bkey
-         WHERE x.doc_id % 3 = 0 AND y.doc_id % 2 = 0
-           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5),
-         corpus2 AS (
-           SELECT doc_id, sig FROM sg WHERE doc_id % 2 = 0
-           UNION ALL
-           SELECT doc_id, sig FROM sg WHERE doc_id % 3 = 0
-             AND doc_id NOT IN (SELECT batch_id FROM f1)),
-         bd2 AS (SELECT doc_id, sig,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM corpus2 CROSS JOIN range(0, 8) r(b)),
-         p2 AS (SELECT DISTINCT x.doc_id AS batch_id, y.doc_id AS corpus_id,
-           len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) AS m
-         FROM bd x JOIN bd2 y ON x.bkey = y.bkey
-         WHERE x.doc_id % 5 = 0
-           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5)
-         SELECT batch_id, corpus_id, m / 16 AS est_jaccard
-         FROM p2 ORDER BY batch_id, corpus_id""",
-
-    "dedup_simhash" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         th AS (SELECT doc_id,
-           list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS th
-         FROM t WHERE len(toks) > 0),
-         bits AS (SELECT doc_id, list_transform(range(0, 48), b ->
-           CAST(list_sum(list_transform(th, h ->
-             CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) AS BIGINT)) AS bits
-         FROM th),
-         s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 48), b ->
-           CASE WHEN bits[b + 1] > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END))
-           AS BIGINT) AS sim
-         FROM bits)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.sim, b.sim)) AS BIGINT) AS hamming
-         FROM s a JOIN s b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.sim, b.sim)) <= 3 ORDER BY doc_a, doc_b""",
-
-    // Stacked ingest gate: quality heuristics → exact-digest anti-join
-    // (batch canonicalized to min doc_id per digest) → banded-MinHash
-    // fuzzy flag, each stage consuming the previous stage's survivors.
-    "ingest_gate" ->
-      """WITH t AS (SELECT doc_id, text,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         q AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
-         FROM (SELECT *, len(list_filter(toks, x -> list_contains(
-             ['the','a','an','and','of','to','in','is','it','that'], x))) AS n_stop
-           FROM t WHERE doc_id % 3 = 0)
-         WHERE len(toks) >= 5 AND len(text) >= 40 AND n_stop > 0),
-         ex AS (SELECT md5(d.text) AS h, min(d.doc_id) AS doc_id
-         FROM documents d JOIN q ON d.doc_id = q.doc_id GROUP BY md5(d.text)),
-         corp AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 2 = 0),
-         ex2 AS (SELECT doc_id FROM ex WHERE h NOT IN (SELECT h FROM corp)),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         sg AS (SELECT doc_id,
-           list_transform(range(0, 16), i -> list_min(list_transform(s,
-             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
-               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
-               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
-         FROM sh WHERE len(s) > 0),
-         bd AS (SELECT doc_id, sig,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM sg CROSS JOIN range(0, 8) r(b)),
-         f AS (SELECT DISTINCT x.doc_id
-         FROM bd x JOIN bd y ON x.bkey = y.bkey
-         WHERE x.doc_id IN (SELECT doc_id FROM ex2) AND y.doc_id % 2 = 0
-           AND len(list_filter(range(1, 17), i -> x.sig[i] = y.sig[i])) / 16 >= 0.5)
-         SELECT q.doc_id AS doc_id, q.n_tokens FROM q
-         JOIN ex2 ON q.doc_id = ex2.doc_id
-         WHERE q.doc_id NOT IN (SELECT doc_id FROM f)
-         ORDER BY q.doc_id""",
-
-    // Two-epoch simhash ingest loop: the chunk-banded gate is EXACT for
-    // hamming <= 3 (pigeonhole), so the oracle models it as the brute
-    // Hamming join; epoch 2's corpus = founding evens + epoch-1
-    // survivors, the minhash_ingest_dedup corpus2 shape.
-    "simhash_ingest_dedup" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         th AS (SELECT doc_id,
-           list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS th
-         FROM t WHERE len(toks) > 0),
-         bits AS (SELECT doc_id, list_transform(range(0, 48), b ->
-           CAST(list_sum(list_transform(th, h ->
-             CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) AS BIGINT)) AS bits
-         FROM th),
-         s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 48), b ->
-           CASE WHEN bits[b + 1] > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END))
-           AS BIGINT) AS sim
-         FROM bits),
-         f1 AS (SELECT DISTINCT x.doc_id AS batch_id
-         FROM s x JOIN s y ON bit_count(xor(x.sim, y.sim)) <= 3
-         WHERE x.doc_id % 3 = 0 AND y.doc_id % 2 = 0),
-         corpus2 AS (
-           SELECT doc_id, sim FROM s WHERE doc_id % 2 = 0
-           UNION ALL
-           SELECT doc_id, sim FROM s WHERE doc_id % 3 = 0
-             AND doc_id NOT IN (SELECT batch_id FROM f1))
-         SELECT DISTINCT x.doc_id AS batch_id, y.doc_id AS corpus_id,
-           CAST(bit_count(xor(x.sim, y.sim)) AS BIGINT) AS hamming
-         FROM s x JOIN corpus2 y ON bit_count(xor(x.sim, y.sim)) <= 3
-         WHERE x.doc_id % 5 = 0
-         ORDER BY batch_id, corpus_id""",
-
-    "ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         ex AS (SELECT doc_id, unnest(list_transform(s,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
-           FROM sh WHERE len(s) > 0),
-         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
-         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
-         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
-         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b, inter, CAST(a.n_sh + b.n_sh - inter AS BIGINT) AS uni,
-           inter / (a.n_sh + b.n_sh - inter) AS jaccard
-         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
-         WHERE inter / (a.n_sh + b.n_sh - inter) >= 0.3 ORDER BY doc_a, doc_b""",
-
-    "dup_spans" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
-             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
-               struct_pack(span_start := p,
-                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
-             ELSE [] END) AS s
-         FROM t),
-         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
-         FROM sp),
-         hot AS (SELECT span_hash, count(DISTINCT doc_id) AS n_docs
-         FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
-         SELECT e.doc_id, e.span_start, e.span_hash, hot.n_docs
-         FROM e JOIN hot USING (span_hash) ORDER BY doc_id, span_start, span_hash""",
-
-    "dup_lines" ->
-      s"""WITH b AS ($C4BatchSql),
-         t AS (SELECT doc_id, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
-         x AS (SELECT doc_id, unnest(list_filter(list_transform(range(1, len(lns) + 1), i ->
-             struct_pack(line_no := i, line := lns[i])), s -> len(s.line) > 0)) AS s
-         FROM t),
-         e AS (SELECT doc_id, CAST(s.line_no AS BIGINT) AS line_no,
-           CAST('0x' || substr(md5(s.line), 1, 15) AS BIGINT) AS line_hash FROM x),
-         hot AS (SELECT line_hash, count(DISTINCT doc_id) AS n_docs
-         FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
-         SELECT e.doc_id, e.line_no, e.line_hash, hot.n_docs
-         FROM e JOIN hot USING (line_hash) ORDER BY doc_id, line_no, line_hash""",
-
-    "strip_dup_lines" ->
-      s"""WITH b AS ($C4BatchSql),
-         t AS (SELECT doc_id, list_transform(string_split(text, chr(10)), l -> trim(l)) AS lns FROM b),
-         x AS (SELECT doc_id, unnest(list_filter(lns, l -> len(l) > 0)) AS line FROM t),
-         e AS (SELECT doc_id, CAST('0x' || substr(md5(line), 1, 15) AS BIGINT) AS line_hash FROM x),
-         hot AS (SELECT line_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
-         hd AS (SELECT e.doc_id, list(DISTINCT e.line_hash) AS hh
-         FROM e JOIN hot USING (line_hash) GROUP BY 1),
-         c AS (SELECT t.doc_id, t.lns,
-           list_filter(t.lns, l -> len(l) = 0 OR NOT list_contains(COALESCE(hd.hh, []),
-             CAST('0x' || substr(md5(l), 1, 15) AS BIGINT))) AS kept
-         FROM t LEFT JOIN hd USING (doc_id))
-         SELECT doc_id, COALESCE(array_to_string(kept, chr(10)), '') AS text_clean,
-           CAST(len(list_filter(lns, l -> len(l) > 0)) AS BIGINT) AS n_lines,
-           CAST(len(lns) - len(kept) AS BIGINT) AS n_lines_removed
-         FROM c ORDER BY doc_id""",
-
-    "strip_repeat_lines" ->
-      s"""WITH b AS ($RepBatchSql),
-         l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM b),
-         k AS (SELECT doc_id, ls,
-           list_filter(range(1, len(ls) + 1), i ->
-             trim(ls[i]) = '' OR list_position(ls, ls[i]) = i) AS keep
-         FROM l)
-         SELECT doc_id,
-           array_to_string(list_transform(keep, i -> ls[i]), chr(10)) AS clean_text,
-           CAST(len(ls) AS BIGINT) AS n_lines,
-           CAST(len(ls) - len(keep) AS BIGINT) AS n_removed
-         FROM k ORDER BY doc_id""",
-
-    "ngram_index_dedup" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         ex AS (SELECT doc_id, unnest(list_transform(s,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
-           FROM sh WHERE len(s) > 0),
-         bex AS (SELECT doc_id AS batch_id, sg FROM ex WHERE doc_id % 10 >= 8),
-         idx AS (SELECT doc_id, sg FROM ex WHERE doc_id % 10 < 8),
-         rare AS (SELECT sg FROM idx GROUP BY sg HAVING count(*) <= 100),
-         kept AS (SELECT idx.doc_id, idx.sg FROM idx JOIN rare USING (sg)),
-         bsz AS (SELECT batch_id, count(*) AS nb FROM bex GROUP BY 1),
-         pr AS (SELECT b.batch_id, k.doc_id AS corpus_id, count(*) AS inter
-         FROM kept k JOIN bex b ON k.sg = b.sg GROUP BY 1, 2)
-         SELECT pr.batch_id, pr.corpus_id, pr.inter, bsz.nb,
-           pr.inter / bsz.nb AS containment
-         FROM pr JOIN bsz USING (batch_id)
-         WHERE pr.inter / bsz.nb >= 0.5
-         ORDER BY batch_id, corpus_id""",
-
-    "length_band" ->
-      """WITH tc AS (SELECT doc_id,
-           CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens
-         FROM documents),
-         cum AS (SELECT n_tokens, count(*) OVER (ORDER BY n_tokens) AS c,
-                        count(*) OVER () AS n_all FROM tc),
-         lo AS (SELECT min(n_tokens) AS v FROM cum
-                WHERE c >= GREATEST((n_all * 50 + 999) // 1000, 1)),
-         hi AS (SELECT min(n_tokens) AS v FROM cum
-                WHERE c >= GREATEST((n_all * 950 + 999) // 1000, 1))
-         SELECT tc.doc_id, tc.n_tokens FROM tc, lo, hi
-         WHERE tc.n_tokens BETWEEN lo.v AND hi.v ORDER BY doc_id""",
-
-    "corpus_curate" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
-             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
-               struct_pack(span_start := p,
-                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
-             ELSE [] END) AS s
-         FROM t),
-         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
-         FROM sp),
-         hot AS (SELECT span_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
-         drops AS (SELECT e.doc_id, list_sort(list_distinct(list(e.span_start))) AS starts
-         FROM e JOIN hot USING (span_hash) GROUP BY e.doc_id),
-         clean AS (SELECT t.doc_id,
-           COALESCE(array_to_string(list_filter(t.toks, (x, i) ->
-             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0), ' '), '') AS text_clean,
-           len(t.toks) AS n0,
-           len(t.toks) - len(list_filter(t.toks, (x, i) ->
-             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0)) AS removed
-         FROM t LEFT JOIN drops USING (doc_id)),
-         surv AS (SELECT doc_id, text_clean,
-           CAST(len(list_filter(string_split_regex(lower(text_clean), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens
-         FROM clean WHERE removed * 2 <= n0),
-         cum AS (SELECT doc_id, n_tokens, count(*) OVER (ORDER BY n_tokens) AS c,
-                        count(*) OVER () AS n_all FROM surv),
-         lo AS (SELECT min(n_tokens) AS v FROM cum WHERE c >= GREATEST((n_all * 50 + 999) // 1000, 1)),
-         hi AS (SELECT min(n_tokens) AS v FROM cum WHERE c >= GREATEST((n_all * 950 + 999) // 1000, 1)),
-         band AS (SELECT surv.doc_id, surv.text_clean, surv.n_tokens FROM surv, lo, hi
-                  WHERE surv.n_tokens BETWEEN lo.v AND hi.v),
-         k AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM band GROUP BY md5(text_clean))
-         SELECT band.doc_id, band.n_tokens FROM band JOIN k USING (doc_id)
-         WHERE CAST('0x' || substr(md5('curate|' || band.doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 500
-         ORDER BY doc_id""",
-
-    "strip_dup_spans" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sp AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 15 THEN
-             list_transform(range(1, len(toks) - 14 + 1, 5), p ->
-               struct_pack(span_start := p,
-                 span_hash := CAST('0x' || substr(md5(array_to_string(toks[p:p+14], ' ')), 1, 15) AS BIGINT)))
-             ELSE [] END) AS s
-         FROM t),
-         e AS (SELECT doc_id, CAST(s.span_start AS BIGINT) AS span_start, s.span_hash AS span_hash
-         FROM sp),
-         hot AS (SELECT span_hash FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
-         drops AS (SELECT e.doc_id, list_sort(list_distinct(list(e.span_start))) AS starts
-         FROM e JOIN hot USING (span_hash) GROUP BY e.doc_id)
-         SELECT t.doc_id,
-           -- COALESCE: DuckDB's array_to_string([]) is NULL, Spark's
-           -- array_join([]) is '' — a fully-stripped doc must agree
-           COALESCE(array_to_string(list_filter(t.toks, (x, i) ->
-             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0), ' '), '') AS text_clean,
-           len(t.toks) AS n_tokens,
-           len(t.toks) - len(list_filter(t.toks, (x, i) ->
-             len(list_filter(COALESCE(drops.starts, []), s -> s <= i AND i < s + 15)) = 0)) AS n_tokens_removed
-         FROM t LEFT JOIN drops USING (doc_id) ORDER BY doc_id""",
-
-    "ngram_containment" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         ex AS (SELECT doc_id, unnest(list_transform(s,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
-           FROM sh WHERE len(s) > 0),
-         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
-         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
-         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
-         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b, inter, a.n_sh AS na, b.n_sh AS nb,
-           inter / least(a.n_sh, b.n_sh) AS containment
-         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
-         WHERE inter / least(a.n_sh, b.n_sh) >= 0.5 ORDER BY doc_a, doc_b""",
-
-    "ngram_scores" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         ex AS (SELECT doc_id, unnest(list_transform(s,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS sg
-           FROM sh WHERE len(s) > 0),
-         rare AS (SELECT sg FROM ex GROUP BY sg HAVING count(*) <= 100),
-         kept AS (SELECT ex.doc_id, ex.sg FROM ex JOIN rare USING (sg)),
-         sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-         pr AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS inter
-         FROM kept x JOIN kept y ON x.sg = y.sg AND x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b, inter, a.n_sh AS na, b.n_sh AS nb,
-           inter / (a.n_sh + b.n_sh - inter) AS jaccard,
-           inter / least(a.n_sh, b.n_sh) AS containment
-         FROM pr JOIN sz a ON a.doc_id = doc_a JOIN sz b ON b.doc_id = doc_b
-         WHERE inter / (a.n_sh + b.n_sh - inter) >= 0.3
-            OR inter / least(a.n_sh, b.n_sh) >= 0.5 ORDER BY doc_a, doc_b""",
-
-    "dedup_groups" ->
-      """WITH RECURSIVE t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         sh AS (SELECT doc_id,
-           list_distinct(CASE WHEN len(toks) >= 3
-             THEN list_transform(range(1, len(toks) - 1),
-                    i -> array_to_string(toks[i:i+2], ' '))
-             ELSE [] END) AS s
-         FROM t),
-         sg AS (SELECT doc_id, s,
-           list_transform(range(0, 16), i -> list_min(list_transform(s,
-             x -> ((CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 1073741824)
-               * ([8996855, 469992016, 2004217628, 1334294656, 768128343, 2105057655, 1160867219, 479758600, 1419844726, 1603376584, 210333, 1211524435, 710539482, 258642846, 794256414, 579260634][i + 1])
-               + ([405351280, 2046289441, 1592421689, 855095894, 760324133, 1694457692, 292335934, 554079960, 966378448, 485777283, 440949495, 1180586447, 1230674157, 2111880311, 85434598, 657399781][i + 1])) % 2147483647))) AS sig
-         FROM sh WHERE len(s) > 0),
-         bands AS (SELECT doc_id,
-           r.b::VARCHAR || ':' || sig[2 * r.b + 1]::VARCHAR || ':' || sig[2 * r.b + 2]::VARCHAR AS bkey
-         FROM sg CROSS JOIN range(0, 8) r(b)),
-         cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y ON x.bkey = y.bkey AND x.doc_id < y.doc_id),
-         v AS (SELECT doc_a, doc_b,
-           len(list_intersect(xa.s, yb.s)) AS inter, len(xa.s) AS la, len(yb.s) AS lb
-         FROM cand JOIN sg xa ON xa.doc_id = doc_a JOIN sg yb ON yb.doc_id = doc_b),
-         mp AS (SELECT doc_a, doc_b FROM v WHERE inter / (la + lb - inter) >= 0.5),
-         e AS (SELECT doc_a AS s, doc_b AS d FROM mp UNION SELECT doc_b, doc_a FROM mp),
-         reach(id, r) AS (
-           SELECT s, s FROM e GROUP BY s
-           UNION
-           SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d
-         )
-         SELECT id AS doc_id, min(r) AS group_id FROM reach GROUP BY id ORDER BY doc_id""",
-
-    "stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-         WHERE CAST('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 < 10
-         ORDER BY doc_id""",
-
-    "corpus_drift" ->
-      """WITH ctk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-             x -> len(x) > 0)) AS tok FROM documents),
-         cc AS (SELECT tok, count(*) AS c_cnt FROM ctk GROUP BY 1),
-         vocab AS (SELECT * FROM cc ORDER BY c_cnt DESC, tok LIMIT 300),
-         btk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-             x -> len(x) > 0)) AS tok FROM documents WHERE lang = 'en'),
-         bc AS (SELECT tok, count(*) AS b_cnt FROM btk GROUP BY 1),
-         j AS (SELECT vocab.tok, c_cnt, COALESCE(b_cnt, 0) AS b_cnt
-           FROM vocab LEFT JOIN bc USING (tok)),
-         tt AS (SELECT sum(c_cnt) AS ctot, sum(b_cnt) AS btot, count(*) AS n FROM j)
-         SELECT tok, c_cnt, b_cnt,
-           round((c_cnt + 1)::DOUBLE / (ctot + n), 6) AS p,
-           round((b_cnt + 1)::DOUBLE / (btot + n), 6) AS q,
-           round(((c_cnt + 1)::DOUBLE / (ctot + n) - (b_cnt + 1)::DOUBLE / (btot + n))
-             * ln(((c_cnt + 1)::DOUBLE / (ctot + n)) / ((b_cnt + 1)::DOUBLE / (btot + n))), 6)
-             AS psi_contrib
-         FROM j CROSS JOIN tt ORDER BY tok""",
-
-    "corpus_split" ->
-      """WITH h AS (SELECT doc_id,
-           CAST('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000
-             AS bucket_permille
-         FROM documents)
-         SELECT doc_id, bucket_permille,
-           CASE WHEN bucket_permille < 900 THEN 'train'
-                WHEN bucket_permille < 950 THEN 'val'
-                ELSE 'test' END AS split
-         FROM h ORDER BY doc_id""",
-
-    "sample_permille" ->
-      """SELECT doc_id, lang, source FROM documents
-         WHERE CAST('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000 < 25
-         ORDER BY doc_id""",
-
-    "mix_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-         WHERE CAST('0x' || substr(md5('mix|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 <
-           CASE WHEN lang = 'en' THEN 80 WHEN lang = 'de' THEN 40
-                WHEN lang = 'fr' THEN 20 ELSE 0 END
-         ORDER BY doc_id""",
-
-    "mix_plan" ->
-      s"""WITH $MixPlanSql
-         SELECT * FROM plan ORDER BY lang""",
-
-    "mix_materialize" ->
-      s"""WITH $MixPlanSql
-         SELECT d.doc_id, d.lang FROM documents d JOIN plan USING (lang)
-         WHERE CAST('0x' || substr(md5('mixplan|' || d.doc_id::VARCHAR), 1, 15) AS BIGINT) % 1000
-           < plan.keep_permille
-         ORDER BY d.doc_id""",
-
-    "text_normalize" ->
-      """WITH t AS (SELECT doc_id,
-           trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS n FROM documents)
-         SELECT doc_id, n AS norm_text, md5(n) AS norm_md5,
-           CAST(len(n) AS BIGINT) AS n_chars_norm
-         FROM t ORDER BY doc_id""",
-
-    "corpus_profile" ->
-      """WITH t AS (SELECT lang, source,
-           CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0)) AS BIGINT) AS n_toks,
-           md5(text) AS d
-         FROM documents)
-         SELECT lang, source, count(*) AS n_docs,
-           CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-           min(n_toks) AS min_tokens, max(n_toks) AS max_tokens,
-           CAST(sum(CASE WHEN n_toks < 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
-           count(DISTINCT d) AS n_distinct_texts
-         FROM t GROUP BY 1, 2 ORDER BY lang, source""",
-
-    "top_ngrams" ->
-      """WITH t AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-         FROM documents),
-         g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-             i -> array_to_string(toks[i:i+2], ' '))) AS ngram
-           FROM t WHERE len(toks) >= 3)
-         SELECT ngram, count(*) AS n_occurrences, count(DISTINCT doc_id) AS n_docs
-         FROM g GROUP BY ngram
-         ORDER BY n_occurrences DESC, ngram LIMIT 100""",
-
-    "corpus_clean" ->
+    // The composed corpus-cleaning pipeline — quality gate → exact-dedup
+    // canonical keep → deterministic sample, the three stages every
+    // training-data run chains, as ONE declarative plan (each stage a
+    // left-semi join, so Catalyst fuses scans and pushes the projections).
+    Entry("corpus_clean", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
+      val cleaned = docs
+        .where(TextAnalysis.passesQuality(col("text")))
+        .join(keep, Seq("doc_id"), "left_semi")
+      TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean")
+        .select(col("doc_id"), col("lang"), col("source"))
+        .orderBy("doc_id")
+    }, Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -3589,9 +3128,24 @@ object SparkEntry {
            WHERE CAST('0x' || substr(md5('clean|' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 < 50)
          SELECT d.doc_id, d.lang, d.source FROM documents d
          JOIN q USING (doc_id) JOIN k USING (doc_id) JOIN s USING (doc_id)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""")),
 
-    "corpus_to_sequences" ->
+    // ── LLM-data-pipeline: multimodal plumbing (binary column + metadata) ─
+    // End-to-end: cleaned corpus straight into packed training sequences —
+    // quality gate → exact-dedup keep → deterministic sample → concat-and-
+    // cut packing, ONE declarative plan (the full raw-text-to-model-input
+    // path; every stage is the same operator the standalone queries run).
+    Entry("corpus_to_sequences", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
+      val cleaned = docs
+        .where(TextAnalysis.passesQuality(col("text")))
+        .join(keep, Seq("doc_id"), "left_semi")
+      Chunk.packSequences(
+          TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean"),
+          budget = 256, buckets = 8)
+        .orderBy("doc_id")
+    }, Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -3612,9 +3166,25 @@ object SparkEntry {
            CAST((cum - n_tokens) // 256 AS BIGINT) AS seq_first,
            CAST((cum - 1) // 256 AS BIGINT) AS seq_last,
            CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
-         FROM c ORDER BY doc_id""",
+         FROM c ORDER BY doc_id""")),
 
-    "corpus_to_shards" ->
+    // Curated corpus straight into the shard writer's frame: quality gate
+    // → exact-dedup keep → deterministic sample → trainOrder, emitted in
+    // the exact (shard, pos) order writeTrainShards lays files out in —
+    // the payload (n_chars here standing in for the text) rides the one
+    // shard exchange instead of being re-joined.
+    Entry("corpus_to_shards", { (s, dir) =>
+      val docs = cat(s, dir).table("documents")
+      val keep = TextAnalysis.dedupExact(docs).select(col("keep_id").as("doc_id"))
+      val cleaned = docs
+        .where(TextAnalysis.passesQuality(col("text")))
+        .join(keep, Seq("doc_id"), "left_semi")
+      Chunk.trainOrder(TextAnalysis.hashSample(cleaned, pct = 50, salt = "clean"),
+          shards = 8)
+        .select(col("doc_id"), col("shard"), col("pos"),
+          length(col("text")).cast("long").as("n_chars"))
+        .orderBy("shard", "pos")
+    }, Sql(
       """WITH t AS (SELECT doc_id, text,
            list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
          FROM documents),
@@ -3631,9 +3201,39 @@ object SparkEntry {
          SELECT doc_id, CAST(h % 8 AS INT) AS shard,
            CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS BIGINT) AS pos,
            n_chars
-         FROM cleaned ORDER BY shard, pos""",
+         FROM cleaned ORDER BY shard, pos""")),
 
-    "embed_cosine_dup" ->
+    Entry("multimodal_meta", (s, dir) =>
+      Multimodal.mediaMeta(
+        Multimodal.mediaFromDocuments(cat(s, dir).table("documents")))
+        .orderBy("doc_id"),
+      Sql(
+      """SELECT doc_id, 'image/fake' AS media_type,
+           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+           md5(text) AS content_md5
+         FROM documents ORDER BY doc_id""")),
+
+    Entry("frame_sample", (s, dir) =>
+      Multimodal.frameSample(
+          Multimodal.mediaFromDocuments(cat(s, dir).table("documents")), everyN = 10)
+        .select(col("doc_id"), col("media_type"),
+          col("frame_idx").cast("long").as("frame_idx"),
+          length(col("content")).cast("long").as("n_bytes"))
+        .orderBy("doc_id", "frame_idx"),
+      Sql(
+      """SELECT doc_id, 'image/fake' AS media_type, CAST(u.f AS BIGINT) AS frame_idx,
+           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+         FROM documents, unnest(range(0, (n_chars % 640) + 1, 10)) AS u(f)
+         ORDER BY doc_id, frame_idx""")),
+
+    // ── LLM-data-pipeline: embedding similarity / ANN ────────────────────
+    // Exact all-pairs baseline (verification-scale only; the default
+    // bucketed plan below is the corpus-scale operator).
+    Entry("embed_cosine_dup", (s, dir) =>
+      Similarity.embedCosineDup(cat(s, dir).table("embeddings"), threshold = 0.4,
+          exact = true)
+        .orderBy("id_a", "id_b"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3645,9 +3245,12 @@ object SparkEntry {
                 (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
          FROM n a JOIN n b ON a.vec_id < b.vec_id)
          SELECT id_a, id_b, round(cos, 4) AS cosine
-         FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""",
+         FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""")),
 
-    "embed_cosine_dup_bucketed" ->
+    Entry("embed_cosine_dup_bucketed", (s, dir) =>
+      Similarity.embedCosineDup(cat(s, dir).table("embeddings"), threshold = 0.4)
+        .orderBy("id_a", "id_b"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3668,47 +3271,12 @@ object SparkEntry {
                 (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
          FROM cand JOIN n a ON a.vec_id = cand.id_a JOIN n b ON b.vec_id = cand.id_b)
          SELECT id_a, id_b, round(cos, 4) AS cosine
-         FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""",
+         FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""")),
 
-    "ann_lsh_probe2" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         d0 AS (SELECT vec_id, v, nrm,
-           list_transform(range(0, 4), p ->
-             list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] *
-               ((CAST('0x' || substr(md5('plane|' || p::VARCHAR || '|' || i::VARCHAR), 1, 15) AS BIGINT)
-                 % 2001 - 1000) / 1000.0)), (x, y) -> x + y)) AS ds
-         FROM n),
-         d1 AS (SELECT vec_id, v, nrm,
-           list_transform(ds, x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END) AS sg,
-           list_transform(ds, x -> abs(x)) AS ad
-         FROM d0),
-         d2 AS (SELECT vec_id, v, nrm, array_to_string(sg, '') AS bucket,
-           list_concat([array_to_string(sg, '')],
-             list_transform(
-               list_filter(range(0, 4), p ->
-                 len(list_filter(range(0, 4), q -> ad[q + 1] < ad[p + 1]
-                   OR (ad[q + 1] = ad[p + 1] AND q < p))) < 1),
-               p -> array_to_string(list_transform(range(0, 4), i ->
-                 CASE WHEN i = p THEN (CASE WHEN sg[i + 1] = '1' THEN '0' ELSE '1' END)
-                   ELSE sg[i + 1] END), ''))) AS probes
-         FROM d1),
-         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, unnest(probes) AS qbucket
-         FROM d2 WHERE vec_id % 50 = 0),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
-                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
-         FROM d2 x JOIN q ON x.bucket = q.qbucket AND x.vec_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    "ann_topk" ->
+    Entry("ann_topk", (s, dir) =>
+      Similarity.annTopK(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0, k = 10)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3723,9 +3291,18 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
-    "knn_graph" ->
+    // all-pairs kNN edge list — every vector both query and candidate;
+    // the LSH-banded self-join is the corpus-scale plan. corpusHint
+    // derives planes (the doc_knn deployment-shape discipline); the
+    // oracle derives the same count in SQL
+    Entry("knn_graph", { (s, dir) =>
+      val c = cat(s, dir)
+      Similarity.knnGraph(c.table("embeddings"), k = 5, bands = 2,
+          corpusHint = Some(c.rowCount("embeddings")))
+        .orderBy("query_id", "rank")
+    }, Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3755,9 +3332,16 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""")),
 
-    "knn_bucket_stats" ->
+    // the skew telemetry a deployment reads BEFORE paying the graph: per-
+    // band bucket widths with the hot flag that points at center/bucketCap
+    Entry("knn_bucket_stats", { (s, dir) =>
+      val c = cat(s, dir)
+      Similarity.bucketHistogram(c.table("embeddings"), bands = 2,
+          corpusHint = Some(c.rowCount("embeddings")))
+        .orderBy("band")
+    }, Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          pp AS (SELECT greatest(4, CASE
@@ -3790,9 +3374,37 @@ object SparkEntry {
            round(CAST(vectors AS DOUBLE) / power(2, np), 4) AS expected_width,
            CAST(max_width AS DOUBLE) >
              8.0 * greatest(round(CAST(vectors AS DOUBLE) / power(2, np), 4), 1.0) AS hot
-         FROM s CROSS JOIN pp ORDER BY band""",
+         FROM s CROSS JOIN pp ORDER BY band""")),
 
-    "embed_density" ->
+    // n²-pair broadcast baseline for the graph (verification scale only)
+    Entry("knn_graph_exact", (s, dir) =>
+      Similarity.knnGraph(cat(s, dir).table("embeddings"), k = 5, exact = true)
+        .orderBy("query_id", "rank"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         p AS (SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * x.v[i]),
+                (a, b) -> a + b) / (q.nrm * x.nrm) AS cos
+         FROM n q JOIN n x ON x.vec_id <> q.vec_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
+         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""")),
+
+    // per-vector kNN-neighborhood density (Sorscher '22 pruning signal):
+    // dense core = redundant, sparse tail = outlier — one bounded groupBy
+    // over the knn_graph edge list, deployment-shaped via corpusHint
+    Entry("embed_density", { (s, dir) =>
+      val c = cat(s, dir)
+      Similarity.embedDensity(c.table("embeddings"), k = 5, bands = 2,
+          corpusHint = Some(c.rowCount("embeddings")))
+        .orderBy("vec_id")
+    }, Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3823,9 +3435,18 @@ object SparkEntry {
          FROM p)
          SELECT query_id AS vec_id, count(*) AS k_edges,
            round(CAST(sum(CAST(round(cos, 4) AS DECIMAL(14,4))) AS DOUBLE) / count(*), 4) AS density
-         FROM r WHERE rnk <= 5 GROUP BY query_id ORDER BY query_id""",
+         FROM r WHERE rnk <= 5 GROUP BY query_id ORDER BY query_id""")),
 
-    "density_prune" ->
+    // the pruning act on the density score: exact integer-rank permille
+    // cuts drop the sparsest 5 % (outliers) and densest 10 % (redundant
+    // core); every scored vector emitted with its keep flag
+    Entry("density_prune", { (s, dir) =>
+      val c = cat(s, dir)
+      Similarity.densityPrune(c.table("embeddings"), dropSparsestPermille = 50,
+          dropDensestPermille = 100, k = 5, bands = 2,
+          corpusHint = Some(c.rowCount("embeddings")))
+        .orderBy("vec_id")
+    }, Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -3868,30 +3489,38 @@ object SparkEntry {
          FROM cum)
          SELECT vec_id, k_edges, density,
            (density >= lo AND density <= hi) AS keep
-         FROM d CROSS JOIN cuts ORDER BY vec_id""",
+         FROM d CROSS JOIN cuts ORDER BY vec_id""")),
 
-    "knn_graph_exact" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         p AS (SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * x.v[i]),
-                (a, b) -> a + b) / (q.nrm * x.nrm) AS cos
-         FROM n q JOIN n x ON x.vec_id <> q.vec_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""",
-
-    "doc_embed" ->
+    // model-free text embedding (feature hashing) — flattened to
+    // (vec_id, dim_i, v) rows so the oracle compares scalars, not arrays
+    Entry("doc_embed", (s, dir) =>
+      Similarity.docEmbed(cat(s, dir).table("documents"), dim = 16)
+        .select(col("vec_id"),
+          posexplode(col("embedding")).as(Seq("dim_i", "v")))
+        .orderBy("vec_id", "dim_i"),
+      Sql(
       s"""WITH $DocEmbedSql
          SELECT vec_id, CAST(de.bucket AS INT) AS dim_i, CAST(de.v AS DOUBLE) AS v
-         FROM de ORDER BY vec_id, dim_i""",
+         FROM de ORDER BY vec_id, dim_i""")),
 
-    "doc_knn" ->
+    // raw text straight to a semantic kNN graph: docEmbed ∘ knnGraph —
+    // no external model anywhere in the plan. Banded-LSH form with
+    // mean-centered bucketing: the exact form costs docs² pair rows
+    // (41 s at sf0.1, measured); uncentered LSH re-skews to near-n²
+    // because bag-of-words vectors share a dominant direction (3000 of
+    // 5000 docs in one bucket, measured) — centering re-balances the
+    // signs
+    // `corpusHint` derives the plane count (planesFor: log₂(n/64),
+    // floored at 4) so the benched plan IS the deployment plan — a
+    // pinned plane count turns the within-bucket verify quadratic as
+    // the corpus grows. The oracle derives the same count in SQL.
+    Entry("doc_knn", { (s, dir) =>
+      val c = cat(s, dir)
+      Similarity.knnGraph(
+          Similarity.docEmbed(c.table("documents"), dim = 16),
+          k = 3, bands = 2, center = true, corpusHint = Some(c.rowCount("documents")))
+        .orderBy("query_id", "rank")
+    }, Sql(
       s"""WITH $DocEmbedSql,
          e AS (SELECT vec_id, list(CAST(v AS DOUBLE) ORDER BY bucket) AS v
            FROM de GROUP BY vec_id),
@@ -3928,12 +3557,20 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")),
 
+    // the RAG-indexing capstone: docChunk ∘ docEmbed ∘ knnGraph over
+    // CHUNKS — passage-level neighbor edges with (doc_id, chunk_id)
+    // provenance recovered by exact integer div/mod on the packed chunk
+    // id; chunking adds no shuffle, planes derive from the
+    // embedded-chunk count exactly as the oracle's
     // doc_knn's CTE chain over the docChunk stream (window 200, overlap
     // 40 → starts 1, 161, …), chunk identity packed as
     // doc_id·1e6 + chunk_id and unpacked by exact integer div/mod
-    "chunk_knn" ->
+    Entry("chunk_knn", (s, dir) =>
+      Similarity.chunkKnn(cat(s, dir).table("documents"), k = 3)
+        .orderBy("doc_id", "chunk_id", "rank"),
+      Sql(
       s"""WITH chunks AS (
            SELECT doc_id * 1000000 + (cs - 1) // 160 AS doc_id,
              substr(text, CAST(cs AS INT), 200) AS text
@@ -3978,9 +3615,20 @@ object SparkEntry {
          SELECT query_id // 1000000 AS doc_id, query_id % 1000000 AS chunk_id,
            neighbor_id // 1000000 AS n_doc_id, neighbor_id % 1000000 AS n_chunk_id,
            CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 3 ORDER BY doc_id, chunk_id, rnk""",
+         FROM r WHERE rnk <= 3 ORDER BY doc_id, chunk_id, rnk""")),
 
-    "semantic_groups" ->
+    // the text-side capstone: high-cosine kNN edges over the hashed
+    // embeddings feed connected components → semantic cluster ids over
+    // raw text, zero external model (docEmbed ∘ knnGraph ∘ dedupGroups)
+    Entry("semantic_groups", { (s, dir) =>
+      val c = cat(s, dir)
+      val edges = Similarity.knnGraph(
+          Similarity.docEmbed(c.table("documents"), dim = 16),
+          k = 3, bands = 2, center = true, corpusHint = Some(c.rowCount("documents")))
+        .where(col("cosine") >= 0.95)
+        .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b"))
+      Dedup.dedupGroups(edges).orderBy("doc_id")
+    }, Sql(
       s"""WITH RECURSIVE $DocEmbedSql,
          e AS (SELECT vec_id, list(CAST(v AS DOUBLE) ORDER BY bucket) AS v
            FROM de GROUP BY vec_id),
@@ -4024,9 +3672,13 @@ object SparkEntry {
            UNION
            SELECT eg.s, reach.rr FROM eg JOIN reach ON reach.id = eg.d
          )
-         SELECT id AS doc_id, min(rr) AS group_id FROM reach GROUP BY id ORDER BY doc_id""",
+         SELECT id AS doc_id, min(rr) AS group_id FROM reach GROUP BY id ORDER BY doc_id""")),
 
-    "ann_lsh" ->
+    Entry("ann_lsh", (s, dir) =>
+      Similarity.annLsh(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          k = 10, planes = 4)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -4048,54 +3700,55 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
-    "semantic_dedup" ->
+    Entry("ann_lsh_probe2", (s, dir) =>
+      Similarity.annLsh(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          k = 10, planes = 4, nprobe = 2)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
            sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
                 (a, b) -> a + b)) AS nrm
          FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
-         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         asg AS (SELECT vec_id, v, nrm, cent_id AS cell_id FROM (
-           SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac) WHERE rn = 1),
-         p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]),
-                (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
-         FROM asg a JOIN asg b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id),
-         d AS (SELECT id_b, min(id_a) AS dup_of FROM p WHERE cos >= 0.4 GROUP BY id_b)
-         SELECT asg.vec_id, asg.cell_id, d.dup_of IS NOT NULL AS is_dup, d.dup_of
-         FROM asg LEFT JOIN d ON asg.vec_id = d.id_b ORDER BY asg.vec_id""",
+         d0 AS (SELECT vec_id, v, nrm,
+           list_transform(range(0, 4), p ->
+             list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] *
+               ((CAST('0x' || substr(md5('plane|' || p::VARCHAR || '|' || i::VARCHAR), 1, 15) AS BIGINT)
+                 % 2001 - 1000) / 1000.0)), (x, y) -> x + y)) AS ds
+         FROM n),
+         d1 AS (SELECT vec_id, v, nrm,
+           list_transform(ds, x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END) AS sg,
+           list_transform(ds, x -> abs(x)) AS ad
+         FROM d0),
+         d2 AS (SELECT vec_id, v, nrm, array_to_string(sg, '') AS bucket,
+           list_concat([array_to_string(sg, '')],
+             list_transform(
+               list_filter(range(0, 4), p ->
+                 len(list_filter(range(0, 4), q -> ad[q + 1] < ad[p + 1]
+                   OR (ad[q + 1] = ad[p + 1] AND q < p))) < 1),
+               p -> array_to_string(list_transform(range(0, 4), i ->
+                 CASE WHEN i = p THEN (CASE WHEN sg[i + 1] = '1' THEN '0' ELSE '1' END)
+                   ELSE sg[i + 1] END), ''))) AS probes
+         FROM d1),
+         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, unnest(probes) AS qbucket
+         FROM d2 WHERE vec_id % 50 = 0),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
+                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
+         FROM d2 x JOIN q ON x.bucket = q.qbucket AND x.vec_id <> q.query_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
-    "cluster_sample" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
-         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         asg AS (SELECT vec_id, cent_id AS cell_id FROM (
-           SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac) WHERE rn = 1),
-         r AS (SELECT vec_id, cell_id, row_number() OVER (PARTITION BY cell_id
-             ORDER BY CAST('0x' || substr(md5('cs|' || vec_id::VARCHAR), 1, 15) AS BIGINT),
-               vec_id) AS pick
-         FROM asg)
-         SELECT vec_id, cell_id, CAST(pick AS BIGINT) AS pick
-         FROM r WHERE pick <= 8 ORDER BY vec_id""",
-
-    "ann_ivf" ->
+    Entry("ann_ivf", (s, dir) =>
+      Similarity.annIvf(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          k = 10, centEvery = 40)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -4119,9 +3772,146 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
-    "embed_pq" ->
+    Entry("ann_ivf_probe2", (s, dir) =>
+      Similarity.annIvf(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          k = 10, centEvery = 40, nprobe = 2)
+        .orderBy("query_id", "rank"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
+         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac),
+         asg AS (SELECT vec_id, v, nrm, cent_id FROM acr WHERE rn = 1),
+         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, cent_id AS qcent
+           FROM acr WHERE rn <= 2 AND vec_id % 50 = 0),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
+                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
+         FROM asg x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
+
+    // the recall dial priced as a first-class query: IVF nprobe=2 against
+    // the brute-force exact baseline, per-query recall@10 — both inputs
+    // are the two oracle-checked entries above, so the eval never touches
+    // corpus volume beyond what they already pay
+    Entry("ann_recall", { (s, dir) =>
+      val emb = cat(s, dir).table("embeddings")
+      val qf = col("vec_id") % 50 === 0
+      Similarity.recallAtK(
+          Similarity.annIvf(emb, qf, k = 10, centEvery = 40, nprobe = 2),
+          Similarity.annTopK(emb, qf, k = 10))
+        .orderBy("query_id")
+    }, Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
+         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac),
+         asg AS (SELECT vec_id, v, nrm, cent_id FROM acr WHERE rn = 1),
+         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, cent_id AS qcent
+           FROM acr WHERE rn <= 2 AND vec_id % 50 = 0),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
+                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
+         FROM asg x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+         FROM p),
+         approx AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 10),
+         px AS (SELECT qq.vec_id AS query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(1, len(qq.v) + 1), i -> qq.v[i] * x.v[i]),
+                (a, b) -> a + b) / (qq.nrm * x.nrm) AS cos
+         FROM n qq JOIN n x ON x.vec_id <> qq.vec_id
+         WHERE qq.vec_id % 50 = 0),
+         rx AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+         FROM px),
+         exact AS (SELECT query_id, neighbor_id FROM rx WHERE rnk <= 10)
+         SELECT ex.query_id,
+           CAST(count(a.neighbor_id) AS BIGINT) AS hits,
+           CAST(count(*) AS BIGINT) AS exact_k,
+           round(count(a.neighbor_id) * 1.0 / count(*), 4) AS recall
+         FROM exact ex LEFT JOIN approx a
+           ON a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
+         GROUP BY ex.query_id ORDER BY ex.query_id""")),
+
+    Entry("semantic_dedup", (s, dir) =>
+      Similarity.semanticDedup(cat(s, dir).table("embeddings"),
+          threshold = 0.4, centEvery = 40)
+        .orderBy("vec_id"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
+         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         asg AS (SELECT vec_id, v, nrm, cent_id AS cell_id FROM (
+           SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac) WHERE rn = 1),
+         p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]),
+                (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
+         FROM asg a JOIN asg b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id),
+         d AS (SELECT id_b, min(id_a) AS dup_of FROM p WHERE cos >= 0.4 GROUP BY id_b)
+         SELECT asg.vec_id, asg.cell_id, d.dup_of IS NOT NULL AS is_dup, d.dup_of
+         FROM asg LEFT JOIN d ON asg.vec_id = d.id_b ORDER BY asg.vec_id""")),
+
+    Entry("cluster_sample", (s, dir) =>
+      Similarity.clusterSample(cat(s, dir).table("embeddings"), perCell = 8,
+          centEvery = 40)
+        .orderBy("vec_id"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
+         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         asg AS (SELECT vec_id, cent_id AS cell_id FROM (
+           SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac) WHERE rn = 1),
+         r AS (SELECT vec_id, cell_id, row_number() OVER (PARTITION BY cell_id
+             ORDER BY CAST('0x' || substr(md5('cs|' || vec_id::VARCHAR), 1, 15) AS BIGINT),
+               vec_id) AS pick
+         FROM asg)
+         SELECT vec_id, cell_id, CAST(pick AS BIGINT) AS pick
+         FROM r WHERE pick <= 8 ORDER BY vec_id""")),
+
+    Entry("embed_pq", (s, dir) =>
+      Similarity.pqEncode(cat(s, dir).table("embeddings"), m = 8, k = 16)
+        .orderBy("vec_id"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          ce AS (SELECT vec_id,
@@ -4135,13 +3925,19 @@ object SparkEntry {
          SELECT vec_id,
            array_to_string(list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1), ':') AS pq_code,
            round(sqrt(list_reduce(list_prepend(0.0, list_transform(dss, ds -> list_min(ds))), (a, b) -> a + b)), 4) AS recon_err
-         FROM ce ORDER BY vec_id""",
+         FROM ce ORDER BY vec_id""")),
 
+    // encode-then-DECODE: each vector's quantizer reproduction value in
+    // exact integer milli-units — the re-found path's corpus decode
+    // (VectorIndexStore.reconstruct) as a first-class quantization audit
     // the decode half: same codes CTE, then each dimension j reads the
     // md5-family codebook entry for (subspace j//8, that subspace's
     // code, dim j%8+1) in exact integer milli-units — hash % 2001 - 1000
     // IS the milli value, no float formatting crosses the engines
-    "pq_reconstruct" ->
+    Entry("pq_reconstruct", (s, dir) =>
+      Similarity.pqReconstruct(cat(s, dir).table("embeddings"), m = 8, k = 16)
+        .orderBy("vec_id"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          ce AS (SELECT vec_id,
@@ -4159,9 +3955,46 @@ object SparkEntry {
            array_to_string(list_transform(range(0, 64), j ->
              (CAST('0x' || substr(md5('pq|' || (j // 8)::VARCHAR || '|' || codes[j // 8 + 1]::VARCHAR || '|' || (j % 8 + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000)::VARCHAR),
              ':') AS recon_milli
-         FROM co ORDER BY vec_id""",
+         FROM co ORDER BY vec_id""")),
 
-    "embed_sq" ->
+    Entry("pq_search", (s, dir) =>
+      Similarity.pqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          kNN = 10, m = 8, k = 16)
+        .orderBy("query_id", "rank"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         ce AS (SELECT vec_id,
+           list_transform(range(0, 8), m ->
+             list_transform(range(0, 16), c ->
+               list_reduce(list_transform(range(0, 8), d ->
+                 (v[m * 8 + d + 1] - ((CAST('0x' || substr(md5('pq|' || m::VARCHAR || '|' || c::VARCHAR || '|' || (d + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (v[m * 8 + d + 1] - ((CAST('0x' || substr(md5('pq|' || m::VARCHAR || '|' || c::VARCHAR || '|' || (d + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS dss
+         FROM e),
+         t AS (SELECT vec_id, dss,
+           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
+         FROM ce),
+         q AS (SELECT vec_id AS query_id, dss AS qlut FROM t WHERE vec_id % 50 = 0),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(0, 8), mi ->
+             qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
+         FROM t x JOIN q ON x.vec_id <> q.query_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
+
+    // int8 scalar quantization (4× compression): codes + reconstruction
+    // error under the driver-fetched per-dim bounds. The codes array is
+    // serialized to a ':'-joined string for the gate (array columns are
+    // unsortable in check.py's pandas comparator — the pq_code precedent)
+    Entry("embed_sq", (s, dir) =>
+      Similarity.embedSq(cat(s, dir).table("embeddings"))
+        .select(col("vec_id"), concat_ws(":", col("codes")).as("sq_code"),
+          col("recon_err2"))
+        .orderBy("vec_id"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          mm AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his FROM (
@@ -4179,9 +4012,15 @@ object SparkEntry {
          SELECT vec_id, array_to_string(codes, ':') AS sq_code,
            round(list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
              i -> (v[i] - rec[i]) * (v[i] - rec[i]))), (a, b) -> a + b), 6) AS recon_err2
-         FROM r ORDER BY vec_id""",
+         FROM r ORDER BY vec_id""")),
 
-    "sq_search" ->
+    // asymmetric search over the SQ index: exact queries vs reconstructed
+    // corpus, one codegen'd dot probe per pair, map-capped window top-k
+    Entry("sq_search", (s, dir) =>
+      Similarity.sqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          kNN = 10)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          mm AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his FROM (
@@ -4212,33 +4051,13 @@ object SparkEntry {
              ORDER BY adist, neighbor_id) AS rnk FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank",
            round(adist, 4) AS approx_dist2
-         FROM rk WHERE rnk <= 10 ORDER BY query_id, rnk""",
+         FROM rk WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
-    "pq_search" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         ce AS (SELECT vec_id,
-           list_transform(range(0, 8), m ->
-             list_transform(range(0, 16), c ->
-               list_reduce(list_transform(range(0, 8), d ->
-                 (v[m * 8 + d + 1] - ((CAST('0x' || substr(md5('pq|' || m::VARCHAR || '|' || c::VARCHAR || '|' || (d + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (v[m * 8 + d + 1] - ((CAST('0x' || substr(md5('pq|' || m::VARCHAR || '|' || c::VARCHAR || '|' || (d + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS dss
-         FROM e),
-         t AS (SELECT vec_id, dss,
-           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
-         FROM ce),
-         q AS (SELECT vec_id AS query_id, dss AS qlut FROM t WHERE vec_id % 50 = 0),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(0, 8), mi ->
-             qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
-         FROM t x JOIN q ON x.vec_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    "ivfpq_search" ->
+    Entry("ivfpq_search", (s, dir) =>
+      Similarity.ivfPqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          kNN = 10, m = 8, k = 16, centEvery = 40, nprobe = 2)
+        .orderBy("query_id", "rank"),
+      Sql(
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
          n AS (SELECT vec_id, v,
@@ -4275,8 +4094,208 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
          FROM p)
          SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
 
+    // full IVFADC: codes quantize the own-cell RESIDUAL, queries build one
+    // ADC LUT per probed cell from their residual against that cell
+    Entry("ivfpq_residual", (s, dir) =>
+      Similarity.ivfPqSearch(cat(s, dir).table("embeddings"), col("vec_id") % 50 === 0,
+          kNN = 10, m = 8, k = 16, centEvery = 40, nprobe = 2, residual = true)
+        .orderBy("query_id", "rank"),
+      Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
+         ac AS (SELECT n.vec_id, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac),
+         enc AS (SELECT a.vec_id, a.cent_id,
+           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rv
+         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
+         WHERE a.rn = 1),
+         ce AS (SELECT vec_id, cent_id,
+           list_transform(range(0, 8), mi ->
+             list_transform(range(0, 16), ci ->
+               list_reduce(list_transform(range(0, 8), di ->
+                 (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS dss
+         FROM enc),
+         idx AS (SELECT vec_id, cent_id,
+           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
+         FROM ce),
+         qr AS (SELECT a.vec_id AS query_id, a.cent_id AS qcent,
+           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rq
+         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
+         WHERE a.rn <= 2 AND a.vec_id % 50 = 0),
+         q AS (SELECT query_id, qcent,
+           list_transform(range(0, 8), mi ->
+             list_transform(range(0, 16), ci ->
+               list_reduce(list_transform(range(0, 8), di ->
+                 (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS qlut
+         FROM qr),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(0, 8), mi ->
+             q.qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
+         FROM idx x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
+
+    // The ANN serving LOOP against a persisted IVFPQ index
+    // (VectorIndexStore — the vector sibling of fingerprint_ingest /
+    // minhash_ingest_dedup): found the index on two-thirds of the
+    // corpus, fold the rest in under the FROZEN founding codebooks
+    // (append), then ADC-search an external query batch against
+    // codebooks + postings alone — the corpus is encoded exactly once
+    // and never rescanned at query time. External queries carry no
+    // self-pair exclusion: a query that is also a corpus row scores its
+    // own posting like any candidate (the serving contract).
+    // Serving-loop oracle: identical to ivfpq_search's modeling except
+    // (a) centroids sample only the FOUNDING subset (vec_id % 3 <> 0 —
+    // the frozen-codebook property makes founding+append postings equal
+    // a one-shot encode of the union, so the oracle encodes the union),
+    // and (b) no self-pair exclusion (external-query contract).
+    Entry("ivfpq_ingest_search", { (s, dir) =>
+      val emb = cat(s, dir).table("embeddings")
+      val store = tempStore("graft-vixstore")
+      VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
+        m = 8, k = 16, centEvery = 40)
+      VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)
+      VectorIndexStore.search(
+          emb.where(col("vec_id") % 50 === 0)
+            .select(col("vec_id"), col("embedding")),
+          store, kNN = 10, nprobe = 2)
+        .orderBy("query_id", "rank")
+    }, Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n
+           WHERE vec_id % 40 = 1 AND vec_id % 3 <> 0),
+         ac AS (SELECT n.vec_id, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac),
+         ce AS (SELECT vec_id,
+           list_transform(range(0, 8), mi ->
+             list_transform(range(0, 16), ci ->
+               list_reduce(list_transform(range(0, 8), di ->
+                 (v[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (v[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS dss
+         FROM e),
+         t AS (SELECT vec_id, dss,
+           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
+         FROM ce),
+         idx AS (SELECT acr.vec_id, acr.cent_id, t.codes
+           FROM acr JOIN t ON acr.vec_id = t.vec_id WHERE acr.rn = 1),
+         q AS (SELECT acr.vec_id AS query_id, acr.cent_id AS qcent, t.dss AS qlut
+           FROM acr JOIN t ON acr.vec_id = t.vec_id
+           WHERE acr.rn <= 2 AND acr.vec_id % 50 = 0),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(0, 8), mi ->
+             qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
+         FROM idx x JOIN q ON x.cent_id = q.qcent),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
+
+    // The serving loop in the BETTER-RECALL form: codes quantize the
+    // own-cell residual (the founding `residual = true` knob, persisted
+    // in pqmeta and routed automatically by search — one ADC LUT per
+    // probed cell from the query's residual against that cell). Same
+    // save/append/external-search shape as ivfpq_ingest_search.
+    // Residual serving-loop oracle: the ivfpq_residual modeling with the
+    // ivfpq_ingest_search deltas — centroids sample only the FOUNDING
+    // subset (frozen codebooks make founding+append ≡ one-shot union
+    // encode) and no self-pair exclusion (external-query contract).
+    Entry("ivfpq_ingest_residual", { (s, dir) =>
+      val emb = cat(s, dir).table("embeddings")
+      val store = tempStore("graft-vixresid")
+      VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
+        m = 8, k = 16, centEvery = 40, residual = true)
+      VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)
+      VectorIndexStore.search(
+          emb.where(col("vec_id") % 50 === 0)
+            .select(col("vec_id"), col("embedding")),
+          store, kNN = 10, nprobe = 2)
+        .orderBy("query_id", "rank")
+    }, Sql(
+      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         n AS (SELECT vec_id, v,
+           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
+                (a, b) -> a + b)) AS nrm
+         FROM e),
+         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n
+           WHERE vec_id % 40 = 1 AND vec_id % 3 <> 0),
+         ac AS (SELECT n.vec_id, c.cent_id,
+           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
+                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
+         FROM n CROSS JOIN c),
+         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+           FROM ac),
+         enc AS (SELECT a.vec_id, a.cent_id,
+           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rv
+         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
+         WHERE a.rn = 1),
+         ce AS (SELECT vec_id, cent_id,
+           list_transform(range(0, 8), mi ->
+             list_transform(range(0, 16), ci ->
+               list_reduce(list_transform(range(0, 8), di ->
+                 (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS dss
+         FROM enc),
+         idx AS (SELECT vec_id, cent_id,
+           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
+         FROM ce),
+         qr AS (SELECT a.vec_id AS query_id, a.cent_id AS qcent,
+           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rq
+         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
+         WHERE a.rn <= 2 AND a.vec_id % 50 = 0),
+         q AS (SELECT query_id, qcent,
+           list_transform(range(0, 8), mi ->
+             list_transform(range(0, 16), ci ->
+               list_reduce(list_transform(range(0, 8), di ->
+                 (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
+                 * (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
+                 (a, b) -> a + b))) AS qlut
+         FROM qr),
+         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
+           list_reduce(list_transform(range(0, 8), mi ->
+             q.qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
+         FROM idx x JOIN q ON x.cent_id = q.qcent),
+         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
+         FROM p)
+         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
+         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")),
+
+    // The RAG SERVING path end-to-end: chunk the corpus, embed the
+    // chunks (packed (doc_id, chunk_id) identity), persist the IVFPQ
+    // index ONCE (VectorIndexStore), then serve an external query
+    // batch's chunks against codebooks + postings alone — retrieval
+    // with passage provenance on both sides, zero corpus jobs at query
+    // time. centEvery = 163 (prime): 10^6 ≡ 158 (mod 163), so packed
+    // chunk ids scatter across the sampling rule instead of aliasing
+    // chunk_id as a 10^6-divisor would.
     // RAG serving oracle: chunk_knn's chunk->embed CTE chain feeding
     // ivfpq_ingest_search's IVFADC modeling (dim 16, m 8 -> sub 2),
     // centroid rule vec_id % 163 = 1 over the packed chunk ids, queries
@@ -4286,7 +4305,9 @@ object SparkEntry {
     // centroids at sf0.1; past ~42k chunks the cap is the intended
     // production behavior and the oracle is the side that stops
     // modeling it — the sampleCentroids doc's contract).
-    "chunk_index_search" ->
+    Entry("chunk_index_search", { (s, dir) =>
+      chunkIndexServe(s, dir, chunkIndexBuild(s, dir))
+    }, Sql(
       s"""WITH chunks AS (
            SELECT doc_id * 1000000 + (cs - 1) // 160 AS doc_id,
              substr(text, CAST(cs AS INT), 200) AS text
@@ -4335,231 +4356,32 @@ object SparkEntry {
            CAST(neighbor_id // 1000000 AS BIGINT) AS n_doc_id,
            neighbor_id % 1000000 AS n_chunk_id,
            CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 5 ORDER BY doc_id, chunk_id, rnk""",
+         FROM r WHERE rnk <= 5 ORDER BY doc_id, chunk_id, rnk""")),
 
-    // Serving-loop oracle: identical to ivfpq_search's modeling except
-    // (a) centroids sample only the FOUNDING subset (vec_id % 3 <> 0 —
-    // the frozen-codebook property makes founding+append postings equal
-    // a one-shot encode of the union, so the oracle encodes the union),
-    // and (b) no self-pair exclusion (external-query contract).
-    "ivfpq_ingest_search" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n
-           WHERE vec_id % 40 = 1 AND vec_id % 3 <> 0),
-         ac AS (SELECT n.vec_id, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac),
-         ce AS (SELECT vec_id,
-           list_transform(range(0, 8), mi ->
-             list_transform(range(0, 16), ci ->
-               list_reduce(list_transform(range(0, 8), di ->
-                 (v[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (v[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS dss
-         FROM e),
-         t AS (SELECT vec_id, dss,
-           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
-         FROM ce),
-         idx AS (SELECT acr.vec_id, acr.cent_id, t.codes
-           FROM acr JOIN t ON acr.vec_id = t.vec_id WHERE acr.rn = 1),
-         q AS (SELECT acr.vec_id AS query_id, acr.cent_id AS qcent, t.dss AS qlut
-           FROM acr JOIN t ON acr.vec_id = t.vec_id
-           WHERE acr.rn <= 2 AND acr.vec_id % 50 = 0),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(0, 8), mi ->
-             qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
-         FROM idx x JOIN q ON x.cent_id = q.qcent),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    // Residual serving-loop oracle: the ivfpq_residual modeling with the
-    // ivfpq_ingest_search deltas — centroids sample only the FOUNDING
-    // subset (frozen codebooks make founding+append ≡ one-shot union
-    // encode) and no self-pair exclusion (external-query contract).
-    "ivfpq_ingest_residual" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n
-           WHERE vec_id % 40 = 1 AND vec_id % 3 <> 0),
-         ac AS (SELECT n.vec_id, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac),
-         enc AS (SELECT a.vec_id, a.cent_id,
-           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rv
-         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
-         WHERE a.rn = 1),
-         ce AS (SELECT vec_id, cent_id,
-           list_transform(range(0, 8), mi ->
-             list_transform(range(0, 16), ci ->
-               list_reduce(list_transform(range(0, 8), di ->
-                 (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS dss
-         FROM enc),
-         idx AS (SELECT vec_id, cent_id,
-           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
-         FROM ce),
-         qr AS (SELECT a.vec_id AS query_id, a.cent_id AS qcent,
-           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rq
-         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
-         WHERE a.rn <= 2 AND a.vec_id % 50 = 0),
-         q AS (SELECT query_id, qcent,
-           list_transform(range(0, 8), mi ->
-             list_transform(range(0, 16), ci ->
-               list_reduce(list_transform(range(0, 8), di ->
-                 (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS qlut
-         FROM qr),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(0, 8), mi ->
-             q.qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
-         FROM idx x JOIN q ON x.cent_id = q.qcent),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    "ivfpq_residual" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
-         ac AS (SELECT n.vec_id, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac),
-         enc AS (SELECT a.vec_id, a.cent_id,
-           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rv
-         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
-         WHERE a.rn = 1),
-         ce AS (SELECT vec_id, cent_id,
-           list_transform(range(0, 8), mi ->
-             list_transform(range(0, 16), ci ->
-               list_reduce(list_transform(range(0, 8), di ->
-                 (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (rv[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS dss
-         FROM enc),
-         idx AS (SELECT vec_id, cent_id,
-           list_transform(dss, ds -> list_position(ds, list_min(ds)) - 1) AS codes
-         FROM ce),
-         qr AS (SELECT a.vec_id AS query_id, a.cent_id AS qcent,
-           list_transform(range(1, len(nn.v) + 1), i -> nn.v[i] - cc.cv[i]) AS rq
-         FROM acr a JOIN n nn ON a.vec_id = nn.vec_id JOIN c cc ON a.cent_id = cc.cent_id
-         WHERE a.rn <= 2 AND a.vec_id % 50 = 0),
-         q AS (SELECT query_id, qcent,
-           list_transform(range(0, 8), mi ->
-             list_transform(range(0, 16), ci ->
-               list_reduce(list_transform(range(0, 8), di ->
-                 (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))
-                 * (rq[mi * 8 + di + 1] - ((CAST('0x' || substr(md5('pq|' || mi::VARCHAR || '|' || ci::VARCHAR || '|' || (di + 1)::VARCHAR), 1, 15) AS BIGINT) % 2001 - 1000) / 1000.0))),
-                 (a, b) -> a + b))) AS qlut
-         FROM qr),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(0, 8), mi ->
-             q.qlut[mi + 1][CAST(x.codes[mi + 1] + 1 AS INT)]), (a, b) -> a + b) AS adist
-         FROM idx x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(adist, 4) AS approx_dist2
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    "ann_ivf_probe2" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
-         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac),
-         asg AS (SELECT vec_id, v, nrm, cent_id FROM acr WHERE rn = 1),
-         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, cent_id AS qcent
-           FROM acr WHERE rn <= 2 AND vec_id % 50 = 0),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
-                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
-         FROM asg x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-         FROM p)
-         SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS "rank", round(cos, 4) AS cosine
-         FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""",
-
-    "ann_recall" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         n AS (SELECT vec_id, v,
-           sqrt(list_reduce(list_transform(range(1, len(v) + 1), i -> v[i] * v[i]),
-                (a, b) -> a + b)) AS nrm
-         FROM e),
-         c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id % 40 = 1),
-         ac AS (SELECT n.vec_id, n.v, n.nrm, c.cent_id,
-           list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * c.cv[i]),
-                (a, b) -> a + b) / (n.nrm * c.cnrm) AS cos_c
-         FROM n CROSS JOIN c),
-         acr AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-           FROM ac),
-         asg AS (SELECT vec_id, v, nrm, cent_id FROM acr WHERE rn = 1),
-         q AS (SELECT vec_id AS query_id, v AS vq, nrm AS nq, cent_id AS qcent
-           FROM acr WHERE rn <= 2 AND vec_id % 50 = 0),
-         p AS (SELECT q.query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(1, len(q.vq) + 1), i -> q.vq[i] * x.v[i]),
-                (a, b) -> a + b) / (q.nq * x.nrm) AS cos
-         FROM asg x JOIN q ON x.cent_id = q.qcent AND x.vec_id <> q.query_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-         FROM p),
-         approx AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 10),
-         px AS (SELECT qq.vec_id AS query_id, x.vec_id AS neighbor_id,
-           list_reduce(list_transform(range(1, len(qq.v) + 1), i -> qq.v[i] * x.v[i]),
-                (a, b) -> a + b) / (qq.nrm * x.nrm) AS cos
-         FROM n qq JOIN n x ON x.vec_id <> qq.vec_id
-         WHERE qq.vec_id % 50 = 0),
-         rx AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-         FROM px),
-         exact AS (SELECT query_id, neighbor_id FROM rx WHERE rnk <= 10)
-         SELECT ex.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS hits,
-           CAST(count(*) AS BIGINT) AS exact_k,
-           round(count(a.neighbor_id) * 1.0 / count(*), 4) AS recall
-         FROM exact ex LEFT JOIN approx a
-           ON a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-         GROUP BY ex.query_id ORDER BY ex.query_id""",
-
-    "events_hourly" ->
+    Entry("events_hourly", { (s, dir) =>
+      // ts is epoch-nanos (nanosAsLong read); bucket to hour starts.
+      // Sums go through exact decimals: double addition is not associative,
+      // so a float sum depends on partition merge order — nondeterministic
+      // across partitionings (and across engines). Decimal sums are exact.
+      cat(s, dir).table("events")
+        .withColumn("hour_start", expr("ts DIV 3600000000000") * 3600)
+        .groupBy(col("event_type"), col("hour_start"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value").cast("decimal(18,6)")), 2).cast("double").as("sum_value"),
+          (sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1)))
+            .as("avg_value"))
+        .orderBy("event_type", "hour_start")
+    }, Sql(
       """SELECT event_type, epoch_ns(ts) // 3600000000000 * 3600 AS hour_start,
            COUNT(*) AS n_events,
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_value,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_value
          FROM events
          GROUP BY event_type, hour_start
-         ORDER BY event_type, hour_start"""
+         ORDER BY event_type, hour_start"""))
   )
+
+  /** The registry keyed by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.build).toMap
 }

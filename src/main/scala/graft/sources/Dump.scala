@@ -674,15 +674,6 @@ object Dump {
       StructField("table_name", StringType), StructField("seq_value", LongType))))
   }
 
-  /** Packs a dump directory into ONE zip file — the reference's wire format
-    * (xdump/base.py:100 packs schema + per-table CSVs into a zip archive).
-    * A convenience for small dumps that must travel as a single artifact:
-    * a zip is one writer stream, the opposite of the partitioned-directory
-    * default that writes from every executor in parallel — at scale, keep
-    * the directory. Entry names are paths relative to `dumpPath`, so
-    * `unarchive` restores an identical directory. Streams through the
-    * Hadoop FS API (local, HDFS, S3A, ...).
-    */
   /** STORED entries at or below this size are buffered in memory for a
     * single-pass write; larger ones take the constant-memory two-pass
     * meter-then-copy path.
@@ -697,6 +688,15 @@ object Dump {
     case object Lzma extends ArchiveMethod
   }
 
+  /** Packs a dump directory into ONE zip file — the reference's wire format
+    * (xdump/base.py:100 packs schema + per-table CSVs into a zip archive).
+    * A convenience for small dumps that must travel as a single artifact:
+    * a zip is one writer stream, the opposite of the partitioned-directory
+    * default that writes from every executor in parallel — at scale, keep
+    * the directory. Entry names are paths relative to `dumpPath`, so
+    * `unarchive` restores an identical directory. Streams through the
+    * Hadoop FS API (local, HDFS, S3A, ...).
+    */
   def archive(spark: SparkSession, dumpPath: String, zipPath: String,
       compression: String = "deflated"): Unit = {
     import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}

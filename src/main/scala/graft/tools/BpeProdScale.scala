@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{GraftSession, Harness}
 import graft.operators.Bpe
 
 /** Production-merge-count proof for the BPE pair (`bpeTrainFast` +
@@ -52,24 +53,8 @@ object BpeProdScale {
 
   def main(args: Array[String]): Unit = {
     val dirs = args.headOption.getOrElse("/root/testdata/sf0.1").split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def minOf(fn: () => DataFrame): Double = {
-      fn().write.format("noop").mode("overwrite").save() // warmup
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val base = spark.read.parquet(s"${dirs.head}/documents.parquet")
     val train = diverse(base)
@@ -78,10 +63,10 @@ object BpeProdScale {
     // the 30k run's frame doubles as the tool's table — no second train
     var table30kVar: DataFrame = null
     val trainTimes = Seq(5000, 15000, 30000).map { m =>
-      val t0 = System.nanoTime()
-      val merges = Bpe.bpeTrainFast(train, numMerges = m, maxVocab = 50000)
-      val n = merges.count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val ((merges, n), dt) = Harness.seconds {
+        val merges = Bpe.bpeTrainFast(train, numMerges = m, maxVocab = 50000)
+        (merges, merges.count())
+      }
       require(n == m, s"trainer stopped at $n of $m merges — vocabulary " +
         "saturated; the diverse corpus is supposed to prevent that")
       if (m == 30000) table30kVar = merges
@@ -110,8 +95,8 @@ object BpeProdScale {
     val runs = dirs.map { dir =>
       val docs = diverse(spark.read.parquet(s"$dir/documents.parquet"))
       val nDocs = docs.count()
-      val m8 = minOf(() => Bpe.bpeApply(docs, demoMerges))
-      val m30k = minOf(() => Bpe.bpeApply(docs, merges30k))
+      val m8 = Harness.warmRuns(reps)(Bpe.bpeApply(docs, demoMerges)).min
+      val m30k = Harness.warmRuns(reps)(Bpe.bpeApply(docs, merges30k)).min
       // witness that the table FIRES: tokens-per-doc must shrink well
       // below the character segmentation under the trained table
       val toks = Bpe.bpeApply(docs.limit(200), merges30k)

@@ -11,11 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four threads and partitions whatever the host, so plan shapes and
+    * partition-sensitive results do not vary with the machine. */
+  lazy val session: SparkSession = GraftSession.local(4)
 }
