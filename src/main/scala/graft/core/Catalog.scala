@@ -78,10 +78,12 @@ final class Catalog(
     Option(reader).flatten.getOrElse(Catalog.parquetReader(spark, dir))
 
   /** Table `name` as a lazy plan. A parquet-backed catalog resolves each
-    * table's schema once, at the first call (one footer-inference job),
-    * and pins it on every later read, so repeated `table(t)` calls and
-    * the catalogs derived by `withForeignKeys`/`withPrimaryKeys` run no
-    * further Spark job. Rewriting a table with a different schema during
+    * table's schema once, at the first call, from one data file's footer
+    * read on the driver ([[ParquetFiles.schema]]: no Spark job for a flat
+    * table directory), and pins it on every later read, so repeated
+    * `table(t)` calls and the catalogs derived by
+    * `withForeignKeys`/`withPrimaryKeys` neither run a job nor reopen a
+    * footer. Rewriting a table with a different schema during
     * one catalog's life is outside this contract: later reads keep the
     * first schema. JDBC readers look the schema up over the driver
     * connection, which is no Spark job, and are not pinned.
@@ -105,26 +107,11 @@ final class Catalog(
     // parquet-backed catalogs (tpch included) wrap their scan in a reader
     // closure too, but row counts are reader-invariant — the closure only
     // normalizes column types. A catalog whose dir is not a filesystem
-    // path (JDBC url) lands in the count() fallback.
-    val footers = scala.util.Try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = root.getFileSystem(conf)
-      require(fs.exists(root))
-      val parts = fs.listStatus(root)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      // a dir with no DIRECT parquet children (partitioned key=... layout,
-      // or only _SUCCESS) must fall back to count(), never report 0 —
-      // a silent 0 would feed corpusHint=0 into the LSH plane sizing
-      require(parts.nonEmpty)
-      parts.iterator.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    }
-    footers.getOrElse(table(name).count())
+    // path (JDBC url), or a partitioned table (no DIRECT parquet children
+    // — a silent 0 would feed corpusHint=0 into the LSH plane sizing),
+    // lands in the count() fallback.
+    scala.util.Try(ParquetFiles.rowCount(spark, s"$dir/$name.parquet")).toOption.flatten
+      .getOrElse(table(name).count())
   }
 
   /** FKs out of `table`. Mirrors xdump's `get_foreign_keys(table, full_tables,
@@ -160,10 +147,10 @@ final class Catalog(
 
 object Catalog {
 
-  /** Reader of `<dir>/<table>.parquet` that infers each table's schema at
-    * its first read and pins it on every later one (`spark.read.schema`),
-    * then applies `normalize`. Schema inference is a one-task Spark job
-    * per call; pinning makes it one per table for the reader's life.
+  /** Reader of `<dir>/<table>.parquet` that resolves each table's schema
+    * at its first read ([[ParquetFiles.schema]], a driver-side footer
+    * read) and pins it on every later one (`spark.read.schema`), then
+    * applies `normalize`.
     */
   private def parquetReader(
       spark: SparkSession, dir: String,
@@ -171,14 +158,8 @@ object Catalog {
     val schemas = collection.concurrent.TrieMap.empty[String, StructType]
     name => {
       val path = s"$dir/$name.parquet"
-      val df = schemas.get(name) match {
-        case Some(s) => spark.read.schema(s).parquet(path)
-        case None =>
-          val inferred = spark.read.parquet(path)
-          schemas.putIfAbsent(name, inferred.schema)
-          inferred
-      }
-      normalize(name, df)
+      val schema = schemas.getOrElseUpdate(name, ParquetFiles.schema(spark, path))
+      normalize(name, spark.read.schema(schema).parquet(path))
     }
   }
 

@@ -278,7 +278,7 @@ private[graft] object EpochStore {
     // compaction, not one per family; commit stays last
     EpochStore.inParallel(
       (segmented.map { case (n, rewrite) => () => {
-        val df = spark.read.parquet(artifactPaths(spark, path, n, cur): _*)
+        val df = ParquetFiles.read(spark, artifactPaths(spark, path, n, cur): _*)
         val seg = segName(n, next)
         rewrite(df).write.mode("overwrite").parquet(s"$path/$seg")
         writeSegments(spark, path, n, next, Seq(seg))
@@ -286,7 +286,7 @@ private[graft] object EpochStore {
       carried.map { n => () => {
         val src = new Path(epochDir(path, n, cur))
         if (fs.exists(src))
-          spark.read.parquet(src.toString).coalesce(1)
+          ParquetFiles.read(spark, src.toString).coalesce(1)
             .write.mode("overwrite").parquet(epochDir(path, n, next))
       }}: _*)
     commitEpoch(spark, path, next)

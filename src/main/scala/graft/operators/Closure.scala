@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions.{col, count, lit, sum}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.{In, Literal}
+import org.apache.spark.sql.functions.{col, count, lit, struct, sum}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, SessionBridge}
+import org.apache.spark.sql.types._
 
 import graft.core.{Catalog, ForeignKey, TableGraph}
 
@@ -94,14 +99,16 @@ object Closure {
     } else {
       // Cyclic FK graph: fixpoint over sweeps until the ROW set stops
       // growing — a cycle can add rows in the sweep that discovers no new
-      // table, so table-set convergence alone would under-close. One
-      // unioned count job per sweep detects growth; selections checkpoint
-      // each sweep so the stacked unions don't deepen the plan unboundedly.
-      // Rare case (real schemas are acyclic) and bounded by MaxSweeps.
-      // Guarded for the full-tables-only shape (partial = empty): the first
-      // sweep has no selections yet — reduce over an empty collection would
-      // throw; 0 rows correctly forces that first sweep (0 != prevRows).
-      def totalRows(): Long =
+      // table, so table-set convergence alone would under-close.
+      // Selections checkpoint each sweep so the stacked unions don't
+      // deepen the plan unboundedly, and each selection's row count rides
+      // its checkpoint via `observe()`; only the seeds' total before the
+      // first sweep costs a count job. Rare case (real schemas are
+      // acyclic) and bounded by MaxSweeps. Guarded for the
+      // full-tables-only shape (partial = empty): the first sweep has no
+      // selections yet — reduce over an empty collection would throw; 0
+      // rows correctly forces that first sweep (0 != prevRows).
+      var rows =
         if (selections.isEmpty) 0L
         else selections.values
           .map(_.select(count(lit(1)).as("__graft_n")))
@@ -109,13 +116,16 @@ object Closure {
           .agg(sum(col("__graft_n"))).head().getLong(0)
       var sweeps = 0
       var prevRows = -1L
-      var rows = totalRows()
       while (rows != prevRows && sweeps < MaxSweeps) {
         prevRows = rows
         for (t <- catalog.tables if full(t) || selections.contains(t))
           process(t, finalize = false)
-        selections = selections.map { case (k, v) => k -> v.localCheckpoint() }
-        rows = totalRows()
+        val counted = selections.map { case (k, v) =>
+          val n = Observation()
+          k -> (v.observe(n, count(lit(1)).as("n")).localCheckpoint(), n)
+        }
+        selections = counted.map { case (k, (v, _)) => k -> v }
+        rows = counted.values.map(_._2.get("n").asInstanceOf[Long]).sum
         sweeps += 1
       }
       for (t <- selections.keys.toSeq.sorted)
@@ -146,19 +156,37 @@ object Closure {
   /** Transitive closure along a self-FK (xdump/base.py:253
     * `RECURSIVE_QUERY_TEMPLATE`): seed rows plus every ancestor reachable by
     * repeatedly following `fk.column → fk.foreignColumn` within the same
-    * table.
+    * table, for at most `maxDepth` levels. Composite self-FKs follow the
+    * whole key tuple, and a row with any null FK part references nothing
+    * (the MATCH SIMPLE rule of [[pull]]); cycles and self-loops terminate.
     *
-    * Semi-naive iteration: each step semi-joins the table against only the
-    * previous frontier's keys and anti-joins out already-seen rows. Only the
-    * per-step DELTA is ever materialized (localCheckpoint); the accumulated
-    * set stays a lazy union of the checkpointed deltas, so total
-    * materialized bytes are O(|closure|), not O(depth × |closure|).
-    * Iteration count is the hierarchy depth (log n for trees), not the row
-    * count. Each step is one checkpoint and nothing else: the delta's row
-    * count rides the checkpoint via `observe()` (no separate emptiness
-    * job), and the frontier keys feed the semi-join undeduplicated (its
-    * build side ignores duplicate keys, so a `distinct()` would only add a
-    * shuffle).
+    * Both paths start from one checkpoint of the PK-deduplicated seed, then
+    * take one of two routes, chosen without running a job:
+    *
+    *  - Driver walk, when the table's edge list fits the broadcast gate.
+    *    The edge list is the projection on the PK, FK and referenced
+    *    columns. It fits when its estimated size (`optimizedPlan.stats`)
+    *    is at most `spark.sql.autoBroadcastJoinThreshold` — Spark already
+    *    holds that much on the driver when it broadcasts — and each FK
+    *    part and the column it references share a type that compares by
+    *    value on the driver. One job collects the edge list together with
+    *    the seed's edge columns. The walk runs on the driver, and the
+    *    result is the seed plus the table filtered to the added keys; a
+    *    one-column key is an `IN` filter that pushes into a parquet scan.
+    *    So the job count does not grow with the hierarchy's depth, and a
+    *    consumer reads one filtered scan.
+    *  - Semi-naive iteration otherwise (JDBC sources estimate their size at
+    *    the maximum, so they always land here, as does a gate of -1). Each
+    *    step semi-joins the table against only the previous frontier's
+    *    keys and anti-joins out already-seen rows. Only the per-step DELTA
+    *    is ever materialized (localCheckpoint); the accumulated set stays a
+    *    lazy union of the checkpointed deltas, so total materialized bytes
+    *    are O(|closure|), not O(depth × |closure|). Each step is one
+    *    checkpoint and nothing else: the delta's row count rides the
+    *    checkpoint via `observe()` (no separate emptiness job), and the
+    *    frontier keys feed the semi-join undeduplicated (its build side
+    *    ignores duplicate keys, so a `distinct()` would only add a
+    *    shuffle).
     */
   def recursiveClosure(
       table: DataFrame,
@@ -167,11 +195,102 @@ object Closure {
       primaryKey: Seq[String],
       maxDepth: Int = 100): DataFrame = {
     require(fk.isRecursive, s"$fk is not a self-FK")
+    val seed0 = seed.dropDuplicates(primaryKey).localCheckpoint()
+    val edges = edgeList(table, fk, primaryKey)
+    val (pkTypes, fkRefTypes) = edges.schema.map(_.dataType).splitAt(primaryKey.size)
+    val (fkTypes, refTypes) = fkRefTypes.splitAt(fk.columnPairs.size)
+    val gate = SessionBridge.broadcastThreshold(table.sparkSession)
+    val walkable = gate >= 0 &&
+      edges.queryExecution.optimizedPlan.stats.sizeInBytes <= gate &&
+      fkTypes == refTypes && (pkTypes ++ fkTypes).forall(comparesOnDriver)
+    if (walkable) walkOnDriver(table, seed0, edges, fk, primaryKey, maxDepth)
+    else semiNaive(table, seed0, fk, primaryKey, maxDepth)
+  }
 
+  /** Types whose collected values are equal on the driver exactly when
+    * Spark's `=` finds them equal (floating point and collated strings are
+    * not: NaN, -0.0 and case-insensitive collations differ).
+    */
+  private def comparesOnDriver(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+         TimestampType | TimestampNTZType => true
+    case s: StringType => s == StringType
+    case _ => false
+  }
+
+  /** `df`'s PK, FK and referenced columns, in that order, renamed by
+    * position: a column may play two roles, and names resolve
+    * case-insensitively as in [[pull]].
+    */
+  private def edgeList(df: DataFrame, fk: ForeignKey, primaryKey: Seq[String]): DataFrame = {
+    val cols = primaryKey ++ fk.columnPairs.map(_._1) ++ fk.columnPairs.map(_._2)
+    df.select(cols.zipWithIndex.map { case (c, i) => col(c).as(s"__graft_edge_$i") }: _*)
+  }
+
+  /** The driver walk of [[recursiveClosure]] over the collected edge list:
+    * level by level, the parents of the frontier not yet seen.
+    */
+  private def walkOnDriver(
+      table: DataFrame,
+      seed0: DataFrame,
+      edges: DataFrame,
+      fk: ForeignKey,
+      primaryKey: Seq[String],
+      maxDepth: Int): DataFrame = {
+    val pkAt = primaryKey.indices
+    val fkAt = pkAt.end until pkAt.end + fk.columnPairs.size
+    val refAt = fkAt.end until fkAt.end + fk.columnPairs.size
+    def tuple(r: Row, at: Seq[Int]): Seq[Any] = at.map(r.get)
+    // a key tuple with a null part matches nothing (MATCH SIMPLE)
+    def key(r: Row, at: Seq[Int]): Option[Seq[Any]] =
+      Some(tuple(r, at)).filterNot(_.contains(null))
+
+    // one job: the seed's edge columns (flagged) and the table's edge list
+    val (seedRows, tableRows) = edgeList(seed0, fk, primaryKey).withColumn("__graft_seed", lit(true))
+      .union(edges.withColumn("__graft_seed", lit(false)))
+      .collect().partition(_.getBoolean(refAt.end))
+    // the table's rows as (PK, FK tuple), by the key tuple they are referenced by
+    val byRef: Map[Seq[Any], Seq[(Seq[Any], Option[Seq[Any]])]] = tableRows.toSeq
+      .flatMap(r => key(r, refAt).map(_ -> (tuple(r, pkAt), key(r, fkAt))))
+      .groupMap(_._1)(_._2)
+
+    val seen = mutable.HashSet.from(seedRows.iterator.map(tuple(_, pkAt)))
+    val added = mutable.ArrayBuffer.empty[Seq[Any]]
+    var frontier = seedRows.flatMap(key(_, fkAt)).distinct.toSeq
+    var depth = 0
+    while (frontier.nonEmpty && depth < maxDepth) {
+      val delta = frontier.flatMap(byRef.getOrElse(_, Nil))
+        .filter { case (pk, _) => seen.add(pk) }
+      added ++= delta.map(_._1)
+      frontier = delta.flatMap(_._2).distinct
+      if (delta.nonEmpty) depth += 1
+    }
+    if (added.isEmpty) seed0
+    else seed0.unionByName(table.where(keyIn(table, primaryKey, added.toSeq)))
+  }
+
+  /** `key ∈ values`: an `IN` list on one column (pushed into parquet
+    * scans), a struct `IN` list on a composite key.
+    */
+  private def keyIn(table: DataFrame, key: Seq[String], values: Seq[Seq[Any]]): Column =
+    key match {
+      case Seq(k) => col(k).isInCollection(values.map(_.head))
+      case _ =>
+        val t = table.select(key.map(col): _*).schema
+        ColumnBridge.column(In(ColumnBridge.expression(struct(key.map(col): _*)),
+          values.map(v => Literal.create(Row.fromSeq(v), t))))
+    }
+
+  /** The semi-naive iteration of [[recursiveClosure]]. */
+  private def semiNaive(
+      table: DataFrame,
+      seed0: DataFrame,
+      fk: ForeignKey,
+      primaryKey: Seq[String],
+      maxDepth: Int): DataFrame = {
     def keysOf(df: DataFrame): DataFrame =
       df.select(primaryKey.map(k => col(k).alias(s"__graft_acc_$k")): _*)
 
-    val seed0 = seed.dropDuplicates(primaryKey).localCheckpoint()
     var deltas: List[DataFrame] = List(seed0)
     var accKeys = keysOf(seed0)
     var frontier = seed0

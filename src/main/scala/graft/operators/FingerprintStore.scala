@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.core.EpochStore
+import graft.core.{EpochStore, ParquetFiles}
 
 /** Persistence for the exact-dedup fingerprint corpus.
   *
@@ -109,7 +109,7 @@ object FingerprintStore {
     * for [[Dedup.incrementalDedupFp]].
     */
   def loadFingerprints(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(artifactPaths(spark, path, "fingerprints"): _*)
+    ParquetFiles.read(spark, artifactPaths(spark, path, "fingerprints"): _*)
 
   /** The digest table at a SPECIFIC committed epoch — superseded epochs
     * stay readable until [[vacuum]] (streaming replay reads the epoch a
@@ -119,15 +119,15 @@ object FingerprintStore {
     */
   def loadFingerprintsEpoch(
       spark: SparkSession, path: String, e: Long): DataFrame =
-    spark.read.parquet(
+    ParquetFiles.read(spark,
       EpochStore.artifactPaths(spark, path, "fingerprints", e): _*)
 
   /** The persisted Bloom sketch bytes (the filter side for
     * [[Dedup.bloomSketchDedup]]) plus the item count it was sized for.
     */
   def loadBloom(spark: SparkSession, path: String): (Array[Byte], Long) = {
-    val r = spark.read
-      .parquet(artifactPaths(spark, path, "bloom").head)
+    val r = ParquetFiles.read(spark,
+      artifactPaths(spark, path, "bloom").head)
       .select(col("sketch"), col("n_items")).head()
     (r.getAs[Array[Byte]](0), r.getLong(1))
   }
@@ -237,7 +237,7 @@ object FingerprintStore {
       spark: SparkSession, path: String, epoch: Long, fpp: Double,
       expectedItems: Long): Unit = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1): $fpp")
-    val fp = spark.read.parquet(
+    val fp = ParquetFiles.read(spark,
       EpochStore.artifactPaths(spark, path, "fingerprints", epoch): _*)
     val n = math.max(1L, fp.count())
     val capacity = math.max(64L, math.max(2L * n, expectedItems))
@@ -262,12 +262,12 @@ object FingerprintStore {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) None
       else {
-        val df = spark.read.parquet(dir)
+        val df = ParquetFiles.read(spark, dir)
         if (!df.columns.contains("capacity")) None
         else Some(df.select("sketch", "n_items", "num_bits", "fpp", "capacity").head())
       }
     }
-    val novel = spark.read.parquet(novelSegPath)
+    val novel = ParquetFiles.read(spark, novelSegPath)
     val batchN = novel.count()
     prev match {
       case Some(r) if r.getLong(1) + batchN <= r.getLong(4) =>

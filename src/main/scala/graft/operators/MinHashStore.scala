@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.EpochStore
+import graft.core.{EpochStore, ParquetFiles}
 
 /** Persistence for the FUZZY-dedup signature corpus — the MinHash sibling
   * of [[FingerprintStore]] (exact digests) and `Dedup.ngramIndex`
@@ -76,7 +76,7 @@ object MinHashStore {
     * micro-batch originally gated against).
     */
   def loadEpoch(spark: SparkSession, path: String, e: Long): DataFrame =
-    spark.read.parquet(
+    ParquetFiles.read(spark,
       EpochStore.artifactPaths(spark, path, "minhash", e): _*)
 
   /** Fold an accepted batch (`doc_id`, `text`) into the store: ONLY the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.EpochStore
+import graft.core.{EpochStore, ParquetFiles}
 
 /** Persistence for the 48-bit SimHash signature corpus — the
   * Hamming-distance sibling of [[MinHashStore]], finishing the fuzzy
@@ -57,7 +57,7 @@ object SimHashStore {
     * ([[graft.streaming.StreamingFuzzyIngest]]).
     */
   def loadEpoch(spark: SparkSession, path: String, e: Long): DataFrame =
-    spark.read.parquet(
+    ParquetFiles.read(spark,
       EpochStore.artifactPaths(spark, path, "simhash", e): _*)
 
   /** Fold an accepted batch (`doc_id`, `text`) into the store — ONLY

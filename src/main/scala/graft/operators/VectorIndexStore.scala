@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.EpochStore
+import graft.core.{EpochStore, ParquetFiles}
 
 /** Persistence for the ANN SERVING index — the vector sibling of
   * [[FingerprintStore]] (exact digests) and [[MinHashStore]] (fuzzy
@@ -149,7 +149,7 @@ object VectorIndexStore {
         val p = new org.apache.hadoop.fs.Path(EpochStore.epochDir(path, "drift", e))
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) Seq.empty // store founded before drift telemetry
-        else spark.read.parquet(p.toString).collect().map(r =>
+        else ParquetFiles.read(spark, p.toString).collect().map(r =>
           (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
             r.getDouble(4)))
       })
@@ -183,7 +183,7 @@ object VectorIndexStore {
     */
   def driftStats(spark: SparkSession, path: String): DataFrame = {
     val e = EpochStore.requireEpoch(spark, path, "VectorIndexStore")
-    spark.read.parquet(EpochStore.epochDir(path, "drift", e))
+    ParquetFiles.read(spark, EpochStore.epochDir(path, "drift", e))
   }
 
   /** Found the index at `path`: derive (or accept) both codebooks from
@@ -259,15 +259,15 @@ object VectorIndexStore {
 
   def load(spark: SparkSession, path: String): Index = {
     val e = EpochStore.requireEpoch(spark, path, "VectorIndexStore")
-    val cents = spark.read.parquet(EpochStore.epochDir(path, "ivf", e))
+    val cents = ParquetFiles.read(spark, EpochStore.epochDir(path, "ivf", e))
       .orderBy(col("idx")).collect()
       .map(r => (r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
-    val metaDf = spark.read.parquet(EpochStore.epochDir(path, "pqmeta", e))
+    val metaDf = ParquetFiles.read(spark, EpochStore.epochDir(path, "pqmeta", e))
     val meta = metaDf.head()
     // pqmeta written before the residual knob has no column: non-residual
     Index(cents, meta.getSeq[Double](3).toArray,
       meta.getInt(0), meta.getInt(1), meta.getInt(2),
-      spark.read.parquet(
+      ParquetFiles.read(spark,
         EpochStore.artifactPaths(spark, path, "postings", e): _*),
       e,
       if (metaDf.columns.contains("residual")) meta.getAs[Boolean]("residual")

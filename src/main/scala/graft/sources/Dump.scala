@@ -48,14 +48,16 @@ final case class DumpSpec(
   *
   * Job budget — only jobs that move data run:
   *  - write: one job per dumped table (its spool), plus the closure's own
-  *    jobs (one localCheckpoint per recursion level of a self-FK, see
-  *    [[graft.operators.Closure.recursiveClosure]]). Row counts and
+  *    jobs. A self-FK costs two jobs whatever the hierarchy's depth when
+  *    its edge list fits the broadcast gate (the seed's checkpoint and one
+  *    edge-list collect), else one localCheckpoint per recursion level
+  *    (see [[graft.operators.Closure.recursiveClosure]]). Row counts and
   *    sequence state ride each spool via `observe()`, the spooled files
   *    are read back with the schema already in hand, and the DDL takes its
   *    schemas from the DataFrames being written, so the manifest, the
-  *    schema files and the read-backs cost no job. A parquet catalog pays
-  *    one footer job per table only the first time it resolves that
-  *    table (see [[graft.core.Catalog.table]]).
+  *    schema files and the read-backs cost no job. A parquet catalog
+  *    resolves a table's schema from one footer read on the driver, once
+  *    per table and without a job (see [[graft.core.Catalog.table]]).
   *  - restore: `readManifest` and `sequencesOf` parse on the driver (no
   *    job); `load` reads each table with the schema its dumped DDL
   *    records (no inference job); `loadInto` runs one job per table (its

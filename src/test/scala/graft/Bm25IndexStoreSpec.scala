@@ -192,6 +192,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$store/bmpost_s1")
     rmrf(s"$store/bmstats_s1")
     rmrf(s"$store/bmstats_e1.segs")
+    assertFooterSchemas(store)
     val batchDf = Seq((1L, Seq("dup", "row", "vector"))).toDF("query_id", "terms")
     // search on the un-migrated legacy store fails LOUDLY with the
     // migration message, not an opaque path error
@@ -250,6 +251,7 @@ class Bm25IndexStoreSpec extends SparkSpec {
       docs.limit(20).select((col("doc_id") + 1000000L).as("doc_id"),
         col("text")), store)
     assert(served().nonEmpty)
+    assertFooterSchemas(store)
   }
 
   test("search on an unfounded store and invalid batches fail loudly") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Catalog, ForeignKey, TableGraph}
@@ -41,16 +42,59 @@ class ClosureSpec extends SparkSpec {
     }
   }
 
+  /** `closure`'s rows under both paths of recursiveClosure — the driver
+    * walk, which the default broadcast gate admits for these small
+    * tables, and the semi-naive loop, forced by a gate of -1 — asserted
+    * row-equal, with the jobs each path ran.
+    */
+  private case class Closed(rows: Set[Row], walkJobs: Int, loopJobs: Int)
+
+  private def bothPaths(closure: => DataFrame): Closed = {
+    var walked: DataFrame = null
+    var iterated: DataFrame = null
+    val walkJobs = jobsOf { walked = closure }
+    val loopJobs = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      jobsOf { iterated = closure }
+    }
+    val rows = walked.collect().toSeq
+    assert(rows.sortBy(_.toString) === iterated.collect().toSeq.sortBy(_.toString))
+    assert(walkJobs <= WalkJobs, s"driver walk ran $walkJobs jobs")
+    Closed(rows.toSet, walkJobs, loopJobs)
+  }
+
+  // the seed's dedup shuffle and checkpoint, and the edge-list collect
+  private val WalkJobs = 3
+
+  private lazy val mgrTree = cat.table("customer")
+    .withColumn("c_mgrkey", floor(col("c_custkey") / 2).cast("long"))
+  private val mgrFk = ForeignKey("customer", "c_mgrkey", "customer", "c_custkey")
+
+  private def custKeys(c: Closed): Set[Long] = c.rows.map(_.getAs[Long]("c_custkey"))
+
   test("recursiveClosure reaches all ancestors and terminates") {
-    val base = cat.table("customer")
-      .withColumn("c_mgrkey", floor(col("c_custkey") / 2).cast("long"))
     // ancestors of 100: 50,25,12,6,3,1,0 — and 0 is its own manager
     // (floor(0/2)=0), so the self-loop must not spin the iteration.
-    val seed = base.where(col("c_custkey") === 100)
-    val closed = Closure.recursiveClosure(base, seed,
-      ForeignKey("customer", "c_mgrkey", "customer", "c_custkey"), Seq("c_custkey"))
-    val keys = closed.select("c_custkey").collect().map(_.getLong(0)).toSet
-    assert(keys === Set(100L, 50L, 25L, 12L, 6L, 3L, 1L, 0L))
+    val seed = mgrTree.where(col("c_custkey") === 100)
+    val closed = bothPaths(Closure.recursiveClosure(mgrTree, seed, mgrFk, Seq("c_custkey")))
+    assert(custKeys(closed) === Set(100L, 50L, 25L, 12L, 6L, 3L, 1L, 0L))
+    // the loop checkpoints each of the seven levels; the walk does not
+    assert(closed.loopJobs >= closed.walkJobs + 7, closed)
+    // key names resolve case-insensitively on both paths, as in a pull
+    val upper = bothPaths(Closure.recursiveClosure(mgrTree, seed,
+      ForeignKey("customer", "C_MGRKEY", "customer", "C_CUSTKEY"), Seq("C_CUSTKEY")))
+    assert(upper.rows === closed.rows)
+  }
+
+  test("recursiveClosure stops after maxDepth levels on both paths") {
+    val seed = mgrTree.where(col("c_custkey").isin(100, 7))
+    def upTo(depth: Int) = custKeys(bothPaths(
+      Closure.recursiveClosure(mgrTree, seed, mgrFk, Seq("c_custkey"), maxDepth = depth)))
+    assert(upTo(0) === Set(100L, 7L))
+    assert(upTo(1) === Set(100L, 50L, 7L, 3L))
+    // levels count from the seed set: 7's chain reaches 0 at level 3,
+    // 100's reaches 12
+    assert(upTo(3) === Set(100L, 50L, 25L, 12L, 7L, 3L, 1L, 0L))
+    assert(upTo(20) === Set(100L, 50L, 25L, 12L, 6L, 3L, 1L, 0L, 7L))
   }
 
   test("recursiveClosure matches BFS reachability on seeded random graphs") {
@@ -63,22 +107,24 @@ class ClosureSpec extends SparkSpec {
     val rows = Seq.tabulate(n)(i => (i.toLong, rnd.nextInt(n).toLong))
     val base = rows.toDF("id", "parent")
     val parentOf = rows.toMap
-    def bfs(start: Long): Set[Long] = {
+    def bfs(start: Long, maxDepth: Int): Set[Long] = {
       var seen = Set(start)
       var frontier = Set(start)
-      while (frontier.nonEmpty) {
+      var depth = 0
+      while (frontier.nonEmpty && depth < maxDepth) {
         val next = frontier.map(parentOf).diff(seen)
         seen ++= next
         frontier = next
+        depth += 1
       }
       seen
     }
-    for (start <- Seq(0L, 17L, 123L, 199L)) {
+    for (start <- Seq(0L, 17L, 123L, 199L); maxDepth <- Seq(2, 100)) {
       val seed = base.where(col("id") === start)
-      val got = Closure.recursiveClosure(base, seed,
-          ForeignKey("t", "parent", "t", "id"), Seq("id"))
-        .select("id").collect().map(_.getLong(0)).toSet
-      assert(got === bfs(start), s"closure from $start diverged from BFS")
+      val got = bothPaths(Closure.recursiveClosure(base, seed,
+          ForeignKey("t", "parent", "t", "id"), Seq("id"), maxDepth))
+        .rows.map(_.getLong(0))
+      assert(got === bfs(start, maxDepth), s"closure from $start diverged from BFS")
     }
   }
 
@@ -103,12 +149,13 @@ class ClosureSpec extends SparkSpec {
       ("y", 2L, null.asInstanceOf[java.lang.Long]), // same id 2, other dept
       ("y", 4L, java.lang.Long.valueOf(2L)))
       .toDF("dept", "emp_id", "mgr_id")
-    val selfFk = ForeignKey("emp", "mgr_id", "emp", "emp_id", Seq(("dept", "dept")))
-    val closed = Closure.recursiveClosure(
+    // `dept` plays a PK part, an FK part and a referenced part, spelled
+    // three ways: names resolve case-insensitively on both paths
+    val selfFk = ForeignKey("emp", "mgr_id", "emp", "emp_id", Seq(("DEPT", "dept")))
+    val closed = bothPaths(Closure.recursiveClosure(
       emp, emp.where(col("dept") === "x" && col("emp_id") === 3),
-      selfFk, Seq("dept", "emp_id"))
-    val got = closed.select("dept", "emp_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
+      selfFk, Seq("Dept", "emp_id")))
+    val got = closed.rows.map(r => (r.getString(0), r.getLong(1)))
     assert(got === Set(("x", 3L), ("x", 2L), ("x", 1L)),
       s"must not cross into dept y via the shared mgr id: $got")
   }
@@ -121,7 +168,13 @@ class ClosureSpec extends SparkSpec {
         ForeignKey("customer", "c_custkey", "orders", "o_orderkey")),
       Map("orders" -> Seq("o_orderkey"), "customer" -> Seq("c_custkey")))
     val seed = cyc.table("orders").where(col("o_totalprice") > 400000)
-    val sel = Closure.relatedData(cyc, partial = Map("orders" -> seed))
+    cyc.tables.foreach(cyc.table(_))
+    var sel: Map[String, DataFrame] = null
+    val jobs = jobsOf { sel = Closure.relatedData(cyc, partial = Map("orders" -> seed)) }
+    // the seeds' count, then per sweep only each selection's checkpoint
+    // (its row count rides it): a unioned count job after every sweep
+    // would add its own aggregate stages, 44 jobs in all on this input
+    assert(jobs === 32)
     assert(sel.contains("orders") && sel.contains("customer"))
     val danglingCust = sel("orders").select(col("o_custkey").as("k")).distinct()
       .join(sel("customer"), col("k") === col("c_custkey"), "left_anti")
@@ -138,7 +191,7 @@ class ClosureSpec extends SparkSpec {
         ForeignKey("customer", "c_custkey", "orders", "o_orderkey")),
       Map("orders" -> Seq("o_orderkey"), "customer" -> Seq("c_custkey")))
     // partial = empty: the first row-count probe sees no selections yet —
-    // the guarded totalRows must return 0, not throw on an empty reduce
+    // the guarded seed count must return 0, not throw on an empty reduce
     val sel = Closure.relatedData(cyc, fullTables = Seq("orders", "customer"))
     // full tables are never pulled *into*, so nothing is selected
     assert(sel.isEmpty)

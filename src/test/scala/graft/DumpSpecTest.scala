@@ -1,14 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Catalog
+import graft.core.{Catalog, ForeignKey}
+import graft.operators.Closure
 import graft.sources.{Dump, DumpSpec}
 
 class DumpSpecTest extends SparkSpec {
@@ -16,22 +15,6 @@ class DumpSpecTest extends SparkSpec {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_test").toString
-
-  /** Spark jobs started while `body` runs. The bus is drained before the
-    * listener joins and before it is read, so no job of an earlier call
-    * is counted and none of this one is missed.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
 
   test("parquet dump is FK-closed and roundtrips") {
     val dir = tmp()
@@ -164,8 +147,9 @@ class DumpSpecTest extends SparkSpec {
   test("job budget: the dump round trip runs only data-moving Spark jobs") {
     val dir = tmp()
     val fresh = Catalog.tpch(spark, sfDir)
-    // a catalog resolves a table's schema once; later reads pin it
-    assert(jobsOf(fresh.table("nation").schema) === 1)
+    // a catalog resolves a table's schema once, from a footer read on the
+    // driver; later reads pin it
+    assert(jobsOf(fresh.table("nation").schema) === 0)
     assert(jobsOf(fresh.table("nation").schema) === 0)
     assert(jobsOf(fresh.withPrimaryKeys().table("nation").schema) === 0)
     // FK-closed among themselves (supplier → nation → region; part has no
@@ -179,6 +163,52 @@ class DumpSpecTest extends SparkSpec {
     assert(jobsOf(Dump.sequencesOf(spark, s"$dir/t")) === 0)
     assert(Dump.sequencesOf(spark, s"$dir/t").schema.map(f => f.name -> f.dataType.sql) ===
       Seq("table_name" -> "STRING", "seq_value" -> "BIGINT"))
+  }
+
+  /** A parquet catalog of a manager tree of depth `depth`: 2^depth - 1
+    * customers, `c_mgrkey = c_custkey / 2` (null at the root), and one
+    * order per leaf.
+    */
+  private def treeCatalog(depth: Int): Catalog = {
+    val dir = tmp()
+    val leaves = 1L << (depth - 1)
+    spark.range(1, 2 * leaves).select(col("id").as("c_custkey"),
+        concat(lit("c"), col("id")).as("c_name"),
+        when(col("id") >= 2, floor(col("id") / 2)).as("c_mgrkey"))
+      .write.parquet(s"$dir/customer.parquet")
+    spark.range(0, leaves).select(col("id").as("o_orderkey"),
+        (col("id") + leaves).as("o_custkey"))
+      .write.parquet(s"$dir/orders.parquet")
+    new Catalog(spark, dir, Seq("customer", "orders"),
+      Seq(ForeignKey("orders", "o_custkey", "customer", "c_custkey"),
+        ForeignKey("customer", "c_mgrkey", "customer", "c_custkey")),
+      Map("customer" -> Seq("c_custkey"), "orders" -> Seq("o_orderkey")))
+  }
+
+  test("job budget: a self-FK closure runs as many jobs at any hierarchy depth") {
+    val closureJobs = for (depth <- Seq(3, 6, 10)) yield {
+      val tree = treeCatalog(depth)
+      val customer = tree.table("customer")
+      val leaf = customer.where(col("c_custkey") === (1L << depth) - 1)
+      var closed: DataFrame = null
+      val jobs = jobsOf {
+        closed = Closure.recursiveClosure(customer, leaf,
+          tree.foreignKeysOf("customer", recursive = true).head, Seq("c_custkey"))
+      }
+      assert(closed.count() === depth, s"a leaf and its ancestors at depth $depth")
+      jobs
+    }
+    assert(closureJobs.max - closureJobs.min <= 1, closureJobs)
+
+    // depth 6: the order's spool, the closure (the seed's pull, dedup
+    // shuffle and checkpoint, the edge-list collect) and the customers'
+    // spool
+    val tree = treeCatalog(6)
+    val seed = tree.table("orders").where(col("o_orderkey") === 0)
+    val dir = tmp()
+    val jobs = jobsOf(Dump.write(tree, DumpSpec(partialTables = Map("orders" -> seed)), dir))
+    assert(jobs === 6)
+    assert(Dump.readManifest(spark, dir).rows === Map("orders" -> 1L, "customer" -> 6L))
   }
 
   test("a failed full-table spool leaves no sibling write running") {

@@ -43,6 +43,7 @@ class FingerprintStoreSpec extends SparkSpec {
       .select(md5(col("text")).as("text_md5")).distinct()
       .write.parquet(s"$path/fingerprints")
     assert(FingerprintStore.loadFingerprints(spark, path).count() === 2)
+    assertFooterSchemas(path)
 
     FingerprintStore.append(Seq("c").toDF("text"), path)
     // migrated: epoch 1 committed, the flat dir referenced AS the
@@ -52,6 +53,7 @@ class FingerprintStoreSpec extends SparkSpec {
     assert(new java.io.File(s"$path/fingerprints").exists())
     assert(FingerprintStore.loadFingerprints(spark, path).count() === 3)
     assert(FingerprintStore.loadBloom(spark, path)._2 === 3L)
+    assertFooterSchemas(path)
   }
 
   test("fingerprint table is exactly the corpus's distinct digests") {
@@ -190,6 +192,7 @@ class FingerprintStoreSpec extends SparkSpec {
         concat(col("text"), lit(" novel-after-compact")).as("text")), path)
     assert(FingerprintStore.loadFingerprints(spark, path).count() ===
       digestsBefore.size + 10)
+    assertFooterSchemas(path)
   }
 
   test("sketch merge holds to capacity, then rebuilds with fresh headroom") {

@@ -134,6 +134,7 @@ class MinHashStoreSpec extends SparkSpec {
       docs.limit(10).select((col("doc_id") + 500000L).as("doc_id"),
         col("text")), path)
     assert(MinHashStore.load(spark, path).count() > sigsBefore.size)
+    assertFooterSchemas(path)
   }
 
   test("epoch swap: a failed append leaves the prior epoch loadable") {

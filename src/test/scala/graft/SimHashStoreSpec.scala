@@ -113,6 +113,7 @@ class SimHashStoreSpec extends SparkSpec {
     SimHashStore.vacuum(spark, path)
     assert(!new java.io.File(s"$path/simhash_s1").exists())
     assert(gate() === before)
+    assertFooterSchemas(path)
   }
 
   test("epoch swap: a failed append leaves the prior epoch loadable") {

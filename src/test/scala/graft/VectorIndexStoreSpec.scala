@@ -420,6 +420,7 @@ class VectorIndexStoreSpec extends SparkSpec {
         col("embedding")), path)
     assert(VectorIndexStore.driftStats(spark, path).count() === hist.size + 1)
     assert(served().nonEmpty)
+    assertFooterSchemas(path)
   }
 
   test("prior epoch survives an append until vacuum; founding segment untouched") {
