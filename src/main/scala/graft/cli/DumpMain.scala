@@ -39,26 +39,43 @@ import graft.sources.{Dump, DumpSpec}
   */
 object DumpMain {
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-dump")
-    try run(args.toSeq, spark)
-    finally spark.stop()
+  private val Help =
+    """usage: graft-dump (--source <dir> | --jdbc-url <url> [--jdbc-user u --jdbc-password p
+      |         --jdbc-driver d --jdbc-schema s --consistent | --consistent-snapshot])
+      |       -o <dump dir> [-f <table>]... [-p "table:select SQL"]...
+      |       [--fk table.col=ftable.fcol]... [--pk table=col]... [-c <codec>]
+      |       [--format parquet|csv|jsonl|orc] [--no-schema] [--no-data]
+      |       [--archive [--archive-compression <method>]] [-v | -vv]""".stripMargin
+
+  def main(args: Array[String]): Unit = Cli.main("graft-dump", Help, args)(check)(runWith)
+
+  /** `args` with every check that needs no Spark session. */
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+    opts.required("output", short = "o")
+    Cli.usage(opts.value("source").isDefined || opts.value("jdbc-url").isDefined,
+      "pass --source <dir> or --jdbc-url <url>")
+    opts.multi("partial", short = "p").foreach(partialSpec)
+    Cli.parseFks(opts)
+    Cli.parsePks(opts)
   }
 
-  def run(args: Seq[String], spark: SparkSession): Unit = {
-    val opts = Cli.parse(args)
+  // Partial selections are SQL over the source tables (reference format
+  // "table:select SQL", cli/dump.py:16).
+  private def partialSpec(spec: String): (String, String) =
+    Cli.splitOnce(spec, ':',
+      s"""partial table specification should be "table:select SQL": $spec""")
+
+  def run(args: Seq[String], spark: SparkSession): Unit = runWith(check(args), spark)
+
+  private def runWith(opts: Cli.Opts, spark: SparkSession): Unit = {
     Cli.setVerbosity(opts)
     val output = opts.required("output", short = "o")
     val catalog = Cli.catalogFrom(spark, opts)
 
-    // Partial selections are SQL over the source tables, registered as views
-    // (reference format "table:select SQL", cli/dump.py:16).
+    // the source tables as views the partial selections' SQL reads
     catalog.tables.foreach(t => catalog.table(t).createOrReplaceTempView(t))
-    val partial = opts.multi("partial", short = "p").map { spec =>
-      val (t, sql) = Cli.splitOnce(spec, ':',
-        s"""partial table specification should be "table:select SQL": $spec""")
-      t -> spark.sql(sql)
-    }.toMap
+    val partial = opts.multi("partial", short = "p").map(partialSpec)
+      .map { case (t, sql) => t -> spark.sql(sql) }.toMap
 
     try Dump.write(catalog, DumpSpec(
       fullTables = opts.multi("full", short = "f"),
@@ -94,7 +111,49 @@ object Cli {
       values.getOrElse(name, values.getOrElse(short, Nil))
     def flag(name: String): Boolean = flags(name)
     def required(name: String, short: String = ""): String =
-      value(name, short).getOrElse(sys.error(s"missing required option --$name"))
+      value(name, short).getOrElse(throw new UsageError(s"missing required option --$name"))
+  }
+
+  /** A command line a main refuses: a missing or malformed option, or
+    * `--help` (empty message).
+    */
+  final class UsageError(message: String) extends IllegalArgumentException(message)
+
+  /** Throws a [[UsageError]] with `message` unless `ok`. */
+  def usage(ok: Boolean, message: => String): Unit =
+    if (!ok) throw new UsageError(message)
+
+  /** `args` parsed and passed through `check`; a malformed option, a
+    * failed check or `--help`/`-h` throws a [[UsageError]].
+    */
+  def checked(args: Seq[String], extraValued: Set[String] = Set.empty)(
+      check: Opts => Unit): Opts = {
+    val opts =
+      try parse(args, extraValued)
+      catch { case e: IllegalArgumentException => throw new UsageError(e.getMessage) }
+    usage(!opts.flag("help") && !opts.flag("h"), "")
+    check(opts)
+    opts
+  }
+
+  /** A main's body. `parse` checks the arguments before any Spark session
+    * starts: on a [[UsageError]] the message and `help` go to standard
+    * error and the process exits with code 2. Otherwise `run` gets the
+    * options and a fresh session, stopped after.
+    */
+  def main(name: String, help: String, args: Array[String])(parse: Seq[String] => Opts)(
+      run: (Opts, SparkSession) => Unit): Unit = {
+    val opts =
+      try parse(args.toSeq)
+      catch {
+        case e: UsageError =>
+          if (e.getMessage.nonEmpty) System.err.println(s"$name: ${e.getMessage}")
+          System.err.println(help)
+          sys.exit(2)
+      }
+    val spark = session(name)
+    try run(opts, spark)
+    finally spark.stop()
   }
 
   private val Valued = Set("source", "output", "o", "full", "f", "partial", "p",
@@ -135,7 +194,7 @@ object Cli {
 
   def splitOnce(s: String, sep: Char, err: => String): (String, String) =
     s.indexOf(sep) match {
-      case -1 => sys.error(err)
+      case -1 => throw new UsageError(err)
       case i  => (s.take(i).trim, s.drop(i + 1).trim)
     }
 

@@ -49,19 +49,40 @@ object IndexMain {
     "nprobe", "stale-ratio", "stale-floor", "nlist",
     "m", "pq-k", "cent-every", "max-cents")
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-index")
-    try run(args.toSeq, spark)
-    finally spark.stop()
+  private val Help =
+    """usage: graft-index (--bm25 <dir> | --vectors <dir>) [--found <parquet>]
+      |       [--append <parquet>] [--refound-if-stale [--stale-ratio r] [--stale-floor f]
+      |         [--nlist n]] [--compact] [--search <queries> -o <out> [--k k] [--nprobe n]]
+      |       [--drift] [--vacuum] [--m m --pq-k k --cent-every n --max-cents n --residual]""".stripMargin
+
+  def main(args: Array[String]): Unit = Cli.main("graft-index", Help, args)(check)(runWith)
+
+  /** `args` with every check that needs no Spark session. */
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, ExtraValued) { opts =>
+    val isVec = opts.value("vectors").isDefined
+    Cli.usage(opts.value("bm25").isDefined != isVec,
+      "pass exactly one of --bm25 <dir> or --vectors <dir>")
+    Cli.usage(Seq("found", "append", "search").exists(opts.value(_).isDefined) ||
+        Seq("refound-if-stale", "compact", "drift", "vacuum").exists(opts.flag),
+      "nothing to do: pass --found/--append/--refound-if-stale/--compact/" +
+        "--search <queries> -o <out>/--drift/--vacuum")
+    Cli.usage(isVec || !opts.flag("refound-if-stale"),
+      "--refound-if-stale applies to --vectors stores " +
+        "(the BM25 store has no frozen codebook to go stale)")
+    Cli.usage(isVec || !opts.flag("drift"), "--drift applies to --vectors stores")
+    if (opts.value("search").isDefined) opts.required("output", short = "o")
+    for (n <- Seq("k", "nprobe", "nlist", "m", "pq-k", "cent-every", "max-cents");
+         v <- opts.value(n))
+      Cli.usage(v.toIntOption.isDefined, s"--$n takes an integer, got $v")
+    for (n <- Seq("stale-ratio", "stale-floor"); v <- opts.value(n))
+      Cli.usage(v.toDoubleOption.isDefined, s"--$n takes a number, got $v")
   }
 
-  def run(args: Seq[String], spark: SparkSession): Unit = {
-    val opts = Cli.parse(args, ExtraValued)
-    val bm25 = opts.value("bm25")
+  def run(args: Seq[String], spark: SparkSession): Unit = runWith(check(args), spark)
+
+  private def runWith(opts: Cli.Opts, spark: SparkSession): Unit = {
     val vectors = opts.value("vectors")
-    require(bm25.isDefined != vectors.isDefined,
-      "pass exactly one of --bm25 <dir> or --vectors <dir>")
-    val store = bm25.orElse(vectors).get
+    val store = opts.value("bm25").orElse(vectors).get
     val isVec = vectors.isDefined
 
     def frame(path: String, cols: Seq[String]): DataFrame = {
@@ -72,10 +93,8 @@ object IndexMain {
       df
     }
     def epoch(): Long = EpochStore.currentEpoch(spark, store)
-    var acted = false
 
     opts.value("found").foreach { corpus =>
-      acted = true
       if (isVec)
         VectorIndexStore.save(frame(corpus, Seq("vec_id", "embedding")), store,
           m = opts.value("m").map(_.toInt).getOrElse(8),
@@ -89,7 +108,6 @@ object IndexMain {
     }
 
     opts.value("append").foreach { batch =>
-      acted = true
       if (isVec)
         VectorIndexStore.append(frame(batch, Seq("vec_id", "embedding")), store)
       else Bm25IndexStore.append(frame(batch, Seq("doc_id", "text")), store)
@@ -97,9 +115,6 @@ object IndexMain {
     }
 
     if (opts.flag("refound-if-stale")) {
-      acted = true
-      require(isVec, "--refound-if-stale applies to --vectors stores " +
-        "(the BM25 store has no frozen codebook to go stale)")
       val fired = VectorIndexStore.refoundIfStale(spark, store,
         ratio = opts.value("stale-ratio").map(_.toDouble).getOrElse(2.0),
         floor = opts.value("stale-floor").map(_.toDouble).getOrElse(0.05),
@@ -110,7 +125,6 @@ object IndexMain {
     }
 
     if (opts.flag("compact")) {
-      acted = true
       val before = epoch()
       val e =
         if (isVec) VectorIndexStore.compact(spark, store)
@@ -120,7 +134,6 @@ object IndexMain {
     }
 
     opts.value("search").foreach { queries =>
-      acted = true
       val out = opts.required("output", short = "o")
       val k = opts.value("k").map(_.toInt).getOrElse(10)
       val answers =
@@ -138,8 +151,6 @@ object IndexMain {
     }
 
     if (opts.flag("drift")) {
-      acted = true
-      require(isVec, "--drift applies to --vectors stores")
       // bounded: one row per epoch of the current lineage
       VectorIndexStore.driftStats(spark, store)
         .orderBy("epoch").collect().foreach { r =>
@@ -151,14 +162,9 @@ object IndexMain {
     }
 
     if (opts.flag("vacuum")) {
-      acted = true
       if (isVec) VectorIndexStore.vacuum(spark, store)
       else Bm25IndexStore.vacuum(spark, store)
       println(s"vacuumed superseded epochs under $store")
     }
-
-    require(acted,
-      "nothing to do: pass --found/--append/--refound-if-stale/--compact/" +
-        "--search <queries> -o <out>/--drift/--vacuum")
   }
 }

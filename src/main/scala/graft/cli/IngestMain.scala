@@ -137,14 +137,30 @@ object IngestMain {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-ingest")
-    try run(args.toSeq, spark)
-    finally spark.stop()
+  private val Help =
+    """usage: graft-ingest --stores <dir> [--found <corpus>]
+      |       [--batch <parquet> -o <out> [--append]]
+      |       [--watch <dir> -o <out> [--once] [--checkpoint <dir>]
+      |         [--watch-schema <parquet>] [--vacuum-every <n>]] [--vacuum]""".stripMargin
+
+  def main(args: Array[String]): Unit = Cli.main("graft-ingest", Help, args)(check)(runWith)
+
+  /** `args` with every check that needs no Spark session. */
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+    opts.required("stores")
+    Cli.usage(opts.value("found").nonEmpty || opts.value("batch").nonEmpty
+      || opts.value("watch").nonEmpty || opts.flag("vacuum"),
+      "nothing to do: pass --found <corpus>, --batch <dir> -o <out>, " +
+        "--watch <dir> -o <out>, and/or --vacuum")
+    if (opts.value("batch").nonEmpty || opts.value("watch").nonEmpty)
+      opts.required("output", short = "o")
+    opts.value("vacuum-every").foreach(n => Cli.usage(n.toIntOption.exists(_ >= 1),
+      s"--vacuum-every must be an integer >= 1, got $n"))
   }
 
-  def run(args: Seq[String], spark: SparkSession): Unit = {
-    val opts = Cli.parse(args)
+  def run(args: Seq[String], spark: SparkSession): Unit = runWith(check(args), spark)
+
+  private def runWith(opts: Cli.Opts, spark: SparkSession): Unit = {
     val stores = opts.required("stores")
     val fp = s"$stores/fingerprints"
     val mh = s"$stores/minhash"
@@ -272,8 +288,6 @@ object IngestMain {
       // reads exactly what it read) and reclaim both stores' superseded
       // epochs mid-stream.
       val vacuumEvery = opts.value("vacuum-every").map(_.toInt)
-      vacuumEvery.foreach(n =>
-        require(n >= 1, s"--vacuum-every must be >= 1, got $n"))
       val stream = spark.readStream.schema(schema).parquet(watchDir)
       val writer = graft.streaming.StreamingIngestGate
         .ingest(stream, fp, mh, (df, id) => {
@@ -317,10 +331,5 @@ object IngestMain {
       MinHashStore.vacuum(spark, mh)
       println(s"Vacuumed superseded epochs under $stores")
     }
-
-    require(opts.value("found").nonEmpty || opts.value("batch").nonEmpty
-      || opts.value("watch").nonEmpty || opts.flag("vacuum"),
-      "nothing to do: pass --found <corpus>, --batch <dir> -o <out>, " +
-        "--watch <dir> -o <out>, and/or --vacuum")
   }
 }

@@ -27,14 +27,55 @@ import graft.sources.Dump
   */
 object LoadMain {
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-load")
-    try run(args.toSeq, spark)
-    finally spark.stop()
+  private val Help =
+    """usage: graft-load -i <dump dir or .zip> (--target <dir> | --jdbc-url <url>
+      |         [--jdbc-user u --jdbc-password p --jdbc-driver d]
+      |         [--recreate-database <name> [--jdbc-admin-url <url>]])
+      |       [-m truncate|recreate] [-v | -vv]""".stripMargin
+
+  def main(args: Array[String]): Unit = Cli.main("graft-load", Help, args)(check)(runWith)
+
+  /** `args` with every check that needs no Spark session. */
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+    opts.required("input", short = "i")
+    Cli.usage(opts.value("target").isDefined || opts.value("jdbc-url").isDefined,
+      "pass --target <dir> or --jdbc-url <url>")
+    val cleanup = opts.value("cleanup-method", short = "m")
+    cleanup.foreach(m => Cli.usage(Set("truncate", "recreate")(m),
+      s"unknown cleanup method (use truncate|recreate): $m"))
+    Cli.usage(opts.value("recreate-database").isEmpty || opts.value("jdbc-url").isDefined,
+      "--recreate-database needs --jdbc-url")
+    // A freshly recreated database is constraint-less: the cleanup method
+    // is forced to "recreate" so the dumped PK/FK DDL and sequence
+    // restarts replay onto it (the reference's initial_setup-on-load,
+    // base.py:227). Any other -m is refused before the database is
+    // touched: "truncate" would DELETE FROM tables that no longer exist,
+    // aborting only after the original database was already destroyed.
+    Cli.usage(opts.value("recreate-database").isEmpty || cleanup.forall(_ == "recreate"),
+      s"-m ${cleanup.getOrElse("")} cannot combine with --recreate-database " +
+        "(the database is already empty; only 'recreate' makes sense)")
+    // Postgres cannot drop the database it is connected to, so the load
+    // URL is never a valid admin connection there — require a DIFFERENT
+    // maintenance URL explicitly instead of failing after terminating
+    // every other session. Dialect routing follows the resolved driver
+    // (same rule as JdbcAdmin/Jdbc), not the URL text.
+    for (url <- opts.value("jdbc-url"); _ <- opts.value("recreate-database")
+         if Cli.jdbcConfig(opts, url).driver.contains("postgresql")) {
+      val admin = opts.value("jdbc-admin-url")
+      Cli.usage(admin.nonEmpty,
+        "--recreate-database on PostgreSQL needs --jdbc-admin-url " +
+          "pointing at a maintenance database (e.g. .../postgres) — " +
+          "an engine cannot drop the database it is connected to")
+      Cli.usage(!admin.contains(url),
+        "--jdbc-admin-url must point at a DIFFERENT (maintenance) " +
+          "database than --jdbc-url — PostgreSQL cannot drop the " +
+          "database it is connected to")
+    }
   }
 
-  def run(args: Seq[String], spark: SparkSession): Unit = {
-    val opts = Cli.parse(args)
+  def run(args: Seq[String], spark: SparkSession): Unit = runWith(check(args), spark)
+
+  private def runWith(opts: Cli.Opts, spark: SparkSession): Unit = {
     Cli.setVerbosity(opts)
     val rawInput = opts.required("input", short = "i")
     // A .zip input (DumpMain --archive) is unpacked next to itself first —
@@ -63,36 +104,9 @@ object LoadMain {
       // --jdbc-admin-url at the maintenance database (you cannot drop the
       // db you are connected to); Derby: <name> is the database path.
       val recreatedDb = opts.value("recreate-database")
-      // A freshly recreated database is constraint-less: the cleanup
-      // method is forced to "recreate" so the dumped PK/FK DDL and
-      // sequence restarts replay onto it (the reference's
-      // initial_setup-on-load, base.py:227). Any other -m is refused —
-      // BEFORE the database is touched: "truncate" would DELETE FROM
-      // tables that no longer exist, aborting only after the original
-      // database was already destroyed.
       val explicit = opts.value("cleanup-method", short = "m")
-      if (recreatedDb.isDefined && !explicit.forall(_ == "recreate")) sys.error(
-        s"-m ${explicit.get} cannot combine with --recreate-database " +
-          "(the database is already empty; only 'recreate' makes sense)")
       recreatedDb.foreach { db =>
-        // Postgres cannot drop the database it is connected to, so the
-        // load URL is never a valid admin connection there — require a
-        // DIFFERENT maintenance URL explicitly instead of failing after
-        // terminating every other session. Dialect routing follows the
-        // resolved driver (same rule as JdbcAdmin/Jdbc), not the URL text.
-        val isPg = Cli.jdbcConfig(opts, url).driver.contains("postgresql")
-        val adminUrl = opts.value("jdbc-admin-url") match {
-          case Some(a) if isPg && a == url => sys.error(
-            "--jdbc-admin-url must point at a DIFFERENT (maintenance) " +
-              "database than --jdbc-url — PostgreSQL cannot drop the " +
-              "database it is connected to")
-          case Some(a) => a
-          case None if isPg => sys.error(
-            "--recreate-database on PostgreSQL needs --jdbc-admin-url " +
-              "pointing at a maintenance database (e.g. .../postgres) — " +
-              "an engine cannot drop the database it is connected to")
-          case None => url
-        }
+        val adminUrl = opts.value("jdbc-admin-url").getOrElse(url)
         graft.sources.JdbcAdmin.recreateDatabase(Cli.jdbcConfig(opts, adminUrl), db)
         println(s"Recreated database $db")
       }
@@ -113,9 +127,7 @@ object LoadMain {
         manifest.loadOrder.foreach { t =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$target/$t.parquet"), true)
         }
-      case Some(other) =>
-        sys.error(s"unknown cleanup method (use truncate|recreate): $other")
-      case None => ()
+      case _ => ()
     }
 
     Dump.loadInto(spark, input, target, manifest)

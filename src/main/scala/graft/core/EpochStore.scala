@@ -185,15 +185,34 @@ private[graft] object EpochStore {
     * BEFORE this returns and the first failure is rethrown after all
     * have settled — the write-everything-then-commit discipline is
     * unchanged, and a failed sibling can never race a commit.
+    *
+    * Each task runs under the caller's job group, job description, job
+    * tags and scheduler pool (Spark local properties), cleared after it:
+    * the properties live in an inheritable thread-local, so a pooled
+    * thread would otherwise carry whatever its creator had set, not what
+    * the caller has set.
     */
   def inParallel(tasks: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fs = tasks.map(t => Future(t()))
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val props = sc.toSeq.flatMap(c => CallerProperties.map(k => k -> c.getLocalProperty(k)))
+    def asCaller(task: () => Unit): Unit = sc match {
+      case None => task()
+      case Some(c) =>
+        props.foreach { case (k, v) => c.setLocalProperty(k, v) }
+        try task() finally CallerProperties.foreach(c.setLocalProperty(_, null))
+    }
+    val fs = tasks.map(t => Future(asCaller(t)))
     val settled = fs.map(f => Await.ready(f, Duration.Inf).value.get)
     settled.collectFirst { case scala.util.Failure(e) => throw e }: Unit
   }
+
+  /** The Spark local properties [[inParallel]] carries into its tasks. */
+  private val CallerProperties = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
 
   /** Point the manifest at epoch `n` (atomic replace). Commit NEVER
     * deletes superseded epochs: a lazy frame (or, on a cluster, an

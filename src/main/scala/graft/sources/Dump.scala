@@ -3,7 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -42,22 +42,29 @@ final case class DumpSpec(
   * parallel from every executor, no single-writer bottleneck.
   *
   * Write path executes every operator exactly once: tables spool to disk
-  * the moment the closure finalizes them (Closure.relatedData onFinal), and
-  * downstream FK pulls read the *written* files back (with semi-join
-  * pushdown into the fresh parquet) instead of recomputing the selection.
+  * the moment the closure finalizes them (Closure.relatedData onFinal),
+  * the key tuples of each key-set FK pull ride the spool's `observe()`,
+  * and a semi-join pull (above the broadcast gate, JDBC sources) reads the
+  * *written* files back instead of recomputing the selection. Tables with
+  * no FK path between them spool concurrently, one closure wave at a time.
   *
   * Job budget — only jobs that move data run:
   *  - write: one job per dumped table (its spool), plus the closure's own
-  *    jobs. A self-FK costs two jobs whatever the hierarchy's depth when
-  *    its edge list fits the broadcast gate (the seed's checkpoint and one
-  *    edge-list collect), else one localCheckpoint per recursion level
-  *    (see [[graft.operators.Closure.recursiveClosure]]). Row counts and
-  *    sequence state ride each spool via `observe()`, the spooled files
-  *    are read back with the schema already in hand, and the DDL takes its
-  *    schemas from the DataFrames being written, so the manifest, the
-  *    schema files and the read-backs cost no job. A parquet catalog
-  *    resolves a table's schema from one footer read on the driver, once
-  *    per table and without a job (see [[graft.core.Catalog.table]]).
+  *    jobs. Key-set pulls cost none: their keys ride the spool, and the
+  *    pull is a filter the next table's spool scans. A self-FK costs one
+  *    edge-list collect whatever the hierarchy's depth when its edge list
+  *    fits the broadcast gate, plus the seed's dedup and checkpoint unless
+  *    the table's selection is pulled on its PK alone; else one
+  *    localCheckpoint per recursion level (see
+  *    [[graft.operators.Closure.recursiveClosure]]). Each semi-join pull
+  *    costs its broadcast or shuffle. Row counts and sequence state ride
+  *    each spool via `observe()`, the spooled files are read back with the
+  *    schema already in hand, and the DDL takes its schemas from the
+  *    DataFrames being written, so the manifest, the schema files and the
+  *    read-backs cost no job. A parquet catalog resolves a table's schema
+  *    from one footer read on the driver, once per table and without a job
+  *    (see [[graft.core.Catalog.table]]). A selection whose estimated size
+  *    fits the broadcast gate is written as one file.
   *  - restore: `readManifest` and `sequencesOf` parse on the driver (no
   *    job); `load` reads each table with the schema its dumped DDL
   *    records (no inference job); `loadInto` runs one job per table (its
@@ -77,15 +84,21 @@ object Dump {
     // the DDL source, so writing the schema resolves no table again
     val schemas = collection.concurrent.TrieMap.empty[String, StructType]
 
-    def spool(t: String, df: DataFrame): DataFrame = {
+    // the closure's finalize hook: one write per table (full tables
+    // included), the key sets of its key-set pulls observed on it
+    def spool(t: String, df: DataFrame, keys: Seq[Column]): (DataFrame, Seq[Seq[Row]]) = {
       schemas(t) = df.schema
-      if (!spec.dumpData) df
+      // no rows are written, so no pull needs keys: the closure only
+      // settles the table set
+      if (!spec.dumpData) (df, keys.map(_ => Nil))
       else {
         val pk = catalog.primaryKey(t).head
         val obs = Observation()
-        val observed = df.observe(obs,
-          count(lit(1)).as("n"), max(col(pk).cast("long")).as("mx"))
-        val w = observed.write.mode(SaveMode.Overwrite)
+        val observed = df.observe(obs, count(lit(1)).as("n"),
+          max(col(pk).cast("long")).as("mx") +:
+            keys.zipWithIndex.map { case (k, i) => collect_set(k).as(s"k$i") }: _*)
+        val w = (if (Closure.fitsBroadcast(df)) observed.coalesce(1) else observed)
+          .write.mode(SaveMode.Overwrite)
           .option("compression", spec.compression)
         spec.format match {
           case "csv"   => w.option("header", "true").csv(s"$path/data/$t")
@@ -96,22 +109,18 @@ object Dump {
         val m = obs.get
         metrics(t) = (m("n").asInstanceOf[Long],
           Option(m("mx")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L))
-        readData(catalog.spark, path, t, spec.format, df.schema)
+        (readData(catalog.spark, path, t, spec.format, df.schema),
+          keys.indices.map(i => m(s"k$i").asInstanceOf[collection.Seq[Row]].toSeq))
       }
     }
 
+    // Full tables are never pulled *into* (only out of), so they spool in
+    // the closure's first wave, concurrently with the seeds; inParallel
+    // settles every write of a wave before it rethrows a failure, so no
+    // sibling is still writing into the dump when the error reaches the
+    // caller.
     val closed = Closure.relatedData(
       catalog, spec.fullTables, spec.partialTables, onFinal = spool)
-    // Full tables are never pulled *into* (only out of), so their writes
-    // have no mutual ordering constraint — submit them as concurrent Spark
-    // jobs. The scheduler interleaves their stages across the cluster, so
-    // a dump with many whole-copied tables isn't serialized on its largest
-    // one. Partial tables keep the closure's finalization order (each
-    // write feeds the downstream pulls that read it back). inParallel
-    // settles every write before it rethrows a failure, so no sibling is
-    // still writing into the dump when the error reaches the caller.
-    EpochStore.inParallel(
-      spec.fullTables.map(t => () => { spool(t, catalog.table(t)); () }): _*)
 
     val tables = (spec.fullTables ++ closed.keys).distinct
     if (spec.dumpSchema) writeSchema(catalog, schemas, tables.sorted, path)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.cli.{DumpMain, LoadMain}
+import graft.cli.{Cli, DumpMain, IndexMain, IngestMain, LoadMain}
 
 class CliSpec extends SparkSpec {
 
@@ -99,6 +99,41 @@ class CliSpec extends SparkSpec {
       assert(v2.contains(" - XDump - INFO - Total execution time: "),
         "-vv must keep the total-time line")
     } finally graft.sources.QueryLog.verbosity = 0
+  }
+
+  test("run refuses a malformed command line before any job or write") {
+    val tmp = Files.createTempDirectory("graft_cli_usage").toString
+    def refused(main: (Seq[String], org.apache.spark.sql.SparkSession) => Unit,
+        args: String*): String = {
+      var message: String = null
+      assert(jobsOf { message = intercept[Cli.UsageError](main(args, spark)).getMessage } === 0)
+      message
+    }
+    val (dump, load, ingest, index) =
+      (DumpMain.run _, LoadMain.run _, IngestMain.run _, IndexMain.run _)
+    assert(refused(dump, "--help") === "")
+    assert(refused(dump, "--source", sfDir, "-h") === "")
+    assert(refused(dump, "--source", sfDir).contains("--output"))
+    assert(refused(dump, "--source", sfDir, "-o").contains("needs a value"))
+    assert(refused(dump, "-o", s"$tmp/d").contains("--source"))
+    assert(refused(dump, "--source", sfDir, "-o", s"$tmp/d", "-p", "orders")
+      .contains("table:select SQL"))
+    assert(refused(dump, "--source", sfDir, "-o", s"$tmp/d", "--fk", "orders.o_custkey")
+      .contains("--fk"))
+    assert(refused(load, "--target", s"$tmp/t").contains("--input"))
+    assert(refused(load, "-i", s"$tmp/d").contains("--target"))
+    assert(refused(load, "-i", s"$tmp/d", "--target", s"$tmp/t", "-m", "wipe")
+      .contains("truncate|recreate"))
+    assert(refused(ingest, "--found", s"$tmp/c").contains("--stores"))
+    assert(refused(ingest, "--stores", s"$tmp/s").contains("nothing to do"))
+    assert(refused(ingest, "--stores", s"$tmp/s", "--batch", s"$tmp/b").contains("--output"))
+    assert(refused(ingest, "--stores", s"$tmp/s", "--watch", s"$tmp/w", "-o", s"$tmp/o",
+      "--vacuum-every", "0").contains("--vacuum-every"))
+    assert(refused(index, "--vacuum").contains("exactly one"))
+    assert(refused(index, "--bm25", s"$tmp/x", "--search", s"$tmp/q").contains("--output"))
+    assert(refused(index, "--vectors", s"$tmp/x", "--found", s"$tmp/c", "--k", "ten")
+      .contains("--k"))
+    assert(new java.io.File(tmp).list().isEmpty, "a refused command line wrote nothing")
   }
 
   test("archived dump is one zip that loads back identically") {

@@ -160,6 +160,112 @@ class ClosureSpec extends SparkSpec {
       s"must not cross into dept y via the shared mgr id: $got")
   }
 
+  /** relatedData's selections under the key-set pulls the default gate
+    * admits for these small inputs and under the semi-join path (a gate of
+    * -1), asserted row-equal and duplicate-free per table.
+    */
+  private def bothPulls(
+      catalog: Catalog, partial: Map[String, DataFrame],
+      full: Seq[String] = Nil): Map[String, DataFrame] = {
+    def rowsOf(sel: Map[String, DataFrame]) =
+      sel.map { case (t, df) => t -> df.collect().map(_.toString).sorted.toSeq }
+    val keyed = Closure.relatedData(catalog, full, partial)
+    val keyedRows = rowsOf(keyed)
+    val joinedRows = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      rowsOf(Closure.relatedData(catalog, full, partial))
+    }
+    assert(keyedRows.keySet === joinedRows.keySet)
+    keyedRows.foreach { case (t, rows) =>
+      assert(rows === joinedRows(t), t)
+      assert(rows.distinct === rows, s"$t holds a duplicate row")
+    }
+    keyed
+  }
+
+  /** Whether `df`'s optimized plan joins or unions (a key-set pull does
+    * neither). */
+  private def joinsOrUnions(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(p =>
+      p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join] ||
+        p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
+
+  /** A catalog over in-memory frames. */
+  private def memCatalog(tables: Map[String, DataFrame], fks: Seq[ForeignKey],
+      pks: Map[String, Seq[String]]): Catalog =
+    new Catalog(spark, "mem", tables.keys.toSeq.sorted, fks, pks, reader = Some(tables))
+
+  test("key-set pulls match semi-joins over a multi-hop chain") {
+    val seed = cat.table("lineitem").where(col("l_quantity") === 50)
+    val sel = bothPulls(cat, Map("lineitem" -> seed))
+    assert(sel.keySet === Set("lineitem", "orders", "customer", "nation", "region", "part", "supplier"))
+    sel.foreach { case (t, df) => assert(!joinsOrUnions(df), t) }
+  }
+
+  test("key-set pulls match semi-joins on two FKs into one table") {
+    // nation is pulled from customer and from supplier: one filter over
+    // one scan
+    val sel = bothPulls(cat, Map(
+      "customer" -> cat.table("customer").where(col("c_custkey") % 7 === 0),
+      "supplier" -> cat.table("supplier").where(col("s_suppkey") % 3 === 0)))
+    assert(!joinsOrUnions(sel("nation")))
+    assert(sel("nation").count() > 1)
+  }
+
+  test("key-set pulls match semi-joins into a table with its own seed") {
+    bothPulls(cat, Map(
+      "orders" -> cat.table("orders").where(col("o_totalprice") > 400000),
+      "nation" -> cat.table("nation").where(col("n_nationkey") < 3)))
+    // and from a full table into a seeded one
+    bothPulls(cat, Map("nation" -> cat.table("nation").where(col("n_nationkey") === 0)),
+      full = Seq("supplier"))
+  }
+
+  test("key-set pulls match semi-joins on a composite FK with null parts") {
+    import spark.implicits._
+    val parent = Seq((1L, "a", "p1"), (1L, "b", "p2"), (2L, "a", "p3"), (3L, "c", "p4"))
+      .toDF("k1", "k2", "name")
+    // MATCH SIMPLE: a key with a null part references nothing
+    val child = Seq[(Long, java.lang.Long, String)](
+        (10L, 1L, "a"), (11L, 3L, null), (12L, null, "b"), (13L, 2L, "a"), (14L, 2L, "a"))
+      .toDF("id", "r1", "r2")
+    val c = memCatalog(Map("parent" -> parent, "child" -> child),
+      Seq(ForeignKey("child", "r1", "parent", "k1", Seq(("r2", "k2")))),
+      Map("parent" -> Seq("k1", "k2"), "child" -> Seq("id")))
+    val sel = bothPulls(c, Map("child" -> child))
+    assert(sel("parent").collect().map(_.getString(2)).toSet === Set("p1", "p3"))
+  }
+
+  test("key-set pulls match semi-joins on a widened key and a non-PK key") {
+    import spark.implicits._
+    // an INT FK into a BIGINT key, and an FK into a non-unique non-PK
+    // column of the same table: two column sets OR'd over one scan
+    val parent = Seq((1L, "x"), (2L, "y"), (3L, "x"), (4L, "z"), (5L, "w"))
+      .toDF("id", "code")
+    val child = Seq[(Long, Integer, String)]((10L, 1, "z"), (11L, null, "x"), (12L, 9, null))
+      .toDF("cid", "pid", "pcode")
+    val c = memCatalog(Map("parent" -> parent, "child" -> child),
+      Seq(ForeignKey("child", "pid", "parent", "id"), ForeignKey("child", "pcode", "parent", "code")),
+      Map("parent" -> Seq("id"), "child" -> Seq("cid")))
+    val sel = bothPulls(c, Map("child" -> child))
+    assert(sel("parent").collect().map(_.getLong(0)).toSet === Set(1L, 3L, 4L))
+    assert(!joinsOrUnions(sel("parent")))
+  }
+
+  test("key-set pulls match semi-joins into a self-FK seeded by pulled keys") {
+    val mgr = new Catalog(spark, sfDir, Seq("customer", "orders"),
+      Seq(ForeignKey("orders", "o_custkey", "customer", "c_custkey"), mgrFk),
+      Map("customer" -> Seq("c_custkey"), "orders" -> Seq("o_orderkey")),
+      reader = Some(Map("customer" -> mgrTree, "orders" -> cat.table("orders"))))
+    val seed = Map("orders" -> cat.table("orders").where(col("o_totalprice") > 400000))
+    // the orders' key collect and the customers' edge-list collect: the
+    // walk starts from the pulled keys, with no seed checkpoint
+    assert(jobsOf(Closure.relatedData(mgr, partial = seed)) === 2)
+    val sel = bothPulls(mgr, seed)
+    assert(!joinsOrUnions(sel("customer")))
+    // the tree's root is every walk's last ancestor
+    assert(sel("customer").where(col("c_custkey") === 0).count() === 1)
+  }
+
   test("relatedData converges row-wise on cyclic FK graphs") {
     // synthetic cycle: orders→customer and customer→orders (by pk);
     // row-level fixpoint must leave no dangling reference on either edge.

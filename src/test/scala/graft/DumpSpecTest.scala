@@ -200,15 +200,52 @@ class DumpSpecTest extends SparkSpec {
     }
     assert(closureJobs.max - closureJobs.min <= 1, closureJobs)
 
-    // depth 6: the order's spool, the closure (the seed's pull, dedup
-    // shuffle and checkpoint, the edge-list collect) and the customers'
-    // spool
+    // depth 6: the order's spool (its customer keys ride it), the
+    // edge-list collect (the customers are pulled on their PK alone, so
+    // the walk starts from those keys) and the customers' spool
     val tree = treeCatalog(6)
     val seed = tree.table("orders").where(col("o_orderkey") === 0)
     val dir = tmp()
     val jobs = jobsOf(Dump.write(tree, DumpSpec(partialTables = Map("orders" -> seed)), dir))
-    assert(jobs === 6)
+    assert(jobs === 3)
     assert(Dump.readManifest(spark, dir).rows === Map("orders" -> 1L, "customer" -> 6L))
+  }
+
+  test("job budget: a TPC-H-shaped dump runs one job per table plus the edge-list collect") {
+    // the seven TPC-H tables with a c_mgrkey self-FK: a manager tree
+    // (c_custkey / 2) of about eight levels over the customers
+    val base = Catalog.tpch(spark, sfDir)
+    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+    val custKey = base.table("customer").schema("c_custkey").dataType
+    val tpch = new Catalog(spark, sfDir, tables,
+      base.foreignKeys.filter(fk => tables.contains(fk.table)) :+
+        ForeignKey("customer", "c_mgrkey", "customer", "c_custkey"),
+      base.primaryKeys.filter(p => tables.contains(p._1)),
+      reader = Some {
+        case "customer" => base.table("customer").withColumn("c_mgrkey",
+          when(col("c_custkey") >= 2, floor(col("c_custkey") / 2)).cast(custKey))
+        case t => base.table(t)
+      })
+    tables.foreach(tpch.table(_).schema)
+    val spec = DumpSpec(partialTables = Map(
+      "lineitem" -> tpch.table("lineitem").where(col("l_orderkey") % 40 === 0)))
+    val dir = tmp()
+    // one spool per table; every pull runs from the key sets its source's
+    // spool observed, and the customers' walk starts from the orders' keys
+    assert(jobsOf(Dump.write(tpch, spec, dir)) === tables.size + 1)
+    assert(Dump.readManifest(spark, dir).loadOrder.toSet === tables.toSet)
+    def dataFiles(d: String, t: String) =
+      new java.io.File(s"$d/data/$t").listFiles().map(_.getName).filter(_.startsWith("part-"))
+    tables.foreach(t => assert(dataFiles(dir, t).length === 1, s"$t: ${dataFiles(dir, t).toSeq}"))
+
+    // the semi-join path (gate -1) dumps the same rows
+    val joined = tmp()
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(Dump.write(tpch, spec, joined))
+    assert(Dump.readManifest(spark, joined).rows === Dump.readManifest(spark, dir).rows)
+    tables.foreach { t =>
+      def rows(d: String) = spark.read.parquet(s"$d/data/$t").collect().map(_.toString).sorted.toSeq
+      assert(rows(dir) === rows(joined), t)
+    }
   }
 
   test("a failed full-table spool leaves no sibling write running") {

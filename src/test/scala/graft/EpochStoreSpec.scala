@@ -1,6 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.core.EpochStore
 
@@ -25,6 +31,35 @@ class EpochStoreSpec extends SparkSpec {
       EpochStore.commitEpoch(spark, path, 4)
     }
     assert(EpochStore.currentEpoch(spark, path) === 2L)
+  }
+
+  test("inParallel tasks start their jobs in the caller's job group, and only then") {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))): Unit
+    }
+    def jobGroups(body: => Unit): Seq[Option[String]] = {
+      ListenerBusDrain(sc)
+      groups.clear()
+      body
+      ListenerBusDrain(sc)
+      groups.asScala.toSeq
+    }
+    val tasks = (1 to 6).map(i => () => { spark.range(0, i * 10, 1, 2).collect(); () })
+    sc.addSparkListener(listener)
+    try {
+      val tagged = jobGroups {
+        sc.setJobGroup("graft-caller", "inParallel spec")
+        try EpochStore.inParallel(tasks: _*)
+        finally sc.clearJobGroup()
+      }
+      assert(tagged.size >= tasks.size && tagged.forall(_.contains("graft-caller")), tagged)
+      // the pooled threads that ran those tasks carry no group afterwards
+      val untagged = jobGroups(EpochStore.inParallel(tasks: _*))
+      assert(untagged.size >= tasks.size && untagged.forall(_.isEmpty), untagged)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("a truncated or corrupt marker file names its path loudly") {
