@@ -40,9 +40,10 @@ import graft.core.{Catalog, EpochStore, ForeignKey, TableGraph}
   * For acyclic FK graphs (every real schema) tables are finalized in
   * waves by FK depth from the seeds and full tables: a table's wave is one
   * past the deepest table that pulls into it. When a wave runs, every pull
-  * into its tables has already happened, so each selection is *final*;
-  * the tables of one wave have no FK path between them and finalize
-  * concurrently ([[graft.core.EpochStore.inParallel]]). The `onFinal` hook
+  * into its tables has already happened, so each selection is *final*.
+  * The tables of one wave have no FK path between them: its full tables
+  * finalize concurrently ([[graft.core.EpochStore.inParallel]]), its
+  * partial tables one after another. The `onFinal` hook
   * sees each table the moment it is final: Dump uses it to write each
   * table exactly once, take the pulls' key sets from that write's
   * `observe()`, and swap the written files in as the selection a semi-join
@@ -172,7 +173,14 @@ object Closure {
     var selections = Map.empty[String, DataFrame]
     for (tables <- wave.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map(_._2.toSeq.sorted)) {
       val done = new Array[(DataFrame, Seq[(ForeignKey, Either[Seq[Row], DataFrame])])](tables.size)
-      EpochStore.inParallel(tables.indices.map(i => () => done(i) = finalizeTable(tables(i))): _*)
+      // full tables are data-bound whole-table writes and run as concurrent
+      // jobs; a partial table's finalize is mostly driver-side planning
+      // around one small job, so those run one after another: overlapping
+      // them gains only what idle cores allow, and made a dump's time
+      // swing with the load on the host
+      val (whole, picked) = tables.indices.partition(i => full(tables(i)))
+      EpochStore.inParallel(whole.map(i => () => done(i) = finalizeTable(tables(i))): _*)
+      picked.foreach(i => done(i) = finalizeTable(tables(i)))
       for ((t, (selection, pulls)) <- tables.zip(done)) {
         if (!full(t)) selections += t -> selection
         for ((fk, pulled) <- pulls) {

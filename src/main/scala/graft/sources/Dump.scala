@@ -45,8 +45,9 @@ final case class DumpSpec(
   * the moment the closure finalizes them (Closure.relatedData onFinal),
   * the key tuples of each key-set FK pull ride the spool's `observe()`,
   * and a semi-join pull (above the broadcast gate, JDBC sources) reads the
-  * *written* files back instead of recomputing the selection. Tables with
-  * no FK path between them spool concurrently, one closure wave at a time.
+  * *written* files back instead of recomputing the selection. Full tables
+  * spool concurrently in the closure's first wave; partial tables spool
+  * one at a time, wave by wave.
   *
   * Job budget — only jobs that move data run:
   *  - write: one job per dumped table (its spool), plus the closure's own
@@ -115,10 +116,9 @@ object Dump {
     }
 
     // Full tables are never pulled *into* (only out of), so they spool in
-    // the closure's first wave, concurrently with the seeds; inParallel
-    // settles every write of a wave before it rethrows a failure, so no
-    // sibling is still writing into the dump when the error reaches the
-    // caller.
+    // the closure's first wave, concurrently with each other; inParallel
+    // settles every write before it rethrows a failure, so no sibling is
+    // still writing into the dump when the error reaches the caller.
     val closed = Closure.relatedData(
       catalog, spec.fullTables, spec.partialTables, onFinal = spool)
 
