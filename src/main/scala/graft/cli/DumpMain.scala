@@ -49,8 +49,15 @@ object DumpMain {
 
   def main(args: Array[String]): Unit = Cli.main("graft-dump", Help, args)(check)(runWith)
 
+  private val Known = Cli.Known(
+    Set("source", "output", "o", "full", "f", "partial", "p", "compression", "c",
+      "format", "fk", "pk", "jdbc-schema", "archive-compression"),
+    // --schema/--data: the reference's defaults, accepted for parity
+    Set("schema", "no-schema", "data", "no-data", "archive", "consistent",
+      "consistent-snapshot")) ++ Cli.Jdbc ++ Cli.Verbosity
+
   /** `args` with every check that needs no Spark session. */
-  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, Known) { opts =>
     opts.required("output", short = "o")
     Cli.usage(opts.value("source").isDefined || opts.value("jdbc-url").isDefined,
       "pass --source <dir> or --jdbc-url <url>")
@@ -123,14 +130,21 @@ object Cli {
   def usage(ok: Boolean, message: => String): Unit =
     if (!ok) throw new UsageError(message)
 
-  /** `args` parsed and passed through `check`; a malformed option, a
-    * failed check or `--help`/`-h` throws a [[UsageError]].
+  /** A main's options: `valued` names take the next argument, `flags`
+    * stand alone; `--help`/`-h` are always known. */
+  final case class Known(valued: Set[String], flags: Set[String] = Set.empty) {
+    def ++(o: Known): Known = Known(valued ++ o.valued, flags ++ o.flags)
+  }
+
+  val Jdbc = Known(Set("jdbc-url", "jdbc-user", "jdbc-password", "jdbc-driver"))
+  val Verbosity = Known(Set.empty, Set("v", "vv"))
+
+  /** `args` parsed against `known` and passed through `check`; an
+    * unknown or malformed option, a failed check or `--help`/`-h` throws
+    * a [[UsageError]].
     */
-  def checked(args: Seq[String], extraValued: Set[String] = Set.empty)(
-      check: Opts => Unit): Opts = {
-    val opts =
-      try parse(args, extraValued)
-      catch { case e: IllegalArgumentException => throw new UsageError(e.getMessage) }
+  def checked(args: Seq[String], known: Known)(check: Opts => Unit): Opts = {
+    val opts = parse(args, known)
     usage(!opts.flag("help") && !opts.flag("h"), "")
     check(opts)
     opts
@@ -156,30 +170,25 @@ object Cli {
     finally spark.stop()
   }
 
-  private val Valued = Set("source", "output", "o", "full", "f", "partial", "p",
-    "compression", "c", "format", "fk", "pk", "input", "i", "cleanup-method", "m",
-    "target", "jdbc-url", "jdbc-user", "jdbc-password", "jdbc-driver",
-    "jdbc-schema", "recreate-database", "jdbc-admin-url", "archive-compression",
-    "stores", "found", "batch", "watch", "checkpoint", "watch-schema",
-    "vacuum-every")
-
-  /** `extraValued`: option names that take a value FOR THIS MAIN only —
-    * the shared `Valued` set cannot carry a name whose arity differs
-    * across mains (IngestMain's `--append` is a flag; IndexMain's takes
-    * a batch path).
+  /** `args` as options and flags. An argument that is not an option in
+    * `known` — a misspelt `--no-schmea`, a stray positional — is refused,
+    * never taken as a flag nobody reads.
     */
-  def parse(args: Seq[String], extraValued: Set[String] = Set.empty): Opts = {
+  def parse(args: Seq[String], known: Known): Opts = {
     var values = Map.empty[String, Seq[String]].withDefaultValue(Nil)
     var flags = Set.empty[String]
     var rest = args.toList
     while (rest.nonEmpty) {
       val key = rest.head.dropWhile(_ == '-')
-      rest = rest.tail
-      if (Valued(key) || extraValued(key)) {
-        require(rest.nonEmpty, s"option --$key needs a value")
-        values += key -> (values(key) :+ rest.head)
+      if (known.valued(key)) {
+        usage(rest.tail.nonEmpty, s"option --$key needs a value")
+        values += key -> (values(key) :+ rest.tail.head)
+        rest = rest.tail.tail
+      } else {
+        usage(known.flags(key) || key == "help" || key == "h", s"unknown option ${rest.head}")
+        flags += key
         rest = rest.tail
-      } else flags += key
+      }
     }
     Opts(values, flags)
   }

@@ -45,9 +45,10 @@ import graft.operators.{Bm25IndexStore, VectorIndexStore}
   */
 object IndexMain {
 
-  private val ExtraValued = Set("bm25", "vectors", "append", "search", "k",
-    "nprobe", "stale-ratio", "stale-floor", "nlist",
-    "m", "pq-k", "cent-every", "max-cents")
+  private val Known = Cli.Known(
+    Set("bm25", "vectors", "found", "append", "search", "output", "o", "k", "nprobe",
+      "stale-ratio", "stale-floor", "nlist", "m", "pq-k", "cent-every", "max-cents"),
+    Set("refound-if-stale", "compact", "drift", "residual", "vacuum"))
 
   private val Help =
     """usage: graft-index (--bm25 <dir> | --vectors <dir>) [--found <parquet>]
@@ -58,7 +59,7 @@ object IndexMain {
   def main(args: Array[String]): Unit = Cli.main("graft-index", Help, args)(check)(runWith)
 
   /** `args` with every check that needs no Spark session. */
-  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, ExtraValued) { opts =>
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, Known) { opts =>
     val isVec = opts.value("vectors").isDefined
     Cli.usage(opts.value("bm25").isDefined != isVec,
       "pass exactly one of --bm25 <dir> or --vectors <dir>")

@@ -145,8 +145,11 @@ object IngestMain {
 
   def main(args: Array[String]): Unit = Cli.main("graft-ingest", Help, args)(check)(runWith)
 
+  private val Known = Cli.Known(Set("stores", "found", "batch", "output", "o", "watch",
+    "checkpoint", "watch-schema", "vacuum-every"), Set("append", "once", "vacuum"))
+
   /** `args` with every check that needs no Spark session. */
-  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, Known) { opts =>
     opts.required("stores")
     Cli.usage(opts.value("found").nonEmpty || opts.value("batch").nonEmpty
       || opts.value("watch").nonEmpty || opts.flag("vacuum"),

@@ -35,8 +35,11 @@ object LoadMain {
 
   def main(args: Array[String]): Unit = Cli.main("graft-load", Help, args)(check)(runWith)
 
+  private val Known = Cli.Known(Set("input", "i", "target", "cleanup-method", "m",
+    "recreate-database", "jdbc-admin-url")) ++ Cli.Jdbc ++ Cli.Verbosity
+
   /** `args` with every check that needs no Spark session. */
-  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args) { opts =>
+  private def check(args: Seq[String]): Cli.Opts = Cli.checked(args, Known) { opts =>
     opts.required("input", short = "i")
     Cli.usage(opts.value("target").isDefined || opts.value("jdbc-url").isDefined,
       "pass --target <dir> or --jdbc-url <url>")

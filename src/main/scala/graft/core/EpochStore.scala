@@ -3,10 +3,10 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Epoch-swap persistence shared by the store artifacts
-  * ([[graft.operators.FingerprintStore]], [[graft.operators.MinHashStore]]).
+/** Epoch-swap persistence shared by every store artifact, and the one
+  * skeleton the segmented stores are declared with ([[Segmented]]).
   *
   * Every write lands in NEW files and becomes current only when the
   * one-line `MANIFEST` file is atomically replaced (tmp-write +
@@ -32,6 +32,15 @@ import org.apache.spark.sql.SparkSession
   * readable and is referenced AS a segment by the first segmented
   * append over it (zero-cost migration — the Iceberg/Delta manifest-of-
   * data-files discipline, scoped down to one pointer file per epoch).
+  *
+  * THE STORES are [[Segmented]] declarations, so their write path is
+  * this file's code: [[graft.operators.MinHashStore]] and
+  * [[graft.operators.SimHashStore]] are [[Encoded]] instances (a
+  * signature function each); [[graft.operators.FingerprintStore]]
+  * (+ Bloom sketch, pre-epoch flat layout),
+  * [[graft.operators.VectorIndexStore]] (+ codebooks, drift) and
+  * [[graft.operators.Bm25IndexStore]] (+ legacy-layout migration) write
+  * through [[Segmented.write]] and keep only what is theirs.
   */
 private[graft] object EpochStore {
 
@@ -54,7 +63,20 @@ private[graft] object EpochStore {
     * [[graft.streaming.StreamingIngestGate]]) records them in ONE
     * atomically-replaced file, so the pins can never be torn.
     */
-  def readLongsFile(spark: SparkSession, p: Path): Option[Seq[Long]] = {
+  def readLongsFile(spark: SparkSession, p: Path): Option[Seq[Long]] =
+    readText(spark, p).map { raw =>
+      val txt = raw.trim
+      try txt.split("\\s+").toSeq.map(_.toLong)
+      catch {
+        case e: NumberFormatException => throw new IllegalStateException(
+          s"corrupt or truncated epoch marker at $p " +
+            s"(content: '${txt.take(64)}') — manifest/pin files are " +
+            "single-line longs; restore the file or re-found the store", e)
+      }
+    }
+
+  /** A small file's whole UTF-8 text — `None` if absent. */
+  private def readText(spark: SparkSession, p: Path): Option[String] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -62,14 +84,7 @@ private[graft] object EpochStore {
       try {
         val buf = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        val txt = new String(buf.toByteArray, StandardCharsets.UTF_8).trim
-        try Some(txt.split("\\s+").toSeq.map(_.toLong))
-        catch {
-          case e: NumberFormatException => throw new IllegalStateException(
-            s"corrupt or truncated epoch marker at $p " +
-              s"(content: '${txt.take(64)}') — manifest/pin files are " +
-              "single-line longs; restore the file or re-found the store", e)
-        }
+        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
       } finally in.close()
     }
   }
@@ -84,14 +99,22 @@ private[graft] object EpochStore {
   /** [[writeLongAtomic]] for several values on one line (single rename,
     * so a multi-store pin commits all-or-nothing). */
   def writeLongsAtomic(spark: SparkSession, p: Path, vs: Seq[Long]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
     val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(vs.mkString(" ").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
+    writeText(spark, tmp, vs.mkString(" "))
+    FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
       .rename(tmp, p, Options.Rename.OVERWRITE)
+  }
+
+  /** Create (or overwrite) `p` holding `text` as UTF-8. */
+  private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** Whether `path` exists. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** The current committed epoch number, or 0 if none ever committed. */
@@ -108,7 +131,7 @@ private[graft] object EpochStore {
     * `name` — segment ids are the epoch number that wrote them, unique
     * under the one-writer-at-a-time contract.
     */
-  def segName(name: String, seg: Long): String = s"${name}_s$seg"
+  private def segName(name: String, seg: Long): String = s"${name}_s$seg"
 
   private def segListPath(path: String, name: String, e: Long) =
     new Path(s"$path/${name}_e$e.segs")
@@ -119,61 +142,41 @@ private[graft] object EpochStore {
     */
   def readSegments(
       spark: SparkSession, path: String, name: String,
-      e: Long): Option[Seq[String]] = {
-    val p = segListPath(path, name, e)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8)
-          .split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq)
-      } finally in.close()
-    }
-  }
+      e: Long): Option[Seq[String]] =
+    readText(spark, segListPath(path, name, e))
+      .map(_.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq)
 
   /** Record epoch `e`'s live segment list. A plain overwrite-create, not
     * an atomic rename: the sidecar is invisible until the MANIFEST swap
     * commits the epoch, and a crashed writer's leftover is overwritten
     * by the next attempt at the same epoch number.
     */
-  def writeSegments(
+  private def writeSegments(
       spark: SparkSession, path: String, name: String, e: Long,
       segs: Seq[String]): Unit = {
     require(segs.nonEmpty && segs.distinct == segs,
       s"segment list for $name epoch $e must be non-empty and " +
         s"duplicate-free: $segs")
-    val p = segListPath(path, name, e)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(segs.mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(spark, segListPath(path, name, e), segs.mkString("", "\n", "\n"))
   }
 
-  /** Parquet paths of artifact `name` at epoch `e`: the epoch's segment
-    * dirs when the `.segs` sidecar exists, else the monolithic epoch
-    * dir (pre-segmentation artifacts stay readable unchanged).
-    */
+  /** Parquet paths of artifact `name` at epoch `e` ([[liveSegments]]). */
   def artifactPaths(
       spark: SparkSession, path: String, name: String,
       e: Long): Seq[String] =
-    readSegments(spark, path, name, e)
-      .map(_.map(n => s"$path/$n"))
-      .getOrElse(Seq(epochDir(path, name, e)))
+    liveSegments(spark, path, name, e).map(n => s"$path/$n")
 
-  /** The segment list an APPEND at epoch `cur + 1` extends: epoch
-    * `cur`'s recorded list, or — for a pre-segmentation monolithic
-    * epoch — its epoch dir referenced AS the founding segment, so
-    * migration to the segmented layout costs zero I/O.
+  /** The dirs (path-relative) artifact `name` holds at epoch `e`: the
+    * recorded `.segs` list; for a pre-segmentation monolithic epoch its
+    * epoch dir; at epoch 0 (no commit ever) the pre-epoch flat dir
+    * `<name>` ([[graft.operators.FingerprintStore]]'s oldest layout).
+    * Old layouts stay readable, and a write extending them references
+    * the dir AS a segment — migration costs zero I/O.
     */
-  def segmentsForAppend(
-      spark: SparkSession, path: String, name: String,
-      cur: Long): Seq[String] =
-    readSegments(spark, path, name, cur)
-      .getOrElse(Seq(s"${name}_e$cur"))
+  private def liveSegments(
+      spark: SparkSession, path: String, name: String, e: Long): Seq[String] =
+    if (e <= 0) Seq(name)
+    else readSegments(spark, path, name, e).getOrElse(Seq(s"${name}_e$e"))
 
   /** Run independent epoch-artifact ACTIONS concurrently (guide §2.6:
     * actions are only sequential because the driver calls them
@@ -243,73 +246,140 @@ private[graft] object EpochStore {
     writeLongAtomic(spark, manifestPath(path), n)
   }
 
-  /** SEGMENT COMPACTION — the bound the segmented-append design needs
-    * to hold over deployment AGE, not just corpus size: every append is
-    * O(batch), but after K appends a reader lists K segment dirs per
-    * family and its scans fragment across K small files' row groups
-    * (for Bm25IndexStore, K single-row stats reads per query batch and
-    * term-pruning that re-runs per small file). `compact` merges the
-    * CURRENT epoch's segments into ONE new segment per family and
-    * epoch-swaps it in — readers planned against the old epoch keep
-    * working (commit never deletes), and the superseded fragments go at
-    * the next [[vacuum]]. The Delta/Iceberg OPTIMIZE discipline, scoped
-    * to one pointer file.
+  /** THE SEGMENTED-STORE SKELETON, declared once per store: each
+    * `segmented` family with the merge rewrite [[compact]] applies to the
+    * union of its segments, and the `carried` per-epoch MONOLITHIC
+    * families (`<name>_eN` dirs the store writes itself) that [[compact]]
+    * copies forward. It owns the epoch write ([[write]]), a family's load,
+    * [[compact]] and [[vacuum]]. Contracts: one writer per store at a time
+    * ([[commitEpoch]]); appended rows are new (callers gate first);
+    * superseded epochs stay loadable until [[vacuum]] (a replayed stream
+    * batch re-gates against the epoch it originally saw).
     *
-    * `segmented`: family name → merge rewrite applied to the union of
-    * its current segments (identity for plain row tables; a re-sort to
-    * restore row-group pruning; a re-aggregate for additive stats
-    * families). `carried`: per-epoch MONOLITHIC families (codebooks,
-    * drift history) copied forward so the new epoch stays
-    * self-contained; a family dir absent at the current epoch is
-    * skipped (pre-telemetry stores).
-    *
-    * No-op (returns the current epoch, zero churn) when every segmented
-    * family already holds ≤ 1 segment. Same one-writer contract as
-    * append — a racing writer trips [[commitEpoch]]'s stale-read guard.
-    *
-    * @return the epoch now current (new on compaction, unchanged on no-op)
+    * @param what the store's name in errors ("no committed <what> epoch")
     */
-  def compact(
-      spark: SparkSession, path: String,
-      segmented: Seq[(String, org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame)],
-      carried: Seq[String] = Seq.empty): Long = {
-    val cur = requireEpoch(spark, path, "store (compact)")
-    val already = segmented.forall { case (n, _) =>
-      readSegments(spark, path, n, cur).forall(_.size <= 1) }
-    if (already) return cur
-    val next = cur + 1
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a carried family must be monolithic: silently skipping a
-    // segmented one would commit an epoch missing the family and leave
-    // the store unreadable at the compacted epoch (r20 ADVICE) — check
-    // every family BEFORE any rewrite starts
-    carried.foreach { n =>
-      require(readSegments(spark, path, n, cur).isEmpty,
-        s"carried family '$n' at epoch $cur is SEGMENTED (.segs sidecar " +
-          "present) — compact only carries monolithic per-epoch families; " +
-          "list it under `segmented` instead")
+  class Segmented(
+      what: String,
+      segmented: Seq[(String, DataFrame => DataFrame)],
+      carried: Seq[String] = Seq.empty) {
+
+    private val families = segmented.map(_._1)
+    require(families.intersect(carried).isEmpty,
+      s"$what declares ${families.intersect(carried)} both segmented and carried")
+
+    /** The committed epoch, failing loudly on an empty store. */
+    private[graft] def epoch(spark: SparkSession, path: String): Long =
+      requireEpoch(spark, path, what)
+
+    /** Family `family`'s rows at epoch `e`: the union of its live segments. */
+    private[graft] def loadFamily(
+        spark: SparkSession, path: String, e: Long, family: String): DataFrame =
+      ParquetFiles.read(spark, artifactPaths(spark, path, family, e): _*)
+
+    /** Directory of `family`'s segment written by epoch `e`. */
+    private[graft] def segment(path: String, family: String, e: Long): String =
+      s"$path/${segName(family, e)}"
+
+    /** THE EPOCH WRITE of `next = base + 1`: `body(next)` writes each new
+      * [[segment]] and carried dir, then every family's `.segs` sidecar is
+      * recorded and the manifest commits last — a `body` that throws
+      * commits nothing. A family's list is its new segment alone, or, on
+      * `extend`, `base`'s list plus it (old segments are referenced, never
+      * rewritten: O(batch) I/O); a family in `carry` keeps `base`'s list.
+      */
+    private[graft] def write(
+        spark: SparkSession, path: String, base: Long, extend: Boolean = false,
+        carry: Set[String] = Set.empty)(body: Long => Unit): Unit = {
+      val next = base + 1
+      body(next)
+      families.foreach { f =>
+        val prior =
+          if (extend || carry(f)) liveSegments(spark, path, f, base)
+          else Seq.empty
+        writeSegments(spark, path, f, next,
+          if (carry(f)) prior else prior :+ segName(f, next))
+      }
+      commitEpoch(spark, path, next)
     }
-    // each family's rewrite/copy reads only the superseded epoch and
-    // writes only its own new dirs — independent actions, overlapped
-    // (guide §2.6) so a multi-family store pays ~one job floor per
-    // compaction, not one per family; commit stays last
-    EpochStore.inParallel(
-      (segmented.map { case (n, rewrite) => () => {
-        val df = ParquetFiles.read(spark, artifactPaths(spark, path, n, cur): _*)
-        val seg = segName(n, next)
-        rewrite(df).write.mode("overwrite").parquet(s"$path/$seg")
-        writeSegments(spark, path, n, next, Seq(seg))
-      }}: Seq[() => Unit]) ++
-      carried.map { n => () => {
-        val src = new Path(epochDir(path, n, cur))
-        if (fs.exists(src))
-          ParquetFiles.read(spark, src.toString).coalesce(1)
-            .write.mode("overwrite").parquet(epochDir(path, n, next))
-      }}: _*)
-    commitEpoch(spark, path, next)
-    next
+
+    /** SEGMENT COMPACTION — the bound the segmented-append design needs
+      * to hold over deployment AGE, not just corpus size: after K appends
+      * a reader lists K segment dirs per family and its scans fragment
+      * across K small files' row groups. `compact` merges the CURRENT
+      * epoch's segments into ONE new segment per family (through the
+      * family's rewrite), copies the carried families forward (a dir absent
+      * at the current epoch is skipped: pre-telemetry stores) and
+      * epoch-swaps it in; the fragments go at the next [[vacuum]] (the
+      * Delta/Iceberg OPTIMIZE discipline, scoped to one pointer file).
+      *
+      * @return the epoch now current — unchanged (a no-op) when every
+      *   segmented family already holds ≤ 1 segment
+      */
+    def compact(spark: SparkSession, path: String): Long = {
+      val cur = epoch(spark, path)
+      val already = families.forall(n =>
+        readSegments(spark, path, n, cur).forall(_.size <= 1))
+      if (already) return cur
+      // each family's rewrite/copy reads only the superseded epoch and
+      // writes only its own new dirs — independent actions, overlapped
+      // (guide §2.6) so a multi-family store pays ~one job floor per
+      // compaction, not one per family; commit stays last
+      write(spark, path, cur) { next =>
+        inParallel(
+          (segmented.map { case (n, rewrite) => () =>
+            rewrite(loadFamily(spark, path, cur, n)).write.mode("overwrite")
+              .parquet(segment(path, n, next))
+          }: Seq[() => Unit]) ++
+          carried.map { n => () => {
+            val src = epochDir(path, n, cur)
+            if (exists(spark, src))
+              ParquetFiles.read(spark, src).coalesce(1)
+                .write.mode("overwrite").parquet(epochDir(path, n, next))
+          }}: _*)
+      }
+      cur + 1
+    }
+
+    /** [[EpochStore.vacuum]] over every declared family — call once no
+      * in-flight reader still holds plans against a superseded epoch.
+      */
+    def vacuum(spark: SparkSession, path: String): Unit =
+      EpochStore.vacuum(spark, path, families ++ carried)
+  }
+
+  /** A one-family [[Segmented]] store whose rows are [[encode]] of the
+    * documents handed to `save` (found or re-found) and `append` (ONLY
+    * the batch's rows, as a new segment); compaction is a plain merge.
+    */
+  abstract class Encoded(what: String, family: String)
+      extends Segmented(what, Seq(family -> identity[DataFrame] _)) {
+
+    /** The family's rows for documents `docs`. */
+    protected def encode(docs: DataFrame): DataFrame
+
+    /** The store's rows at the committed epoch. */
+    def load(spark: SparkSession, path: String): DataFrame =
+      loadEpoch(spark, path, epoch(spark, path))
+
+    /** The store's rows at a SPECIFIC epoch — superseded epochs stay
+      * readable until [[vacuum]] (streaming replay reads the epoch a
+      * micro-batch originally gated against).
+      */
+    def loadEpoch(spark: SparkSession, path: String, e: Long): DataFrame =
+      loadFamily(spark, path, e, family)
+
+    def save(docs: DataFrame, path: String): Unit = {
+      val spark = docs.sparkSession
+      write(spark, path, currentEpoch(spark, path))(writeSegment(docs, path, _))
+    }
+
+    def append(docs: DataFrame, path: String): Unit = {
+      val spark = docs.sparkSession
+      write(spark, path, epoch(spark, path), extend = true)(writeSegment(docs, path, _))
+    }
+
+    private def writeSegment(docs: DataFrame, path: String, e: Long): Unit =
+      encode(docs).write.mode("overwrite").parquet(segment(path, family, e))
   }
 
   /** Replay-pin marker files: `<KIND>BATCH_<id>` / `<KIND>PIN_<id>` in
@@ -357,9 +427,8 @@ private[graft] object EpochStore {
       // names kept: every dir any kept epoch's list references (a
       // pinned epoch with no sidecar is a pre-segmentation monolithic
       // dir — keep that dir itself)
-      val keep: Set[String] = (Seq(cur) ++ pins).flatMap { e =>
-        readSegments(spark, path, n, e).getOrElse(Seq(s"${n}_e$e"))
-      }.toSet
+      val keep: Set[String] =
+        (Seq(cur) ++ pins).flatMap(liveSegments(spark, path, n, _)).toSet
       val epochRe = (java.util.regex.Pattern.quote(n) + "_e(\\d+)").r
       val segsRe = (java.util.regex.Pattern.quote(n) + "_e(\\d+)\\.segs").r
       val segRe = (java.util.regex.Pattern.quote(n) + "_s(\\d+)").r

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{EpochStore, ParquetFiles}
+import graft.core.EpochStore
 
 /** Persisted BM25 inverted index — the LEXICAL sibling of
   * [[VectorIndexStore]], closing the store family's last recompute:
@@ -42,64 +42,61 @@ import graft.core.{EpochStore, ParquetFiles}
   * scored, and the per-query top-k is the same WindowGroupLimit-capped
   * window (≤ partitions × Q × k exchanged rows).
   *
-  * Epoch/manifest durability discipline: [[graft.core.EpochStore]] —
-  * appends land as new segments, become current on an atomic manifest
-  * replace, superseded epochs stay readable until [[vacuum]].
+  * Durability: [[graft.core.EpochStore.Segmented]].
   *
   * Reference anchor: reference/xdump has no search surface; this is the
   * Robertson/Zaragoza '09 index form of the batch-serving tier.
   */
 object Bm25IndexStore {
 
-  private val Names = Seq("bmpost", "bmdocs", "bmstats")
-
-  private def writeSegPair(
-      docs: DataFrame, path: String, next: Long, carryPrior: Boolean): Unit = {
-    val spark = docs.sparkSession
-    val tok = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-      .localCheckpoint() // one corpus tokenize feeds all three families
-    val postSeg = EpochStore.segName("bmpost", next)
-    val docsSeg = EpochStore.segName("bmdocs", next)
-    val statsSeg = EpochStore.segName("bmstats", next)
-    // the three family writes all read the checkpointed tokenize blocks
-    // and are independent — overlap them (guide §2.6; EpochStore
-    // inParallel): the map-side bmdocs pass and the 1-row bmstats
-    // aggregate back-fill slots while the heavy term-sorted bmpost
-    // shuffle runs, instead of paying three sequential job floors
-    EpochStore.inParallel(
-      () => tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-          explode(col("tk")).as("term"))
-        .groupBy(col("term"), col("doc_id"))
-        // dl is constant per doc_id — first() just carries it through
-        .agg(count(lit(1)).cast("long").as("tf"), first(col("dl")).as("dl"))
-        // term-sorted files: the serving filter's row-group pruning
-        .repartition(col("term"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$path/$postSeg"),
-      () => tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/$docsSeg"),
-      // the segment's (n, sdl) — derived from the batch at write time,
-      // additive over segments; coalesce covers the empty-batch segment
-      () => tok.agg(count(lit(1)).cast("long").as("n"),
-          coalesce(sum(size(col("tk")).cast("long")), lit(0L)).as("sdl"))
-        .write.mode("overwrite").parquet(s"$path/$statsSeg"))
-    def segs(name: String, seg: String): Seq[String] =
-      (if (carryPrior)
-         EpochStore.segmentsForAppend(spark, path, name, next - 1)
-       else Seq.empty) :+ seg
-    EpochStore.writeSegments(spark, path, "bmpost", next, segs("bmpost", postSeg))
-    EpochStore.writeSegments(spark, path, "bmdocs", next, segs("bmdocs", docsSeg))
-    EpochStore.writeSegments(spark, path, "bmstats", next,
-      segs("bmstats", statsSeg))
-    EpochStore.commitEpoch(spark, path, next)
-  }
-
-  /** Founds (or re-founds) the index from a corpus `(doc_id, text)` —
-    * a fresh epoch listing only the new segment pair.
+  /** The three segment families and their compaction rewrites: `bmpost`
+    * re-sorted term-major (full row-group pruning again), `bmdocs` a
+    * plain merge, `bmstats` re-aggregated to ONE exact row (additive over
+    * segments by construction, so the long sums are lossless).
     */
+  private val store = new EpochStore.Segmented("Bm25IndexStore", Seq(
+    "bmpost" -> termSorted _,
+    "bmdocs" -> identity[DataFrame] _,
+    "bmstats" -> ((df: DataFrame) =>
+      df.agg(coalesce(sum(col("n")), lit(0L)).cast("long").as("n"),
+        coalesce(sum(col("sdl")), lit(0L)).cast("long").as("sdl")))))
+
+  /** Postings in term-sorted files: the serving filter's row-group pruning. */
+  private def termSorted(posts: DataFrame): DataFrame =
+    posts.repartition(col("term")).sortWithinPartitions("term", "doc_id")
+
+  /** One segment per family for `docs`, committed after `base`. */
+  private def writeBatch(
+      docs: DataFrame, path: String, base: Long, extend: Boolean): Unit =
+    store.write(docs.sparkSession, path, base, extend) { next =>
+      val tok = docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
+        .localCheckpoint() // one corpus tokenize feeds all three families
+      // the three family writes all read the checkpointed tokenize blocks
+      // and are independent — overlap them (guide §2.6; EpochStore
+      // inParallel): the map-side bmdocs pass and the 1-row bmstats
+      // aggregate back-fill slots while the heavy term-sorted bmpost
+      // shuffle runs, instead of paying three sequential job floors
+      EpochStore.inParallel(
+        () => termSorted(
+          tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
+              explode(col("tk")).as("term"))
+            .groupBy(col("term"), col("doc_id"))
+            // dl is constant per doc_id — first() just carries it through
+            .agg(count(lit(1)).cast("long").as("tf"), first(col("dl")).as("dl")))
+          .write.mode("overwrite").parquet(store.segment(path, "bmpost", next)),
+        () => tok.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
+          .write.mode("overwrite").parquet(store.segment(path, "bmdocs", next)),
+        // the segment's (n, sdl) — derived from the batch at write time,
+        // additive over segments; coalesce covers the empty-batch segment
+        () => tok.agg(count(lit(1)).cast("long").as("n"),
+            coalesce(sum(size(col("tk")).cast("long")), lit(0L)).as("sdl"))
+          .write.mode("overwrite").parquet(store.segment(path, "bmstats", next)))
+    }
+
+  /** Founds (or re-founds) the index from a corpus `(doc_id, text)`. */
   def save(docs: DataFrame, path: String): Unit =
-    writeSegPair(docs, path,
-      EpochStore.currentEpoch(docs.sparkSession, path) + 1, carryPrior = false)
+    writeBatch(docs, path,
+      EpochStore.currentEpoch(docs.sparkSession, path), extend = false)
 
   /** Folds a NEW batch of docs in as one segment triple — O(batch) I/O
     * regardless of corpus age; statistics stay exact because N/Σdl are
@@ -121,17 +118,16 @@ object Bm25IndexStore {
     */
   def append(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
-    EpochStore.requireEpoch(spark, path, "Bm25IndexStore")
+    store.epoch(spark, path)
     migrateIfLegacy(spark, path)
-    writeSegPair(docs, path,
-      EpochStore.currentEpoch(spark, path) + 1, carryPrior = true)
+    writeBatch(docs, path, EpochStore.currentEpoch(spark, path), extend = true)
   }
 
   /** Whether epoch `e` predates the bmstats/denormalized-dl layout:
     * no bmstats family (neither a `.segs` sidecar nor a monolithic
     * epoch dir). The bmstats family and the denormalized bmpost `dl`
     * column were introduced by the SAME layout change and are always
-    * written together ([[writeSegPair]] / [[migrateIfLegacy]]), so the
+    * written together ([[writeBatch]] / [[migrateIfLegacy]]), so the
     * bmstats check is decisive on its own — the earlier form
     * additionally schema-probed the bmpost parquet footers, a
     * driver-side read over EVERY segment paid on every [[search]] call
@@ -139,13 +135,9 @@ object Bm25IndexStore {
     * one sidecar read + one existence check, no parquet I/O.
     */
   private def isLegacyLayout(
-      spark: SparkSession, path: String, e: Long): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, path: String, e: Long): Boolean =
     EpochStore.readSegments(spark, path, "bmstats", e).isEmpty &&
-      !fs.exists(new org.apache.hadoop.fs.Path(
-        EpochStore.epochDir(path, "bmstats", e)))
-  }
+      !EpochStore.exists(spark, EpochStore.epochDir(path, "bmstats", e))
 
   /** One-time in-place migration of a pre-bmstats store: commits a
     * migration epoch whose bmstats segment is re-derived from the
@@ -157,28 +149,18 @@ object Bm25IndexStore {
   private def migrateIfLegacy(spark: SparkSession, path: String): Unit = {
     val cur = EpochStore.currentEpoch(spark, path)
     if (cur <= 0 || !isLegacyLayout(spark, path, cur)) return
-    val next = cur + 1
-    val docsFam = ParquetFiles.read(spark,
-      EpochStore.artifactPaths(spark, path, "bmdocs", cur): _*)
-    val postsFam = ParquetFiles.read(spark,
-      EpochStore.artifactPaths(spark, path, "bmpost", cur): _*)
-    val postSeg = EpochStore.segName("bmpost", next)
-    val statsSeg = EpochStore.segName("bmstats", next)
-    postsFam.select(col("term"), col("doc_id"), col("tf"))
-      .join(docsFam.select(col("doc_id"), col("dl")), Seq("doc_id"))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-      .repartition(col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$path/$postSeg")
-    docsFam.agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl")), lit(0L)).cast("long").as("sdl"))
-      .write.mode("overwrite").parquet(s"$path/$statsSeg")
-    EpochStore.writeSegments(spark, path, "bmpost", next, Seq(postSeg))
-    // bmdocs' layout is unchanged — carry its existing segments as-is
-    EpochStore.writeSegments(spark, path, "bmdocs", next,
-      EpochStore.segmentsForAppend(spark, path, "bmdocs", cur))
-    EpochStore.writeSegments(spark, path, "bmstats", next, Seq(statsSeg))
-    EpochStore.commitEpoch(spark, path, next)
+    val docsFam = store.loadFamily(spark, path, cur, "bmdocs")
+    // bmdocs' layout is unchanged — its existing segments carry as-is
+    store.write(spark, path, cur, carry = Set("bmdocs")) { next =>
+      termSorted(store.loadFamily(spark, path, cur, "bmpost")
+          .select(col("term"), col("doc_id"), col("tf"))
+          .join(docsFam.select(col("doc_id"), col("dl")), Seq("doc_id"))
+          .select(col("term"), col("doc_id"), col("tf"), col("dl")))
+        .write.mode("overwrite").parquet(store.segment(path, "bmpost", next))
+      docsFam.agg(count(lit(1)).cast("long").as("n"),
+          coalesce(sum(col("dl")), lit(0L)).cast("long").as("sdl"))
+        .write.mode("overwrite").parquet(store.segment(path, "bmstats", next))
+    }
   }
 
   /** The loaded lexical index: the committed epoch a load resolved plus
@@ -195,13 +177,12 @@ object Bm25IndexStore {
     * (with the layout guards paid here, once per load, not per batch).
     */
   def load(spark: SparkSession, path: String): Loaded = {
-    val e = EpochStore.requireEpoch(spark, path, "Bm25IndexStore")
+    val e = store.epoch(spark, path)
     require(!isLegacyLayout(spark, path, e),
       s"Bm25IndexStore at $path was founded by a pre-bmstats layout " +
         "(no bmstats family / no denormalized dl on postings) — run one " +
         "append() (which migrates in place) or re-save() before searching")
-    val posts = ParquetFiles.read(spark,
-      EpochStore.artifactPaths(spark, path, "bmpost", e): _*)
+    val posts = store.loadFamily(spark, path, e, "bmpost")
     // r21 advice: the bmstats existence check above is decisive for both
     // in-repo writers (they commit bmstats + dl atomically), but a store
     // assembled by an external/hand-migrated writer could carry bmstats
@@ -211,10 +192,7 @@ object Bm25IndexStore {
       s"Bm25IndexStore at $path has a bmstats family but its bmpost " +
         "postings carry no dl column (externally assembled store?) — " +
         "run one append() (which migrates in place) or re-save()")
-    Loaded(e,
-      posts,
-      ParquetFiles.read(spark,
-        EpochStore.artifactPaths(spark, path, "bmstats", e): _*))
+    Loaded(e, posts, store.loadFamily(spark, path, e, "bmstats"))
   }
 
   /** Answers an external query batch `(query_id, terms)` from the
@@ -319,27 +297,17 @@ object Bm25IndexStore {
       .select(col("query_id"), col("doc_id"), col("rank"), col("score"))
   }
 
-  /** Merge the current epoch's segments into one per family and
-    * epoch-swap it in ([[graft.core.EpochStore.compact]]): after K daily
-    * appends a search reads K single-row stats files and term-prunes
-    * across K small posting files' row groups — O(batch) appends, but
-    * unbounded in deployment AGE. Compaction restores the founded
-    * shape: `bmpost` re-sorted term-major (full row-group pruning
-    * again), `bmstats` re-aggregated to ONE exact row (the family is
-    * additive over segments by construction, so the long sums are
-    * lossless and search answers stay BIT-identical — spec-asserted),
-    * `bmdocs` a plain merge. Superseded fragments go at [[vacuum]].
+  /** Merge the current epoch's segments into one per family
+    * ([[graft.core.EpochStore.Segmented.compact]]): after K daily appends
+    * a search reads K single-row stats files and term-prunes across K
+    * small posting files' row groups. Each family's declared rewrite
+    * restores the founded shape; search answers stay BIT-identical
+    * (spec-asserted). Superseded fragments go at [[vacuum]].
     */
   def compact(spark: SparkSession, path: String): Long =
-    EpochStore.compact(spark, path, Seq(
-      "bmpost" -> ((df: DataFrame) =>
-        df.repartition(col("term")).sortWithinPartitions("term", "doc_id")),
-      "bmdocs" -> identity[DataFrame] _,
-      "bmstats" -> ((df: DataFrame) =>
-        df.agg(coalesce(sum(col("n")), lit(0L)).cast("long").as("n"),
-          coalesce(sum(col("sdl")), lit(0L)).cast("long").as("sdl")))))
+    store.compact(spark, path)
 
   /** Drop superseded epochs (the Delta VACUUM contract). */
   def vacuum(spark: SparkSession, path: String): Unit =
-    EpochStore.vacuum(spark, path, Names)
+    store.vacuum(spark, path)
 }

@@ -20,8 +20,18 @@ import org.apache.spark.sql.types._
   * thousand rows at production sizes (m·k ≤ 4096 PQ centroids, k ≤ 65536
   * IVF cells), so `repartition(1)` keeps the artifact one file without any
   * driver-memory concern.
+  *
+  * WRITE-ONCE: a save to an existing path is refused, naming the path —
+  * an overwrite deletes the old files before the new ones land, so a
+  * crash mid-write would lose the codebook. Retrained codebooks go to a
+  * new path.
   */
 object CodebookStore {
+
+  /** The write-once check (`errorifexists` backs it against a racer). */
+  private def requireFresh(spark: SparkSession, path: String): Unit =
+    require(!graft.core.EpochStore.exists(spark, path),
+      s"codebook artifact already exists at $path — codebooks are write-once")
 
   /** Save a flat PQ codebook (layout `cb[(mi·k + ci)·sub + d]`, the form
     * `pqEncode`/`pqSearch`/`ivfPqSearch` accept) as one parquet row per
@@ -32,6 +42,7 @@ object CodebookStore {
     require(m > 0 && k > 0, s"m and k must be positive: m=$m k=$k")
     require(cb.nonEmpty && cb.length % (m * k) == 0,
       s"flat codebook length ${cb.length} must be a positive multiple of m × k = ${m * k}")
+    requireFresh(spark, path)
     val sub = cb.length / (m * k)
     val rows = for (mi <- 0 until m; ci <- 0 until k) yield Row(
       mi, ci, cb.slice((mi * k + ci) * sub, (mi * k + ci + 1) * sub).toSeq)
@@ -41,7 +52,7 @@ object CodebookStore {
           StructField("subspace", IntegerType, nullable = false),
           StructField("centroid_id", IntegerType, nullable = false),
           StructField("centroid", ArrayType(DoubleType, containsNull = false), nullable = false))))
-      .write.mode("overwrite").parquet(path)
+      .write.mode("errorifexists").parquet(path)
   }
 
   /** Load a PQ codebook artifact: returns `(m, k, flatCodebook)` where the
@@ -81,13 +92,14 @@ object CodebookStore {
     val dim = cb.head._2.length
     require(cb.forall(_._2.length == dim),
       s"ragged IVF codebook: centroid widths ${cb.map(_._2.length).distinct.mkString(",")}")
+    requireFresh(spark, path)
     spark.createDataFrame(
         spark.sparkContext.parallelize(
           cb.toSeq.map { case (id, v) => Row(id, v.toSeq) }, 1),
         StructType(Seq(
           StructField("cell_id", LongType, nullable = false),
           StructField("centroid", ArrayType(DoubleType, containsNull = false), nullable = false))))
-      .write.mode("overwrite").parquet(path)
+      .write.mode("errorifexists").parquet(path)
   }
 
   /** Load an IVF codebook artifact in cell_id order. */

@@ -382,6 +382,11 @@ object Dedup {
         col("containment"))
   }
 
+  /** [[minhashIngestDedup]]'s default shingle width and signature
+    * length, which [[MinHashStore]] persists. */
+  val IngestShingleN = 3
+  val IngestNumHashes = 16
+
   /** Ingest-shape MinHash near-dup gate — [[minhashPairs]]'s sibling for
     * the production loop: score a NEW batch against the EXISTING corpus's
     * persisted signature artifact ([[MinHashStore.load]]) and report
@@ -404,8 +409,8 @@ object Dedup {
   def minhashIngestDedup(
       batch: DataFrame,
       corpusSigs: DataFrame,
-      n: Int = 3,
-      numHashes: Int = 16,
+      n: Int = IngestShingleN,
+      numHashes: Int = IngestNumHashes,
       bands: Int = 8,
       minEstJaccard: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")

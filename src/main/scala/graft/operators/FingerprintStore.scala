@@ -45,15 +45,12 @@ import graft.core.{EpochStore, ParquetFiles}
   * against pre-gate callers) — a read, not a shuffle or rewrite, and
   * the Bloom arm of the gate typically makes the batch side tiny first.
   *
-  * Durability: writes go through [[graft.core.EpochStore]] — each
-  * save/append lands in NEW segment/bloom directories and becomes
-  * current only on the atomic MANIFEST swap, so the prior epoch
-  * survives any mid-append crash, and an append reads the old epoch
-  * while writing the new one with no overwrite-what-you-read hazard.
+  * Durability: [[graft.core.EpochStore.Segmented]].
   */
 object FingerprintStore {
 
-  private val Names = Seq("fingerprints", "bloom")
+  private val store = new EpochStore.Segmented("FingerprintStore",
+    Seq("fingerprints" -> identity[DataFrame] _), carried = Seq("bloom"))
 
   /** The 60-bit long key the Bloom sketch is built over — shared with
     * [[Dedup.bloomSketchDedup]]'s probe side.
@@ -73,13 +70,12 @@ object FingerprintStore {
   def save(corpus: DataFrame, path: String, fpp: Double = 0.01,
       expectedItems: Long = 0L): Unit = {
     val spark = corpus.sparkSession
-    val next = EpochStore.currentEpoch(spark, path) + 1
-    val seg = EpochStore.segName("fingerprints", next)
-    corpus.select(md5(col("text")).as("text_md5")).distinct()
-      .write.mode("overwrite").parquet(s"$path/$seg")
-    EpochStore.writeSegments(spark, path, "fingerprints", next, Seq(seg))
-    rebuildBloom(spark, path, next, fpp, expectedItems)
-    EpochStore.commitEpoch(spark, path, next)
+    store.write(spark, path, EpochStore.currentEpoch(spark, path)) { next =>
+      val seg = store.segment(path, "fingerprints", next)
+      corpus.select(md5(col("text")).as("text_md5")).distinct()
+        .write.mode("overwrite").parquet(seg)
+      rebuildBloom(spark, path, next, Seq(seg), fpp, expectedItems)
+    }
   }
 
   /** Parquet paths for artifact `name`: the committed epoch's segments,
@@ -94,15 +90,10 @@ object FingerprintStore {
   private def artifactPaths(
       spark: SparkSession, path: String, name: String): Seq[String] = {
     val e = EpochStore.currentEpoch(spark, path)
-    if (e > 0) EpochStore.artifactPaths(spark, path, name, e)
-    else {
-      val lp = new org.apache.hadoop.fs.Path(s"$path/$name")
-      val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(lp),
-        s"no committed FingerprintStore epoch (and no pre-epoch $name " +
-          s"layout) at $path")
-      Seq(lp.toString)
-    }
+    require(e > 0 || EpochStore.exists(spark, s"$path/$name"),
+      s"no committed FingerprintStore epoch (and no pre-epoch $name " +
+        s"layout) at $path")
+    EpochStore.artifactPaths(spark, path, name, e)
   }
 
   /** The persisted distinct-digest table (`text_md5`) — the existing side
@@ -119,8 +110,7 @@ object FingerprintStore {
     */
   def loadFingerprintsEpoch(
       spark: SparkSession, path: String, e: Long): DataFrame =
-    ParquetFiles.read(spark,
-      EpochStore.artifactPaths(spark, path, "fingerprints", e): _*)
+    store.loadFamily(spark, path, e, "fingerprints")
 
   /** The persisted Bloom sketch bytes (the filter side for
     * [[Dedup.bloomSketchDedup]]) plus the item count it was sized for.
@@ -149,24 +139,18 @@ object FingerprintStore {
       acceptedDigests: DataFrame, path: String, fpp: Double = 0.01): Unit = {
     val spark = acceptedDigests.sparkSession
     val cur = EpochStore.currentEpoch(spark, path)
-    val prevSegs =
-      if (cur > 0) EpochStore.segmentsForAppend(spark, path, "fingerprints", cur)
-      else {
-        // pre-epoch flat layout: reference it as the founding segment
-        artifactPaths(spark, path, "fingerprints")
-        Seq("fingerprints")
-      }
-    val next = cur + 1
-    val batchD = acceptedDigests.select(col("text_md5")).distinct()
-    val dups = loadFingerprints(spark, path)
-      .join(broadcast(batchD), Seq("text_md5"), "left_semi")
-    val novel = batchD.join(broadcast(dups), Seq("text_md5"), "left_anti")
-    val seg = EpochStore.segName("fingerprints", next)
-    novel.write.mode("overwrite").parquet(s"$path/$seg")
-    EpochStore.writeSegments(spark, path, "fingerprints", next,
-      prevSegs :+ seg)
-    appendBloom(spark, path, cur, next, s"$path/$seg", fpp)
-    EpochStore.commitEpoch(spark, path, next)
+    // the prior digest dirs — at epoch 0 the pre-epoch flat layout, which
+    // the new epoch's list references as its founding segment
+    val prior = artifactPaths(spark, path, "fingerprints")
+    store.write(spark, path, cur, extend = true) { next =>
+      val batchD = acceptedDigests.select(col("text_md5")).distinct()
+      val dups = ParquetFiles.read(spark, prior: _*)
+        .join(broadcast(batchD), Seq("text_md5"), "left_semi")
+      val novel = batchD.join(broadcast(dups), Seq("text_md5"), "left_anti")
+      val seg = store.segment(path, "fingerprints", next)
+      novel.write.mode("overwrite").parquet(seg)
+      appendBloom(spark, path, cur, next, prior :+ seg, fpp)
+    }
   }
 
   /** [[appendFingerprints]] from accepted documents (a `text` column). */
@@ -174,26 +158,18 @@ object FingerprintStore {
     appendFingerprints(
       accepted.select(md5(col("text")).as("text_md5")), path, fpp)
 
-  /** Drop superseded epochs and unreferenced segments — call once no
-    * in-flight reader can still hold plans against them (commits
-    * themselves never delete; the Delta VACUUM contract,
-    * [[graft.core.EpochStore.vacuum]]).
-    */
+  /** Drop superseded epochs ([[graft.core.EpochStore.Segmented.vacuum]]). */
   def vacuum(spark: SparkSession, path: String): Unit =
-    EpochStore.vacuum(spark, path, Names)
+    store.vacuum(spark, path)
 
-  /** Merge the current epoch's digest segments into one and epoch-swap
-    * it in — row-identical (the stored union is exactly distinct by the
-    * append contract, so a plain merge preserves it), carrying the
-    * epoch's bloom sketch forward unchanged (it summarizes the same key
-    * set; capacity/bit-size untouched, so later batch sketches stay
-    * merge-compatible). Bounds segment-list length over deployment age
-    * ([[graft.core.EpochStore.compact]]); fragments go at [[vacuum]].
+  /** Merge the current epoch's digest segments into one
+    * ([[graft.core.EpochStore.Segmented.compact]]) — row-identical (the
+    * stored union is exactly distinct, so a plain merge preserves it) —
+    * carrying the bloom sketch forward unchanged (same key set, capacity
+    * and bit size, so later batch sketches stay merge-compatible).
     */
   def compact(spark: SparkSession, path: String): Long =
-    EpochStore.compact(spark, path,
-      Seq("fingerprints" -> identity[DataFrame] _),
-      carried = Seq("bloom"))
+    store.compact(spark, path)
 
   /** Persist one bloom metadata row for `epoch`. `capacity` (and the
     * bit size derived from it) is what keeps later batch sketches
@@ -214,8 +190,8 @@ object FingerprintStore {
       .parquet(EpochStore.epochDir(path, "bloom", epoch))
   }
 
-  /** (Re)build the sketch artifact from epoch `epoch`'s FULL fingerprint
-    * table — one bounded count + one distributed sketch aggregation over
+  /** (Re)build epoch `epoch`'s sketch artifact from its FULL fingerprint
+    * table (the digest dirs `fpPaths`) — one bounded count + one distributed sketch aggregation over
     * 16-byte keys; O(corpus read). Paid at founding, and again only when
     * appends overflow the founding capacity — the geometric headroom
     * (2× current size, or the caller's `expectedItems`) makes the
@@ -234,40 +210,38 @@ object FingerprintStore {
     * read back from the filter actually built.
     */
   private def rebuildBloom(
-      spark: SparkSession, path: String, epoch: Long, fpp: Double,
-      expectedItems: Long): Unit = {
+      spark: SparkSession, path: String, epoch: Long, fpPaths: Seq[String],
+      fpp: Double, expectedItems: Long): Unit = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1): $fpp")
-    val fp = ParquetFiles.read(spark,
-      EpochStore.artifactPaths(spark, path, "fingerprints", epoch): _*)
+    val fp = ParquetFiles.read(spark, fpPaths: _*)
     val n = math.max(1L, fp.count())
     val capacity = math.max(64L, math.max(2L * n, expectedItems))
     val filter = bloomKey(fp).stat.bloomFilter("k", capacity, fpp)
     writeBloomRow(spark, path, epoch, filter, n, fpp, capacity)
   }
 
-  /** The append-time sketch update: build an O(batch) sketch over the
-    * just-written novel segment with the persisted epoch's EXACT sizing
+  /** The append-time sketch update (`fpPaths`: epoch `next`'s digest
+    * dirs, the just-written novel segment last): build an O(batch)
+    * sketch over that segment with the persisted epoch's EXACT sizing
     * parameters and merge it in — zero corpus jobs. Falls back to
     * [[rebuildBloom]] when the capacity would overflow (fpp past its
     * design point) or the prior epoch predates capacity metadata.
     */
   private def appendBloom(
       spark: SparkSession, path: String, cur: Long, next: Long,
-      novelSegPath: String, fpp: Double): Unit = {
+      fpPaths: Seq[String], fpp: Double): Unit = {
     val prevBloom =
       if (cur > 0) EpochStore.artifactPaths(spark, path, "bloom", cur).headOption
       else None
     val prev = prevBloom.flatMap { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
+      if (!EpochStore.exists(spark, dir)) None
       else {
         val df = ParquetFiles.read(spark, dir)
         if (!df.columns.contains("capacity")) None
         else Some(df.select("sketch", "n_items", "num_bits", "fpp", "capacity").head())
       }
     }
-    val novel = ParquetFiles.read(spark, novelSegPath)
+    val novel = ParquetFiles.read(spark, fpPaths.last)
     val batchN = novel.count()
     prev match {
       case Some(r) if r.getLong(1) + batchN <= r.getLong(4) =>
@@ -279,7 +253,7 @@ object FingerprintStore {
         writeBloomRow(spark, path, next, filter,
           r.getLong(1) + batchN, r.getDouble(3), r.getLong(4))
       case _ =>
-        rebuildBloom(spark, path, next, fpp, 0L)
+        rebuildBloom(spark, path, next, fpPaths, fpp, 0L)
     }
   }
 }

@@ -64,7 +64,9 @@ import graft.core.{EpochStore, ParquetFiles}
   */
 object VectorIndexStore {
 
-  private val Names = Seq("postings", "ivf", "pqmeta", "drift")
+  private val store = new EpochStore.Segmented("VectorIndexStore",
+    Seq("postings" -> identity[DataFrame] _),
+    carried = Seq("ivf", "pqmeta", "drift"))
 
   /** One map-side encode pass under FROZEN codebooks: (vec_id, cell,
     * codes, cdist) — the posting rows for the NORMALIZED frame `e`
@@ -101,74 +103,67 @@ object VectorIndexStore {
   }
 
   /** Write the NEW postings segment plus the (driver-bounded: ≤maxCents
-    * rows + 1 row) codebook frames for epoch `next`, then commit.
-    * `prevSegs` — the segments the new epoch inherits (empty at
-    * founding): old segment files are never touched, so append I/O is
-    * O(batch) postings regardless of corpus age.
+    * rows + 1 row) codebook frames for the epoch after `base`, then
+    * commit — founding, or on `extend` appending to `base`'s postings.
     *
-    * Staleness telemetry rides the write: one bounded aggregate over the
-    * just-written segment's `cdist` column (columnar — only that
-    * column's pages are re-read) appends a (epoch, kind, n_rows,
-    * mean_cdist, p95_cdist) row to the `drift_eN` history frame, carried
-    * forward from `carryDriftFrom` so each epoch's history is
-    * self-contained (vacuum-safe). A fresh [[save]] resets the history —
-    * a re-found store is a rebuild with a new baseline.
+    * Staleness telemetry rides the write: the postings write's observed
+    * `cdist` aggregates append a (epoch, kind, n_rows, mean_cdist,
+    * p95_cdist) row to the `drift_eN` history frame, carried forward from
+    * `base` on `extend` so each epoch's history is self-contained
+    * (vacuum-safe). A fresh [[save]] resets the history — a re-found
+    * store is a rebuild with a new baseline.
     */
   private def writeEpoch(
-      spark: SparkSession, path: String, next: Long,
-      prevSegs: Seq[String], postings: DataFrame,
+      spark: SparkSession, path: String, base: Long, extend: Boolean,
+      postings: DataFrame,
       cents: Array[(Long, Array[Double], Double)],
-      cb: Array[Double], m: Int, k: Int, dim: Int, residual: Boolean,
-      carryDriftFrom: Option[Long]): Unit = {
-    import spark.implicits._
-    val seg = EpochStore.segName("postings", next)
-    // r22, two job-floor cuts on the epoch write (guide §2.6 / §1.2):
-    // the drift stats RIDE the postings write as observed metrics (the
-    // dedupGroups convergence-count discipline) instead of re-reading the
-    // just-written segment in a second job, and the independent tiny
-    // actions — codebook/meta writes, the prior-drift read — overlap in
-    // one inParallel batch instead of paying one job floor each. Same
-    // artifacts, same layout, same commit-last ordering.
-    val obs = org.apache.spark.sql.Observation()
-    var prior: Seq[(Long, String, Long, Double, Double)] = Seq.empty
-    EpochStore.inParallel(
-      () => postings
-        .observe(obs, count(lit(1)).as("n"), avg(col("cdist")).as("mc"),
-          expr("percentile_approx(cdist, 0.95)").as("p95"))
-        .write.mode("overwrite").parquet(s"$path/$seg"),
-      () => cents.zipWithIndex
-        .map { case ((id, cv, cn), i) => (i, id, cv.toSeq, cn) }.toSeq
-        .toDF("idx", "cent_id", "cv", "cnrm")
+      cb: Array[Double], m: Int, k: Int, dim: Int, residual: Boolean): Unit =
+    store.write(spark, path, base, extend) { next =>
+      import spark.implicits._
+      // r22, two job-floor cuts on the epoch write (guide §2.6 / §1.2):
+      // the drift stats RIDE the postings write as observed metrics (the
+      // dedupGroups convergence-count discipline) instead of re-reading the
+      // just-written segment in a second job, and the independent tiny
+      // actions — codebook/meta writes, the prior-drift read — overlap in
+      // one inParallel batch instead of paying one job floor each. Same
+      // artifacts, same layout, same commit-last ordering.
+      val obs = org.apache.spark.sql.Observation()
+      var prior: Seq[(Long, String, Long, Double, Double)] = Seq.empty
+      EpochStore.inParallel(
+        () => postings
+          .observe(obs, count(lit(1)).as("n"), avg(col("cdist")).as("mc"),
+            expr("percentile_approx(cdist, 0.95)").as("p95"))
+          .write.mode("overwrite").parquet(store.segment(path, "postings", next)),
+        () => cents.zipWithIndex
+          .map { case ((id, cv, cn), i) => (i, id, cv.toSeq, cn) }.toSeq
+          .toDF("idx", "cent_id", "cv", "cnrm")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(EpochStore.epochDir(path, "ivf", next)),
+        () => Seq((m, k, dim, cb.toSeq, residual))
+          .toDF("m", "k", "dim", "cb", "residual")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(EpochStore.epochDir(path, "pqmeta", next)),
+        () => prior = if (!extend) Seq.empty else {
+          val drift = EpochStore.epochDir(path, "drift", base)
+          if (!EpochStore.exists(spark, drift)) Seq.empty // founded before drift telemetry
+          else ParquetFiles.read(spark, drift).collect().map(r =>
+            (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
+              r.getDouble(4)))
+        })
+      val st = obs.get // the write above completed: available immediately
+      val row = (next, if (extend) "append" else "founding",
+        st("n").asInstanceOf[Long],
+        st("mc") match { case null => 0.0; case d => d.asInstanceOf[Double] },
+        st("p95") match {
+          case null => 0.0
+          case f: Float => f.toDouble
+          case d: Double => d
+          case other => other.asInstanceOf[Number].doubleValue()
+        })
+      (prior :+ row).toDF("epoch", "kind", "n_rows", "mean_cdist", "p95_cdist")
         .coalesce(1).write.mode("overwrite")
-        .parquet(EpochStore.epochDir(path, "ivf", next)),
-      () => Seq((m, k, dim, cb.toSeq, residual))
-        .toDF("m", "k", "dim", "cb", "residual")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(EpochStore.epochDir(path, "pqmeta", next)),
-      () => prior = carryDriftFrom.toSeq.flatMap { e =>
-        val p = new org.apache.hadoop.fs.Path(EpochStore.epochDir(path, "drift", e))
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) Seq.empty // store founded before drift telemetry
-        else ParquetFiles.read(spark, p.toString).collect().map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
-            r.getDouble(4)))
-      })
-    EpochStore.writeSegments(spark, path, "postings", next, prevSegs :+ seg)
-    val st = obs.get // the write above completed: available immediately
-    val row = (next, if (carryDriftFrom.isEmpty) "founding" else "append",
-      st("n").asInstanceOf[Long],
-      st("mc") match { case null => 0.0; case d => d.asInstanceOf[Double] },
-      st("p95") match {
-        case null => 0.0
-        case f: Float => f.toDouble
-        case d: Double => d
-        case other => other.asInstanceOf[Number].doubleValue()
-      })
-    (prior :+ row).toDF("epoch", "kind", "n_rows", "mean_cdist", "p95_cdist")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(EpochStore.epochDir(path, "drift", next))
-    EpochStore.commitEpoch(spark, path, next)
-  }
+        .parquet(EpochStore.epochDir(path, "drift", next))
+    }
 
   /** The persisted staleness history: one row per epoch of the CURRENT
     * lineage — (epoch, kind: founding|append, n_rows, mean_cdist,
@@ -182,8 +177,8 @@ object VectorIndexStore {
     * the history survives [[vacuum]].
     */
   def driftStats(spark: SparkSession, path: String): DataFrame = {
-    val e = EpochStore.requireEpoch(spark, path, "VectorIndexStore")
-    ParquetFiles.read(spark, EpochStore.epochDir(path, "drift", e))
+    ParquetFiles.read(spark,
+      EpochStore.epochDir(path, "drift", store.epoch(spark, path)))
   }
 
   /** Found the index at `path`: derive (or accept) both codebooks from
@@ -231,10 +226,8 @@ object VectorIndexStore {
         "(empty corpus, or no vec_id matched the sampling rule)")
     val dim = normalizedDim(e)
     val cb = Similarity.resolvePqCodebook(dim, m, k, pqCodebook)
-    val next = EpochStore.currentEpoch(spark, path) + 1
-    writeEpoch(spark, path, next, Seq.empty,
-      encode(e, cents, cb, m, k, residual),
-      cents, cb, m, k, dim, residual, carryDriftFrom = None)
+    writeEpoch(spark, path, EpochStore.currentEpoch(spark, path), extend = false,
+      encode(e, cents, cb, m, k, residual), cents, cb, m, k, dim, residual)
   }
 
   /** Embedding width off the materialized NORMALIZED frame (`v` column) —
@@ -258,7 +251,7 @@ object VectorIndexStore {
       postings: DataFrame, epoch: Long, residual: Boolean)
 
   def load(spark: SparkSession, path: String): Index = {
-    val e = EpochStore.requireEpoch(spark, path, "VectorIndexStore")
+    val e = store.epoch(spark, path)
     val cents = ParquetFiles.read(spark, EpochStore.epochDir(path, "ivf", e))
       .orderBy(col("idx")).collect()
       .map(r => (r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
@@ -267,20 +260,15 @@ object VectorIndexStore {
     // pqmeta written before the residual knob has no column: non-residual
     Index(cents, meta.getSeq[Double](3).toArray,
       meta.getInt(0), meta.getInt(1), meta.getInt(2),
-      ParquetFiles.read(spark,
-        EpochStore.artifactPaths(spark, path, "postings", e): _*),
+      store.loadFamily(spark, path, e, "postings"),
       e,
       if (metaDf.columns.contains("residual")) meta.getAs[Boolean]("residual")
       else false)
   }
 
-  /** Fold a new batch (`vec_id`, `embedding`) into the index: encode it
-    * under the FROZEN codebooks and write ONLY the batch's posting rows
-    * as a new segment of the next epoch — persisted postings are
-    * referenced by the new epoch's list, never read or rewritten, so
-    * append I/O is O(batch) regardless of corpus age. Caller guarantees
-    * batch vec_ids are new; the batch must match the founding embedding
-    * width.
+  /** Fold a new batch (`vec_id`, `embedding`, new vec_ids, the founding
+    * width) into the index: ONLY its posting rows, encoded under the
+    * FROZEN codebooks, are written, as a new segment.
     */
   def append(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
@@ -299,15 +287,12 @@ object VectorIndexStore {
         s"appended batch embedding width $bdim != index width ${ix.dim}")
       return
     }
-    // next derives from the epoch load() RESOLVED (not a re-read of the
+    // the write builds on the epoch load() RESOLVED (not a re-read of the
     // manifest): a racer committing in between makes commitEpoch's
-    // cur != next-1 check fire loudly instead of losing its rows
-    val next = ix.epoch + 1
-    writeEpoch(spark, path, next,
-      EpochStore.segmentsForAppend(spark, path, "postings", ix.epoch),
+    // stale-read check fire loudly instead of losing its rows
+    writeEpoch(spark, path, ix.epoch, extend = true,
       encode(be, ix.cents, ix.cb, ix.m, ix.k, ix.residual),
-      ix.cents, ix.cb, ix.m, ix.k, ix.dim, ix.residual,
-      carryDriftFrom = Some(ix.epoch))
+      ix.cents, ix.cb, ix.m, ix.k, ix.dim, ix.residual)
   }
 
   /** IVFADC search of `queries` (`vec_id`, `embedding` — an external
@@ -466,24 +451,15 @@ object VectorIndexStore {
     true
   }
 
-  /** Merge the current epoch's posting segments into ONE and epoch-swap
-    * it in ([[graft.core.EpochStore.compact]]): appends are O(batch),
-    * but after K of them every search lists K segment dirs and its
-    * cell-probe scan fragments across K small files — unbounded in
-    * deployment age. Postings merge row-identically (encode output,
-    * no rewrite logic), and the per-epoch codebook/drift frames are
-    * carried forward so the new epoch stays self-contained; search
-    * answers are bit-identical pre/post (spec-asserted). Fragments go
-    * at [[vacuum]].
+  /** Merge the current epoch's posting segments into ONE
+    * ([[graft.core.EpochStore.Segmented.compact]]): postings merge
+    * row-identically and the codebook/drift frames are carried forward,
+    * so search answers are bit-identical pre/post (spec-asserted).
     */
   def compact(spark: SparkSession, path: String): Long =
-    EpochStore.compact(spark, path,
-      Seq("postings" -> identity[DataFrame] _),
-      carried = Seq("ivf", "pqmeta", "drift"))
+    store.compact(spark, path)
 
-  /** Drop superseded epochs — call once no in-flight reader can still
-    * hold plans against them ([[graft.core.EpochStore.vacuum]]).
-    */
+  /** Drop superseded epochs ([[graft.core.EpochStore.Segmented.vacuum]]). */
   def vacuum(spark: SparkSession, path: String): Unit =
-    EpochStore.vacuum(spark, path, Names)
+    store.vacuum(spark, path)
 }

@@ -136,6 +136,40 @@ class CliSpec extends SparkSpec {
     assert(new java.io.File(tmp).list().isEmpty, "a refused command line wrote nothing")
   }
 
+  /** `args` refused by `main` as naming an unknown option `bad`, with no
+    * Spark job started and nothing written under `tmp`. */
+  private def refusesUnknown(tmp: String, bad: String,
+      main: (Seq[String], org.apache.spark.sql.SparkSession) => Unit, args: String*): Unit = {
+    var message: String = null
+    assert(jobsOf { message = intercept[Cli.UsageError](main(args, spark)).getMessage } === 0)
+    assert(message === s"unknown option $bad")
+    assert(new java.io.File(tmp).list().isEmpty, "a refused command line wrote nothing")
+  }
+
+  test("graft-dump refuses a misspelt option instead of ignoring it") {
+    val tmp = Files.createTempDirectory("graft_cli_unknown_dump").toString
+    refusesUnknown(tmp, "--no-schmea", DumpMain.run _,
+      "--source", sfDir, "-o", s"$tmp/d", "-f", "region", "--no-schmea")
+  }
+
+  test("graft-load refuses a misspelt option instead of ignoring it") {
+    val tmp = Files.createTempDirectory("graft_cli_unknown_load").toString
+    refusesUnknown(tmp, "--cleanup-methd", LoadMain.run _,
+      "-i", s"$tmp/d", "--target", s"$tmp/t", "--cleanup-methd", "truncate")
+  }
+
+  test("graft-ingest refuses a misspelt option instead of ignoring it") {
+    val tmp = Files.createTempDirectory("graft_cli_unknown_ingest").toString
+    refusesUnknown(tmp, "--vacum-every", IngestMain.run _,
+      "--stores", s"$tmp/s", "--vacuum", "--vacum-every", "2")
+  }
+
+  test("graft-index refuses a misspelt option instead of ignoring it") {
+    val tmp = Files.createTempDirectory("graft_cli_unknown_index").toString
+    refusesUnknown(tmp, "--compcat", IndexMain.run _,
+      "--bm25", s"$tmp/x", "--vacuum", "--compcat")
+  }
+
   test("archived dump is one zip that loads back identically") {
     val tmp = Files.createTempDirectory("graft_cli_zip").toString
     DumpMain.run(Seq(

@@ -94,4 +94,32 @@ class CodebookStoreSpec extends SparkSpec {
     }
     assert(emptyErr.getMessage.contains("empty"))
   }
+
+  test("a codebook path is write-once: a second save fails and the first still loads") {
+    val pq = Similarity.trainPqCodebook(emb, m = 4, k = 4, sampleN = 100)
+    val pqPath = tmp("once-pq")
+    CodebookStore.savePqCodebook(spark, pq, m = 4, k = 4, pqPath)
+    val retrained = pq.map(_ + 1.0)
+    val pqErr = intercept[IllegalArgumentException] {
+      CodebookStore.savePqCodebook(spark, retrained, m = 4, k = 4, pqPath)
+    }
+    assert(pqErr.getMessage.contains(pqPath))
+    val (m, k, loaded) = CodebookStore.loadPqCodebook(spark, pqPath)
+    assert((m, k) === ((4, 4)))
+    assert(java.util.Arrays.equals(loaded, pq), "the first PQ codebook changed")
+
+    val ivf = Similarity.trainIvfCodebook(emb, k = 5, sampleN = 100)
+    val ivfPath = tmp("once-ivf")
+    CodebookStore.saveIvfCodebook(spark, ivf, ivfPath)
+    val ivfErr = intercept[IllegalArgumentException] {
+      CodebookStore.saveIvfCodebook(spark, ivf.map { case (id, v) => (id, v.map(_ * 2)) },
+        ivfPath)
+    }
+    assert(ivfErr.getMessage.contains(ivfPath))
+    val reloaded = CodebookStore.loadIvfCodebook(spark, ivfPath) // cell_id order
+    val want = ivf.sortBy(_._1)
+    assert(reloaded.map(_._1).toSeq === want.map(_._1).toSeq)
+    assert(reloaded.zip(want).forall { case ((_, a), (_, b)) => java.util.Arrays.equals(a, b) },
+      "the first IVF codebook changed")
+  }
 }

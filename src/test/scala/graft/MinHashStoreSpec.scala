@@ -10,8 +10,7 @@ import graft.operators.{Dedup, MinHashStore}
   * artifact must equal gating against signatures computed from corpus
   * text; the flagged set must match a brute-force banding + estimated-
   * Jaccard reference; append must fold survivors in so the next epoch
-  * sees them; and the epoch-swap write must leave the prior epoch
-  * readable through a failed append.
+  * sees them (a failed append: [[StoreCrashSpec]]).
   */
 class MinHashStoreSpec extends SparkSpec {
 
@@ -135,35 +134,6 @@ class MinHashStoreSpec extends SparkSpec {
         col("text")), path)
     assert(MinHashStore.load(spark, path).count() > sigsBefore.size)
     assertFooterSchemas(path)
-  }
-
-  test("epoch swap: a failed append leaves the prior epoch loadable") {
-    val corpus = docs.where(col("doc_id") % 2 === 0)
-    val path = tmp("mh-crash")
-    MinHashStore.save(corpus, path)
-    val before = MinHashStore.load(spark, path).count()
-
-    // an append whose write blows up mid-job (missing column) must not
-    // disturb the committed epoch
-    import spark.implicits._
-    val poison = Seq((1L, "x")).toDF("doc_id", "wrong_name")
-    intercept[Exception] { MinHashStore.append(poison, path) }
-    assert(MinHashStore.load(spark, path).count() === before)
-
-    // a real append keeps the old epoch's sidecar on disk (commits never
-    // delete — in-flight readers may hold plans against it); vacuum
-    // reclaims superseded sidecars but KEEPS segments the current epoch
-    // references (the founding segment lives in every later epoch)
-    MinHashStore.append(
-      docs.where(col("doc_id") % 3 === 1).select(col("doc_id"), col("text")),
-      path)
-    assert(new java.io.File(s"$path/minhash_e1.segs").exists())
-    assert(new java.io.File(s"$path/minhash_s1").exists())
-    MinHashStore.vacuum(spark, path)
-    assert(!new java.io.File(s"$path/minhash_e1.segs").exists())
-    assert(new java.io.File(s"$path/minhash_s1").exists(),
-      "vacuum must keep segments the current epoch references")
-    assert(MinHashStore.load(spark, path).count() > before)
   }
 
   test("append writes only the batch segment: founding files byte-untouched") {

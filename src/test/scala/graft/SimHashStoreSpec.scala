@@ -10,8 +10,8 @@ import graft.operators.{Dedup, SimHashStore}
   * artifact must equal gating against signatures computed from corpus
   * text; the gate must EXACTLY match a brute-force Hamming join (the
   * 4-chunk pigeonhole guarantee — stronger than MinHash's probabilistic
-  * banding); append must fold survivors in; and the epoch-swap write
-  * must leave the prior epoch readable through a failed append.
+  * banding); append must fold survivors in (a failed append:
+  * [[StoreCrashSpec]]).
   */
 class SimHashStoreSpec extends SparkSpec {
 
@@ -114,22 +114,6 @@ class SimHashStoreSpec extends SparkSpec {
     assert(!new java.io.File(s"$path/simhash_s1").exists())
     assert(gate() === before)
     assertFooterSchemas(path)
-  }
-
-  test("epoch swap: a failed append leaves the prior epoch loadable") {
-    val corpus = docs.where(col("doc_id") % 2 === 0)
-    val path = tmp("sh-crash")
-    SimHashStore.save(corpus, path)
-    val before = SimHashStore.load(spark, path).count()
-
-    import spark.implicits._
-    val poison = Seq((1L, "x")).toDF("doc_id", "wrong_name")
-    intercept[Exception] { SimHashStore.append(poison, path) }
-    assert(SimHashStore.load(spark, path).count() === before)
-
-    intercept[IllegalArgumentException] {
-      SimHashStore.load(spark, tmp("sh-empty"))
-    }
   }
 
   test("append writes only the batch segment: founding files byte-untouched") {
