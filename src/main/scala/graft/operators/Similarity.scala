@@ -329,10 +329,8 @@ object Similarity {
     * ran interpreted). The codebook is one flat plan literal — the
     * deterministic md5 family (pqWeight) by default, a trained k-means
     * codebook ([[trainPqCodebook]]) via `codebook`; the plan is identical
-    * either way. The argmin is `array_position(ds, array_min(ds))` — ties
-    * break on the lower centroid id, engine-portable (the oracle replays
-    * it with `list_position`). `dss` doubles as the ADC lookup table of
-    * pqSearch.
+    * either way. `codes` is [[argminCodes]]; `dss` doubles as the ADC
+    * lookup table of pqSearch.
     */
   private def pqTable(
       emb: DataFrame, m: Int, k: Int,
@@ -342,8 +340,29 @@ object Similarity {
     val e = emb.select(col("vec_id"), vec(col("embedding")).as("v"))
     e.select(col("vec_id"),
         graft.functions.PqDistances(col("v"), typedLit(cb.toSeq), m, k).as("dss"))
-      .select(col("vec_id"), col("dss"),
-        transform(col("dss"), ds => array_position(ds, array_min(ds)) - 1).as("codes"))
+      .select(col("vec_id"), col("dss"), argminCodes(col("dss")).as("codes"))
+  }
+
+  /** PQ codes off a per-subspace distance matrix, for [[pqTable]] and
+    * [[ivfPqEncode]]: `array_position(ds, array_min(ds))` — ties break on
+    * the lower centroid id, engine-portable (the oracle's `list_position`).
+    */
+  private def argminCodes(dss: Column): Column =
+    transform(dss, ds => array_position(ds, array_min(ds)) - 1)
+
+  /** The ranked tail of the L2 searches ([[pqSearch]], [[sqSearch]],
+    * [[adcTopK]]): per query the `kNN` nearest by `adist`, ties on vec_id,
+    * as (query_id, neighbor_id, rank, approx_dist2). ONE window: rank ≤ kNN
+    * compiles to WindowGroupLimit(Partial) below the exchange, so each map
+    * partition forwards at most kNN rows per query (plan-asserted).
+    */
+  private def rankedAdist(scored: DataFrame, kNN: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= kNN)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("rank").cast("long").as("rank"), round(col("adist"), 4).as("approx_dist2"))
   }
 
   /** PQ codebook resolution: an explicit (trained) flat codebook wins;
@@ -487,9 +506,9 @@ object Similarity {
     * full precision and its per-subspace distance matrix doubles as a
     * lookup table, so scoring a neighbor is m table probes + adds against
     * its m-byte code — the corpus's vectors are never touched. Queries
-    * (with LUTs) broadcast; codes stream map-side; map-capped
-    * single-window top-k as in annTopK. The exact-rank baseline is annTopK; this is what replaces
-    * it when the corpus only exists in compressed form.
+    * (with LUTs) broadcast; codes stream map-side into the map-capped
+    * [[rankedAdist]] top-k. The exact-rank baseline is annTopK; this is
+    * what replaces it when the corpus only exists in compressed form.
     */
   def pqSearch(
       emb: DataFrame,
@@ -498,7 +517,6 @@ object Similarity {
       m: Int = 8,
       k: Int = 16,
       codebook: Option[Array[Double]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = pqTable(emb, m, k, codebook)
     // The codes frame is the compressed index — in a deployment it is the
     // STORED artifact (encode once, search many). Materializing it here
@@ -512,11 +530,7 @@ object Similarity {
     // sum as the unrolled element_at fold, ~10× less per-pair overhead)
     val scored = broadcast(q).join(corpus, col("vec_id") =!= col("query_id"))
       .withColumn("adist", graft.functions.AdcDistance(col("qlut"), col("codes")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= kNN)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 4).as("approx_dist2"))
+    rankedAdist(scored, kNN)
   }
 
   /** Per-dimension [lo, hi] of the corpus — the scalar-quantizer's trained
@@ -591,12 +605,9 @@ object Similarity {
     * |q|² + |r|² − 2·q·r with the reconstruction norm precomputed
     * map-side per corpus row — so each pair costs ONE codegen'd [[dot]]
     * probe over the reconstructed array, and the top-k is the shared
-    * map-capped single-window shape (WindowGroupLimit Partial caps each
-    * partition's contribution at k before the exchange, so the global
-    * rank sees ≤ k × partitions survivors — no corpus-wide sort).
+    * map-capped [[rankedAdist]] tail — no corpus-wide sort.
     */
   def sqSearch(emb: DataFrame, queryFilter: Column, kNN: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (los, his) = sqBounds(emb)
     // codes is let-bound BEFORE sqRecon consumes it: recon indexes the
     // codes array once per dimension, and an unbound codes expression
@@ -618,11 +629,7 @@ object Similarity {
     val scored = broadcast(q).join(sq, col("vec_id") =!= col("query_id"))
       .withColumn("adist",
         col("qn2") + col("rn2") - lit(2.0) * dot(col("qv"), col("r")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= kNN)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 4).as("approx_dist2"))
+    rankedAdist(scored, kNN)
   }
 
   /** IVF-bucketed ANN (inverted-file index): every `centEvery`-th vector
@@ -988,25 +995,17 @@ object Similarity {
     * are dropped after encoding — and a query probes its `nprobe` nearest
     * IVF cells, then ADC-scores ONLY the PQ codes inside those cells.
     * Memory is codes not vectors (m bytes/row at the defaults vs dim × 4),
-    * compute is probed cells not corpus — the configuration that keeps a
-    * 100 TB embedding corpus searchable on a bounded cluster.
+    * compute is probed cells not corpus.
     *
-    * Plan shape: ONE map-side pass over the corpus computes BOTH index
-    * facets — the IVF cell (argmax over the literal-codebook centroid
-    * cosines, as annIvf) and the PQ codes (argmin over the codegen'd
-    * [[graft.functions.PqDistances]] matrix, as pqSearch) — so composing
-    * the two indexes costs no join and no extra scan. The (vec_id, cell,
-    * codes) frame is localCheckpointed: in a deployment it is the STORED
-    * index (encode once, search many). Queries recompute only their own
-    * rows (the vec_id filter pushes below both projections), broadcast
-    * with their ADC lookup tables, and equi-join on the probed cell —
-    * shuffle O(index rows), scoring O(nprobe × cell size) per query, m
-    * table probes + adds per candidate. Recall is doubly probabilistic:
-    * neighbors in unprobed cells are unseen (the IVF trade — raise
-    * `nprobe`), and ADC ranks by quantized distance (the PQ trade — train
-    * the codebook, raise m/k). Both codebooks accept trained variants
-    * ([[trainIvfCodebook]], [[trainPqCodebook]]) through the identical
-    * literal plan.
+    * The IVFADC kernel ([[ivfPqEncode]] + [[adcTopK]]) over an index built
+    * IN-PLAN and localCheckpointed (in a deployment it is the STORED index:
+    * encode once, search many). [[VectorIndexStore.search]] runs the same
+    * kernel; the two differ only in self-exclusion (queries here are corpus
+    * rows, so a query never scores itself) and in where the index comes
+    * from. Recall is doubly probabilistic: neighbors in unprobed cells are
+    * unseen (raise `nprobe`), and ADC ranks by quantized distance (train
+    * the codebooks — [[trainIvfCodebook]], [[trainPqCodebook]] — or raise
+    * m/k); `residual` selects the full IVFADC form ([[ivfPqEncode]]).
     */
   def ivfPqSearch(
       emb: DataFrame,
@@ -1020,7 +1019,6 @@ object Similarity {
       ivfCodebook: Option[Array[(Long, Array[Double])]] = None,
       pqCodebook: Option[Array[Double]] = None,
       residual: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val e = normalized(emb)
     val cents = resolveCentroids(e, centEvery, maxCents, ivfCodebook)
@@ -1029,79 +1027,86 @@ object Similarity {
       // and no PQ-codebook validation against the probe's placeholder dim
       return e.select(col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
         lit(0L).as("rank"), lit(0.0).as("approx_dist2")).where(lit(false))
-    val dim = probeDim(emb)
-    val pcb = resolvePqCodebook(dim, m, k, pqCodebook)
-    val nc = cents.length
-    // `residual = true` is the full IVFADC form (Jégou et al. §IV-A):
-    // codes quantize v − centroid(cell) instead of v, and a query builds
-    // ONE LUT PER PROBED CELL from its own residual against that cell —
-    // residuals have smaller variance than raw vectors, so the same
-    // codebook quantizes them tighter (measured recall lift in the spec).
-    // Cost: the query side computes nprobe LUTs instead of one; the
-    // corpus side is unchanged (still one map-side pass).
-    def pqDss(v: Column, cell: Column): Column =
-      if (residual)
-        graft.functions.PqResidualDistances(v, cell, cents.map(_._2), pcb, m, k)
-      else graft.functions.PqDistances(v, typedLit(pcb.toSeq), m, k)
-    val withCell = e.select(col("vec_id"), col("v"),
-        centCos(cents)(col("v"), col("nrm")).as("css"))
-      .withColumn("cell",
-        (array_position(col("css"), array_max(col("css"))) - 1).cast("int"))
-    // one pass builds the stored index: cell + PQ codes (of v, or of the
-    // own-cell residual), vectors dropped
-    val index = withCell.select(col("vec_id"), col("cell"),
-        transform(pqDss(col("v"), col("cell")), ds =>
-          array_position(ds, array_min(ds)) - 1).as("codes"))
+    val pcb = resolvePqCodebook(probeDim(emb), m, k, pqCodebook)
+    val index = ivfPqEncode(e, cents, pcb, m, k, residual)
+      .select(col("vec_id"), col("cell"), col("codes"))
       .localCheckpoint()
-    // Non-residual LUTs are cell-independent: compute qlut ONCE per query
-    // in the projection BELOW the explode (one m × k × sub pass per query
-    // row), then fan out probe cells — the Generate only duplicates the
-    // finished row. Residual LUTs genuinely differ per probed cell, so
-    // there the pqDss sits above the explode by necessity. (The broadcast
-    // still carries nprobe rows per query either way — nprobe × m × k
-    // doubles, bytes per query — it is the LUT COMPUTE that must not run
-    // nprobe times.)
+    // queryFilter is on vec_id, so it pushes below the query-side
+    // projections: queries recompute only their own rows
+    adcTopK(index, e.where(queryFilter), cents, pcb, m, k, residual,
+      nprobe, kNN, excludeSelf = true)
+  }
+
+  /** The IVFADC encode of [[ivfPqSearch]] and of [[VectorIndexStore]]'s
+    * save/append: one map-side pass under literal codebooks giving the
+    * posting rows (vec_id, cell, codes, cdist) of a [[normalized]] frame.
+    * `cell` is the argmax centroid cosine, `codes` the [[argminCodes]] of
+    * the PQ distance matrix — of `v`, or with `residual` of
+    * `v − centroid(cell)` (Jégou et al. §IV-A: residuals have smaller
+    * variance, so the same codebook quantizes them tighter).
+    * `cdist = 1 − cos(v, centroid(cell))` feeds the store's staleness
+    * telemetry; every search scan prunes it.
+    */
+  private[operators] def ivfPqEncode(
+      e: DataFrame,
+      cents: Array[(Long, Array[Double], Double)],
+      cb: Array[Double], m: Int, k: Int, residual: Boolean): DataFrame =
+    e.select(col("vec_id"), col("v"), centCos(cents)(col("v"), col("nrm")).as("css"))
+      .select(col("vec_id"), col("v"),
+        (array_position(col("css"), array_max(col("css"))) - 1).cast("int").as("cell"),
+        (lit(1.0) - array_max(col("css"))).cast("float").as("cdist"))
+      .select(col("vec_id"), col("cell"),
+        argminCodes(
+          if (residual)
+            graft.functions.PqResidualDistances(col("v"), col("cell"), cents.map(_._2), cb, m, k)
+          else graft.functions.PqDistances(col("v"), typedLit(cb.toSeq), m, k)).as("codes"),
+        col("cdist"))
+
+  /** The IVFADC query: each row of `queries` (a [[normalized]] frame)
+    * probes its `nprobe` nearest cells and ADC-scores only the `postings`
+    * (vec_id, cell, codes) inside them, ranked by [[rankedAdist]]. Queries
+    * broadcast with their lookup tables and equi-join on the probed cell;
+    * a neighbor lives in exactly one cell and probe cells are distinct, so
+    * no pair dedup is needed. `excludeSelf` drops the query's own row
+    * ([[ivfPqSearch]]'s queries are corpus rows, [[VectorIndexStore]]'s an
+    * external frame). A raw-code LUT is cell-independent, so it is
+    * computed once per query BELOW the probe-cell fan-out; a residual LUT
+    * differs per probed cell (the query's residual against THAT cell), so
+    * it sits above the fan-out by necessity.
+    */
+  private[operators] def adcTopK(
+      postings: DataFrame, queries: DataFrame,
+      cents: Array[(Long, Array[Double], Double)],
+      cb: Array[Double], m: Int, k: Int, residual: Boolean,
+      nprobe: Int, kNN: Int, excludeSelf: Boolean): DataFrame = {
+    val withCss = queries.select(col("vec_id"), col("v"),
+      centCos(cents)(col("v"), col("nrm")).as("css"))
+    // explode_OUTER, deliberately: probe sets are never empty, so the two
+    // forms are row-identical — but exploding a non-outer ATTRIBUTE makes
+    // InferFiltersFromGenerate add `size(qcells) > 0` below the Generate,
+    // and pushdown then substitutes the alias chain: the O(nc²) probe-cells
+    // filter re-expands the whole nc-dotproduct centroid array inside its
+    // inner lambda, evaluated interpreted per scan row (measured: 123 s vs
+    // 1.2 s at sf0.1). The rule only matches outer = false; outer skips the
+    // inference. PlanAuditSpec pins it for both LUT placements.
+    def fanOut(cells: Column): Column = explode_outer(cells).as("qcell")
+    val cells = probeCellsExpr(cents.length, nprobe)
     val q =
       if (residual)
-        withCell.where(queryFilter)
-          .select(col("vec_id").as("query_id"), col("v").as("vq"),
-            explode(probeCellsExpr(nc, nprobe)).as("qcell"))
+        withCss.select(col("vec_id").as("query_id"), col("v").as("vq"), fanOut(cells))
           .select(col("query_id"), col("qcell"),
-            pqDss(col("vq"), col("qcell")).as("qlut"))
+            graft.functions.PqResidualDistances(
+              col("vq"), col("qcell"), cents.map(_._2), cb, m, k).as("qlut"))
       else
-        withCell.where(queryFilter)
-          .select(col("vec_id").as("query_id"),
-            pqDss(col("v"), lit(0).cast("int")).as("qlut"),
-            probeCellsExpr(nc, nprobe).as("qcells"))
-          // explode_OUTER, deliberately: probe sets are never empty, so the
-          // two forms are row-identical — but exploding a non-outer
-          // ATTRIBUTE makes InferFiltersFromGenerate add `size(qcells) > 0`
-          // below the Generate, and pushdown then substitutes the alias
-          // chain: the O(nc²) probe-cells filter re-expands the whole
-          // nc-dotproduct centroid array inside its inner lambda, evaluated
-          // interpreted per scan row (measured: 123 s vs 1.2 s at sf0.1).
-          // The rule only matches outer = false; outer skips the inference.
-          .select(col("query_id"), col("qlut"),
-            explode_outer(col("qcells")).as("qcell"))
-    // a neighbor lives in exactly one cell and probe cells are distinct,
-    // so no pair dedup is needed (the annIvf invariant)
-    val scored = index.join(broadcast(q),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
+        withCss.select(col("vec_id").as("query_id"),
+            graft.functions.PqDistances(col("v"), typedLit(cb.toSeq), m, k).as("qlut"),
+            cells.as("qcells"))
+          .select(col("query_id"), col("qlut"), fanOut(col("qcells")))
+    val onCell = col("cell") === col("qcell")
+    val scored = postings.join(broadcast(q),
+        if (excludeSelf) onCell && col("vec_id") =!= col("query_id") else onCell)
       .withColumn("adist", graft.functions.AdcDistance(col("qlut"), col("codes")))
-    // single-window top-k: the rank <= kNN filter makes Spark insert
-    // WindowGroupLimit(Partial) BELOW the exchange — each map partition
-    // forwards at most kNN rows per query, so a skewed cell at high
-    // nprobe cannot concentrate one query's full candidate set
-    // (nprobe × cell size) in a single window partition: the global
-    // phase sees at most partitions × kNN survivors per query. The
-    // manual (query_id, partition_id) pre-rank phase this replaces
-    // added a full Exchange+Sort+Window of the candidate volume for a
-    // bound the native partial limit already provides (plan-asserted).
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= kNN)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 4).as("approx_dist2"))
+    rankedAdist(scored, kNN)
   }
 
   /** Hashed bag-of-words document embedding (feature hashing — the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{EpochStore, ParquetFiles}
@@ -52,55 +51,23 @@ import graft.core.{EpochStore, ParquetFiles}
   * row-identical to a one-shot encode of the union under the same
   * codebooks (spec-asserted).
   *
-  * [[search]] is the IVFADC query plan of [[Similarity.ivfPqSearch]]
-  * (residual or raw-vector form, routed by the persisted founding
-  * `residual` flag) pointed at the LOADED postings, with one
-  * contract change: queries are an EXTERNAL frame (`vec_id`,
-  * `embedding`), not a filter over the corpus, so there is no
-  * self-pair exclusion — a query that is also a corpus row scores its
-  * own posting like any other candidate (the serving shape: the engine
-  * cannot know the caller's identity space). Postings stay the scanned
-  * (distributed) side, queries broadcast with their ADC lookup tables.
+  * [[save]]/[[append]] encode with [[Similarity.ivfPqEncode]] and
+  * [[search]] runs [[Similarity.adcTopK]] — the IVFADC kernel of
+  * [[Similarity.ivfPqSearch]] (residual or raw-vector form, routed by the
+  * persisted founding `residual` flag). The two differ only in where the
+  * index comes from (loaded postings here, an in-plan encode there) and
+  * in self-exclusion: queries here are an EXTERNAL frame (`vec_id`,
+  * `embedding`), not a filter over the corpus, so a query that is also a
+  * corpus row scores its own posting like any other candidate (the
+  * serving shape: the engine cannot know the caller's identity space).
+  * Postings stay the scanned (distributed) side, queries broadcast with
+  * their ADC lookup tables.
   */
 object VectorIndexStore {
 
   private val store = new EpochStore.Segmented("VectorIndexStore",
     Seq("postings" -> identity[DataFrame] _),
     carried = Seq("ivf", "pqmeta", "drift"))
-
-  /** One map-side encode pass under FROZEN codebooks: (vec_id, cell,
-    * codes, cdist) — the posting rows for the NORMALIZED frame `e`
-    * ([[Similarity.normalized]] output — save/append materialize it once
-    * and feed the same blocks here, to the centroid sample and to the
-    * dim probe, so a computed embedding subtree is never re-run).
-    * Shared verbatim by save and append so the two can never drift. `residual` is the full
-    * IVFADC form: codes quantize `v − centroid(cell)` instead of `v`
-    * (Jégou et al. §IV-A — residuals have smaller variance, so the same
-    * codebook quantizes them tighter; recall lift spec-measured).
-    * `cdist = 1 − cos(v, centroid(cell))` is the coarse-assignment
-    * distance the staleness telemetry aggregates — a float column in the
-    * posting segment that costs one byte-row beside the codes and is
-    * pruned away by every search scan.
-    */
-  private def encode(
-      e: DataFrame,
-      cents: Array[(Long, Array[Double], Double)],
-      cb: Array[Double], m: Int, k: Int, residual: Boolean): DataFrame = {
-    e.select(col("vec_id"), col("v"),
-        Similarity.centCos(cents)(col("v"), col("nrm")).as("css"))
-      .select(col("vec_id"), col("v"),
-        (array_position(col("css"), array_max(col("css"))) - 1)
-          .cast("int").as("cell"),
-        (lit(1.0) - array_max(col("css"))).cast("float").as("cdist"))
-      .select(col("vec_id"), col("cell"),
-        transform(
-          if (residual)
-            graft.functions.PqResidualDistances(
-              col("v"), col("cell"), cents.map(_._2), cb, m, k)
-          else graft.functions.PqDistances(col("v"), typedLit(cb.toSeq), m, k),
-          ds => array_position(ds, array_min(ds)) - 1).as("codes"),
-        col("cdist"))
-  }
 
   /** Write the NEW postings segment plus the (driver-bounded: ≤maxCents
     * rows + 1 row) codebook frames for the epoch after `base`, then
@@ -227,7 +194,7 @@ object VectorIndexStore {
     val dim = normalizedDim(e)
     val cb = Similarity.resolvePqCodebook(dim, m, k, pqCodebook)
     writeEpoch(spark, path, EpochStore.currentEpoch(spark, path), extend = false,
-      encode(e, cents, cb, m, k, residual), cents, cb, m, k, dim, residual)
+      Similarity.ivfPqEncode(e, cents, cb, m, k, residual), cents, cb, m, k, dim, residual)
   }
 
   /** Embedding width off the materialized NORMALIZED frame (`v` column) —
@@ -291,7 +258,7 @@ object VectorIndexStore {
     // manifest): a racer committing in between makes commitEpoch's
     // stale-read check fire loudly instead of losing its rows
     writeEpoch(spark, path, ix.epoch, extend = true,
-      encode(be, ix.cents, ix.cb, ix.m, ix.k, ix.residual),
+      Similarity.ivfPqEncode(be, ix.cents, ix.cb, ix.m, ix.k, ix.residual),
       ix.cents, ix.cb, ix.m, ix.k, ix.dim, ix.residual)
   }
 
@@ -308,7 +275,6 @@ object VectorIndexStore {
       kNN: Int = 10, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val ix = load(queries.sparkSession, path)
-    val nc = ix.cents.length
     // A query batch is often a COMPUTED subtree (the serving shape:
     // chunkEmbed over the incoming docs); the width probe and the
     // broadcast build below would each run it once. Materialize the
@@ -321,43 +287,8 @@ object VectorIndexStore {
     val qdim = normalizedDim(qn)
     require(qdim == ix.dim || qn.isEmpty,
       s"query embedding width $qdim != index width ${ix.dim}")
-    // LUT placement mirrors ivfPqSearch: a non-residual LUT is
-    // cell-independent — computed once per query below the probe-cell
-    // explode (explode_outer for the InferFiltersFromGenerate reason
-    // documented there); a residual index genuinely needs one LUT per
-    // probed cell (the query's residual against THAT cell), so there the
-    // PqDistances sits above the explode by necessity.
-    val withCss = qn
-      .select(col("vec_id"), col("v"),
-        Similarity.centCos(ix.cents)(col("v"), col("nrm")).as("css"))
-    val q =
-      if (ix.residual)
-        withCss
-          .select(col("vec_id").as("query_id"), col("v").as("vq"),
-            explode_outer(Similarity.probeCellsExpr(nc, nprobe)).as("qcell"))
-          .select(col("query_id"), col("qcell"),
-            graft.functions.PqResidualDistances(
-              col("vq"), col("qcell"), ix.cents.map(_._2), ix.cb,
-              ix.m, ix.k).as("qlut"))
-      else
-        withCss
-          .select(col("vec_id").as("query_id"),
-            graft.functions.PqDistances(col("v"), typedLit(ix.cb.toSeq), ix.m, ix.k)
-              .as("qlut"),
-            Similarity.probeCellsExpr(nc, nprobe).as("qcells"))
-          .select(col("query_id"), col("qlut"),
-            explode_outer(col("qcells")).as("qcell"))
-    val scored = ix.postings.join(broadcast(q), col("cell") === col("qcell"))
-      .withColumn("adist", graft.functions.AdcDistance(col("qlut"), col("codes")))
-    // single-window top-k (the ivfPqSearch pattern): rank <= kNN puts a
-    // WindowGroupLimit(Partial) below the exchange — the map-side cap
-    // the old manual two-phase pattern paid an extra Exchange for
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= kNN)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"),
-        round(col("adist"), 4).as("approx_dist2"))
+    Similarity.adcTopK(ix.postings, qn, ix.cents, ix.cb, ix.m, ix.k, ix.residual,
+      nprobe, kNN, excludeSelf = false)
   }
 
   /** Approximate corpus DECODE from the persisted postings — the PQ
