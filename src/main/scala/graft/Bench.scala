@@ -69,19 +69,12 @@ object Bench {
         "chunk_index_search" ->
           ((SparkEntry.chunkIndexBuild _, SparkEntry.chunkIndexServe _)),
         "hybrid_chunk_search" ->
-          ((SparkEntry.hybridChunkBuild _, SparkEntry.hybridChunkServe _)))
+          ((SparkEntry.chunkIndexBuild _, SparkEntry.hybridChunkServe _)))
     // Each build() founds a fresh temp index store; without eager cleanup
     // a full bench accretes 2 × (reps + 1) chunk-embedding stores on the
     // temp volume for the session's whole life (the JVM-exit hook only
     // reclaims them at the very end) — so each store is deleted as soon
     // as its serve half has been timed.
-    def rmStore(d: String): Unit = scala.util.Try {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(d))
-    }: Unit
     val splits = splitDefs
       .filter { case (name, _) => selected.exists(_.name == name) }
       .filter { case (name, _) => !errors.contains(name) }
@@ -89,11 +82,11 @@ object Bench {
         try {
           val store = build(spark, sfDir) // warmup build (footer cache, JIT)
           Harness.noop(serve(spark, sfDir, store))
-          rmStore(store)
+          Harness.rmTree(store)
           val timed = (1 to reps).map { _ =>
             val (st, buildS) = Harness.seconds(build(spark, sfDir))
             val serveS = Harness.noop(serve(spark, sfDir, st))
-            rmStore(st)
+            Harness.rmTree(st)
             (buildS, serveS)
           }
           Some(name -> (Harness.median(timed.map(_._1)),

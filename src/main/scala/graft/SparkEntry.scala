@@ -17,45 +17,19 @@ object SparkEntry {
 
   private def cat(s: SparkSession, dir: String): Catalog = Catalog.tpch(s, dir)
 
-  /** Driver-temp dir for the store/dump DEMO queries, reclaimed at JVM
-    * exit by one shared shutdown hook: every evaluation of a store-loop
-    * entry founds a fresh artifact (that IS the demo — save + serve in
-    * one plan), and a long bench session would otherwise accrete one
-    * orphan dir per rep.
-    */
-  private lazy val tempDirsToReclaim: java.util.Set[String] = {
-    val s = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      s.forEach { d =>
-        scala.util.Try {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(new java.io.File(d))
-        }: Unit
-      }))
-    s
-  }
-
-  private def tempStore(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempDirsToReclaim.add(d)
-    d
-  }
-
-  /** The index-BUILD half of `chunk_index_search`, split out so Bench/
-    * ScaleCheck can time build and serve separately (the r18 watch item:
-    * the combined entry's bench number reads "slow" while the serving
-    * claim it makes is about the serve half alone). The `queries` entry
-    * composes these two verbatim, so the oracle surface is unchanged.
+  /** The index-BUILD half of `chunk_index_search` and
+    * `hybrid_chunk_search`, split out so Bench/ScaleCheck can time build
+    * and serve separately (the r18 watch item: the combined entry's bench
+    * number reads "slow" while the serving claim it makes is about the
+    * serve half alone). Each entry composes this build with its own serve
+    * half, so the oracle surface is unchanged.
     * centEvery = 163 (prime): 10^6 ≡ 158 (mod 163), so packed chunk ids
     * scatter across the sampling rule instead of aliasing chunk_id as a
     * 10^6-divisor would.
     */
   private[graft] def chunkIndexBuild(s: SparkSession, dir: String): String = {
     val docs = cat(s, dir).table("documents")
-    val store = tempStore("graft-cixstore")
+    val store = Harness.tempStore("graft-cixstore")
     VectorIndexStore.save(Similarity.chunkEmbed(docs, dim = 16), store,
       m = 8, k = 16, centEvery = 163)
     store
@@ -79,16 +53,6 @@ object SparkEntry {
         (col("neighbor_id") % m).as("n_chunk_id"),
         col("rank"), col("approx_dist2"))
       .orderBy("doc_id", "chunk_id", "rank")
-  }
-
-  /** The index-BUILD half of `hybrid_chunk_search` (same split rationale
-    * as [[chunkIndexBuild]]). */
-  private[graft] def hybridChunkBuild(s: SparkSession, dir: String): String = {
-    val docs = cat(s, dir).table("documents")
-    val store = tempStore("graft-hybstore")
-    VectorIndexStore.save(Similarity.chunkEmbed(docs, dim = 16), store,
-      m = 8, k = 16, centEvery = 163)
-    store
   }
 
   /** The SERVE half of `hybrid_chunk_search`: lexical BM25 over the
@@ -237,7 +201,7 @@ object SparkEntry {
     * (the/value/row/key); the oracle replays it as nested replace()
     * calls in the same rank order.
     */
-  private val BpeDemoMerges: Seq[(String, String)] = Seq(
+  private[graft] val BpeDemoMerges: Seq[(String, String)] = Seq(
     ("t", "h"), ("th", "e</w>"), ("a", "l"), ("u", "e</w>"),
     ("r", "o"), ("ro", "w</w>"), ("k", "e"), ("ke", "y</w>"))
 
@@ -629,7 +593,7 @@ object SparkEntry {
 
     Entry("dump_load_roundtrip", { (s, dir) =>
       val c = cat(s, dir)
-      val tmp = tempStore("graft_dump")
+      val tmp = Harness.tempStore("graft_dump")
       Dump.write(c, DumpSpec(
         fullTables = Seq("region"),
         partialTables = Map("orders" -> c.table("orders").where(col("o_totalprice") > 480000))),
@@ -645,7 +609,7 @@ object SparkEntry {
       // Dump → load → the restored sequence state (reference: sequences.sql
       // replayed on load, postgresql.py:136-146 + base.py:227).
       val c = cat(s, dir)
-      val tmp = tempStore("graft_seq")
+      val tmp = Harness.tempStore("graft_seq")
       Dump.write(c, DumpSpec(
         fullTables = Seq("region"),
         partialTables = Map("orders" -> c.table("orders").where(col("o_totalprice") > 480000))),
@@ -1316,7 +1280,7 @@ object SparkEntry {
     // its oracle IS the bm25_batch replay
     Entry("bm25_index_search", { (s, dir) =>
       import s.implicits._
-      val store = tempStore("graft-bm25store")
+      val store = Harness.tempStore("graft-bm25store")
       graft.operators.Bm25IndexStore.save(
         cat(s, dir).table("documents").select(col("doc_id"), col("text")), store)
       graft.operators.Bm25IndexStore.search(s, store,
@@ -1337,7 +1301,7 @@ object SparkEntry {
     // corpus-pass answers exactly — one more replay of the same oracle
     Entry("bm25_index_compact", { (s, dir) =>
       import s.implicits._
-      val store = tempStore("graft-bm25cpt")
+      val store = Harness.tempStore("graft-bm25cpt")
       val docs = cat(s, dir).table("documents").select(col("doc_id"), col("text"))
       graft.operators.Bm25IndexStore.save(docs.where(col("doc_id") % 2 === 0), store)
       graft.operators.Bm25IndexStore.append(docs.where(col("doc_id") % 2 === 1), store)
@@ -1497,7 +1461,7 @@ object SparkEntry {
     // level BM25 (bm25BatchSql over the chunks CTE, top-50) by the
     // hybrid_topk RRF replay; provenance unpacked by exact div/mod.
     Entry("hybrid_chunk_search", { (s, dir) =>
-      hybridChunkServe(s, dir, hybridChunkBuild(s, dir))
+      hybridChunkServe(s, dir, chunkIndexBuild(s, dir))
     }, Sql(
       s"""WITH chunks AS (
            SELECT doc_id * 1000000 + (cs - 1) // 160 AS doc_id,
@@ -1715,7 +1679,7 @@ object SparkEntry {
     // epoch touches only 16-byte keys.
     Entry("fingerprint_ingest", { (s, dir) =>
       val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-fpstore")
+      val store = Harness.tempStore("graft-fpstore")
       FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
       val b1 = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
@@ -1744,7 +1708,7 @@ object SparkEntry {
     // store's persisted Bloom sketch — zero jobs against the corpus.
     Entry("fingerprint_bloom", { (s, dir) =>
       val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-fpbloom")
+      val store = Harness.tempStore("graft-fpbloom")
       FingerprintStore.save(docs.where(col("doc_id") % 2 === 0), store)
       val b2 = docs.where(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text"))
@@ -2072,7 +2036,7 @@ object SparkEntry {
     // identical to dedup_minhash's
     Entry("minhash_ingest_dedup", { (s, dir) =>
       val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-mhstore")
+      val store = Harness.tempStore("graft-mhstore")
       MinHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
       val b1 = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
@@ -2135,7 +2099,7 @@ object SparkEntry {
     // survivors, the minhash_ingest_dedup corpus2 shape.
     Entry("simhash_ingest_dedup", { (s, dir) =>
       val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-shstore")
+      val store = Harness.tempStore("graft-shstore")
       SimHashStore.save(docs.where(col("doc_id") % 2 === 0), store)
       val b1 = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
@@ -2193,8 +2157,8 @@ object SparkEntry {
       val corpus = docs.where(col("doc_id") % 2 === 0)
       val batch = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
-      val fp = tempStore("graft-ig-fp")
-      val mh = tempStore("graft-ig-mh")
+      val fp = Harness.tempStore("graft-ig-fp")
+      val mh = Harness.tempStore("graft-ig-mh")
       // the two foundings read the same corpus but write disjoint stores —
       // independent actions, overlapped (guide §2.6) exactly as a
       // production ingest bootstrap would run them
@@ -2938,7 +2902,7 @@ object SparkEntry {
     // training corpus at apply time; loaded ≡ in-memory spec-asserted.
     Entry("quality_lr_apply", { (s, dir) =>
       val docs = cat(s, dir).table("documents")
-      val store = tempStore("graft-qlr") + "/weights"
+      val store = Harness.tempStore("graft-qlr") + "/weights"
       QualityLr.trainAndSaveWeights(docs.where(col("doc_id") % 2 === 0), store)
       QualityLr.qualityLrApply(
           docs.where(col("doc_id") % 2 === 1), QualityLr.loadWeights(s, store))
@@ -4168,7 +4132,7 @@ object SparkEntry {
     // and (b) no self-pair exclusion (external-query contract).
     Entry("ivfpq_ingest_search", { (s, dir) =>
       val emb = cat(s, dir).table("embeddings")
-      val store = tempStore("graft-vixstore")
+      val store = Harness.tempStore("graft-vixstore")
       VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
         m = 8, k = 16, centEvery = 40)
       VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)
@@ -4228,7 +4192,7 @@ object SparkEntry {
     // encode) and no self-pair exclusion (external-query contract).
     Entry("ivfpq_ingest_residual", { (s, dir) =>
       val emb = cat(s, dir).table("embeddings")
-      val store = tempStore("graft-vixresid")
+      val store = Harness.tempStore("graft-vixresid")
       VectorIndexStore.save(emb.where(col("vec_id") % 3 =!= 0), store,
         m = 8, k = 16, centEvery = 40, residual = true)
       VectorIndexStore.append(emb.where(col("vec_id") % 3 === 0), store)

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry.{Exempt, Sql}
 
-/** The query registry's shape and the harness name selection, checked
-  * without a Spark session. */
+/** The query registry's shape, ScaleCheck's row names and the harness
+  * name selection, checked without a Spark session. */
 class RegistrySpec extends AnyFunSuite {
 
   private val names = SparkEntry.entries.map(_.name)
@@ -27,6 +27,27 @@ class RegistrySpec extends AnyFunSuite {
     assert(sql.size === 135)
     sql.foreach { case (n, t) => assert(t.trim.nonEmpty, s"$n has empty oracle SQL") }
     assert(SparkEntry.queries.keySet === names.toSet)
+  }
+
+  // Listing the scale-only rows founds no fixture and runs no row, so it
+  // needs no session: a row list that touched one would fail here.
+  private val scaleOnly =
+    new ScaleCheck.Scenarios(null, "unused", sys.error("no fixture")).rows.map(_._1)
+
+  test("every ScaleCheck registry row names a registry entry") {
+    val unknown = ScaleCheck.registryRows.filterNot(names.toSet)
+    assert(unknown.isEmpty, s"registry rows with no entry: ${unknown.mkString(", ")}")
+  }
+
+  test("no ScaleCheck scale-only row takes a registry entry's name") {
+    val taken = scaleOnly.filter(names.toSet)
+    assert(taken.isEmpty, s"scale-only rows named like entries: ${taken.mkString(", ")}")
+  }
+
+  test("ScaleCheck row names are unique") {
+    val all = ScaleCheck.registryRows ++ scaleOnly
+    val dups = all.diff(all.distinct)
+    assert(dups.isEmpty, s"duplicate rows: ${dups.mkString(", ")}")
   }
 
   private val items = Seq("a" -> 1, "b" -> 2, "c" -> 3)
