@@ -82,11 +82,11 @@ object Bench {
         try {
           val store = build(spark, sfDir) // warmup build (footer cache, JIT)
           Harness.noop(serve(spark, sfDir, store))
-          Harness.rmTree(store)
+          graft.core.FileIO.deleteTree(store)
           val timed = (1 to reps).map { _ =>
             val (st, buildS) = Harness.seconds(build(spark, sfDir))
             val serveS = Harness.noop(serve(spark, sfDir, st))
-            Harness.rmTree(st)
+            graft.core.FileIO.deleteTree(st)
             (buildS, serveS)
           }
           Some(name -> (Harness.median(timed.map(_._1)),

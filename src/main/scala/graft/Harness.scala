@@ -55,30 +55,14 @@ object Harness {
   }
 
   /** A fresh temp directory named after `prefix`, deleted with its
-    * contents when the JVM exits. Every store a harness run founds (a
-    * registry entry's demo store, a ScaleCheck fixture or per-rep store)
-    * comes from here, so a long run leaves no directory behind. */
+    * contents when the JVM exits ([[graft.core.FileIO.reclaimOnExit]]).
+    * Every store a harness run founds (a registry entry's demo store, a
+    * ScaleCheck fixture or per-rep store) comes from here, so a long run
+    * leaves no directory behind. */
   private[graft] def tempStore(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempStores.add(d)
+    graft.core.FileIO.reclaimOnExit(d)
     d
-  }
-
-  /** [[tempStore]]'s directories, reclaimed by one shutdown hook. */
-  private lazy val tempStores: java.util.Set[String] = {
-    val s = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => s.forEach(rmTree(_))))
-    s
-  }
-
-  /** Deletes `path` and everything under it, best effort: a missing path
-    * or an undeletable file is skipped. */
-  private[graft] def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
   }
 
   /** The `items` named in the comma-separated `list`, in `items`' order;

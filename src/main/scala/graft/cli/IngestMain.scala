@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.FileIO
 import graft.operators.{Dedup, FingerprintStore, IngestGate, MinHashStore}
 
 /** `graft-ingest` — the operational driver for the persisted-store crawl
@@ -90,22 +91,12 @@ object IngestMain {
     */
   private[graft] def batchFiles(
       spark: SparkSession, ckpt: String, batchId: Long): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def readText(p: org.apache.hadoop.fs.Path): Option[String] = {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      }
-    }
     val PathField = """"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
     val BatchField = """"batchId"\s*:\s*(-?\d+)""".r
     def paths(line: String): Seq[String] =
       PathField.findAllMatchIn(line).map(_.group(1)
         .replace("\\/", "/").replace("\\\\", "\\")).toSeq
-    readText(new org.apache.hadoop.fs.Path(s"$ckpt/sources/0/$batchId")) match {
+    FileIO.readTextIfExists(spark, s"$ckpt/sources/0/$batchId") match {
       case Some(text) => text.linesIterator.flatMap(paths).toSeq
       case None =>
         // No plain file: either `batchId` IS a compaction batch (its
@@ -120,15 +111,15 @@ object IngestMain {
         // (log cleanup runs concurrently), which silently resolved the
         // batch to empty.
         val dir = new org.apache.hadoop.fs.Path(s"$ckpt/sources/0")
-        val fs = dir.getFileSystem(conf)
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val Compact = """(\d+)\.compact""".r
         val covering =
           if (!fs.exists(dir)) Seq.empty[Long]
           else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
             case Compact(n) if n.toLong >= batchId => n.toLong
           }.sorted
-        covering.iterator.flatMap(n => readText(new org.apache.hadoop.fs.Path(
-            s"$ckpt/sources/0/$n.compact"))).nextOption() match {
+        covering.iterator.flatMap(n =>
+            FileIO.readTextIfExists(spark, s"$ckpt/sources/0/$n.compact")).nextOption() match {
           case Some(text) => text.linesIterator.filter(l =>
               BatchField.findFirstMatchIn(l).exists(_.group(1).toLong == batchId))
             .flatMap(paths).toSeq

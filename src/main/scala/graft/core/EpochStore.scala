@@ -1,16 +1,14 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Epoch-swap persistence shared by every store artifact, and the one
   * skeleton the segmented stores are declared with ([[Segmented]]).
   *
   * Every write lands in NEW files and becomes current only when the
-  * one-line `MANIFEST` file is atomically replaced (tmp-write +
-  * `FileContext.rename(OVERWRITE)` — atomic on HDFS and local). Prior
+  * one-line `MANIFEST` file is atomically replaced
+  * ([[FileIO.replaceText]] — atomic on HDFS and local). Prior
   * epochs are deleted only by the explicit [[vacuum]], so a driver
   * crash, executor loss, or disk-full mid-write leaves the previous
   * epoch fully readable, and an append can read the old epoch while
@@ -64,7 +62,7 @@ private[graft] object EpochStore {
     * atomically-replaced file, so the pins can never be torn.
     */
   def readLongsFile(spark: SparkSession, p: Path): Option[Seq[Long]] =
-    readText(spark, p).map { raw =>
+    FileIO.readTextIfExists(spark, p.toString).map { raw =>
       val txt = raw.trim
       try txt.split("\\s+").toSeq.map(_.toLong)
       catch {
@@ -75,47 +73,16 @@ private[graft] object EpochStore {
       }
     }
 
-  /** A small file's whole UTF-8 text — `None` if absent. */
-  private def readText(spark: SparkSession, p: Path): Option[String] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
-
-  /** Atomic one-line long file replace: tmp-write + `FileContext.rename
-    * (OVERWRITE)` — atomic on HDFS and local. The commit primitive under
-    * the manifest and the replay markers.
+  /** Atomic one-line long file replace ([[FileIO.replaceText]]). The
+    * commit primitive under the manifest and the replay markers.
     */
   def writeLongAtomic(spark: SparkSession, p: Path, v: Long): Unit =
     writeLongsAtomic(spark, p, Seq(v))
 
   /** [[writeLongAtomic]] for several values on one line (single rename,
     * so a multi-store pin commits all-or-nothing). */
-  def writeLongsAtomic(spark: SparkSession, p: Path, vs: Seq[Long]): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    writeText(spark, tmp, vs.mkString(" "))
-    FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
-
-  /** Create (or overwrite) `p` holding `text` as UTF-8. */
-  private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  /** Whether `path` exists. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def writeLongsAtomic(spark: SparkSession, p: Path, vs: Seq[Long]): Unit =
+    FileIO.replaceText(spark, p.toString, vs.mkString(" "))
 
   /** The current committed epoch number, or 0 if none ever committed. */
   def currentEpoch(spark: SparkSession, path: String): Long =
@@ -143,7 +110,7 @@ private[graft] object EpochStore {
   def readSegments(
       spark: SparkSession, path: String, name: String,
       e: Long): Option[Seq[String]] =
-    readText(spark, segListPath(path, name, e))
+    FileIO.readTextIfExists(spark, segListPath(path, name, e).toString)
       .map(_.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq)
 
   /** Record epoch `e`'s live segment list. A plain overwrite-create, not
@@ -157,7 +124,7 @@ private[graft] object EpochStore {
     require(segs.nonEmpty && segs.distinct == segs,
       s"segment list for $name epoch $e must be non-empty and " +
         s"duplicate-free: $segs")
-    writeText(spark, segListPath(path, name, e), segs.mkString("", "\n", "\n"))
+    FileIO.writeText(spark, segListPath(path, name, e).toString, segs.mkString("", "\n", "\n"))
   }
 
   /** Parquet paths of artifact `name` at epoch `e` ([[liveSegments]]). */
@@ -332,7 +299,7 @@ private[graft] object EpochStore {
           }: Seq[() => Unit]) ++
           carried.map { n => () => {
             val src = epochDir(path, n, cur)
-            if (exists(spark, src))
+            if (FileIO.exists(spark, src))
               ParquetFiles.read(spark, src).coalesce(1)
                 .write.mode("overwrite").parquet(epochDir(path, n, next))
           }}: _*)

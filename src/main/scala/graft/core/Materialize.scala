@@ -57,7 +57,7 @@ object Materialize {
       // reclaim the whole root only when this call CREATED it (driver-temp
       // fallback); a session checkpoint dir may hold other state — reclaim
       // just the per-cut subdirectory there
-      spillRootsToReclaim.add(if (ckpt.isEmpty) root else p)
+      FileIO.reclaimOnExit(if (ckpt.isEmpty) root else p)
       df.write.mode("overwrite").parquet(p)
       spark.read.parquet(p)
     }
@@ -69,20 +69,4 @@ object Materialize {
     */
   def frameUnlessBareScan(derived: DataFrame, input: DataFrame): DataFrame =
     if (bareScan(input)) derived else frame(derived)
-
-  /** Self-created spill roots awaiting JVM-exit reclamation — one shutdown
-    * hook for the whole process, however many cuts a session makes.
-    */
-  private lazy val spillRootsToReclaim: java.util.Set[String] = {
-    val s = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      s.forEach { root =>
-        scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(root)
-          p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .delete(p, true)
-        }: Unit
-      }))
-    s
-  }
 }

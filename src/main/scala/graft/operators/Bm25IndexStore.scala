@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.EpochStore
+import graft.core.{EpochStore, FileIO}
 
 /** Persisted BM25 inverted index — the LEXICAL sibling of
   * [[VectorIndexStore]], closing the store family's last recompute:
@@ -137,7 +137,7 @@ object Bm25IndexStore {
   private def isLegacyLayout(
       spark: SparkSession, path: String, e: Long): Boolean =
     EpochStore.readSegments(spark, path, "bmstats", e).isEmpty &&
-      !EpochStore.exists(spark, EpochStore.epochDir(path, "bmstats", e))
+      !FileIO.exists(spark, EpochStore.epochDir(path, "bmstats", e))
 
   /** One-time in-place migration of a pre-bmstats store: commits a
     * migration epoch whose bmstats segment is re-derived from the

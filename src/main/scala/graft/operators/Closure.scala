@@ -68,6 +68,11 @@ object Closure {
     */
   type OnFinal = (String, DataFrame, Seq[Column]) => (DataFrame, Seq[Seq[Row]])
 
+  /** [[OnFinal]] plus whether an outgoing semi-join pull will read the
+    * selection the hook returns ([[relatedDataWith]]).
+    */
+  private[graft] type Finalize = (String, DataFrame, Seq[Column], Boolean) => (DataFrame, Seq[Seq[Row]])
+
   /** The default [[OnFinal]]: the selection as it is, and the key columns'
     * values from one job (none without key columns).
     */
@@ -96,9 +101,7 @@ object Closure {
     *                   table's schema)
     * @param onFinal    called exactly once per table, full tables included,
     *                   the moment its selection is final (see [[OnFinal]]);
-    *                   by default [[collectKeys]]. Dump spools the table,
-    *                   takes the key sets from the spool's `observe()` and
-    *                   returns the spooled files
+    *                   by default [[collectKeys]]
     * @return final selection per partial table (full tables excluded: their
     *         selection is `catalog.table(t)`, which `onFinal` also sees)
     */
@@ -106,7 +109,19 @@ object Closure {
       catalog: Catalog,
       fullTables: Seq[String] = Nil,
       partial: Map[String, DataFrame] = Map.empty,
-      onFinal: OnFinal = collectKeys): Map[String, DataFrame] = {
+      onFinal: OnFinal = collectKeys): Map[String, DataFrame] =
+    relatedDataWith(catalog, fullTables, partial, (t, df, keys, _) => onFinal(t, df, keys))
+
+  /** [[relatedData]] with a hook that also learns whether a semi-join pull
+    * reads the selection it returns. Dump spools each table, takes the key
+    * sets from the spool's `observe()` and, only when a semi-join pull
+    * reads the table, returns the spooled files.
+    */
+  private[graft] def relatedDataWith(
+      catalog: Catalog,
+      fullTables: Seq[String],
+      partial: Map[String, DataFrame],
+      onFinal: Finalize): Map[String, DataFrame] = {
     val overlap = fullTables.toSet.intersect(partial.keySet)
     require(overlap.isEmpty, s"partial tables also listed as full: ${overlap.mkString(", ")}")
     if (TableGraph.isAcyclic(catalog.tables, catalog.foreignKeys))
@@ -119,7 +134,7 @@ object Closure {
       catalog: Catalog,
       fullTables: Seq[String],
       partial: Map[String, DataFrame],
-      onFinal: OnFinal): Map[String, DataFrame] = {
+      onFinal: Finalize): Map[String, DataFrame] = {
     val full = fullTables.toSet
     // each table's wave: one past the deepest table that pulls into it;
     // reverse load order visits every puller before the tables it pulls
@@ -164,7 +179,8 @@ object Closure {
         keyTypes(selection, catalog.table(fk.foreignTable), fk)
           .filter(_ => fitsBroadcast(selection.select(fk.columnPairs.map(p => col(p._1)): _*))))
       val byKeys = outgoing.collect { case (fk, Some(types)) => fk -> types }
-      val (done, keys) = onFinal(t, selection, byKeys.map { case (fk, types) => keyColumn(fk, types) })
+      val (done, keys) = onFinal(t, selection,
+        byKeys.map { case (fk, types) => keyColumn(fk, types) }, outgoing.exists(_._2.isEmpty))
       (done, byKeys.map(_._1).zip(keys).map { case (fk, k) => fk -> Left(k) } ++
         outgoing.collect { case (fk, None) =>
           fk -> Right(pull(catalog.table(fk.foreignTable), done, fk)) })
@@ -215,7 +231,7 @@ object Closure {
       catalog: Catalog,
       fullTables: Seq[String],
       partial: Map[String, DataFrame],
-      onFinal: OnFinal): Map[String, DataFrame] = {
+      onFinal: Finalize): Map[String, DataFrame] = {
     val full = fullTables.toSet
     var selections = partial
 
@@ -261,9 +277,9 @@ object Closure {
       rows = counted.values.map(_._2.get("n").asInstanceOf[Long]).sum
       sweeps += 1
     }
-    EpochStore.inParallel(fullTables.map(t => () => { onFinal(t, catalog.table(t), Nil); () }): _*)
+    EpochStore.inParallel(fullTables.map(t => () => { onFinal(t, catalog.table(t), Nil, false); () }): _*)
     for (t <- selections.keys.toSeq.sorted)
-      selections += t -> onFinal(t, selections(t), Nil)._1
+      selections += t -> onFinal(t, selections(t), Nil, false)._1
     selections
   }
 

@@ -30,7 +30,7 @@ object CodebookStore {
 
   /** The write-once check (`errorifexists` backs it against a racer). */
   private def requireFresh(spark: SparkSession, path: String): Unit =
-    require(!graft.core.EpochStore.exists(spark, path),
+    require(!graft.core.FileIO.exists(spark, path),
       s"codebook artifact already exists at $path — codebooks are write-once")
 
   /** Save a flat PQ codebook (layout `cb[(mi·k + ci)·sub + d]`, the form

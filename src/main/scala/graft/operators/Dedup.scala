@@ -793,23 +793,6 @@ object Dedup {
     }
   }
 
-  /** Self-created dedupGroups temp roots awaiting JVM-exit reclamation —
-    * one shutdown hook for the whole process (registered on first use),
-    * however many invocations a long-lived session makes.
-    */
-  private lazy val tempRootsToReclaim: java.util.Set[String] = {
-    val s = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      s.forEach { root =>
-        scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(root)
-          p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .delete(p, true)
-        }: Unit
-      }))
-    s
-  }
-
   def dedupGroupsReclaimable(pairs: DataFrame, maxIters: Int = 50,
       spillDir: Option[String] = None): DedupGroupsResult = {
     val spark = pairs.sparkSession
@@ -834,10 +817,11 @@ object Dedup {
     // Self-created temp root: the caller never learns the path unless it
     // keeps the handle, so tie the root's lifetime to the JVM — delete on
     // exit (repeat invocations in a long-lived session stop accreting
-    // disk). ONE static hook drains a registry; per-invocation hooks
-    // would accrete a Thread per call in the very long-lived sessions
-    // this exists for. Caller-provided roots are the caller's to manage.
-    if (ownsTempRoot) tempRootsToReclaim.add(root)
+    // disk). ONE static hook drains a registry (FileIO.reclaimOnExit);
+    // per-invocation hooks would accrete a Thread per call in the very
+    // long-lived sessions this exists for. Caller-provided roots are the
+    // caller's to manage.
+    if (ownsTempRoot) graft.core.FileIO.reclaimOnExit(root)
     // SCALE-ADAPTIVE small-graph fast path (r22, guide §1.2 — remove
     // whole jobs): the distributed iteration costs ≥ 4 driver actions
     // (init barrier, ≥ 1 propagation round, verification round, result

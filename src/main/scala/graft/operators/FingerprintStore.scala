@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.core.{EpochStore, ParquetFiles}
+import graft.core.{EpochStore, FileIO, ParquetFiles}
 
 /** Persistence for the exact-dedup fingerprint corpus.
   *
@@ -90,7 +90,7 @@ object FingerprintStore {
   private def artifactPaths(
       spark: SparkSession, path: String, name: String): Seq[String] = {
     val e = EpochStore.currentEpoch(spark, path)
-    require(e > 0 || EpochStore.exists(spark, s"$path/$name"),
+    require(e > 0 || FileIO.exists(spark, s"$path/$name"),
       s"no committed FingerprintStore epoch (and no pre-epoch $name " +
         s"layout) at $path")
     EpochStore.artifactPaths(spark, path, name, e)
@@ -234,7 +234,7 @@ object FingerprintStore {
       if (cur > 0) EpochStore.artifactPaths(spark, path, "bloom", cur).headOption
       else None
     val prev = prevBloom.flatMap { dir =>
-      if (!EpochStore.exists(spark, dir)) None
+      if (!FileIO.exists(spark, dir)) None
       else {
         val df = ParquetFiles.read(spark, dir)
         if (!df.columns.contains("capacity")) None

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{EpochStore, ParquetFiles}
+import graft.core.{EpochStore, FileIO, ParquetFiles}
 
 /** Persistence for the ANN SERVING index — the vector sibling of
   * [[FingerprintStore]] (exact digests) and [[MinHashStore]] (fuzzy
@@ -112,7 +112,7 @@ object VectorIndexStore {
           .parquet(EpochStore.epochDir(path, "pqmeta", next)),
         () => prior = if (!extend) Seq.empty else {
           val drift = EpochStore.epochDir(path, "drift", base)
-          if (!EpochStore.exists(spark, drift)) Seq.empty // founded before drift telemetry
+          if (!FileIO.exists(spark, drift)) Seq.empty // founded before drift telemetry
           else ParquetFiles.read(spark, drift).collect().map(r =>
             (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3),
               r.getDouble(4)))
@@ -219,8 +219,10 @@ object VectorIndexStore {
 
   def load(spark: SparkSession, path: String): Index = {
     val e = store.epoch(spark, path)
+    // at most maxCents rows with a unique idx: sorted on the driver, so
+    // the load runs no range-partition sample and no shuffle
     val cents = ParquetFiles.read(spark, EpochStore.epochDir(path, "ivf", e))
-      .orderBy(col("idx")).collect()
+      .collect().sortBy(_.getInt(0))
       .map(r => (r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
     val metaDf = ParquetFiles.read(spark, EpochStore.epochDir(path, "pqmeta", e))
     val meta = metaDf.head()

@@ -3,11 +3,12 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.{Catalog, EpochStore, TableGraph}
+import graft.core.{Catalog, EpochStore, FileIO, ParquetFiles, TableGraph}
 import graft.operators.Closure
 
 /** What to dump — mirrors the reference's `dump()` signature
@@ -59,17 +60,24 @@ final case class DumpSpec(
   *    localCheckpoint per recursion level (see
   *    [[graft.operators.Closure.recursiveClosure]]). Each semi-join pull
   *    costs its broadcast or shuffle. Row counts and sequence state ride
-  *    each spool via `observe()`, the spooled files are read back with the
-  *    schema already in hand, and the DDL takes its schemas from the
-  *    DataFrames being written, so the manifest, the schema files and the
-  *    read-backs cost no job. A parquet catalog resolves a table's schema
+  *    each spool via `observe()`, a table that a semi-join pull reads is
+  *    read back from its spooled files with the schema already in hand
+  *    (no other table is read back), and the DDL takes its schemas from
+  *    the DataFrames being written, so the manifest, the schema files and
+  *    the read-backs cost no job. A parquet catalog resolves a table's schema
   *    from one footer read on the driver, once per table and without a job
   *    (see [[graft.core.Catalog.table]]). A selection whose estimated size
   *    fits the broadcast gate is written as one file.
   *  - restore: `readManifest` and `sequencesOf` parse on the driver (no
   *    job); `load` reads each table with the schema its dumped DDL
-  *    records (no inference job); `loadInto` runs one job per table (its
-  *    copy, count verification riding it).
+    *    records (no inference job); `loadInto` copies a parquet table's
+  *    data files on the driver (no job, its count read from the copied
+  *    footers) and runs one job for any other table (its copy, count
+  *    verification riding it).
+  *
+  * The dump's own files (schema, manifest, archive entries, copied table
+  * files) are written through [[graft.core.FileIO]], which starts no OS
+  * process on a local filesystem.
   */
 object Dump {
 
@@ -87,7 +95,8 @@ object Dump {
 
     // the closure's finalize hook: one write per table (full tables
     // included), the key sets of its key-set pulls observed on it
-    def spool(t: String, df: DataFrame, keys: Seq[Column]): (DataFrame, Seq[Seq[Row]]) = {
+    def spool(t: String, df: DataFrame, keys: Seq[Column],
+        semiJoined: Boolean): (DataFrame, Seq[Seq[Row]]) = {
       schemas(t) = df.schema
       // no rows are written, so no pull needs keys: the closure only
       // settles the table set
@@ -110,7 +119,10 @@ object Dump {
         val m = obs.get
         metrics(t) = (m("n").asInstanceOf[Long],
           Option(m("mx")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L))
-        (readData(catalog.spark, path, t, spec.format, df.schema),
+        // only a semi-join pull reads the spooled files back; the read-back
+        // costs a source lookup and a file listing, so none is built for
+        // a table whose pulls all run from its key sets
+        (if (semiJoined) readData(catalog.spark, path, t, spec.format, df.schema) else df,
           keys.indices.map(i => m(s"k$i").asInstanceOf[collection.Seq[Row]].toSeq))
       }
     }
@@ -119,8 +131,7 @@ object Dump {
     // the closure's first wave, concurrently with each other; inParallel
     // settles every write before it rethrows a failure, so no sibling is
     // still writing into the dump when the error reaches the caller.
-    val closed = Closure.relatedData(
-      catalog, spec.fullTables, spec.partialTables, onFinal = spool)
+    val closed = Closure.relatedDataWith(catalog, spec.fullTables, spec.partialTables, spool)
 
     val tables = (spec.fullTables ++ closed.keys).distinct
     if (spec.dumpSchema) writeSchema(catalog, schemas, tables.sorted, path)
@@ -175,7 +186,7 @@ object Dump {
       val idxs = catalog.indexes.getOrElse(t, Seq.empty).map(ix =>
         s"CREATE ${if (ix.unique) "UNIQUE " else ""}INDEX ${ix.name} " +
           s"ON $t (${ix.columns.mkString(", ")});")
-      writeText(catalog.spark, s"$path/schema/$t.sql",
+      FileIO.writeText(catalog.spark, s"$path/schema/$t.sql",
         (Seq(create) ++ pk ++ fks ++ cks ++ defs ++ idxs).mkString("\n"))
     }
     // Native bounded-character column types (VARCHAR(n)/CHAR(n)): Spark's
@@ -184,7 +195,7 @@ object Dump {
     // dialect's CLOB/TEXT default (which pg_dump -s would never emit, and
     // whose Derby form can't even be compared in a replayed CHECK).
     if (catalog.columnSqlTypes.nonEmpty)
-      writeText(catalog.spark, s"$path/schema/_column_types.json",
+      FileIO.writeText(catalog.spark, s"$path/schema/_column_types.json",
         "[" + catalog.columnSqlTypes.toSeq.sortBy(_._1).flatMap {
           case (t, cols) => cols.toSeq.sortBy(_._1).map { case (c, tp) =>
             s"""{"table": "$t", "column": "$c", "type": "$tp"}""" }
@@ -197,7 +208,7 @@ object Dump {
     // table still dumps the view (pg_dump -s does too); its replay then
     // fails loudly at load instead of silently losing the definition.
     if (catalog.views.nonEmpty)
-      writeText(catalog.spark, s"$path/schema/_views.sql",
+      FileIO.writeText(catalog.spark, s"$path/schema/_views.sql",
         catalog.views.map { case (v, d) =>
           val dd = d.trim.stripSuffix(";").trim
           if (dd.toUpperCase.startsWith("CREATE ")) s"$dd;"
@@ -212,7 +223,7 @@ object Dump {
     */
   private[sources] def schemaStatements(
       spark: SparkSession, dumpPath: String, t: String): Seq[String] =
-    try splitSqlStatements(readText(spark, s"$dumpPath/schema/$t.sql"))
+    try splitSqlStatements(FileIO.readText(spark, s"$dumpPath/schema/$t.sql"))
     catch { case _: java.io.IOException => Nil }
 
   /** Split dumped DDL text into statements on semicolons OUTSIDE quoted
@@ -270,7 +281,7 @@ object Dump {
          |${entries.mkString(",\n")}
          |  ]
          |}""".stripMargin
-    writeText(catalog.spark, s"$path/manifest.json", manifest)
+    FileIO.writeText(catalog.spark, s"$path/manifest.json", manifest)
   }
 
   /** Parsed manifest. Sequence values mirror the reference's
@@ -290,7 +301,7 @@ object Dump {
   private[graft] def readColumnTypes(
       spark: SparkSession, path: String): Map[String, Map[String, String]] = {
     val text =
-      try readText(spark, s"$path/schema/_column_types.json")
+      try FileIO.readText(spark, s"$path/schema/_column_types.json")
       catch { case _: java.io.IOException => return Map.empty }
     val Entry =
       """\{"table": "([^"]+)", "column": "([^"]+)", "type": "([^"]+)"\}""".r
@@ -345,7 +356,7 @@ object Dump {
       spark: SparkSession, file: String,
       bad: (String, Throwable) => Nothing): JsonNode = {
     val raw =
-      try readText(spark, file)
+      try FileIO.readText(spark, file)
       catch { case e: java.io.IOException => bad(s"cannot be read ($e)", e) }
     try new ObjectMapper().readTree(raw)
     catch {
@@ -379,13 +390,16 @@ object Dump {
 
   private def load(
       spark: SparkSession, path: String, manifest: Manifest): Seq[(String, DataFrame)] =
-    manifest.loadOrder.map { t =>
-      // first statement is the CREATE TABLE; constraint ALTERs may follow
-      val schema = StructType.fromDDL(
-        readText(spark, s"$path/schema/$t.sql").takeWhile(_ != ';')
-          .stripPrefix(s"CREATE TABLE $t (").stripSuffix(")"))
-      t -> readData(spark, path, t, manifest.format, schema)
-    }
+    manifest.loadOrder.map(t => t -> readTable(spark, path, t, manifest.format))
+
+  /** Table `t` of the dump at `path`, read with the schema its DDL records. */
+  private def readTable(spark: SparkSession, path: String, t: String, format: String): DataFrame = {
+    // first statement is the CREATE TABLE; constraint ALTERs may follow
+    val schema = StructType.fromDDL(
+      FileIO.readText(spark, s"$path/schema/$t.sql").takeWhile(_ != ';')
+        .stripPrefix(s"CREATE TABLE $t (").stripSuffix(")"))
+    readData(spark, path, t, format, schema)
+  }
 
   /** Loads a dump into a target directory of parquet tables — the offline
     * analog of loading into a database. Loading follows manifest order so a
@@ -393,6 +407,17 @@ object Dump {
     * sequence state is applied to the target (`_sequences.json`) — the
     * analog of the reference replaying `dump/sequences.sql` on load
     * (xdump/postgresql.py:136-146, base.py:227).
+    *
+    * Each table's target directory is replaced. A parquet dump's table
+    * whose data files lie flat in its directory (the layout
+    * [[graft.core.ParquetFiles.dataFiles]] accepts; `Dump.write` writes no
+    * other) is restored by copying those files on the driver, with no
+    * Spark job: the copy keeps the dump's parquet codec and footer schema,
+    * and its row count is summed from the copied footers, not by decoding
+    * rows. csv/jsonl/orc dumps and any other parquet layout take a Spark
+    * copy whose row count rides it via `observe()`. Either way a count
+    * that differs from the manifest's fails the load, so a vanished dump
+    * shard aborts it instead of restoring fewer rows.
     */
   def loadInto(spark: SparkSession, dumpPath: String, targetDir: String): Unit =
     loadInto(spark, dumpPath, targetDir, readManifest(spark, dumpPath))
@@ -402,28 +427,37 @@ object Dump {
       spark: SparkSession, dumpPath: String, targetDir: String,
       manifest: Manifest): Unit = {
     // Parquet targets enforce no constraints, so unlike the JDBC load the
-    // per-table copies have no ordering requirement — run them as
-    // concurrent jobs (guide §2.6; the Dump.write full-table discipline):
-    // a roundtrip restore isn't serialized on its largest table, and each
-    // copy keeps its own observe()-riding count verification.
-    EpochStore.inParallel(
-      load(spark, dumpPath, manifest).map { case (t, df) => () => {
-        // same observe()-riding count verification as loadIntoJdbc: a
-        // vanished dump shard must abort, not restore fewer rows
-        val obs = Observation(s"graft_loadinto_$t")
-        df.observe(obs, count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$targetDir/$t.parquet")
-        manifest.rows.get(t).foreach { expect =>
-          val written = obs.get("rows").asInstanceOf[Long]
-          if (written != expect) sys.error(
-            s"load of $t wrote $written rows but the manifest recorded $expect — " +
-              s"dump at $dumpPath is truncated or partially written")
-        }
-      }}: _*)
+    // per-table copies have no ordering requirement — run them
+    // concurrently (guide §2.6; the Dump.write full-table discipline): a
+    // roundtrip restore isn't serialized on its largest table.
+    EpochStore.inParallel(manifest.loadOrder.map { t => () => {
+      val target = s"$targetDir/$t.parquet"
+      val copyable =
+        if (manifest.format != "parquet") None
+        else ParquetFiles.dataFiles(spark, s"$dumpPath/data/$t")
+      val written = copyable match {
+        case Some(files) =>
+          val to = new Path(target)
+          to.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(to, true)
+          files.foreach(f => FileIO.copy(spark, f.getPath.toString, s"$target/${f.getPath.getName}"))
+          ParquetFiles.rowCount(spark, target).getOrElse(0L)
+        case None =>
+          val obs = Observation(s"graft_loadinto_$t")
+          readTable(spark, dumpPath, t, manifest.format)
+            .observe(obs, count(lit(1)).as("rows"))
+            .write.mode(SaveMode.Overwrite).parquet(target)
+          obs.get("rows").asInstanceOf[Long]
+      }
+      manifest.rows.get(t).foreach { expect =>
+        if (written != expect) sys.error(
+          s"load of $t wrote $written rows but the manifest recorded $expect — " +
+            s"dump at $dumpPath is truncated or partially written")
+      }
+    }}: _*)
     val seqs = manifest.loadOrder.map { t =>
       s"""  {"table": "$t", "value": ${manifest.sequences.getOrElse(t, 0L)}}"""
     }
-    writeText(spark, s"$targetDir/_sequences.json",
+    FileIO.writeText(spark, s"$targetDir/_sequences.json",
       seqs.mkString("[\n", ",\n", "\n]"))
   }
 
@@ -623,7 +657,7 @@ object Dump {
     // views after everything (their base tables and indexes exist by then
     // — the pg_restore order); absent file = dump carried no views
     val viewStmts =
-      try splitSqlStatements(readText(spark, s"$dumpPath/schema/_views.sql"))
+      try splitSqlStatements(FileIO.readText(spark, s"$dumpPath/schema/_views.sql"))
       catch { case _: java.io.IOException => Nil }
     Jdbc.execute(cfg,
       notNulls ++ pkStmts ++ fkStmts ++ ckStmts ++ defStmts ++ idxStmts ++
@@ -705,28 +739,24 @@ object Dump {
     * a zip is one writer stream, the opposite of the partitioned-directory
     * default that writes from every executor in parallel — at scale, keep
     * the directory. Entry names are paths relative to `dumpPath`, so
-    * `unarchive` restores an identical directory. Streams through the
-    * Hadoop FS API (local, HDFS, S3A, ...).
+    * `unarchive` restores an identical directory. Streams through
+    * [[graft.core.FileIO]] (local, HDFS, S3A, ...).
     */
   def archive(spark: SparkSession, dumpPath: String, zipPath: String,
       compression: String = "deflated"): Unit = {
     import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream}
     val method = parseArchiveCompression(compression)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dumpPath)
-    val fs = root.getFileSystem(conf)
+    val root = new Path(dumpPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootUri = fs.makeQualified(root).toUri
     // the zip may live on a different filesystem than the dump directory
-    val zp = new org.apache.hadoop.fs.Path(zipPath)
-    val out = new ZipArchiveOutputStream(zp.getFileSystem(conf).create(zp, true))
+    val out = new ZipArchiveOutputStream(FileIO.create(spark, zipPath))
     method match {
       case ArchiveMethod.Deflated(l) if l >= 0 => out.setLevel(l)
       case _ => ()
     }
     try {
-      val files = fs.listFiles(root, true)
-      while (files.hasNext) {
-        val f = files.next()
+      FileIO.walk(spark, dumpPath).foreach { f =>
         val rel = rootUri.relativize(f.getPath.toUri).getPath
         val entry = new ZipArchiveEntry(rel)
         method match {
@@ -910,14 +940,14 @@ object Dump {
     */
   def unarchive(spark: SparkSession, zipPath: String, targetDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val zp = new org.apache.hadoop.fs.Path(zipPath)
+    val zp = new Path(zipPath)
     val zfs = zp.getFileSystem(conf)
     val zlen = zfs.getFileStatus(zp).getLen
     val zf = org.apache.commons.compress.archivers.zip.ZipFile.builder()
       .setSeekableByteChannel(new HadoopSeekableChannel(zfs.open(zp), zlen))
       .get()
     // entries extract onto the TARGET's filesystem (the zip may be remote)
-    val tp = new org.apache.hadoop.fs.Path(targetDir)
+    val tp = new Path(targetDir)
     val tfs = tp.getFileSystem(conf)
     val rootUri = tfs.makeQualified(tp).toUri
     try {
@@ -925,7 +955,7 @@ object Dump {
       while (entries.hasMoreElements) {
         val e = entries.nextElement()
         if (!e.isDirectory) {
-          val target = new org.apache.hadoop.fs.Path(s"$targetDir/${e.getName}")
+          val target = new Path(s"$targetDir/${e.getName}")
           // zip-slip guard: a crafted entry name ("../../etc/passwd") must
           // not resolve outside the extraction directory
           val resolved = tfs.makeQualified(target).toUri.normalize()
@@ -964,7 +994,7 @@ object Dump {
           // bit-flipped archive fails the load instead of planting
           // corrupt table bytes that surface later or never
           val crc = new java.util.zip.CRC32()
-          val out = tfs.create(target, true)
+          val out = FileIO.create(spark, target.toString)
           try {
             val buf = new Array[Byte](64 * 1024)
             var m = in.read(buf)
@@ -978,21 +1008,5 @@ object Dump {
         }
       }
     } finally zf.close()
-  }
-
-  // Small text-file helpers via the Hadoop FS API (works on any supported
-  // filesystem: local, HDFS, S3A...).
-  private def writeText(spark: SparkSession, path: String, text: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readText(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 }

@@ -120,18 +120,22 @@ class DumpSpecTest extends SparkSpec {
 
   test("a vanished dump shard aborts the load instead of restoring fewer rows") {
     val dir = tmp()
-    Dump.write(cat, DumpSpec(fullTables = Seq("region", "nation")), s"$dir/d")
-    // simulate a truncated dump: overwrite nation's data with a 5-row
-    // subset (the remainder reads back cleanly in any format — only the
-    // manifest's write-time count knows rows are missing)
-    cat.table("nation").limit(5).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/d/data/nation")
-
-    val e = intercept[RuntimeException] {
-      Dump.loadInto(spark, s"$dir/d", s"$dir/t")
+    // a parquet dump restores by file copy, a csv dump by a Spark copy:
+    // both verify against the manifest
+    for (format <- Seq("parquet", "csv")) {
+      Dump.write(cat, DumpSpec(fullTables = Seq("region", "nation"), format = format), s"$dir/$format")
+      // simulate a truncated dump: overwrite nation's data with a 5-row
+      // subset (the remainder reads back cleanly in any format — only the
+      // manifest's write-time count knows rows are missing)
+      cat.table("nation").limit(5).write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("header", "true").format(format)
+        .save(s"$dir/$format/data/nation")
+      val e = intercept[RuntimeException] {
+        Dump.loadInto(spark, s"$dir/$format", s"$dir/t_$format")
+      }
+      assert(e.getMessage.contains("manifest recorded"), s"$format: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("manifest recorded"), e.getMessage)
 
     // the JDBC load path verifies identically
     val db = java.nio.file.Files.createTempDirectory("graft_derby_vc").toString + "/db"
@@ -139,7 +143,7 @@ class DumpSpecTest extends SparkSpec {
       url = s"jdbc:derby:$db;create=true", user = "app", password = "app",
       driver = "org.apache.derby.jdbc.EmbeddedDriver")
     val e2 = intercept[RuntimeException] {
-      Dump.loadIntoJdbc(spark, s"$dir/d", cfg)
+      Dump.loadIntoJdbc(spark, s"$dir/parquet", cfg)
     }
     assert(e2.getMessage.contains("manifest recorded"), e2.getMessage)
   }
@@ -158,11 +162,31 @@ class DumpSpecTest extends SparkSpec {
     full.foreach(fresh.table(_).schema)
     assert(jobsOf(Dump.write(fresh, DumpSpec(fullTables = full), s"$dir/d")) === full.size)
     assert(jobsOf(Dump.readManifest(spark, s"$dir/d")) === 0)
-    // one copy job per table: no manifest parse or schema inference job
-    assert(jobsOf(Dump.loadInto(spark, s"$dir/d", s"$dir/t")) === full.size)
+    // a parquet dump's tables are copied on the driver: no job
+    assert(jobsOf(Dump.loadInto(spark, s"$dir/d", s"$dir/t")) === 0)
+    // a csv dump's: one Spark copy job per table and nothing else
+    Dump.write(fresh, DumpSpec(fullTables = full, format = "csv"), s"$dir/c")
+    assert(jobsOf(Dump.loadInto(spark, s"$dir/c", s"$dir/s")) === full.size)
+    for (t <- full)
+      assert(spark.read.parquet(s"$dir/t/$t.parquet").collect().toSet ===
+        spark.read.parquet(s"$dir/s/$t.parquet").collect().toSet, t)
     assert(jobsOf(Dump.sequencesOf(spark, s"$dir/t")) === 0)
     assert(Dump.sequencesOf(spark, s"$dir/t").schema.map(f => f.name -> f.dataType.sql) ===
       Seq("table_name" -> "STRING", "seq_value" -> "BIGINT"))
+  }
+
+  test("archive, unarchive and a parquet restore start no OS process") {
+    val dir = tmp()
+    val full = Seq("region", "nation", "supplier")
+    Dump.write(cat, DumpSpec(fullTables = full), s"$dir/d")
+    assert(forksOf(Dump.archive(spark, s"$dir/d", s"$dir/d.zip")) === 0)
+    assert(forksOf(Dump.unarchive(spark, s"$dir/d.zip", s"$dir/u")) === 0)
+    assert(forksOf(Dump.loadInto(spark, s"$dir/u", s"$dir/t")) === 0)
+    // a restore over an existing target replaces each table's files
+    Dump.loadInto(spark, s"$dir/u", s"$dir/t")
+    for (t <- full)
+      assert(spark.read.parquet(s"$dir/t/$t.parquet").count() === cat.table(t).count(), t)
+    assert(Dump.sequencesOf(spark, s"$dir/t").count() === full.size)
   }
 
   /** A parquet catalog of a manager tree of depth `depth`: 2^depth - 1
@@ -291,8 +315,9 @@ class DumpSpecTest extends SparkSpec {
     Dump.write(cat, DumpSpec(fullTables = Seq("region")), dir)
     val file = Paths.get(dir, "manifest.json")
     val good = Files.readString(file)
-    // the edits below bypass Hadoop's local checksum file
-    Files.delete(Paths.get(dir, ".manifest.json.crc"))
+    // the manifest is written without a Hadoop checksum sidecar, so the
+    // edits below need not bypass one
+    assert(!Files.exists(Paths.get(dir, ".manifest.json.crc")))
     Seq(
       "'format'" -> "\"format\": \"parquet\",",
       "'load_order'" -> "\"load_order\": \\[[^]]*\\],",

@@ -29,6 +29,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally sc.removeSparkListener(listener)
   }
 
+  /** OS processes this JVM started while `body` runs: the
+    * `jdk.ProcessStart` events of an in-process flight recording, so only
+    * this process's own starts are counted.
+    */
+  def forksOf(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val file = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+        .count(_.getEventType.getName == "jdk.ProcessStart")
+    } finally {
+      rec.close()
+      java.nio.file.Files.delete(file)
+    }
+  }
+
   /** Asserts, for every directory under `root` that holds parquet files,
     * that the schema read from a footer on the driver equals the one
     * `spark.read.parquet` infers. */
